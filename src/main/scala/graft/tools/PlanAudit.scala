@@ -71,6 +71,9 @@ object PlanAudit {
     * @param mode       streaming gates: sink output mode of the last
     *                   micro-batch ("Append"/"Complete"/"Update");
     *                   "batch" for batch queries
+    * @param batches    micro-batches each StreamingQuery the query started
+    *                   executed, joined with "+" for the restart gates; "-"
+    *                   when it started none
     */
   final case class PlanRecord(
       name: String,
@@ -87,17 +90,18 @@ object PlanAudit {
       scansWithPushdown: Int,
       readSchemas: Seq[String],
       stateOps: Int = 0,
-      mode: String = "batch") {
+      mode: String = "batch",
+      batches: String = "-") {
     def tsvLine: String =
       s"$name\t$exchanges\t$reusedExchanges\t$broadcastExchanges\t$bhj\t$smj" +
         s"\t$shj\t$bnlj\t$cartesian\t$generates\t$scans\t$scansWithPushdown" +
-        s"\t${readSchemas.mkString(";")}\t$stateOps\t$mode"
+        s"\t${readSchemas.mkString(";")}\t$stateOps\t$mode\t$batches"
   }
 
   val tsvHeader: String =
     "name\texchanges\treused_exchanges\tbroadcast_exchanges\tbhj\tsmj\tshj" +
       "\tbnlj\tcartesian\tgenerates\tscans\tscans_with_pushdown\tread_schemas" +
-      "\tstate_ops\tmode"
+      "\tstate_ops\tmode\tbatches"
 
   def parseTsv(text: String): Map[String, PlanRecord] =
     text.linesIterator.drop(1).filter(_.nonEmpty).map { l =>
@@ -107,7 +111,8 @@ object PlanAudit {
         f(5).toInt, f(6).toInt, f(7).toInt, f(8).toInt, f(9).toInt,
         f(10).toInt, f(11).toInt, schemas,
         if (f.length > 13) f(13).toInt else 0,
-        if (f.length > 14) f(14) else "batch")
+        if (f.length > 14) f(14) else "batch",
+        if (f.length > 15) f(15) else "-")
     }.toMap
 
   /** Formatted explain text for a registry query (initial physical plan;
@@ -163,7 +168,17 @@ object PlanAudit {
   }
 
   def record(spark: SparkSession, name: String, sf: String): PlanRecord =
-    record(name, planText(spark, name, sf))
+    planAndRecord(spark, name, sf)._2
+
+  /** Plan text and record of a batch query; one whose `run` drives a stream
+    * to build its result (the foreachBatch/observe gates) also pins that
+    * stream's batch count. */
+  private def planAndRecord(spark: SparkSession, name: String, sf: String): (String, PlanRecord) = {
+    val (plan, qs) = graft.queries.StreamGate.captureStreamingQueries {
+      planText(spark, name, sf)
+    }
+    (plan, record(name, plan).copy(batches = batchCounts(qs)))
+  }
 
   /** Stateful streaming operator node names as they print in a
     * SparkPlan tree (nodeName strips the Exec suffix). */
@@ -216,8 +231,17 @@ object PlanAudit {
       scansWithPushdown = 0,
       readSchemas = Nil,
       stateOps = t.count(stateOpTokens),
-      mode = lastExec(queries.last).outputMode.toString)
+      mode = lastExec(queries.last).outputMode.toString,
+      batches = batchCounts(queries))
   }
+
+  /** Executed micro-batches per captured query, in start order ("3",
+    * "2+3"): progress entries that ran `addBatch`. Idle-trigger entries are
+    * left out — the engine reports the first trigger that finds no data at
+    * once, and whether it fires before the gate's first round is a race. */
+  private def batchCounts(queries: Seq[org.apache.spark.sql.streaming.StreamingQuery]): String =
+    if (queries.isEmpty) "-"
+    else queries.map(_.recentProgress.count(_.durationMs.containsKey("addBatch"))).mkString("+")
 
   /** Run one streaming gate under capture and derive its record. */
   def streamRecord(spark: SparkSession, name: String, sf: String): PlanRecord = {
@@ -527,8 +551,8 @@ object PlanAudit {
       } else {
         val note = audited.getOrElse(name,
           "Auto-audited: plan-shape invariants pinned in plan_invariants.tsv (PlanInvariantsSpec).")
-        val plan = planText(spark, name, sf)
-        records += record(name, plan)
+        val (plan, rec) = planAndRecord(spark, name, sf)
+        records += rec
         sb.append(s"## $name\n\n$note\n\n```\n")
         // keep the operator tree + the scan details; trim the long column lists
         val lines = plan.linesIterator.toSeq
