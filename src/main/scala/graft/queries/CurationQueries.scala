@@ -1294,8 +1294,6 @@ object CurationQueries extends Registry {
         COUNT(*) AS n_orders
       FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"""))
 
-  private val q204Runs = new java.util.concurrent.atomic.AtomicInteger
-
   /** Streaming keyword tagging — the curation surface crossing the
     * Structured Streaming execution path: documents replayed over a
     * 3-micro-batch MemoryStream, tokenized and broadcast-joined against
@@ -1304,15 +1302,13 @@ object CurationQueries extends Registry {
     * and the post-stream per-doc aggregation must equal the BATCH
     * q182 oracle verbatim: a dropped batch, a duplicate emission, or a
     * broadcast re-resolution bug all break the hash. The driver-side
-    * doc collect is the replay HARNESS (MemoryStream needs addData),
+    * doc collect is the replay HARNESS (a MemoryStream replays rows),
     * not the operator — production replaces it with the file/WebSocket
     * source and keeps the identical in-stream dataflow.
     */
   private val q204 = Q("q204_streaming_tagging",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val dict = tagDict.toDF("term", "tag")
       val docs = Tables.documents(s, d)
       val docRows: Seq[(Long, String)] =
@@ -1321,25 +1317,16 @@ object CurationQueries extends Registry {
             .orderBy("doc_id").collect().iterator
             .map(r => (r.getLong(0), r.getString(1))).toSeq
         }
-      val mem = MemoryStream[(Long, String)]
+      val mem = StreamGate.memory[(Long, String)](s)
       val src = mem.toDF().toDF("doc_id", "text")
       val hits = src
         .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("term"))
         .join(broadcast(dict), "term")
-      val sinkName = s"q204_tag_${q204Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false,
-          keepCodegen = true) { // real per-row tag compute: interpreted eval costs more than the recompiles
-        hits.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        val chunk = math.max(1, docRows.size / 3)
-        docRows.grouped(chunk).foreach { c =>
-          mem.addData(c: _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-      tagAggregate(s.table(sinkName), docs)
+      // real per-row tag compute: interpreted eval costs more than the recompiles
+      val tagged = StreamGate.toMemory(s, hits, "append",
+        StreamGate.feed(mem, docRows.grouped(math.max(1, docRows.size / 3)).toSeq),
+        StreamGate.GateConf(keepCodegen = true))
+      tagAggregate(tagged, docs)
     },
     Some(tagOracleSql))
 
@@ -1843,8 +1830,6 @@ object CurationQueries extends Registry {
         toks > level AS capped
       FROM seg CROSS JOIN lvl ORDER BY lang"""))
 
-  private val q320Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** ONLINE per-source token-quota admission — the ENFORCEMENT half of
     * the budget family, run at ingest: q56 selects under a budget in
     * QUALITY order (a ranking decision a nightly batch makes), q317
@@ -1879,8 +1864,6 @@ object CurationQueries extends Registry {
   private val q320 = Q("q320_streaming_token_quota",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val Cap = 500L
       val rows: Seq[(Long, String, String)] =
         StreamFixtures.replayRows("q320", d) {
@@ -1888,15 +1871,13 @@ object CurationQueries extends Registry {
             .orderBy("doc_id").collect().iterator
             .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
         }
-      val runId = q320Runs.incrementAndGet()
-      val dir = graft.streaming.TempDirs.scratch(
-        s"graft_q320_${ProcessHandle.current().pid()}_$runId")
+      val dir = StreamGate.scratch("q320")
       val outRoot = new java.io.File(dir, "out").getPath
       val stateRoot = new java.io.File(dir, "state").getPath
-      val mem = MemoryStream[(Long, String, String)](numPartitions = 8)
+      val mem = StreamGate.memory[(Long, String, String)](s, Some(8))
       val src = mem.toDF().toDF("doc_id", "source", "text")
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        src.writeStream
+      StreamGate.replay(s, src, StreamGate.feed(mem, StreamGate.inChunks(rows, 3))) {
+        _.outputMode("append")
           .foreachBatch { (batch: DataFrame, id: Long) =>
             val ss = batch.sparkSession
             val prev =
@@ -1930,15 +1911,7 @@ object CurationQueries extends Registry {
                   + coalesce(col("b_toks"), lit(0L))).as("arrived"))
               .write.mode("overwrite").parquet(s"$stateRoot/batch=$id")
           }
-          .outputMode("append").start()
       }
-      try {
-        val chunk = math.max(1, (rows.size + 2) / 3)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c: _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
       s.read.parquet(outRoot)
         .select("doc_id", "source", "n_toks", "cum_toks", "admitted")
         .orderBy("doc_id")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.GraftSession
 import graft.operators.Dedup
@@ -79,7 +80,7 @@ object DedupDownstreamAB {
       val s = graft.tools.ProfileBenchSeq.sampleThunk(name, {
         maxTaskMs.set(0L)
         resolve(mk()).write.format("noop").mode("overwrite").save()
-        Thread.sleep(300) // drain the async listener bus (IndexAudit's shape)
+        SessionBridge.drainListenerBus(spark)
         perSampleMaxTask += maxTaskMs.get(): Unit
       })
       val raw = s.samples.map(v => f"$v%.1f").mkString("/")

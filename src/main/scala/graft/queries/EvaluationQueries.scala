@@ -137,8 +137,10 @@ object EvaluationQueries extends Registry {
       // Expand×5 multi-distinct carried every null/min/max buffer per
       // (gid, value) group — 23 s of task CPU at sf0.1. Now one plain
       // single-group stats pass (no Expand) plus ONE dedupe-first pass for
-      // all five exact distinct counts over injective value strings; the
-      // exchange carries distinct (name, value) pairs with no buffers.
+      // all five exact distinct counts over per-column value strings
+      // (TrainingDataQueries.distinctCounts, which folds o_totalprice's
+      // -0.0 into 0.0); the exchange carries distinct (name, value) pairs
+      // with no buffers.
       val o = Tables.fanOut(Tables.orders(s, d))
       val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
         "o_totalprice", "o_orderpriority")
@@ -149,13 +151,7 @@ object EvaluationQueries extends Registry {
           max(col(c)).cast("string").as(s"${c}__mx"))
       }
       val stats = o.agg(statsExprs.head, statsExprs.tail: _*)
-      val dist = o
-        .select(explode(array(cols.map { c =>
-          struct(lit(c).as("c"), col(c).cast("string").as("v"))
-        }: _*)).as("p"))
-        .select(col("p.c").as("col_name"), col("p.v").as("v"))
-        .distinct()
-        .groupBy("col_name").agg(count(col("v")).as("n_distinct"))
+      val dist = TrainingDataQueries.distinctCounts(o, cols)
       def pick(suffix: String) =
         cols.tail.foldLeft(
           when(col("col_name") === cols.head, col(s"${cols.head}__$suffix"))) {

@@ -8,6 +8,7 @@ import graft.{OracleSql => O, Tables}
 import graft.functions.StableAgg
 import graft.streaming.TempDirs
 import graft.operators.GraphOps
+import StreamGate.{feed, inChunks}
 
 /** Round-4 additions, part 4 — the remaining relational/sequence surface:
   * per-group top-k (WindowGroupLimit pushdown), ordered string aggregation,
@@ -58,6 +59,34 @@ object ExtendedQueries extends Registry {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       (side(0L), side(1L))
     }
+
+  /** The stream-join family's replay: impressions and clicks as memory
+    * streams watermarked by `delay`, and rounds that feed both sides'
+    * halves together, then `sentinels` rounds of a (-1, -1, ts) row on
+    * both sides, ts stepping an hour at a time past the 24 h join horizon
+    * so the watermark flushes every outer-join null side.
+    */
+  private def joinReplay(s: SparkSession, d: String, delay: String, sentinels: Int)
+      : (DataFrame, DataFrame, Seq[StreamGate.Round]) = {
+    import s.implicits._
+    val (imps, clks) = joinSideRows(s, d)
+    val memI = StreamGate.memory[(Long, Long, Long)](s)
+    val memC = StreamGate.memory[(Long, Long, Long)](s)
+    val iDf = memI.toDF().toDF("imp_id", "i_user", "i_ts")
+      .withColumn("i_time", timestamp_millis(col("i_ts")))
+      .withWatermark("i_time", delay)
+    val cDf = memC.toDF().toDF("clk_id", "c_user", "c_ts")
+      .withColumn("c_time", timestamp_millis(col("c_ts")))
+      .withWatermark("c_time", delay)
+    lazy val maxTs = (imps.iterator ++ clks.iterator).map(_._3).max
+    val flush = (1 to sentinels).map(k => Seq((-1L, -1L, maxTs + 86400000L + k * 3600000L)))
+    val (iChunks, cChunks) = (inChunks(imps, 2), inChunks(clks, 2))
+    val n = math.max(iChunks.size, cChunks.size)
+    val rounds = feed(memI, iChunks.padTo(n, Nil) ++ flush)
+      .zip(feed(memC, cChunks.padTo(n, Nil) ++ flush))
+      .map { case (i, c) => (() => { i(); c() }): StreamGate.Round }
+    (iDf, cDf, rounds)
+  }
 
   /** Per-group top-k: the canonical "top 3 customers by balance per market
     * segment". rank-function filter compiles to a WindowGroupLimit physical
@@ -641,8 +670,6 @@ object ExtendedQueries extends Registry {
         COUNT(*) AS cnt
       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""))
 
-  private val q108Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** Streaming-state gate: the reference's per-key staleness tracker
     * (reference/src/metrics/rolling.py:34-35,85-94) executed through the
     * REAL Structured Streaming path — MemoryStream → flatMapGroupsWithState
@@ -661,25 +688,12 @@ object ExtendedQueries extends Registry {
   private val q108 = Q("q108_streaming_staleness",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(String, String, Long, Long)] = stalenessSymRows(s, d)
-      val mem = MemoryStream[(String, String, Long, Long)]
+      val mem = StreamGate.memory[(String, String, Long, Long)](s)
       val events = mem.toDF()
         .toDF("symbol", "channel", "ts_exchange_ms", "ts_recv_mono_ns")
       val gaps = graft.streaming.StalenessStream.gaps(events)
-      val sinkName = s"q108_gaps_${q108Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        gaps.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        rows.grouped(math.max(1, (rows.size + 1) / 2)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-      s.table(sinkName)
+      StreamGate.toMemory(s, gaps.toDF(), "append", feed(mem, inChunks(rows, 2)))
         .groupBy(col("symbol").cast("bigint").as("user_id"))
         .agg(count(lit(1)).as("stale_count"),
           StableAgg.lavg(col("stale_ms")).as("stale_mean_ms"),
@@ -782,8 +796,6 @@ object ExtendedQueries extends Registry {
       FROM orders
       GROUP BY o_orderpriority ORDER BY o_orderpriority"""))
 
-  private val q111Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** Streaming sessionization gate (companion to q108): 30-minute-gap
     * session windows computed by the REAL streaming session-window
     * operator — MemoryStream replay in event-time order across 4
@@ -802,8 +814,6 @@ object ExtendedQueries extends Registry {
   private val q111 = Q("q111_streaming_sessions",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(Long, Long, Double)] =
         StreamFixtures.replayRows("q111", d) {
           Tables.events(s, d)
@@ -813,7 +823,7 @@ object ExtendedQueries extends Registry {
             .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
         }
       val maxTs = if (rows.nonEmpty) rows.iterator.map(_._2).max else 0L
-      val mem = MemoryStream[(Long, Long, Double)]
+      val mem = StreamGate.memory[(Long, Long, Double)](s)
       val src = mem.toDF().toDF("user_id", "ts_ms", "value")
         .withColumn("ts", timestamp_millis(col("ts_ms")))
         .withWatermark("ts", "0 seconds")
@@ -824,25 +834,11 @@ object ExtendedQueries extends Registry {
           unix_millis(col("sw.start")).as("session_start_ms"),
           unix_millis(col("sw.end")).as("session_end_ms"),
           col("cnt"), col("total_value"))
-      val sinkName = s"q111_sessions_${q111Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        sess.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        rows.grouped(math.max(1, (rows.size + 1) / 2)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-        // two watermark pushes: sentinel k's event time is the watermark
-        // during sentinel k+1's batch, so the second push flushes
-        // everything that closed before the first sentinel
-        mem.addData((-1L, maxTs + 7200000L, 0.0))
-        query.processAllAvailable()
-        mem.addData((-1L, maxTs + 14400000L, 0.0))
-        query.processAllAvailable()
-      } finally query.stop()
-      s.table(sinkName)
+      // two watermark pushes: sentinel k's event time is the watermark
+      // during sentinel k+1's batch, so the second push flushes
+      // everything that closed before the first sentinel
+      val sentinels = Seq(maxTs + 7200000L, maxTs + 14400000L).map(ts => Seq((-1L, ts, 0.0)))
+      StreamGate.toMemory(s, sess, "append", feed(mem, inChunks(rows, 2) ++ sentinels))
         .filter(col("user_id") >= 0)
         .orderBy("user_id", "session_start_ms")
     },
@@ -1033,8 +1029,6 @@ object ExtendedQueries extends Registry {
         ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
       ORDER BY c_custkey, o_totalprice DESC, o_orderkey"""))
 
-  private val q119Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** Streaming OHLC gate (the third spec-only streaming path promoted
     * into the hash gate, after q108/q111): streaming/Bars run under
     * append mode with a 0-second watermark over a 4-micro-batch
@@ -1050,8 +1044,6 @@ object ExtendedQueries extends Registry {
   private val q119 = Q("q119_streaming_bars",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: IndexedSeq[(String, Long, Double, Double, Long)] =
         StreamFixtures.replayRows("q119", d) {
           val tr = graft.operators.Normalizer
@@ -1073,28 +1065,14 @@ object ExtendedQueries extends Registry {
           buf.toIndexedSeq
         }
       val maxTs = if (rows.nonEmpty) rows.last._2 else 0L
-      val mem = MemoryStream[(String, Long, Double, Double, Long)]
+      val mem = StreamGate.memory[(String, Long, Double, Double, Long)](s)
       val src = mem.toDF()
         .toDF("symbol", "ts_exchange_ms", "price", "sz", "seq")
         .withColumn("event_time", timestamp_millis(col("ts_exchange_ms")))
         .withWatermark("event_time", "0 seconds")
       val bars = graft.streaming.Bars.ohlc(src, col("seq"), "1 day")
-      val sinkName = s"q119_bars_${q119Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        bars.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        rows.grouped(math.max(1, (rows.size + 1) / 2)).foreach { chunk =>
-          mem.addData(chunk.toSeq: _*)
-          query.processAllAvailable()
-        }
-        mem.addData(("SENTINEL", maxTs + 2 * 86400000L, 0.0, 0.0, 0L))
-        query.processAllAvailable()
-        mem.addData(("SENTINEL", maxTs + 4 * 86400000L, 0.0, 0.0, 0L))
-        query.processAllAvailable()
-      } finally query.stop()
-      s.table(sinkName)
+      val sentinels = Seq(2, 4).map(k => Seq(("SENTINEL", maxTs + k * 86400000L, 0.0, 0.0, 0L)))
+      StreamGate.toMemory(s, bars, "append", feed(mem, inChunks(rows, 2) ++ sentinels))
         .filter(col("symbol") =!= "SENTINEL")
         .select(col("symbol"), expr("bar_start_ms div 86400000").as("day_bucket"),
           col("open"), col("high"), col("low"), col("close"),
@@ -1112,8 +1090,6 @@ object ExtendedQueries extends Registry {
       GROUP BY symbol, day_bucket
       ORDER BY symbol, day_bucket"""))
 
-  private val q120Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** Streaming exact-dedup gate: Dedup.streamingExact
     * (dropDuplicatesWithinWatermark on the content hash) over a
     * 4-micro-batch arrival-ordered replay of events, watermark horizon
@@ -1127,8 +1103,6 @@ object ExtendedQueries extends Registry {
   private val q120 = Q("q120_streaming_dedup",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(Long, Long, String)] =
         StreamFixtures.replayRows("q120", d) {
           Tables.events(s, d)
@@ -1137,30 +1111,17 @@ object ExtendedQueries extends Registry {
             .collect().iterator
             .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
         }
-      val mem = MemoryStream[(Long, Long, String)]
+      val mem = StreamGate.memory[(Long, Long, String)](s)
       val src = mem.toDF().toDF("event_id", "ts_ms", "props")
         .withColumn("ts_utc", timestamp_millis(col("ts_ms")))
       val deduped = graft.operators.Dedup.streamingExact(src, "props", "ts_utc", "3650 days")
-      val sinkName = s"q120_dedup_${q120Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        deduped.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        rows.grouped(math.max(1, (rows.size + 1) / 2)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-      s.table(sinkName)
+      StreamGate.toMemory(s, deduped, "append", feed(mem, inChunks(rows, 2)))
         .select(col("content_hash"))
         .orderBy("content_hash")
     },
     Some("""SELECT md5(props) AS content_hash
       FROM (SELECT DISTINCT props FROM events)
       ORDER BY content_hash"""))
-
-  private val q121Runs = new java.util.concurrent.atomic.AtomicLong()
 
   /** Streaming rolling-percentile gate — the reference's HEADLINE
     * computation (rolling 5 s windows of a latency series with exact
@@ -1193,8 +1154,6 @@ object ExtendedQueries extends Registry {
   private val q121 = Q("q121_streaming_metrics",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(Long, Double)] =
         StreamFixtures.replayRows("q121", d) {
           Tables.events(s, d)
@@ -1204,34 +1163,21 @@ object ExtendedQueries extends Registry {
             .map(r => (r.getLong(0), r.getDouble(1))).toSeq
         }
       val maxTs = if (rows.nonEmpty) rows.last._1 else 0L
-      val mem = MemoryStream[(Long, Double)]
+      val mem = StreamGate.memory[(Long, Double)](s)
       val src = mem.toDF().toDF("tms", "value")
         .withColumn("event_time", timestamp_millis(col("tms")))
         .withWatermark("event_time", "0 seconds")
       val report = graft.streaming.MetricsStream
         .latencyPercentiles(src, "value", col("event_time"))
-      val sinkName = s"q121_metrics_${q121Runs.incrementAndGet()}"
       // Two-sentinel protocol, no-data batches OFF (the q153/q155 r11
       // device): sentinel 1 rides the second data chunk (it only has to
       // advance the watermark once that batch commits); sentinel 2 then
       // runs with wm = maxTs+10 s and flushes every real sliding window
       // (all end ≤ maxTs+5 s). Sentinel windows stay unemitted/filtered
       // by the ≥20-sample gate exactly as before. 6 micro-batches → 3.
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        report.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        val half = math.max(1, (rows.size + 1) / 2)
-        val (c1, c2) = rows.splitAt(half)
-        mem.addData(c1: _*)
-        query.processAllAvailable()
-        mem.addData(c2 :+ ((maxTs + 10000L, 0.0)): _*)
-        query.processAllAvailable()
-        mem.addData((maxTs + 20000L, 0.0))
-        query.processAllAvailable()
-      } finally query.stop()
-      s.table(sinkName)
+      val (c1, c2) = rows.splitAt(math.max(1, (rows.size + 1) / 2))
+      StreamGate.toMemory(s, report, "append",
+        feed(mem, Seq(c1, c2 :+ ((maxTs + 10000L, 0.0)), Seq((maxTs + 20000L, 0.0)))))
         .select(unix_millis(col("window_start")).as("window_start_ms"),
           col("p50"), col("p95"), col("p99"), col("cnt"))
         .orderBy("window_start_ms")
@@ -1254,8 +1200,6 @@ object ExtendedQueries extends Registry {
       FROM r GROUP BY window_start_ms HAVING COUNT(*) >= 20
       ORDER BY window_start_ms"""))
 
-  private val q122Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** Streaming cumulative zero-rate gate (A4, the reference's since-start
     * zero-latency counters, reference/src/metrics/rolling.py:68-79,156-163):
     * MetricsStream.zeroRates — an UNGROUPED running aggregate — over a
@@ -1271,8 +1215,6 @@ object ExtendedQueries extends Registry {
   private val q122 = Q("q122_streaming_zero_rates",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[Long] =
         StreamFixtures.replayRows("q122", d) {
           Tables.events(s, d)
@@ -1280,29 +1222,17 @@ object ExtendedQueries extends Registry {
             .orderBy("event_id")
             .collect().iterator.map(_.getLong(0)).toSeq
         }
-      val mem = MemoryStream[Long]
+      val mem = StreamGate.memory[Long](s)
       val src = mem.toDF().toDF("lat")
       val rates = graft.streaming.MetricsStream.zeroRates(src, "lat")
-      val sinkName = s"q122_zr_${q122Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        rates.writeStream.format("memory").queryName(sinkName)
-          .outputMode("complete").start()
-      }
-      try {
-        rows.grouped(math.max(1, (rows.size + 1) / 2)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-      s.table(sinkName).select("total", "zeros", "zero_rate_pct")
+      StreamGate.toMemory(s, rates, "complete", feed(mem, inChunks(rows, 2)))
+        .select("total", "zeros", "zero_rate_pct")
     },
     Some("""SELECT CAST(COUNT(*) AS BIGINT) AS total,
       CAST(SUM(CASE WHEN CAST(floor(value) AS BIGINT) // 20 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS zeros,
       CAST(SUM(CASE WHEN CAST(floor(value) AS BIGINT) // 20 = 0 THEN 1 ELSE 0 END) AS DOUBLE)
         / greatest(COUNT(*), 1) * 100.0 AS zero_rate_pct
       FROM events"""))
-
-  private val q123Runs = new java.util.concurrent.atomic.AtomicLong()
 
   /** Streaming per-key cumulative count gate (A7/A8, the reference's
     * per-symbol message counters, reference/src/metrics/rolling.py:81-84,
@@ -1315,8 +1245,6 @@ object ExtendedQueries extends Registry {
   private val q123 = Q("q123_streaming_msg_counts",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[Long] =
         StreamFixtures.replayRows("q123", d) {
           Tables.events(s, d)
@@ -1324,21 +1252,10 @@ object ExtendedQueries extends Registry {
             .orderBy("event_id")
             .collect().iterator.map(_.getLong(0)).toSeq
         }
-      val mem = MemoryStream[Long]
+      val mem = StreamGate.memory[Long](s)
       val src = mem.toDF().toDF("symbol")
       val counts = graft.streaming.MetricsStream.msgCounts(src)
-      val sinkName = s"q123_mc_${q123Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        counts.writeStream.format("memory").queryName(sinkName)
-          .outputMode("complete").start()
-      }
-      try {
-        rows.grouped(math.max(1, (rows.size + 1) / 2)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-      s.table(sinkName)
+      StreamGate.toMemory(s, counts, "complete", feed(mem, inChunks(rows, 2)))
         .select(col("symbol").as("user_id"), col("msg_count"))
         .orderBy("user_id")
     },
@@ -1442,8 +1359,6 @@ object ExtendedQueries extends Registry {
       GROUP BY GROUPING SETS ((n_name, c_mktsegment), (c_mktsegment), ())
       ORDER BY gid, nation, segment"""))
 
-  private val q131Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** Stream-STREAM join gate — the one Structured Streaming operator
     * family not yet crossed by q108/q111/q119-q123 (which cover keyed
     * state, sessions, windows, dedup): [[graft.streaming.Joins
@@ -1461,34 +1376,9 @@ object ExtendedQueries extends Registry {
     */
   private val q131 = Q("q131_streaming_join",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val (imps, clks) = joinSideRows(s, d)
-      val memI = MemoryStream[(Long, Long, Long)]
-      val memC = MemoryStream[(Long, Long, Long)]
-      val iDf = memI.toDF().toDF("imp_id", "i_user", "i_ts")
-        .withColumn("i_time", timestamp_millis(col("i_ts")))
-        .withWatermark("i_time", "3650 days")
-      val cDf = memC.toDF().toDF("clk_id", "c_user", "c_ts")
-        .withColumn("c_time", timestamp_millis(col("c_ts")))
-        .withWatermark("c_time", "3650 days")
+      val (iDf, cDf, rounds) = joinReplay(s, d, "3650 days", sentinels = 0)
       val joined = graft.streaming.Joins.attribution(iDf, cDf, "24 hours")
-      val sinkName = s"q131_join_${q131Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        joined.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        val iChunks = imps.grouped(math.max(1, (imps.size + 1) / 2)).toSeq
-        val cChunks = clks.grouped(math.max(1, (clks.size + 1) / 2)).toSeq
-        (0 until math.max(iChunks.size, cChunks.size)).foreach { i =>
-          if (i < iChunks.size) memI.addData(iChunks(i): _*)
-          if (i < cChunks.size) memC.addData(cChunks(i): _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-      s.table(sinkName).orderBy("imp_id", "clk_id")
+      StreamGate.toMemory(s, joined, "append", rounds).orderBy("imp_id", "clk_id")
     },
     Some("""SELECT i.event_id AS imp_id, c.event_id AS clk_id, i.user_id
       FROM events i JOIN events c ON i.user_id = c.user_id
@@ -1530,8 +1420,6 @@ object ExtendedQueries extends Registry {
       FROM orders WHERE o_custkey < 200
       ORDER BY o_custkey, o_orderdate, o_orderkey"""))
 
-  private val q133Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** transformWithState gate — q108's per-key staleness fold re-expressed
     * on Spark 4's StatefulProcessor API ([[graft.streaming.StalenessStream
     * .GapsProcessor]]: a named, typed ValueState[Long] per key) and run
@@ -1547,30 +1435,13 @@ object ExtendedQueries extends Registry {
   private val q133 = Q("q133_streaming_tws_staleness",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(String, String, Long, Long)] = stalenessSymRows(s, d)
-      val mem = MemoryStream[(String, String, Long, Long)]
+      val mem = StreamGate.memory[(String, String, Long, Long)](s)
       val events = mem.toDF()
         .toDF("symbol", "channel", "ts_exchange_ms", "ts_recv_mono_ns")
       val gaps = graft.streaming.StalenessStream.gapsTws(events)
-      val sinkName = s"q133_tws_${q133Runs.incrementAndGet()}"
-      // RocksDB provider rides StreamGate's extraConfs — the one sanctioned
-      // conf window in the queries package; the stream's cloned session
-      // captures it at .start().
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false,
-        extraConfs = Seq("spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
-        gaps.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        rows.grouped(math.max(1, (rows.size + 1) / 2)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-      s.table(sinkName)
+      StreamGate.toMemory(s, gaps.toDF(), "append", feed(mem, inChunks(rows, 2)),
+        StreamGate.GateConf(rocksDb = true))
         .groupBy(col("symbol").cast("bigint").as("user_id"))
         .agg(count(lit(1)).as("stale_count"),
           StableAgg.lavg(col("stale_ms")).as("stale_mean_ms"),
@@ -1642,8 +1513,6 @@ object ExtendedQueries extends Registry {
       ORDER BY format"""
     })
 
-  private val q137Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** Streaming LEFT OUTER stream-stream join gate — the semantically
     * hardest join mode streaming has: an unconverted impression emits
     * its null-click row ONLY once the global watermark passes
@@ -1664,43 +1533,10 @@ object ExtendedQueries extends Registry {
     */
   private val q137 = Q("q137_streaming_outer_join",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val (imps, clks) = joinSideRows(s, d)
-      val maxTs = (imps.iterator ++ clks.iterator).map(_._3).max
-      val horizonMs = 86400000L
-      val memI = MemoryStream[(Long, Long, Long)]
-      val memC = MemoryStream[(Long, Long, Long)]
-      val iDf = memI.toDF().toDF("imp_id", "i_user", "i_ts")
-        .withColumn("i_time", timestamp_millis(col("i_ts")))
-        .withWatermark("i_time", "0 seconds")
-      val cDf = memC.toDF().toDF("clk_id", "c_user", "c_ts")
-        .withColumn("c_time", timestamp_millis(col("c_ts")))
-        .withWatermark("c_time", "0 seconds")
+      val (iDf, cDf, rounds) = joinReplay(s, d, "0 seconds", sentinels = 2)
       val joined = graft.streaming.Joins
         .attribution(iDf, cDf, "24 hours", joinType = "leftOuter")
-      val sinkName = s"q137_oj_${q137Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        joined.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        val iChunks = imps.grouped(math.max(1, (imps.size + 1) / 2)).toSeq
-        val cChunks = clks.grouped(math.max(1, (clks.size + 1) / 2)).toSeq
-        (0 until math.max(iChunks.size, cChunks.size)).foreach { i =>
-          if (i < iChunks.size) memI.addData(iChunks(i): _*)
-          if (i < cChunks.size) memC.addData(cChunks(i): _*)
-          query.processAllAvailable()
-        }
-        (1 to 2).foreach { k =>
-          val sentinelTs = maxTs + horizonMs + k * 3600000L
-          memI.addData((-1L, -1L, sentinelTs))
-          memC.addData((-1L, -1L, sentinelTs))
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-      s.table(sinkName)
+      StreamGate.toMemory(s, joined, "append", rounds)
         .filter(col("user_id") >= 0)
         .orderBy("imp_id", "clk_id")
     },
@@ -1710,8 +1546,6 @@ object ExtendedQueries extends Registry {
         ON i.user_id = c.user_id
         AND epoch_ms(c.ts) BETWEEN epoch_ms(i.ts) AND epoch_ms(i.ts) + 86400000
       ORDER BY imp_id, clk_id"""))
-
-  private val q138Runs = new java.util.concurrent.atomic.AtomicLong()
 
   /** transformWithState EVENT-TIME TIMER gate — the API surface q133's
     * ValueState fold doesn't reach: gap sessionization where the tail
@@ -1729,8 +1563,6 @@ object ExtendedQueries extends Registry {
   private val q138 = Q("q138_streaming_tws_sessions",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(Long, Long, Double)] =
         StreamFixtures.replayRows("q138", d) {
           Tables.events(s, d)
@@ -1740,30 +1572,14 @@ object ExtendedQueries extends Registry {
             .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
         }
       val maxTs = if (rows.nonEmpty) rows.map(_._2).max else 0L
-      val mem = MemoryStream[(Long, Long, Double)]
+      val mem = StreamGate.memory[(Long, Long, Double)](s)
       val src = mem.toDF().toDF("user_id", "ts_ms", "value")
         .withColumn("event_time", timestamp_millis(col("ts_ms")))
         .withWatermark("event_time", "0 seconds")
       val sess = graft.streaming.SessionsTws.sessions(src)
-      val sinkName = s"q138_tws_${q138Runs.incrementAndGet()}"
-      // RocksDB provider via StreamGate's extraConfs (see q133).
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false,
-        extraConfs = Seq("spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
-        sess.toDF().writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        rows.grouped(math.max(1, (rows.size + 1) / 2)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-        (1 to 2).foreach { k =>
-          mem.addData((-1L, maxTs + 1800000L + k * 3600000L, 0.0))
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-      s.table(sinkName)
+      val sentinels = (1 to 2).map(k => Seq((-1L, maxTs + 1800000L + k * 3600000L, 0.0)))
+      StreamGate.toMemory(s, sess.toDF(), "append", feed(mem, inChunks(rows, 2) ++ sentinels),
+        StreamGate.GateConf(rocksDb = true))
         .filter(col("user_id") >= 0)
         .select(col("user_id"), col("session_start_ms"), col("session_end_ms"),
           col("cnt"), col("total_value"))
@@ -1780,8 +1596,6 @@ object ExtendedQueries extends Registry {
         CAST(COUNT(*) AS BIGINT) AS cnt, ${O.dsum("value")} AS total_value
       FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_ms"""))
 
-  private val q139Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** FILE streaming source gate — every other replay gate drives
     * MemoryStream; this one drives the production file source: the
     * events fixture is re-written as four parquet files into a spool
@@ -1797,9 +1611,7 @@ object ExtendedQueries extends Registry {
   private val q139 = Q("q139_streaming_file_source",
     (s, d) => {
       val ev = Tables.events(s, d).select(col("user_id"), col("event_id"))
-      val dir = TempDirs.scratch(
-        s"graft_q139_${ProcessHandle.current().pid()}_${q139Runs.incrementAndGet()}")
-      val spool = new java.io.File(dir, "spool").getPath
+      val spool = new java.io.File(StreamGate.scratch("q139"), "spool").getPath
       (0 until 4).foreach { i =>
         ev.filter(pmod(col("event_id"), lit(4)) === i)
           .coalesce(1).write.mode("append").parquet(spool)
@@ -1810,13 +1622,7 @@ object ExtendedQueries extends Registry {
         .parquet(spool)
       val counts = graft.streaming.MetricsStream
         .msgCounts(src.select(col("user_id").as("symbol")))
-      val sinkName = s"q139_fs_${q139Runs.get()}"
-      val query = StreamGate.withStatePartitions(s) {
-        counts.writeStream.format("memory").queryName(sinkName)
-          .outputMode("complete").start()
-      }
-      try query.processAllAvailable() finally query.stop()
-      s.table(sinkName)
+      StreamGate.toMemory(s, counts, "complete", StreamGate.drainOnly)
         .select(col("symbol").as("user_id"), col("msg_count"))
         .orderBy("user_id")
     },
@@ -1873,14 +1679,12 @@ object ExtendedQueries extends Registry {
       ORDER BY format"""
     })
 
-  private val q149Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** Trigger.AvailableNow gate — the batch-backfill trigger the other
     * streaming gates don't touch: the query plans its OWN micro-batches
     * from the files available at start (maxFilesPerTrigger still caps
     * each batch, so this drains the 4-file spool in 4 real batches),
-    * then TERMINATES itself — no processAllAvailable, no stop(); the
-    * gate awaits natural termination. This is the production shape for
+    * then TERMINATES itself — no replay rounds and no drain; the gate
+    * awaits natural termination. This is the production shape for
     * "catch up on the spool nightly with streaming semantics + state +
     * exactly-once file tracking, then exit": same per-key aggregation
     * state as a live stream, bounded run. Complete-mode per-event_type
@@ -1889,11 +1693,8 @@ object ExtendedQueries extends Registry {
     */
   private val q149 = Q("q149_streaming_available_now",
     (s, d) => {
-      val runId = q149Runs.incrementAndGet()
       val fix = StreamFixtures.mod4(s, d)
-      val dir = TempDirs.scratch(
-        s"graft_q149_${ProcessHandle.current().pid()}_$runId")
-      val spool = new java.io.File(dir, "spool")
+      val spool = new java.io.File(StreamGate.scratch("q149"), "spool")
       StreamFixtures.copyTo(fix.files, spool)
       val src = s.readStream
         .schema(fix.schema)
@@ -1903,13 +1704,9 @@ object ExtendedQueries extends Registry {
       val totals = src.groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           StableAgg.dsum(col("value")).as("total_value"))
-      val sinkName = s"q149_an_$runId"
-      val query = StreamGate.withStatePartitions(s) {
-        totals.writeStream.format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+      val (sink, sinkName) = StreamGate.memorySink("complete")
+      val query = StreamGate.start(s, totals)(
+        sink(_).trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
       // AvailableNow terminates on its own once the spool is drained;
       // the timeout is a hang guard, not a pacing device.
       try {
@@ -1923,8 +1720,6 @@ object ExtendedQueries extends Registry {
     Some(s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
         ${O.dsum("value")} AS total_value
       FROM events GROUP BY event_type ORDER BY event_type"""))
-
-  private val q152Runs = new java.util.concurrent.atomic.AtomicLong()
 
   /** Checkpoint-recovery gate — the durability semantics no other gate
     * reaches: a streaming aggregation runs over the first half of a file
@@ -1941,15 +1736,13 @@ object ExtendedQueries extends Registry {
     */
   private val q152 = Q("q152_streaming_restart",
     (s, d) => {
-      val runId = q152Runs.incrementAndGet()
       val fix = StreamFixtures.mod4(s, d)
-      val dir = TempDirs.scratch(
-        s"graft_q152_${ProcessHandle.current().pid()}_$runId")
+      val dir = StreamGate.scratch("q152")
       val spool = new java.io.File(dir, "spool")
       val cp = new java.io.File(dir, "checkpoint").getPath
       def addFiles(ids: Range): Unit =
         StreamFixtures.copyTo(ids.map(fix.files), spool)
-      def runHalf(half: Int): Unit = {
+      def runHalf(): DataFrame = {
         val src = s.readStream
           .schema(fix.schema)
           .option("maxFilesPerTrigger", "1")
@@ -1957,28 +1750,22 @@ object ExtendedQueries extends Registry {
         val totals = src.groupBy("event_type")
           .agg(count(lit(1)).as("n_events"),
             StableAgg.dsum(col("value")).as("total_value"))
-        val query = StreamGate.withStatePartitions(s) {
-          totals.writeStream.format("memory")
-            .queryName(s"q152_rs_${runId}_h$half")
-            .outputMode("complete")
-            .option("checkpointLocation", cp)
-            .start()
-        }
-        try query.processAllAvailable() finally query.stop()
+        val (sink, name) = StreamGate.memorySink("complete")
+        StreamGate.replay(s, totals, StreamGate.drainOnly)(
+          sink(_).option("checkpointLocation", cp))
+        s.table(name)
       }
       addFiles(0 until 2)
-      runHalf(1) // first run: files 0-1, then a clean stop
+      runHalf() // first run: files 0-1, then a clean stop
       addFiles(2 until 4)
-      runHalf(2) // NEW query, same checkpoint: must resume, not restart
-      s.table(s"q152_rs_${runId}_h2")
+      // NEW query, same checkpoint: must resume, not restart
+      runHalf()
         .select(col("event_type"), col("n_events"), col("total_value"))
         .orderBy("event_type")
     },
     Some(s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
         ${O.dsum("value")} AS total_value
       FROM events GROUP BY event_type ORDER BY event_type"""))
-
-  private val q153Runs = new java.util.concurrent.atomic.AtomicLong()
 
   /** Late-data drop gate — the watermark semantics the other event-time
     * gates sidestep by feeding in order: batch 1 carries every ON-TIME
@@ -1997,8 +1784,6 @@ object ExtendedQueries extends Registry {
   private val q153 = Q("q153_streaming_late_drop",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(String, Long, Double, Long)] =
         StreamFixtures.replayRows("q153", d) {
           Tables.events(s, d)
@@ -2013,7 +1798,7 @@ object ExtendedQueries extends Registry {
       val (late, onTime) = rows.partition { case (_, ts, _, id) =>
         id % 5 == 0 && ts < cutoff
       }
-      val mem = MemoryStream[(String, Long, Double)]
+      val mem = StreamGate.memory[(String, Long, Double)](s)
       val src = mem.toDF().toDF("event_type", "ts_ms", "value")
         .withColumn("event_time", timestamp_millis(col("ts_ms")))
         .withWatermark("event_time", "0 seconds")
@@ -2021,7 +1806,6 @@ object ExtendedQueries extends Registry {
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("cnt"),
           StableAgg.dsum(col("value")).as("total_value"))
-      val sinkName = s"q153_ld_${q153Runs.incrementAndGet()}"
       // No-data batches OFF with a sentinel-FIRST protocol (r11). The
       // engine's two watermark uses lag differently without no-data
       // batches (measured): EVICTION in batch N sees stats through N−1,
@@ -2032,41 +1816,37 @@ object ExtendedQueries extends Registry {
       // (filter wm = b0 stats = maxTs ⇒ all dropped) + sentinel 2; b2's
       // eviction wm = b1 stats = maxTs+2h flushes every real window.
       // 5 micro-batches → 3 with identical final tables.
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        agg.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        mem.addData(onTime.map(r => (r._1, r._2, r._3)): _*)
-        query.processAllAvailable()
-        mem.addData(("zz_sentinel", maxTs + 7200000L, 0.0d))
-        query.processAllAvailable()
-        mem.addData(late.map(r => (r._1, r._2, r._3))
-          :+ (("zz_sentinel", maxTs + 14400000L, 0.0d)): _*)
-        query.processAllAvailable() // late dropped; eviction flushes all real windows
-        // Pin WHERE the drop happens (ADVICE r11): the sentinel-first
-        // protocol advances the watermark before the late chunk arrives,
-        // so sink absence alone can no longer distinguish the engine's
-        // late-INPUT filter from trivially losing rows below an already-
-        // advanced watermark. The state operator's own drop counter must
-        // account for exactly the engineered late set. The counter ticks
-        // POST-shuffle, after partial aggregation merged the batch's rows
-        // per group (verified: 1995 late rows → 1634 dropped = exactly the
-        // late set's distinct (1h-window, event_type) groups), so the
-        // expected count is the group count, not the row count — and a
-        // regression in the N−2 filter lag changes it before it can touch
-        // the hash.
-        val lateGroups = late.iterator
-          .map { case (t, ts, _, _) => (ts / 3600000L, t) }.toSet.size.toLong
-        val dropped = query.recentProgress.iterator
+      //
+      // Pin WHERE the drop happens (ADVICE r11): the sentinel-first
+      // protocol advances the watermark before the late chunk arrives,
+      // so sink absence alone can no longer distinguish the engine's
+      // late-INPUT filter from trivially losing rows below an already-
+      // advanced watermark. After every round, the state operator's own
+      // drop counter must account for exactly the late groups fed so far
+      // (none before the third round).
+      // The counter ticks POST-shuffle, after partial aggregation merged
+      // the batch's rows per group (verified: 1995 late rows → 1634
+      // dropped = exactly the late set's distinct (1h-window, event_type)
+      // groups), so the expected count is the group count, not the row
+      // count — and a regression in the N−2 filter lag changes it before
+      // it can touch the hash.
+      val lateGroups = late.iterator
+        .map { case (t, ts, _, _) => (ts / 3600000L, t) }.toSet.size.toLong
+      val lateFed = Iterator(0L, 0L, lateGroups)
+      def checkDrops(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+        val dropped = q.recentProgress.iterator
           .flatMap(_.stateOperators.iterator)
           .map(_.numRowsDroppedByWatermark).sum
-        if (dropped != lateGroups)
+        val expected = lateFed.next()
+        if (dropped != expected)
           throw new IllegalStateException(
-            s"late-input filter dropped $dropped groups; engineered late set = " +
-              s"${late.size} rows in $lateGroups groups")
-      } finally query.stop()
-      s.table(sinkName)
+            s"late-input filter dropped $dropped groups, expected $expected; engineered " +
+              s"late set = ${late.size} rows in $lateGroups groups")
+      }
+      val rounds = Seq(onTime.map(r => (r._1, r._2, r._3)),
+        Seq(("zz_sentinel", maxTs + 7200000L, 0.0d)),
+        late.map(r => (r._1, r._2, r._3)) :+ (("zz_sentinel", maxTs + 14400000L, 0.0d)))
+      StreamGate.toMemory(s, agg, "append", feed(mem, rounds), afterRound = checkDrops)
         .filter(col("event_type") =!= "zz_sentinel")
         .select(unix_millis(col("window.start")).as("window_start_ms"),
           col("event_type"), col("cnt"), col("total_value"))
@@ -2081,8 +1861,6 @@ object ExtendedQueries extends Registry {
         ${O.dsum("value")} AS total_value
       FROM e GROUP BY window_start_ms, event_type
       ORDER BY window_start_ms, event_type"""))
-
-  private val q154Runs = new java.util.concurrent.atomic.AtomicLong()
 
   /** foreachBatch sink gate with idempotent, batchId-keyed writes — the
     * escape hatch every production pipeline ends up needing for sinks
@@ -2099,12 +1877,7 @@ object ExtendedQueries extends Registry {
   private val q154 = Q("q154_foreach_batch_sink",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val runId = q154Runs.incrementAndGet()
-      val dir = TempDirs.scratch(
-        s"graft_q154_${ProcessHandle.current().pid()}_$runId")
-      val outRoot = new java.io.File(dir, "out").getPath
+      val outRoot = new java.io.File(StreamGate.scratch("q154"), "out").getPath
       val rows: Seq[(Long, String, Double)] =
         StreamFixtures.replayRows("q154", d) {
           Tables.events(s, d)
@@ -2113,33 +1886,25 @@ object ExtendedQueries extends Registry {
             .collect().iterator
             .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
         }
-      val mem = MemoryStream[(Long, String, Double)]
+      val mem = StreamGate.memory[(Long, String, Double)](s)
       val src = mem.toDF().toDF("event_id", "event_type", "value")
       // Batch 0's rows are materialized INSIDE the foreachBatch callback
       // (the only scope where the batch DF is contractually valid); the
       // retry below replays the rewrite from that copy, never from the
       // expired DF reference.
       @volatile var firstRows: Array[(Long, String, Double)] = Array.empty
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        src.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            if (id == 0) firstRows = batch.collect().map(r =>
-              (r.getLong(0), r.getString(1), r.getDouble(2)))
-            batch.write.mode("overwrite").parquet(s"$outRoot/batch=$id")
-          }
-          .outputMode("append").start()
+      StreamGate.replay(s, src, feed(mem, inChunks(rows, 2))) {
+        _.foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          if (id == 0) firstRows = batch.collect().map(r =>
+            (r.getLong(0), r.getString(1), r.getDouble(2)))
+          batch.write.mode("overwrite").parquet(s"$outRoot/batch=$id")
+        }.outputMode("append")
       }
-      try {
-        rows.grouped(math.max(1, (rows.size + 1) / 2)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-        // simulate a retry of batch 0: the idempotent overwrite must leave
-        // the directory's contents identical, not append a second copy
-        if (firstRows.nonEmpty)
-          firstRows.toSeq.toDF("event_id", "event_type", "value")
-            .write.mode("overwrite").parquet(s"$outRoot/batch=0")
-      } finally query.stop()
+      // simulate a retry of batch 0: the idempotent overwrite must leave
+      // the directory's contents identical, not append a second copy
+      if (firstRows.nonEmpty)
+        firstRows.toSeq.toDF("event_id", "event_type", "value")
+          .write.mode("overwrite").parquet(s"$outRoot/batch=0")
       s.read.parquet(outRoot)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
@@ -2149,8 +1914,6 @@ object ExtendedQueries extends Registry {
     Some(s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
         ${O.dsum("value")} AS total_value
       FROM events GROUP BY event_type ORDER BY event_type"""))
-
-  private val q155Runs = new java.util.concurrent.atomic.AtomicLong()
 
   /** Chained stateful aggregations in ONE streaming query (Spark 3.4+
     * capability gate): a 15-minute event-time window count per event_type
@@ -2166,8 +1929,6 @@ object ExtendedQueries extends Registry {
   private val q155 = Q("q155_streaming_chained_aggs",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(String, Long)] =
         StreamFixtures.replayRows("q155", d) {
           Tables.events(s, d)
@@ -2181,7 +1942,7 @@ object ExtendedQueries extends Registry {
       // whole 50k-row batch on ONE task; the gate's aggregates are
       // partition-order-invariant, so splitting the replay block across
       // tasks is pure parallelism (r11 A/B: data batches ~1.1 s → ~0.4 s).
-      val mem = MemoryStream[(String, Long)](numPartitions = 8)
+      val mem = StreamGate.memory[(String, Long)](s, Some(8))
       val src = mem.toDF().toDF("event_type", "ts_ms")
         .withColumn("event_time", timestamp_millis(col("ts_ms")))
         .withWatermark("event_time", "0 seconds")
@@ -2191,7 +1952,6 @@ object ExtendedQueries extends Registry {
       val hourly = quarter
         .groupBy(window(col("window"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_quarters"), sum(col("q_cnt")).as("n_events"))
-      val sinkName = s"q155_ca_${q155Runs.incrementAndGet()}"
       // Two-sentinel protocol, no-data batches OFF (r11, the q153 device):
       // the first sentinel rides the SECOND data chunk's batch (it only
       // has to advance the watermark past both tiers' final windows once
@@ -2200,21 +1960,9 @@ object ExtendedQueries extends Registry {
       // cross-batch state-merge the gate exists to prove is untouched —
       // the two data chunks still arrive in separate batches. 6
       // micro-batches → 3.
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        hourly.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        val half = math.max(1, (rows.size + 1) / 2)
-        val (c1, c2) = rows.splitAt(half)
-        mem.addData(c1: _*)
-        query.processAllAvailable()
-        mem.addData(c2 :+ (("zz_sentinel", maxTs + 7200000L)): _*)
-        query.processAllAvailable()
-        mem.addData(("zz_sentinel", maxTs + 14400000L))
-        query.processAllAvailable() // emit everything closed by wm=maxTs+2h
-      } finally query.stop()
-      s.table(sinkName)
+      val (c1, c2) = rows.splitAt(math.max(1, (rows.size + 1) / 2))
+      StreamGate.toMemory(s, hourly, "append", feed(mem,
+        Seq(c1, c2 :+ (("zz_sentinel", maxTs + 7200000L)), Seq(("zz_sentinel", maxTs + 14400000L)))))
         .filter(col("event_type") =!= "zz_sentinel")
         .select(unix_millis(col("window.start")).as("window_start_ms"),
           col("event_type"), col("n_quarters"), col("n_events"))
@@ -2278,8 +2026,6 @@ object ExtendedQueries extends Registry {
           (acc, v) -> acc + v) AS top3_sum
       FROM t ORDER BY vec_id"""))
 
-  private val q235Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** Update-output-mode gate — the third (and previously ungated) sink
     * mode next to append (q153 …) and complete (q122/q123 …): a keyed
     * aggregate in update mode emits, per micro-batch, ONLY the keys that
@@ -2299,8 +2045,6 @@ object ExtendedQueries extends Registry {
   private val q235 = Q("q235_streaming_update_mode",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(Long, Long)] =
         StreamFixtures.replayRows("q235", d) {
           Tables.events(s, d)
@@ -2308,22 +2052,11 @@ object ExtendedQueries extends Registry {
             .select(col("user_id"), col("event_id")).orderBy("event_id")
             .collect().iterator.map(r => (r.getLong(0), r.getLong(1))).toSeq
         }
-      val mem = MemoryStream[(Long, Long)]
+      val mem = StreamGate.memory[(Long, Long)](s)
       val counts = mem.toDF().toDF("user_id", "event_id")
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("id_sum"))
-      val sinkName = s"q235_um_${q235Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        counts.writeStream.format("memory").queryName(sinkName)
-          .outputMode("update").start()
-      }
-      try {
-        rows.grouped(math.max(1, (rows.size + 2) / 3)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-      s.table(sinkName)
+      StreamGate.toMemory(s, counts, "update", feed(mem, inChunks(rows, 3)))
         .groupBy("user_id")
         .agg(max(struct(col("n_events"), col("id_sum"))).as("fin"),
           count(lit(1)).as("n_emissions"))
@@ -2342,8 +2075,6 @@ object ExtendedQueries extends Registry {
         CAST(COUNT(DISTINCT chunk) AS BIGINT) AS n_emissions
       FROM c GROUP BY user_id ORDER BY user_id"""))
 
-  private val q236Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** Stream-stream FULL OUTER attribution join — completes the
     * stream-join output-type matrix (inner q131, left outer q137):
     * matched (impression, click) pairs plus unconverted impressions AND
@@ -2359,43 +2090,10 @@ object ExtendedQueries extends Registry {
     */
   private val q236 = Q("q236_streaming_full_outer",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val (imps, clks) = joinSideRows(s, d)
-      val maxTs = (imps.iterator ++ clks.iterator).map(_._3).max
-      val horizonMs = 86400000L
-      val memI = MemoryStream[(Long, Long, Long)]
-      val memC = MemoryStream[(Long, Long, Long)]
-      val iDf = memI.toDF().toDF("imp_id", "i_user", "i_ts")
-        .withColumn("i_time", timestamp_millis(col("i_ts")))
-        .withWatermark("i_time", "0 seconds")
-      val cDf = memC.toDF().toDF("clk_id", "c_user", "c_ts")
-        .withColumn("c_time", timestamp_millis(col("c_ts")))
-        .withWatermark("c_time", "0 seconds")
+      val (iDf, cDf, rounds) = joinReplay(s, d, "0 seconds", sentinels = 2)
       val joined = graft.streaming.Joins
         .attribution(iDf, cDf, "24 hours", joinType = "fullOuter")
-      val sinkName = s"q236_fo_${q236Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        joined.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        val iChunks = imps.grouped(math.max(1, (imps.size + 1) / 2)).toSeq
-        val cChunks = clks.grouped(math.max(1, (clks.size + 1) / 2)).toSeq
-        (0 until math.max(iChunks.size, cChunks.size)).foreach { i =>
-          if (i < iChunks.size) memI.addData(iChunks(i): _*)
-          if (i < cChunks.size) memC.addData(cChunks(i): _*)
-          query.processAllAvailable()
-        }
-        (1 to 2).foreach { k =>
-          val sentinelTs = maxTs + horizonMs + k * 3600000L
-          memI.addData((-1L, -1L, sentinelTs))
-          memC.addData((-1L, -1L, sentinelTs))
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-      s.table(sinkName)
+      StreamGate.toMemory(s, joined, "append", rounds)
         .filter(col("user_id") >= 0)
         .orderBy("imp_id", "clk_id")
     },
@@ -2406,8 +2104,6 @@ object ExtendedQueries extends Registry {
         ON i.user_id = c.user_id
         AND epoch_ms(c.ts) BETWEEN epoch_ms(i.ts) AND epoch_ms(i.ts) + 86400000
       ORDER BY imp_id, clk_id"""))
-
-  private val q256Runs = new java.util.concurrent.atomic.AtomicInteger
 
   /** Streaming observable metrics — q246's `observe` under Structured
     * Streaming, where the metrics surface PER MICRO-BATCH in each
@@ -2428,8 +2124,6 @@ object ExtendedQueries extends Registry {
   private val q256 = Q("q256_streaming_observe",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(Long, Long, Double)] =
         StreamFixtures.replayRows("q256", d) {
           Tables.events(s, d)
@@ -2438,36 +2132,25 @@ object ExtendedQueries extends Registry {
             .orderBy("event_id")
             .collect().iterator.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
         }
-      val mem = MemoryStream[(Long, Long, Double)]
+      val mem = StreamGate.memory[(Long, Long, Double)](s)
       val observed = mem.toDF().toDF("user_id", "event_id", "value")
         .observe("batch_qc",
           count(lit(1)).as("n_rows"),
           sum(when(col("value") > 50.0d, 1L).otherwise(0L)).as("n_high"),
           sum(col("value").cast("decimal(38,6)")).as("dval"))
-      val sinkName = s"q256_obs_${q256Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s) {
-        observed.select("user_id", "event_id")
-          .writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
       val perBatch = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Double)]
-      try {
-        var chunkIdx = 0
-        rows.grouped(math.max(1, (rows.size + 2) / 3)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-          val om = query.lastProgress.observedMetrics.get("batch_qc")
-          if (om == null) throw new IllegalStateException(
-            s"micro-batch $chunkIdx carried no observed metrics")
-          perBatch += ((chunkIdx, om.getAs[Long]("n_rows"),
-            om.getAs[Long]("n_high"),
-            om.getAs[java.math.BigDecimal]("dval").doubleValue()))
-          chunkIdx += 1
-        }
-        val sunk = s.table(sinkName).count()
-        if (sunk != rows.size) throw new IllegalStateException(
-          s"sink saw $sunk rows, stream carried ${rows.size}")
-      } finally query.stop()
+      def record(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+        val om = q.lastProgress.observedMetrics.get("batch_qc")
+        if (om == null) throw new IllegalStateException(
+          s"micro-batch ${perBatch.size} carried no observed metrics")
+        perBatch += ((perBatch.size, om.getAs[Long]("n_rows"),
+          om.getAs[Long]("n_high"),
+          om.getAs[java.math.BigDecimal]("dval").doubleValue()))
+      }
+      val sunk = StreamGate.toMemory(s, observed.select("user_id", "event_id"), "append",
+        feed(mem, inChunks(rows, 3)), afterRound = record).count()
+      if (sunk != rows.size) throw new IllegalStateException(
+        s"sink saw $sunk rows, stream carried ${rows.size}")
       s.createDataFrame(perBatch.toSeq)
         .toDF("chunk", "n_rows", "n_high", "value_sum")
         .orderBy("chunk")

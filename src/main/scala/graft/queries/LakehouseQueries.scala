@@ -54,8 +54,6 @@ object LakehouseQueries extends Registry {
       log AS (SELECT * FROM (SELECT * FROM base UNION ALL SELECT * FROM upd
         UNION ALL SELECT * FROM del) WHERE $pred)"""
 
-  private val q208Runs = new java.util.concurrent.atomic.AtomicInteger
-
   /** Streaming merge-on-read compaction (q205's latest-wins as STATE): the
     * change log replays version-by-version through a MemoryStream — one
     * micro-batch per commit, exactly a CDC feed — into a complete-mode
@@ -69,7 +67,7 @@ object LakehouseQueries extends Registry {
     * Scale: per-key state is ONE fixed-width struct (the argmax partial),
     * merged associatively — the same map-side-combine algebra as batch
     * compaction, so state size is |live keys|, never |log|. The driver-side
-    * collect is the replay HARNESS (MemoryStream needs addData); production
+    * collect is the replay HARNESS (a MemoryStream replays rows); production
     * swaps in the file/Kafka CDC source and keeps the identical in-stream
     * aggregate. The mod-4 key slice keeps the gate's state-store churn
     * proportional to signal (cross-batch upserts), not fixture size.
@@ -77,8 +75,6 @@ object LakehouseQueries extends Registry {
   private val q208 = Q("q208_streaming_upsert",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(Long, Long, String, Option[Double])] =
         StreamFixtures.replayRows("q208", d) {
           changeLog(s, d).filter(col("o_orderkey") % 4 === 0)
@@ -86,26 +82,13 @@ object LakehouseQueries extends Registry {
             .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
               if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toSeq
         }
-      val mem = MemoryStream[(Long, Long, String, Option[Double])]
+      val mem = StreamGate.memory[(Long, Long, String, Option[Double])](s)
       val src = mem.toDF().toDF("o_orderkey", "ver", "op", "price")
       val latest = src.groupBy("o_orderkey")
         .agg(max(struct(col("ver"), col("op"), col("price"))).as("st"))
-      val sinkName = s"q208_up_${q208Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        latest.writeStream.format("memory").queryName(sinkName)
-          .outputMode("complete").start()
-      }
-      try {
-        // one micro-batch per commit version — upserts MUST cross batches
-        (0L to 2L).foreach { v =>
-          val chunk = rows.filter(_._2 == v)
-          if (chunk.nonEmpty) {
-            mem.addData(chunk: _*)
-            query.processAllAvailable()
-          }
-        }
-      } finally query.stop()
-      s.table(sinkName)
+      // one micro-batch per commit version — upserts MUST cross batches
+      StreamGate.toMemory(s, latest, "complete",
+        StreamGate.feed(mem, (0L to 2L).map(v => rows.filter(_._2 == v))))
         .filter(col("st.op") =!= "D")
         .select(col("o_orderkey"), col("st.ver").as("ver"),
           col("st.price").as("price"))

@@ -15,127 +15,178 @@ trait Registry {
   def all: Seq[Q]
 }
 
-/** Shared harness for the streaming replay gates (q108, q111, q119-q123,
-  * q127, q131, q133).
+/** The one replay harness every streaming replay gate runs through. A gate
+  * declares its plan, its output mode and its rounds; the harness creates
+  * the MemoryStreams on the caller's session, starts the stream inside the
+  * conf window below, drains it after every round, and always stops it.
   */
 private[graft] object StreamGate {
+  import org.apache.spark.sql.{Encoder, Row}
+  import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, MemoryStreamTable}
+  import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
-  /** Clamp shuffle (= streaming state-store) partitions around a replay
-    * gate's stream. Each stateful operator loads and commits one state
-    * store instance PER PARTITION PER MICRO-BATCH — a fixed cost that
-    * dwarfs the KB of state the replay fixtures actually carry: at the
-    * session default of 32 partitions the gates spent ~1-3 s per batch
-    * on pure store churn (bench_stages shows stage_wall ≪ wall). The
-    * clamp keeps every gated operator distributed — they are partition-
-    * invariant by design, and 2 partitions still exercise multi-partition
-    * state merge/commit — while cutting the fixed per-batch cost 16x vs
-    * the session default (r08 A/B on the six heaviest gates: 8→2
-    * partitions cut their wall 25%, while moving checkpoints to tmpfs
-    * moved nothing AT 8 PARTITIONS — store instance churn dominated.
-    * With the clamp in place the I/O shows again: the r10 A/B measured
-    * a further −8% from the tmpfs scratch root, see TempDirs.scratch).
-    * Production sizing is the opposite trade: state partitions scale
-    * with executor count and amortize over seconds-long batches, which
-    * is why this clamps only the gate's stream, not the session.
-    * Wrapping `.start()` alone is sufficient AND complete: Structured
-    * Streaming clones the session synchronously at query start
-    * (StreamExecution.sparkSessionForStream) and every micro-batch
-    * plans against the clone, so the immediate restore cannot leak into
-    * the stream, and the post-stream batch aggregation over the sink
-    * table runs at full session parallelism.
+  /** One replay step: feeds zero or more rows into one or both streams. */
+  type Round = () => Unit
+
+  /** The three settable values of a gate's stream.
+    *
+    * @param n shuffle (= streaming state-store) partitions. Each stateful
+    *   operator loads and commits one state store instance PER PARTITION
+    *   PER MICRO-BATCH — a fixed cost that dwarfs the KB of state the
+    *   replay fixtures actually carry: at the session default of 32
+    *   partitions the gates spent ~1-3 s per batch on pure store churn
+    *   (bench_stages shows stage_wall ≪ wall). The clamp keeps every gated
+    *   operator distributed — they are partition-invariant by design, and 2
+    *   partitions still exercise multi-partition state merge/commit — while
+    *   cutting the fixed per-batch cost 16x vs the session default (r08 A/B
+    *   on the six heaviest gates: 8→2 partitions cut their wall 25%, while
+    *   moving checkpoints to tmpfs moved nothing AT 8 PARTITIONS — store
+    *   instance churn dominated. With the clamp in place the I/O shows
+    *   again: the r10 A/B measured a further −8% from the tmpfs scratch
+    *   root, see TempDirs.scratch). Production sizing is the opposite
+    *   trade: state partitions scale with executor count and amortize over
+    *   seconds-long batches, which is why this clamps only the gate's
+    *   stream, not the session.
+    * @param keepCodegen opt a gate OUT of the whole-stage-codegen clamp.
+    *   Whole-stage codegen is OFF for the gate streams (r11 A/B,
+    *   StreamProf): a watermarked incremental plan folds the CURRENT
+    *   WATERMARK VALUE into the generated source as a literal, so every
+    *   micro-batch's source text is new and janino recompiles the whole
+    *   pipeline per batch — 0.2-0.8 s of driver time per batch against
+    *   fixture batches whose interpreted eval costs ~10 ms (q155 steady
+    *   state 5.4 → 3.8 s, q153 3.2 → 2.4 s; factoryMode=NO_CODEGEN was NET
+    *   WORSE, so only whole-stage fusion is disabled — per-expression
+    *   codegen remains). Gates whose per-batch work is real per-row compute
+    *   (q204's tagging expressions, q220's binned range join) lose more to
+    *   interpreted eval than they save in per-batch recompiles — measured
+    *   +0.6 s / +0.3 s respectively in the r11 A/B, the only two
+    *   regressions.
+    * @param rocksDb run the stream on the RocksDB state-store provider.
     */
-  /** @param noDataBatches keep Spark's watermark-advance (no-data)
-    *   micro-batches. The MemoryStream replay gates pass `false`: their
-    *   protocols pull every emission through explicit sentinel DATA
-    *   rounds (the two-round device), so the engine's extra empty batch
-    *   after each watermark advance is pure per-batch fixed cost — with
-    *   a watermark, it near-doubles the micro-batch count. File-source
-    *   gates keep the default: q159's final windows emit in exactly such
-    *   a batch after the sentinel file, and the restart gates should
-    *   exercise the engine's stock trigger behavior.
+  final case class GateConf(n: Int = 2, keepCodegen: Boolean = false, rocksDb: Boolean = false)
+
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Shared counter for memory-sink names and gate scratch directories. */
+  private val runs = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A replay source on the caller's session; `numPartitions` splits each
+    * added block across that many tasks (default: one partition). */
+  def memory[T: Encoder](s: SparkSession, numPartitions: Option[Int] = None): MemoryStream[T] =
+    numPartitions.fold(MemoryStream[T](s))(MemoryStream[T](s, _))
+
+  /** `rows` in `k` consecutive chunks of ceil(|rows| / k). */
+  def inChunks[T](rows: Seq[T], k: Int): Seq[Seq[T]] =
+    rows.grouped(math.max(1, (rows.size + k - 1) / k)).toSeq
+
+  /** One round per chunk, each adding that chunk to `mem` (an empty chunk
+    * adds nothing, so its round runs no micro-batch). */
+  def feed[T](mem: MemoryStream[T], chunks: Iterable[Seq[T]]): Seq[Round] =
+    chunks.map(c => (() => if (c.nonEmpty) { mem.addData(c); () }): Round).toSeq
+
+  /** A single round that feeds nothing: the file-source gates' one drain. */
+  val drainOnly: Seq[Round] = Seq(() => ())
+
+  /** A fresh per-run scratch directory for `gate`'s spool, checkpoint or
+    * foreachBatch output. */
+  def scratch(gate: String): java.io.File =
+    graft.streaming.TempDirs.scratch(
+      s"graft_${gate}_${ProcessHandle.current().pid()}_${runs.incrementAndGet()}")
+
+  /** A fresh memory sink in output `mode`: its writer step and the name of
+    * the table it fills. */
+  def memorySink(mode: String): (DataStreamWriter[Row] => DataStreamWriter[Row], String) = {
+    val name = s"gate_${runs.incrementAndGet()}"
+    ((w: DataStreamWriter[Row]) => w.format("memory").queryName(name).outputMode(mode), name)
+  }
+
+  /** Start `plan`'s stream through `sink` inside the gate's conf window.
+    *
+    * No-data micro-batches are derived, not configured: off when the plan
+    * replays a MemoryStream — the replay protocols pull every emission
+    * through explicit sentinel DATA rounds, so the engine's extra empty
+    * batch after each watermark advance is pure per-batch fixed cost (with
+    * a watermark it near-doubles the micro-batch count) — and on, Spark's
+    * default, for file sources: q159's final windows emit in exactly such
+    * a batch after the sentinel file, and the restart gates exercise the
+    * engine's stock trigger behavior.
+    *
+    * The window sets and restores confs on the caller's session — the ONE
+    * sanctioned shared-session mutation site in the queries package
+    * (ConfHygieneSpec). Wrapping `.start()` alone is sufficient AND
+    * complete: Structured Streaming clones the session synchronously at
+    * query start (StreamExecution.sparkSessionForStream) and every
+    * micro-batch plans against the clone, so the immediate restore cannot
+    * leak into the stream, and the post-stream batch aggregation over the
+    * sink table runs at full session parallelism. The stream itself stays
+    * on the caller's session: a stream started on a cloned session reports
+    * progress only to the clone's StreamingQueryManager and registers its
+    * memory-sink view only there.
     */
-  /** @param keepCodegen opt a gate OUT of the whole-stage-codegen clamp:
-    *   gates whose per-batch work is real per-row compute (q204's tagging
-    *   expressions, q220's binned range join) lose more to interpreted
-    *   eval than they save in per-batch recompiles — measured +0.6 s /
-    *   +0.3 s respectively in the r11 A/B, the only two regressions.
-    */
-  /** @param extraConfs additional confs the stream must start under (e.g.
-    *   the RocksDB state-store provider class). Folded into the same
-    *   set/restore window as the partition clamp so gate bodies never
-    *   touch session confs themselves — this helper is the ONE sanctioned
-    *   conf-mutation site in the queries package (ConfHygieneSpec), and
-    *   its restore-after-start is safe by the session-clone argument
-    *   above.
-    */
-  def withStatePartitions[A](s: SparkSession, n: Int = 2,
-      noDataBatches: Boolean = true, keepCodegen: Boolean = false,
-      extraConfs: Seq[(String, String)] = Nil)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val cgKey = "spark.sql.codegen.wholeStage"
-    // GRAFT_STATE_PARTITIONS: dev A/B knob for the clamp (the gates are
-    // partition-invariant by design, so this can only shift cost, never
-    // results — restart gates bake the count into their checkpoint, which
-    // stays consistent because the env var is fixed for a process).
-    val eff = sys.env.get("GRAFT_STATE_PARTITIONS").map(_.toInt).getOrElse(n)
-    // Whole-stage codegen OFF for the gate streams (r11 A/B, StreamProf):
-    // a watermarked incremental plan folds the CURRENT WATERMARK VALUE
-    // into the generated source as a literal, so every micro-batch's
-    // source text is new and janino recompiles the whole pipeline per
-    // batch — 0.2-0.8 s of driver time per batch against fixture batches
-    // whose interpreted eval costs ~10 ms (q155 steady state 5.4 → 3.8 s,
-    // q153 3.2 → 2.4 s; factoryMode=NO_CODEGEN was NET WORSE, so only
-    // whole-stage fusion is disabled — per-expression codegen remains).
-    // Production sizing is the opposite trade (billion-row batches
-    // amortize one compile in ms), which is why this clamps only the
-    // gate's cloned session, never the batch session.
-    // GRAFT_STREAM_CODEGEN=true restores stock behavior for A/Bs.
-    val cg = sys.env.get("GRAFT_STREAM_CODEGEN")
-      .getOrElse(if (keepCodegen) "true" else "false")
-    val prev = s.conf.get(key)
-    val prevNd = s.conf.get(ndKey)
-    val prevCg = s.conf.get(cgKey)
-    val prevExtra = extraConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-    s.conf.set(key, eff.toString)
-    s.conf.set(ndKey, noDataBatches.toString)
-    s.conf.set(cgKey, cg)
-    extraConfs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val r = body
-      r match {
-        case q: org.apache.spark.sql.streaming.StreamingQuery if capturing =>
-          capturedQueries += q
-        case _ =>
-      }
-      r
-    } finally {
-      s.conf.set(key, prev)
-      s.conf.set(ndKey, prevNd)
-      s.conf.set(cgKey, prevCg)
-      prevExtra.foreach {
+  def start(s: SparkSession, plan: DataFrame, conf: GateConf = GateConf())(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val replaysMemory = plan.queryExecution.logical.exists {
+      case r: org.apache.spark.sql.catalyst.streaming.StreamingRelationV2 =>
+        r.table.isInstanceOf[MemoryStreamTable]
+      case _ => false
+    }
+    val confs = Seq(
+      "spark.sql.shuffle.partitions" -> conf.n.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> (!replaysMemory).toString,
+      "spark.sql.codegen.wholeStage" -> conf.keepCodegen.toString) ++
+      (if (conf.rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider)
+       else Nil)
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    val query =
+      try sink(plan.writeStream).start()
+      finally prev.foreach {
         case (k, Some(v)) => s.conf.set(k, v)
         case (k, None)    => s.conf.unset(k)
       }
-    }
+    if (capturing) capturedQueries += query
+    query
+  }
+
+  /** Run `rounds` through `plan`'s stream: start it, then after each round
+    * drain it (`processAllAvailable`) and call `afterRound`; always stop it.
+    */
+  def replay(s: SparkSession, plan: DataFrame, rounds: Seq[Round],
+      conf: GateConf = GateConf(), afterRound: StreamingQuery => Unit = _ => ())(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val query = start(s, plan, conf)(sink)
+    try rounds.foreach { round =>
+      round()
+      query.processAllAvailable()
+      afterRound(query)
+    } finally query.stop()
+  }
+
+  /** [[replay]] into a fresh memory sink; returns the sink's table. */
+  def toMemory(s: SparkSession, plan: DataFrame, mode: String, rounds: Seq[Round],
+      conf: GateConf = GateConf(), afterRound: StreamingQuery => Unit = _ => ()): DataFrame = {
+    val (sink, name) = memorySink(mode)
+    replay(s, plan, rounds, conf, afterRound)(sink)
+    s.table(name)
   }
 
   /** Plan-attestation hook: every StreamingQuery started through
-    * [[withStatePartitions]] (all 22 gates funnel their `.start()` here)
-    * is recorded while capture is on, so the plan-invariant harness can
-    * read each handle's `lastExecution` — the executed micro-batch plan —
-    * AFTER the gate returns: the IncrementalExecution object outlives
-    * `stop()`. Off by default; production paths retain nothing.
+    * [[start]] (all 31 gate streams funnel their `.start()` here) is
+    * recorded while capture is on, so the plan-invariant harness can read
+    * each handle's `lastExecution` — the executed micro-batch plan — AFTER
+    * the gate returns: the IncrementalExecution object outlives `stop()`.
+    * Off by default; production paths retain nothing.
     */
   private val capturedQueries =
-    new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.streaming.StreamingQuery]
+    new scala.collection.mutable.ArrayBuffer[StreamingQuery]
   @volatile private var capturing = false
 
   /** Run `body` (typically one registry streaming gate) and return its
     * result plus every StreamingQuery it started. Synchronized: gates run
     * one at a time in the audit paths that use this.
     */
-  def captureStreamingQueries[A](body: => A): (A, Seq[org.apache.spark.sql.streaming.StreamingQuery]) =
+  def captureStreamingQueries[A](body: => A): (A, Seq[StreamingQuery]) =
     synchronized {
       capturing = true
       capturedQueries.clear()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{OracleSql => O, Tables}
 import graft.functions.StableAgg
 import graft.streaming.TempDirs
+import StreamGate.{feed, inChunks}
 
 /** Shared on-disk replay fixtures for the file-source streaming gates
   * (q149, q152, q159): each gate used to rebuild its parquet spool with
@@ -93,8 +94,8 @@ private[queries] object StreamFixtures {
   private val rowCache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   /** Per-JVM memo of a gate's driver-side replay fixture — the
-    * collected, sorted row Seq a MemoryStream gate feeds through
-    * `addData`. The collect is replay HARNESS, not the gated operator
+    * collected, sorted row Seq a MemoryStream gate feeds in its replay
+    * rounds. The collect is replay HARNESS, not the gated operator
     * (the production entry is the DSv2 source; the MemoryStream exists
     * to pin arrival order hermetically), and the bench samples every
     * gate twice per JVM — memoizing pays the Spark collect+sort once,
@@ -300,8 +301,6 @@ object ScaleQueries extends Registry {
       SELECT suppkey, COUNT(*) AS n_triangles
       FROM n GROUP BY suppkey ORDER BY suppkey"""))
 
-  private val q159Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** Checkpoint recovery across a STATEFUL operator (VERDICT r5 item
     * 8): an event-time tumbling-window aggregation in APPEND mode runs
     * over the first two time-quartile files, stops mid-stream, and a
@@ -320,10 +319,8 @@ object ScaleQueries extends Registry {
     */
   private val q159 = Q("q159_stateful_restart",
     (s, d) => {
-      val runId = q159Runs.incrementAndGet()
       val fix = StreamFixtures.timeQuarters(s, d)
-      val dir = TempDirs.scratch(
-        s"graft_q159_${ProcessHandle.current().pid()}_$runId")
+      val dir = StreamGate.scratch("q159")
       val spool = new java.io.File(dir, "spool")
       val cp = new java.io.File(dir, "checkpoint").getPath
       val out = new java.io.File(dir, "out").getPath
@@ -344,14 +341,12 @@ object ScaleQueries extends Registry {
             StableAgg.dsum(col("value")).as("total_value"))
           .select(unix_millis(col("window.start")).as("window_start_ms"),
             col("event_type"), col("cnt"), col("total_value"))
-        val query = StreamGate.withStatePartitions(s) {
-          agg.writeStream.format("parquet")
+        StreamGate.replay(s, agg, StreamGate.drainOnly) {
+          _.format("parquet")
             .option("path", out)
             .option("checkpointLocation", cp)
             .outputMode("append")
-            .start()
         }
-        try query.processAllAvailable() finally query.stop()
       }
       StreamFixtures.copyTo(fix.files.take(2), spool)
       runHalf() // first run: quartiles 1-2, stop mid-stream
@@ -641,8 +636,6 @@ object ScaleQueries extends Registry {
       FROM events e JOIN iv ON e.value >= iv.lo AND e.value <= iv.hi
       GROUP BY interval_id ORDER BY interval_id"""))
 
-  private val q220Runs = new java.util.concurrent.atomic.AtomicInteger
-
   /** Streaming twin of q219: the SAME custom rewrite rule must fire
     * inside the micro-batch plan of a stream-static join — streaming
     * points (events replayed over 3 MemoryStream chunks) range-join the
@@ -660,8 +653,6 @@ object ScaleQueries extends Registry {
   private val q220 = Q("q220_streaming_range_join",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import graft.operators.RangeJoin
       val rows: Seq[(Long, Double)] =
         StreamFixtures.replayRows("q220", d) {
@@ -672,25 +663,15 @@ object ScaleQueries extends Registry {
       val iv = s.range(0L, 100L).select(col("id").as("interval_id"),
         (col("id").cast("double") * 5.0d).as("lo"),
         (col("id").cast("double") * 5.0d + 7.5d).as("hi"))
-      val mem = MemoryStream[(Long, Double)]
+      val mem = StreamGate.memory[(Long, Double)](s)
       val pts = mem.toDF().toDF("event_id", "value")
       val joined = RangeJoin.binned(pts, col("value"), iv,
         col("lo"), col("hi"), width = 5.0)
         .select("interval_id", "event_id", "value")
-      val sinkName = s"q220_rj_${q220Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false,
-          keepCodegen = true) { // binned-join expansion is real per-row compute: keep it fused
-        joined.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        rows.grouped(math.max(1, (rows.size + 2) / 3)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-        // the assertion must never pass vacuously: failing to reach the
-        // micro-batch plan is itself a gate failure, not a skip
-        val lastPlan = query match {
+      // the assertion must never pass vacuously: failing to reach the
+      // micro-batch plan is itself a gate failure, not a skip
+      def checkPlan(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+        val plan = q match {
           case sqw: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
             Option(sqw.streamingQuery.lastExecution)
               .map(_.executedPlan.toString)
@@ -699,11 +680,14 @@ object ScaleQueries extends Registry {
           case other => throw new IllegalStateException(
             s"cannot inspect micro-batch plan of ${other.getClass.getName}")
         }
-        if (lastPlan.contains("BroadcastNestedLoopJoin") || lastPlan.contains("CartesianProduct"))
+        if (plan.contains("BroadcastNestedLoopJoin") || plan.contains("CartesianProduct"))
           throw new IllegalStateException(
-            s"range-join rewrite did not fire in the micro-batch plan:\n$lastPlan")
-      } finally query.stop()
-      s.table(sinkName).groupBy("interval_id")
+            s"range-join rewrite did not fire in the micro-batch plan:\n$plan")
+      }
+      // binned-join expansion is real per-row compute: keep it fused
+      StreamGate.toMemory(s, joined, "append", feed(mem, inChunks(rows, 3)),
+        StreamGate.GateConf(keepCodegen = true), afterRound = checkPlan)
+        .groupBy("interval_id")
         .agg(count(lit(1)).as("n_points"),
           StableAgg.dsum(col("value")).as("sum_value"))
         .orderBy("interval_id")
@@ -1323,8 +1307,6 @@ object ScaleQueries extends Registry {
         TRUE AS p50_rank_ok, TRUE AS cd_ok
       FROM r GROUP BY event_type ORDER BY event_type"""))
 
-  private val q275Runs = new java.util.concurrent.atomic.AtomicInteger
-
   /** `foreachBatch` exactly-once file sink via idempotent per-batch
     * overwrite — the pattern for sinks with no transactional commit log
     * (plain object stores, JDBC staging, search indexes): each
@@ -1344,10 +1326,8 @@ object ScaleQueries extends Registry {
     */
   private val q275 = Q("q275_foreachbatch_exactly_once",
     (s, d) => {
-      val runId = q275Runs.incrementAndGet()
       val fix = StreamFixtures.timeQuarters(s, d)
-      val dir = TempDirs.scratch(
-        s"graft_q275_${ProcessHandle.current().pid()}_$runId")
+      val dir = StreamGate.scratch("q275")
       val spool = new java.io.File(dir, "spool")
       val cp = new java.io.File(dir, "checkpoint").getPath
       val out = new java.io.File(dir, "out")
@@ -1356,20 +1336,16 @@ object ScaleQueries extends Registry {
           .option("maxFilesPerTrigger", "1")
           .parquet(spool.getPath)
           .select("event_id", "event_type", "value")
-        val query = StreamGate.withStatePartitions(s) {
-          src.writeStream
-            .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-              val target = new java.io.File(out, s"batch_$batchId").getPath
-              // write TWICE: the second write is the simulated retry a
-              // real failure between write and commit produces — the
-              // overwrite makes it invisible
-              df.write.mode("overwrite").parquet(target)
-              df.write.mode("overwrite").parquet(target)
-            }
-            .option("checkpointLocation", cp)
-            .start()
+        StreamGate.replay(s, src, StreamGate.drainOnly) {
+          _.foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+            val target = new java.io.File(out, s"batch_$batchId").getPath
+            // write TWICE: the second write is the simulated retry a
+            // real failure between write and commit produces — the
+            // overwrite makes it invisible
+            df.write.mode("overwrite").parquet(target)
+            df.write.mode("overwrite").parquet(target)
+          }.option("checkpointLocation", cp)
         }
-        try query.processAllAvailable() finally query.stop()
       }
       StreamFixtures.copyTo(fix.files.take(2), spool)
       runHalf() // first run, stops mid-spool
@@ -1464,8 +1440,6 @@ object ScaleQueries extends Registry {
       FROM g WHERE gap_ms IS NOT NULL
       GROUP BY user_id ORDER BY user_id"""))
 
-  private val q304Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** q303's window-skew mitigation DEPLOYED on the streaming path — the
     * gated answer to the measured streaming hot-key straggler
     * (docs/SCALING.md "Skew on the STREAMING path": one bot entity = 30 %
@@ -1495,20 +1469,16 @@ object ScaleQueries extends Registry {
   private val q304 = Q("q304_streaming_salted_staleness",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(String, String, Long, Long)] =
         ExtendedQueries.stalenessSymRows(s, d)
-      val runId = q304Runs.incrementAndGet()
-      val dir = TempDirs.scratch(
-        s"graft_q304_${ProcessHandle.current().pid()}_$runId")
+      val dir = StreamGate.scratch("q304")
       val gapsRoot = new java.io.File(dir, "gaps").getPath
       val stateRoot = new java.io.File(dir, "state").getPath
       // 8 input partitions: the replay block parallelizes like q155's.
-      val mem = MemoryStream[(String, String, Long, Long)](numPartitions = 8)
+      val mem = StreamGate.memory[(String, String, Long, Long)](s, Some(8))
       val src = mem.toDF().toDF("symbol", "channel", "ts_exchange_ms", "arr")
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        src.writeStream
+      StreamGate.replay(s, src, feed(mem, inChunks(rows, 2))) {
+        _.outputMode("append")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
             val ss = batch.sparkSession
             val b = batch.select(col("symbol"),
@@ -1563,14 +1533,7 @@ object ScaleQueries extends Registry {
                 .write.mode("overwrite").parquet(s"$stateRoot/batch=$id")
             }
           }
-          .outputMode("append").start()
       }
-      try {
-        rows.grouped(math.max(1, (rows.size + 1) / 2)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
       s.read.parquet(gapsRoot)
         .groupBy(col("symbol").cast("bigint").as("user_id"))
         .agg(count(lit(1)).as("stale_count"),
@@ -1593,8 +1556,6 @@ object ScaleQueries extends Registry {
         MIN(gap_ms) AS stale_min_ms, MAX(gap_ms) AS stale_max_ms
       FROM g WHERE gap_ms IS NOT NULL
       GROUP BY user_id ORDER BY user_id"""))
-
-  private val q311Runs = new java.util.concurrent.atomic.AtomicLong()
 
   /** q306's right-to-be-forgotten cascade DEPLOYED on the streaming path:
     * per-user event counters accumulate across micro-batches in a
@@ -1619,8 +1580,6 @@ object ScaleQueries extends Registry {
   private val q311 = Q("q311_streaming_erasure",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(Long, String)] = StreamFixtures.replayRows("q311", d) {
         Tables.events(s, d)
           .select(col("user_id"), col("event_type"), col("ts_ms"), col("event_id"))
@@ -1641,14 +1600,12 @@ object ScaleQueries extends Registry {
       // zero batch dirs. Fail loudly at the invariant instead.
       require(rows.size > 1,
         s"q311 needs >1 replay rows for a mid-stream erasure (got ${rows.size})")
-      val runId = q311Runs.incrementAndGet()
-      val dir = TempDirs.scratch(
-        s"graft_q311_${ProcessHandle.current().pid()}_$runId")
+      val dir = StreamGate.scratch("q311")
       val stateRoot = new java.io.File(dir, "state").getPath
-      val mem = MemoryStream[(Long, String)]
+      val mem = StreamGate.memory[(Long, String)](s)
       val src = mem.toDF().toDF("user_id", "event_type")
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        src.writeStream
+      StreamGate.replay(s, src, feed(mem, inChunks(rows, 3))) {
+        _.outputMode("append")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
             val ss = batch.sparkSession
             val del = ss.createDataFrame(requested.map(Tuple1(_)))
@@ -1675,14 +1632,7 @@ object ScaleQueries extends Registry {
               else merged
             kept.write.mode("overwrite").parquet(s"$stateRoot/batch=$id")
           }
-          .outputMode("append").start()
       }
-      try {
-        rows.grouped(math.max(1, (rows.size + 2) / 3)).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
       val last = new java.io.File(stateRoot).listFiles()
         .map(_.getName).filter(_.startsWith("batch="))
         .map(_.stripPrefix("batch=").toLong).max
@@ -1701,7 +1651,6 @@ object ScaleQueries extends Registry {
         GROUP BY event_type ORDER BY event_type"""
     })
 
-  private val q314Runs = new java.util.concurrent.atomic.AtomicLong()
   private val DeltaBuckets = 8
 
   /** q311's erasure cascade with DELTA state maintenance — the answer to
@@ -1749,8 +1698,6 @@ object ScaleQueries extends Registry {
   private val q314 = Q("q314_streaming_erasure_delta",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows: Seq[(Long, String)] = StreamFixtures.replayRows("q311", d) {
         Tables.events(s, d)
           .select(col("user_id"), col("event_type"), col("ts_ms"), col("event_id"))
@@ -1770,14 +1717,11 @@ object ScaleQueries extends Registry {
       // chunk — fail at the precondition, not as an oracle mismatch
       require(chunks.size > 1,
         s"q314 needs >1 user-range chunks (got ${chunks.size})")
-      val runId = q314Runs.incrementAndGet()
-      val dir = TempDirs.scratch(
-        s"graft_q314_${ProcessHandle.current().pid()}_$runId")
+      val dir = StreamGate.scratch("q314")
       val stateRoot = new java.io.File(dir, "state")
       // distinct (bucket, version) rewrites — replay-proof accounting
       val writtenPairs =
         java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-      var nBatches = 0L
       // manifest helpers: state/v=<id>/_touched lists the bucket ids the
       // batch rewrote (an absent bkt dir at that version = emptied)
       def readTouched(vdir: java.io.File): Set[Long] = {
@@ -1790,10 +1734,10 @@ object ScaleQueries extends Registry {
         Option(stateRoot.listFiles()).getOrElse(Array.empty)
           .filter(_.getName.startsWith("v="))
           .map(f => f.getName.stripPrefix("v=").toLong -> f).toSeq
-      val mem = MemoryStream[(Long, String)]
+      val mem = StreamGate.memory[(Long, String)](s)
       val src = mem.toDF().toDF("user_id", "event_type")
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        src.writeStream
+      StreamGate.replay(s, src, feed(mem, chunks.map(_._2))) {
+        _.outputMode("append")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
             val ss = batch.sparkSession
             val del = ss.createDataFrame(requested.map(Tuple1(_)))
@@ -1859,17 +1803,11 @@ object ScaleQueries extends Registry {
               touched.foreach(j => writtenPairs.add(s"$j/$id"): Unit)
             } finally { cur.unpersist(): Unit }
           }
-          .outputMode("append").start()
       }
-      try {
-        // user-range chunks: the key-subset arrival shape delta state is
-        // for (counters commute, so the oracle is order-independent)
-        chunks.foreach { case (_, chunk) =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-          nBatches += 1
-        }
-      } finally query.stop()
+      // user-range chunks, one micro-batch each: the key-subset arrival
+      // shape delta state is for (counters commute, so the oracle is
+      // order-independent)
+      val nBatches = chunks.size.toLong
       // the delta property q314 exists for: strictly fewer DISTINCT
       // (bucket, version) rewrites than the full-rewrite cost (q311 pays
       // nBatches full-table writes = nBatches × nBuckets bucket-

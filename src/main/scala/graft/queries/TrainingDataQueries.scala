@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.Tables
 import graft.operators.{Dedup, HeavyHitters, Multimodal, Sampling, Similarity, TextAnalysis}
@@ -1628,8 +1629,6 @@ object TrainingDataQueries extends Registry {
       FROM b JOIN a USING (doc_id) ORDER BY doc_id"""
     })
 
-  private val q127Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** Incremental near-dup dedup — the MinHash/LSH sibling of q58's
     * exact-hash incremental dedup ([[Dedup.lshScreenAgainst]]): screen an
     * incoming batch (odd doc_ids) against the existing corpus's LSH index
@@ -1692,8 +1691,6 @@ object TrainingDataQueries extends Registry {
   private val q127 = Q("q127_streaming_ann",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val e = Tables.embeddings(s, d)
       val index = Similarity.lshIndex(
         e.select(col("vec_id").as("id"), col("embedding").as("vec")), numPlanes = 8)
@@ -1702,22 +1699,11 @@ object TrainingDataQueries extends Registry {
         .orderBy("vec_id")
         .collect().iterator
         .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-      val mem = MemoryStream[(Long, Seq[Float])]
+      val mem = StreamGate.memory[(Long, Seq[Float])](s)
       val src = mem.toDF().toDF("qid", "qvec")
       val cand = Similarity.lshStreamCandidates(index, src, numPlanes = 8)
-      val sinkName = s"q127_ann_${q127Runs.incrementAndGet()}"
-      val query = StreamGate.withStatePartitions(s, noDataBatches = false) {
-        cand.writeStream.format("memory").queryName(sinkName)
-          .outputMode("append").start()
-      }
-      try {
-        qrows.grouped(2).foreach { chunk =>
-          mem.addData(chunk: _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
       val w = Window.partitionBy("qid").orderBy(desc("cos_sim"), asc("id"))
-      s.table(sinkName)
+      StreamGate.toMemory(s, cand, "append", StreamGate.feed(mem, qrows.grouped(2).toSeq))
         .withColumn("rank", row_number().over(w).cast("int"))
         .filter(col("rank") <= 10)
         .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("cos_sim"))
@@ -1737,6 +1723,24 @@ object TrainingDataQueries extends Registry {
     * min/max string rendering rides the shortest-round-trip double rule
     * (NOTES: Spark CAST(double AS STRING) == DuckDB ::VARCHAR digits).
     */
+  /** Exact per-column distinct counts, dedupe-first (q134, q293): explode
+    * to (col_name, value-string) pairs, dedupe, and count the non-null
+    * values per column. The pair count equals COUNT(DISTINCT) only where
+    * the string cast tells apart exactly the values COUNT(DISTINCT) does.
+    * Long, decimal, string and date casts do. A DOUBLE cast does not:
+    * COUNT(DISTINCT) counts -0.0 and 0.0 as one value, but they cast to
+    * "-0.0" and "0.0". Adding 0.0 first turns -0.0 into 0.0 and leaves
+    * every other double unchanged (every NaN still casts to "NaN").
+    */
+  private[queries] def distinctCounts(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.select(explode(array(cols.map { c =>
+        val v = if (df.schema(c).dataType == DoubleType) col(c) + lit(0.0d) else col(c)
+        struct(lit(c).as("c"), v.cast("string").as("v"))
+      }: _*)).as("p"))
+      .select(col("p.c").as("col_name"), col("p.v").as("v"))
+      .distinct()
+      .groupBy("col_name").agg(count(col("v")).as("n_distinct"))
+
   private val q134 = Q("q134_column_profile",
     (s, d) => {
       val cols = Seq("l_orderkey", "l_quantity", "l_returnflag", "l_shipdate")
@@ -1747,10 +1751,8 @@ object TrainingDataQueries extends Registry {
       // task CPU at sf0.1 for a 600k-row scan. Split into (a) one plain
       // single-group pass for the non-distinct stats (tiny buffer, no
       // Expand) and (b) ONE dedupe-first pass for all four exact distinct
-      // counts: explode to (col_name, value-string) pairs — the casts are
-      // injective per column (long/decimal/string/date all render
-      // canonically), so distinct pair count == exact COUNT(DISTINCT) —
-      // dedupe map-side, then count per column with count(v) (NULLs
+      // counts ([[distinctCounts]]): explode to (col_name, value-string)
+      // pairs, dedupe map-side, then count per column with count(v) (NULLs
       // excluded, matching COUNT(DISTINCT)). The shuffle carries distinct
       // (name, value) pairs with zero aggregation buffers, which is also
       // the 100 TB shape: map-side partial distinct bounds the exchange
@@ -1763,13 +1765,7 @@ object TrainingDataQueries extends Registry {
           max(col(c)).cast("string").as(s"${c}__mx"))
       }
       val stats = li.agg(statsExprs.head, statsExprs.tail: _*)
-      val dist = li
-        .select(explode(array(cols.map { c =>
-          struct(lit(c).as("c"), col(c).cast("string").as("v"))
-        }: _*)).as("p"))
-        .select(col("p.c").as("col_name"), col("p.v").as("v"))
-        .distinct()
-        .groupBy("col_name").agg(count(col("v")).as("n_distinct"))
+      val dist = distinctCounts(li, cols)
       def pick(suffix: String) =
         cols.tail.foldLeft(
           when(col("col_name") === cols.head, col(s"${cols.head}__$suffix"))) {
@@ -2686,8 +2682,6 @@ object TrainingDataQueries extends Registry {
     },
     Some(cascadeOracle))
 
-  private val q318Runs = new java.util.concurrent.atomic.AtomicLong()
-
   /** ONLINE decontamination — the q316 cascade run per micro-batch at
     * ingest, the admission-control shape a continuously-crawling corpus
     * needs (decide AT ARRIVAL, not in a nightly batch; reference
@@ -2700,15 +2694,13 @@ object TrainingDataQueries extends Registry {
     * dropped batch, a duplicated emission, or any cross-batch
     * sensitivity in the operator (each doc's decision must depend only
     * on its own shingles and the fixed holdout) breaks the gate. The
-    * driver-side doc collect is the replay HARNESS (MemoryStream needs
-    * addData); production swaps in the file/WebSocket source and keeps
+    * driver-side doc collect is the replay HARNESS (a MemoryStream
+    * replays rows); production swaps in the file/WebSocket source and keeps
     * the identical in-stream dataflow.
     */
   private val q318 = Q("q318_streaming_decontam",
     (s, d) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       // Holdout index: built from the static table before the stream
       // opens (deploy-time in production) and MATERIALIZED once —
       // localCheckpoint pins the distinct holdout shingles so the
@@ -2727,9 +2719,7 @@ object TrainingDataQueries extends Registry {
             .orderBy("doc_id").collect().iterator
             .map(r => (r.getLong(0), r.getString(1))).toSeq
         }
-      val runId = q318Runs.incrementAndGet()
-      val dir = graft.streaming.TempDirs.scratch(
-        s"graft_q318_${ProcessHandle.current().pid()}_$runId")
+      val dir = StreamGate.scratch("q318")
       val outRoot = new java.io.File(dir, "out").getPath
       // 16 input partitions + 8 shuffle partitions, NOT the stateful-gate
       // clamp (n=2): this gate is STATELESS — no state-store instances to
@@ -2738,11 +2728,12 @@ object TrainingDataQueries extends Registry {
       // source partitions the cascade ran ~2.5-way (stage_wall 4.6 s of
       // 11.7 s cpu at sf0.1); the sizing below is the q155 device applied
       // to a foreachBatch gate.
-      val mem = MemoryStream[(Long, String)](numPartitions = 16)
+      val mem = StreamGate.memory[(Long, String)](s, Some(16))
       val src = mem.toDF().toDF("doc_id", "text")
-      val query = StreamGate.withStatePartitions(s, n = 8, noDataBatches = false,
-          keepCodegen = true) { // real per-row md5 chains: interpreted eval costs more than recompiles
-        src.writeStream
+      // real per-row md5 chains: interpreted eval costs more than recompiles
+      StreamGate.replay(s, src, StreamGate.feed(mem, StreamGate.inChunks(rows, 3)),
+          StreamGate.GateConf(n = 8, keepCodegen = true)) {
+        _.outputMode("append")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
             // a micro-batch is ingest-rate-bounded, so materializing ITS
             // hashed shingle frame is safe at any corpus size — pay the
@@ -2758,15 +2749,7 @@ object TrainingDataQueries extends Registry {
               .write.mode("overwrite").parquet(s"$outRoot/batch=$id")
             finally { ex.unpersist(): Unit }
           }
-          .outputMode("append").start()
       }
-      try {
-        val chunk = math.max(1, (rows.size + 2) / 3)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c: _*)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
       // drop the inferred batch partition column: the gate is the union
       s.read.parquet(outRoot)
         .select(col("doc_id"), col("n_sh"), col("n_bloom_hits"),

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.GraftSession
 
@@ -70,12 +71,12 @@ object IndexAudit {
       // one — rather than pairing min wall with the last round's I/O
       var best = (Double.MaxValue, 0L, 0L)
       (1 to rounds).foreach { _ =>
-        Thread.sleep(300) // drain the async listener bus between rounds
+        SessionBridge.drainListenerBus(spark) // drain between rounds
         val b0 = bytes.get(); val t0n = tasks.get()
         val t0 = System.nanoTime()
         rowsOut = body
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300)
+        SessionBridge.drainListenerBus(spark)
         if (wall < best._1) best = (wall, bytes.get() - b0, tasks.get() - t0n)
       }
       (best._1, rowsOut, best._2, best._3)

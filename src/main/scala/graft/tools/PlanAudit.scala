@@ -469,11 +469,11 @@ object PlanAudit {
     * registry query has a PLANS.md entry. */
   private val streamingNotes: Map[String, String] = Map(
     "q108_streaming_staleness" ->
-      "flatMapGroupsWithState staleness gate: per-key (user_id) state carries the previous event-time; lag emits per event, state keyed under the 8-partition StreamGate clamp; replayed over 3 MemoryStream chunks to force cross-batch state reads.",
+      "flatMapGroupsWithState staleness gate: per-key (user_id) state carries the previous event-time; lag emits per event, state keyed under the 2-partition StreamGate clamp; replayed over 2 MemoryStream chunks to force cross-batch state reads.",
     "q111_streaming_sessions" ->
-      "session_window aggregate (event-time, 30 min gap) in append mode with watermark; session merges span micro-batches, state keyed (user_id, session) under the 8-partition clamp.",
+      "session_window aggregate (event-time, 30 min gap) in append mode with watermark; session merges span micro-batches, state keyed (user_id, session) under the 2-partition clamp.",
     "q119_streaming_bars" ->
-      "1-minute tumbling event-time OHLC bars with watermark, append mode; open/close ride the same deterministic (ts,id)-struct min/max as batch q66 so replay order cannot change the answer.",
+      "1-day tumbling event-time OHLC bars with watermark, append mode; open/close ride the same deterministic (ts,id)-struct min/max as batch q66 so replay order cannot change the answer.",
     "q120_streaming_dedup" ->
       "dropDuplicatesWithinWatermark on content digest: dedup state expires with the watermark (bounded state at any stream length — the streaming half of exact dedup q20); 2 chunks force a cross-batch duplicate.",
     "q121_streaming_metrics" ->
@@ -481,7 +481,7 @@ object PlanAudit {
     "q122_streaming_zero_rates" ->
       "complete-mode global aggregate of cumulative zero-rates — one-row state, exercises complete output semantics across batches.",
     "q123_streaming_msg_counts" ->
-      "complete-mode per-key cumulative counts (the reference's per-symbol message counters); state is |keys| rows under the 8-partition clamp.",
+      "complete-mode per-key cumulative counts (the reference's per-symbol message counters); state is |keys| rows under the 2-partition clamp.",
     "q127_streaming_ann" ->
       "stream-static LSH join: streaming query vectors probe the static bucketed index (stateless append join) — the index side is the same KB-sized literal structure as batch q27, so micro-batches never shuffle the corpus.",
     "q131_streaming_join" ->
@@ -495,15 +495,15 @@ object PlanAudit {
     "q139_streaming_file_source" ->
       "file-source replay: readStream over a spooled parquet directory (maxFilesPerTrigger=1) → per-key counts, complete mode; exercises source listing/offset tracking rather than MemoryStream.",
     "q149_streaming_available_now" ->
-      "Trigger.AvailableNow file-spool drain: stateful complete-mode keyed aggregate, state keyed by event_type under 8 state partitions (StreamGate clamp); the run reuses a shared per-JVM spool fixture (StreamFixtures.mod4) so the bench pays file COPIES, not 4 Spark write jobs per run. Self-terminates via awaitTermination — the nightly-backfill trigger surface.",
+      "Trigger.AvailableNow file-spool drain: stateful complete-mode keyed aggregate, state keyed by event_type under 2 state partitions (StreamGate clamp); the run reuses a shared per-JVM spool fixture (StreamFixtures.mod4) so the bench pays file COPIES, not 4 Spark write jobs per run. Self-terminates via awaitTermination — the nightly-backfill trigger surface.",
     "q152_streaming_restart" ->
-      "Source-offset restart: two sequential queries share one checkpoint over the shared mod4 spool; the second run's micro-batch log must resume AFTER the first run's committed offsets (re-listed files must not replay). Complete-mode keyed aggregate, 8 state partitions.",
+      "Source-offset restart: two sequential queries share one checkpoint over the shared mod4 spool; the second run's micro-batch log must resume AFTER the first run's committed offsets (re-listed files must not replay). Complete-mode keyed aggregate, 2 state partitions.",
     "q153_streaming_late_drop" ->
       "Event-time watermark drop: append-mode windowed aggregate whose watermark advances across 2 MemoryStream chunks; rows behind the watermark are dropped by the EventTimeWatermark operator BEFORE the stateful aggregate — the oracle counts only surviving rows, so a broken watermark hash-fails.",
     "q154_foreach_batch_sink" ->
       "foreachBatch idempotent sink: per-batch overwrite into batch=<id> partition dirs; the retry replays batch 0 from rows materialized INSIDE the callback (the only scope where the batch DF is valid) and must leave directory contents identical — exactly-once by idempotent overwrite, the Delta/Iceberg-style sink discipline.",
     "q155_streaming_chained_aggs" ->
-      "Chained stateful aggregates: two groupBy levels in one streaming query (Spark 4 multiple-stateful-operator support) — window counts feed a per-key rollup, both levels' state in the store under the 8-partition clamp; 2 MemoryStream chunks force cross-batch merges at BOTH levels.",
+      "Chained stateful aggregates: two groupBy levels in one streaming query (Spark 4 multiple-stateful-operator support) — window counts feed a per-key rollup, both levels' state in the store under the 2-partition clamp; 2 MemoryStream chunks force cross-batch merges at BOTH levels.",
     "q159_stateful_restart" ->
       "STATE restart (r06): append-mode event-time windowed aggregate killed between time-quartile files and resumed from checkpoint by a NEW query — the boundary window's count is right only if per-window aggregation state was restored, windows emit exactly once only if the WATERMARK was restored, and the parquet sink's commit log must carry run 1's batches. File mtimes pin one time-ordered slice per micro-batch (maxFilesPerTrigger=1); union of both runs' appends equals the whole-input batch oracle.",
     "q208_streaming_upsert" ->
@@ -545,7 +545,7 @@ object PlanAudit {
         records += rec
         sb.append(s"## $name (streaming gate)\n\n$note\n\n")
         sb.append(s"Executed micro-batch plan invariants (last batch): " +
-          s"state_ops=${rec.stateOps}, mode=${rec.mode}, " +
+          s"state_ops=${rec.stateOps}, mode=${rec.mode}, batches=${rec.batches}, " +
           s"exchanges=${rec.exchanges}, bnlj=${rec.bnlj}, " +
           s"cartesian=${rec.cartesian}.\n\n")
       } else {

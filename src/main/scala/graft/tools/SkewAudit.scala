@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.GraftSession
 
@@ -88,12 +89,12 @@ object SkewAudit {
       // drain the warmup's async task-end events BEFORE clearing, or the
       // slowest (JIT-cold) warmup tasks land after the clear and pollute
       // the timed pass's straggler stats
-      Thread.sleep(1000)
+      SessionBridge.drainListenerBus(spark)
       taskMs.clear()
       val (wall, rendered) = runOnce()
-      // let the async listener bus drain the timed pass's task-end events
+      // drain the async listener bus of the timed pass's task-end events
       // (tasks are complete when runJob returns; events lag by ms)
-      Thread.sleep(1000)
+      SessionBridge.drainListenerBus(spark)
       val tasks = {
         import scala.jdk.CollectionConverters._
         taskMs.iterator().asScala.toArray.sorted

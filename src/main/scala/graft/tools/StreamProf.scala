@@ -3,6 +3,7 @@ package graft.tools
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.GraftSession
 
@@ -110,7 +111,7 @@ object StreamProf {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // let the async listener bus drain task-end events
+        SessionBridge.drainListenerBus(spark) // task-end and progress events
         val sa = (0 to 3).map(i => stageAgg.get(i) - sa0(i))
         val snap = progs.synchronized(progs.toList)
         val tasks = {

@@ -28,4 +28,11 @@ import org.apache.spark.sql.SparkSession
 object SessionBridge {
   def cloneSession(s: SparkSession): SparkSession =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** Block until every event already posted to the `private[spark]`
+    * listener bus has reached its listeners (streaming progress included),
+    * so listener-fed counters are complete when read — a deterministic
+    * drain instead of sleeping. */
+  def drainListenerBus(s: SparkSession): Unit =
+    s.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * r11 (high): registry query bodies never mutate shared-session SQL confs.
   * Conf-scoped plans go through `ConfScope.withConfs` (a session CLONE —
   * permanent confs the returned DataFrame keeps through any re-plan) or
-  * `StreamGate.withStatePartitions` (the one sanctioned set/restore window,
-  * safe because Structured Streaming clones the session at `.start()`).
+  * `StreamGate.start` (the replay harness's one sanctioned set/restore
+  * window, safe because Structured Streaming clones the session at
+  * `.start()`).
   *
   * A set/restore window in a query body has two failure modes this grep
   * forbids structurally: a lazy DataFrame re-planned by DataFrameWriter
@@ -34,25 +35,25 @@ class ConfHygieneSpec extends AnyFunSuite {
       }
     assert(offenders.isEmpty,
       "query bodies must scope confs via ConfScope.withConfs (session clone) " +
-        "or StreamGate extraConfs, never mutate the shared session:\n" +
+        "or the StreamGate replay harness, never mutate the shared session:\n" +
         offenders.mkString("\n"))
   }
 
   test("Registry.scala conf mutations stay inside the two sanctioned helpers") {
-    // withStatePartitions + its finally block are the only set/unset sites;
-    // ConfScope sets confs on a clone (c.conf.set), never on the parameter
-    // session `s` — a future `s.conf.set` creeping into Registry.scala
-    // outside withStatePartitions should fail this count check loudly.
+    // StreamGate.start's window + its finally block are the only set/unset
+    // sites; ConfScope sets confs on a clone (c.conf.set), never on the
+    // parameter session `s` — a future `s.conf.set` creeping into
+    // Registry.scala outside that window should fail this count check loudly.
     val lines = java.nio.file.Files.readAllLines(
       new java.io.File(queriesDir, "Registry.scala").toPath)
     val sSets = (0 until lines.size()).count(i =>
       lines.get(i).contains("s.conf.set(") || lines.get(i).contains("s.conf.unset("))
-    // withStatePartitions: 3 sets + 1 extraConfs set + restore block
-    // (3 sets + 1 set/1 unset in the prevExtra fold) = 9 — pinned EXACTLY:
-    // a <= bound with slack would let one rogue s.conf.set ship unnoticed
-    assert(sSets == 9,
+    // StreamGate.start: 1 set over the gate's conf list + restore block
+    // (1 set / 1 unset in the prev fold) = 3 — pinned EXACTLY: a <= bound
+    // with slack would let one rogue s.conf.set ship unnoticed
+    assert(sSets == 3,
       s"shared-session conf-mutation count in Registry.scala drifted ($sSets " +
-        "sites, expected 9) — if withStatePartitions changed intentionally, " +
+        "sites, expected 3) — if StreamGate.start changed intentionally, " +
         "update this count; anything else is a hygiene violation")
   }
 }

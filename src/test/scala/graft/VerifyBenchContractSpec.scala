@@ -293,10 +293,8 @@ class VerifyBenchContractSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(listener)
       try {
         fn(spark, sf).write.format("noop").mode("overwrite").save()
-        // listener bus is async: poll briefly for the metrics to land
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (bytes.get() == 0L && System.nanoTime() < deadline)
-          Thread.sleep(50)
+        // listener bus is async: drain it so every task-end event has landed
+        org.apache.spark.sql.graftbridge.SessionBridge.drainListenerBus(spark)
         assert(bytes.get() > 0L,
           s"$name timed round read zero input bytes — the memo pass is " +
             "absorbing query work, not just ingest")

@@ -64,29 +64,30 @@ class Round15CertificatesSpec extends SparkSpec {
 
   test("q134/q293 dedupe-first distinct counts equal COUNT(DISTINCT) per column") {
     // The r15 profile rewrites count distinct values as distinct
-    // (col_name, value-string) pairs. Parity needs the cast to be
-    // injective per column AND NULLs excluded — pinned here on a frame
-    // with NULLs, duplicate values, and values equal across columns
-    // (long 1 vs string "1" must not merge across col_name).
+    // (col_name, value-string) pairs. Parity needs the cast to tell apart
+    // exactly the values COUNT(DISTINCT) does AND NULLs excluded — pinned
+    // here on a frame with NULLs, duplicate values, values equal across
+    // columns (long 1 vs string "1" must not merge across col_name), and
+    // the DOUBLE values a plain cast splits: -0.0 vs 0.0, and NaN.
+    val d1 = Option(java.sql.Date.valueOf("2024-01-01"))
     val df = Seq(
-      (Option(1L), Option("1"), Option(java.sql.Date.valueOf("2024-01-01"))),
-      (Option(1L), Option("1.0"), None),
-      (None, Option("x"), Option(java.sql.Date.valueOf("2024-01-01"))),
-      (Option(10L), None, Option(java.sql.Date.valueOf("2024-02-01")))
-    ).toDF("a", "b", "dt")
-    val cols = Seq("a", "b", "dt")
-    val dist = df
-      .select(explode(array(cols.map { c =>
-        struct(lit(c).as("c"), col(c).cast("string").as("v"))
-      }: _*)).as("p"))
-      .select(col("p.c").as("col_name"), col("p.v").as("v"))
-      .distinct()
-      .groupBy("col_name").agg(count(col("v")).as("n_distinct"))
+      (Option(1L), Option("1"), d1, Option(0.0d)),
+      (Option(1L), Option("1.0"), None, Option(-0.0d)),
+      (None, Option("x"), d1, Option(Double.NaN)),
+      (Option(10L), None, Option(java.sql.Date.valueOf("2024-02-01")), None),
+      (None, None, None, Option(Double.NaN)),
+      (None, None, None, Option(2.5d))
+    ).toDF("a", "b", "dt", "x")
+    val cols = Seq("a", "b", "dt", "x")
+    val dist = TrainingDataQueries.distinctCounts(df, cols)
       .orderBy("col_name").as[(String, Long)].collect().toSeq
     val expected = cols.sorted.map { c =>
       c -> df.agg(countDistinct(col(c))).as[Long].head()
     }
     assert(dist == expected,
       s"dedupe-first per-column distinct diverged: $dist vs $expected")
+    // the double column really exercised the signed-zero/NaN path:
+    // {0.0 = -0.0, NaN, 2.5}
+    assert(expected.toMap.apply("x") == 3L, s"x distinct count: $expected")
   }
 }

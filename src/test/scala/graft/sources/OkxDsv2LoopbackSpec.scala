@@ -37,10 +37,8 @@ class OkxDsv2LoopbackSpec extends SparkSpec {
       .option("channels", "books5")
       .load()
     val events = Normalizer.normalize(raw)
-    val query = graft.queries.StreamGate.withStatePartitions(spark) {
-      events.writeStream.format("memory").queryName(sinkName)
-        .outputMode("append").start()
-    }
+    val query = graft.queries.StreamGate.start(spark, events)(
+      _.format("memory").queryName(sinkName).outputMode("append"))
     try {
       // the socket feeds asynchronously: poll micro-batches until the
       // normalizer has admitted every data frame (the ack is dropped as
