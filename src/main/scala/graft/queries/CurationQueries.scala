@@ -1324,7 +1324,7 @@ object CurationQueries extends Registry {
         .join(broadcast(dict), "term")
       // real per-row tag compute: interpreted eval costs more than the recompiles
       val tagged = StreamGate.toMemory(s, hits, "append",
-        StreamGate.feed(mem, docRows.grouped(math.max(1, docRows.size / 3)).toSeq),
+        StreamGate.feed(mem, docRows.grouped(math.max(1, docRows.size / 3))),
         StreamGate.GateConf(keepCodegen = true))
       tagAggregate(tagged, docs)
     },

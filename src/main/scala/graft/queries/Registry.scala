@@ -82,8 +82,8 @@ private[graft] object StreamGate {
 
   /** One round per chunk, each adding that chunk to `mem` (an empty chunk
     * adds nothing, so its round runs no micro-batch). */
-  def feed[T](mem: MemoryStream[T], chunks: Iterable[Seq[T]]): Seq[Round] =
-    chunks.map(c => (() => if (c.nonEmpty) { mem.addData(c); () }): Round).toSeq
+  def feed[T](mem: MemoryStream[T], chunks: IterableOnce[Seq[T]]): Seq[Round] =
+    chunks.iterator.map(c => (() => if (c.nonEmpty) { mem.addData(c); () }): Round).toSeq
 
   /** A single round that feeds nothing: the file-source gates' one drain. */
   val drainOnly: Seq[Round] = Seq(() => ())

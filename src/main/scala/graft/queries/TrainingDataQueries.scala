@@ -1703,7 +1703,7 @@ object TrainingDataQueries extends Registry {
       val src = mem.toDF().toDF("qid", "qvec")
       val cand = Similarity.lshStreamCandidates(index, src, numPlanes = 8)
       val w = Window.partitionBy("qid").orderBy(desc("cos_sim"), asc("id"))
-      StreamGate.toMemory(s, cand, "append", StreamGate.feed(mem, qrows.grouped(2).toSeq))
+      StreamGate.toMemory(s, cand, "append", StreamGate.feed(mem, qrows.grouped(2)))
         .withColumn("rank", row_number().over(w).cast("int"))
         .filter(col("rank") <= 10)
         .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("cos_sim"))
