@@ -51,6 +51,12 @@ object GraftSession {
       // workload wants the same thing.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.ui.enabled", "false")
+      // Local checkpoint, state and sink files through the fork-free
+      // filesystem (graft.io.LocalFs.scala): without the native Hadoop
+      // library the stock one forks a chmod per created file and a
+      // readlink per rename side, ~10 ms each, paid on every micro-batch.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.ForkFreeLocalFs].getName)
   }
 
   def get(appName: String, cores: String = "*"): SparkSession = {

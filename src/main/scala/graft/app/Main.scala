@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.GraftSession
 import graft.operators.{Derived, Normalizer}
-import graft.streaming.{MetricsStream, Sinks, StalenessStream}
+import graft.streaming.{MetricsStream, Sinks, StalenessStream, TempDirs}
 
 /** Live pipeline entry point — the analog of the reference's CLI
   * (reference/src/app.py:150-233), Spark-first: one source definition, N
@@ -42,7 +42,9 @@ object Main {
       "duration" -> "0", "stdout" -> "true", "jsonl" -> "true"))
 
     val spark = GraftSession.get("graft-pipeline")
-    val checkpointRoot = s"/tmp/graft-ckpt-${System.currentTimeMillis()}"
+    // Fresh per run, so no later run can resume from it: delete it at exit.
+    val checkpointRoot = TempDirs.register(
+      new java.io.File(s"/tmp/graft-ckpt-${System.currentTimeMillis()}")).getPath
 
     val raw = spark.readStream.format("okx")
       .option("provider", opts("provider"))

@@ -60,32 +60,38 @@ object ExtendedQueries extends Registry {
       (side(0L), side(1L))
     }
 
-  /** The stream-join family's replay: impressions and clicks as memory
-    * streams watermarked by `delay`, and rounds that feed both sides'
-    * halves together, then `sentinels` rounds of a (-1, -1, ts) row on
-    * both sides, ts stepping an hour at a time past the 24 h join horizon
-    * so the watermark flushes every outer-join null side.
+  /** The stream-join family's replay: impressions (tag 0) and clicks
+    * (tag 1) as the two sides of ONE memory stream, each watermarked by
+    * `delay`, and rounds that feed both sides' halves in one `addData`,
+    * then `sentinels` rounds of a (-1, -1, ts) row on both sides, ts
+    * stepping an hour at a time past the 24 h join horizon so the
+    * watermark flushes every outer-join null side. One source makes each
+    * round exactly one micro-batch: with one stream per side, a trigger
+    * that fired between the two sides' `addData` calls split the round.
     */
   private def joinReplay(s: SparkSession, d: String, delay: String, sentinels: Int)
       : (DataFrame, DataFrame, Seq[StreamGate.Round]) = {
     import s.implicits._
     val (imps, clks) = joinSideRows(s, d)
-    val memI = StreamGate.memory[(Long, Long, Long)](s)
-    val memC = StreamGate.memory[(Long, Long, Long)](s)
-    val iDf = memI.toDF().toDF("imp_id", "i_user", "i_ts")
-      .withColumn("i_time", timestamp_millis(col("i_ts")))
-      .withWatermark("i_time", delay)
-    val cDf = memC.toDF().toDF("clk_id", "c_user", "c_ts")
-      .withColumn("c_time", timestamp_millis(col("c_ts")))
-      .withWatermark("c_time", delay)
+    val mem = StreamGate.memory[(Int, Long, Long, Long)](s)
+    def side(tag: Int, id: String, user: String, ts: String, time: String): DataFrame =
+      mem.toDF().toDF("side", id, user, ts)
+        .filter(col("side") === tag).drop("side")
+        .withColumn(time, timestamp_millis(col(ts)))
+        .withWatermark(time, delay)
+    def tagged(tag: Int, rows: Seq[(Long, Long, Long)]) =
+      rows.map { case (id, user, ts) => (tag, id, user, ts) }
     lazy val maxTs = (imps.iterator ++ clks.iterator).map(_._3).max
-    val flush = (1 to sentinels).map(k => Seq((-1L, -1L, maxTs + 86400000L + k * 3600000L)))
+    val flush = (1 to sentinels).map { k =>
+      val sentinel = Seq((-1L, -1L, maxTs + 86400000L + k * 3600000L))
+      tagged(0, sentinel) ++ tagged(1, sentinel)
+    }
     val (iChunks, cChunks) = (inChunks(imps, 2), inChunks(clks, 2))
     val n = math.max(iChunks.size, cChunks.size)
-    val rounds = feed(memI, iChunks.padTo(n, Nil) ++ flush)
-      .zip(feed(memC, cChunks.padTo(n, Nil) ++ flush))
-      .map { case (i, c) => (() => { i(); c() }): StreamGate.Round }
-    (iDf, cDf, rounds)
+    val chunks = iChunks.padTo(n, Nil).zip(cChunks.padTo(n, Nil))
+      .map { case (i, c) => tagged(0, i) ++ tagged(1, c) }
+    (side(0, "imp_id", "i_user", "i_ts", "i_time"), side(1, "clk_id", "c_user", "c_ts", "c_time"),
+      feed(mem, chunks ++ flush))
   }
 
   /** Per-group top-k: the canonical "top 3 customers by balance per market

@@ -25,7 +25,7 @@ private[graft] object StreamGate {
   import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, MemoryStreamTable}
   import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
-  /** One replay step: feeds zero or more rows into one or both streams. */
+  /** One replay step: feeds zero or more rows into the gate's stream(s). */
   type Round = () => Unit
 
   /** The three settable values of a gate's stream.
@@ -40,10 +40,13 @@ private[graft] object StreamGate {
     *   partitions still exercise multi-partition state merge/commit — while
     *   cutting the fixed per-batch cost 16x vs the session default (r08 A/B
     *   on the six heaviest gates: 8→2 partitions cut their wall 25%, while
-    *   moving checkpoints to tmpfs moved nothing AT 8 PARTITIONS — store
-    *   instance churn dominated. With the clamp in place the I/O shows
-    *   again: the r10 A/B measured a further −8% from the tmpfs scratch
-    *   root, see TempDirs.scratch). Production sizing is the opposite
+    *   moving checkpoints to tmpfs moved nothing at 8 partitions; the r10
+    *   A/B measured −8% from the tmpfs scratch root and the r15 A/B lost
+    *   with it). The per-store cost was never disk latency: every state
+    *   delta, offset and commit file cost a forked `chmod` and each
+    *   rename two forked `readlink`s, ~10 ms apiece on any volume, until
+    *   sessions moved to graft.io.ForkFreeLocalFs (traced q155 2.12 →
+    *   1.51 s on a 4-vCPU VM). Production sizing is the opposite
     *   trade: state partitions scale with executor count and amortize over
     *   seconds-long batches, which is why this clamps only the gate's
     *   stream, not the session.

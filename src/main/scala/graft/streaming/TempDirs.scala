@@ -29,13 +29,14 @@ object TempDirs {
     * `GRAFT_SCRATCH` if set, else `/dev/shm` when writable, else
     * `java.io.tmpdir`. A streaming micro-batch pays one offset-WAL
     * write, one commit-log write, and per-partition state-store delta
-    * files — dozens of tiny fsync'd files per gate whose DISK latency
-    * is replay-harness noise, not operator cost (a production cluster
-    * checkpoints to an object store with entirely different latency
-    * anyway). Preferring the RAM-backed volume cut the streaming-gate
-    * bench subtotal ~8% with identical results; restart gates still
-    * recover from these checkpoints because recovery happens within
-    * the same host/process lifetime.
+    * files — dozens of tiny files per gate. Their cost was never disk
+    * latency: Hadoop's local filesystem forked a `chmod` per created
+    * file and a `readlink` per rename side, ~10 ms each on any volume,
+    * which is why a RAM disk helped little (−8% on the r10 gate
+    * subtotal, lost in the r15 A/B). Graft sessions now use
+    * graft.io.ForkFreeLocalFs, which forks neither. Restart gates
+    * still recover from these checkpoints because recovery happens
+    * within the same host/process lifetime.
     */
   private val GiB = 1024L * 1024 * 1024
 
