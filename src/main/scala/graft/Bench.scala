@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.obs.Recorder
 
 object Bench {
   type QueryFn = (SparkSession, String) => DataFrame
@@ -53,39 +54,10 @@ object Bench {
       contaminated: Array[String] = Array.empty,
       resampleFailed: Map[String, String] = Map.empty,
       spreadWindow: Int = Int.MaxValue,
-      spreadBound: Double = 1.5)
+      spreadBound: Double = 1.5,
+      stageTotals: Map[String, Recorder.Totals] = Map.empty)
 
   def exitCode(r: Run): Int = if (r.failed.nonEmpty || r.flaky.nonEmpty) 1 else 0
-
-  /** Time-indexed (query, round) tags of the bench samples — the
-    * attribution fallback for jobs whose group was replaced by another
-    * thread (streaming micro-batches run on the stream-execution thread
-    * under the stream's runId group). Keyed by wall-clock START of each
-    * sample and resolved against `SparkListenerJobStart.time` (stamped
-    * synchronously at job SUBMISSION on the driver), not against a
-    * mutable "current" tag read at listener-processing time: the listener
-    * bus is async, so a late-delivered JobStart from query N would read
-    * query N+1's tag and re-create exactly the misattribution this
-    * fallback exists to fix. Sound because `sample` runs queries strictly
-    * sequentially, so floorEntry(jobSubmitTime) is the sample that
-    * submitted the job; entries ending a sample map to null.
-    */
-  private val tagWindows =
-    new java.util.concurrent.ConcurrentSkipListMap[Long, String]()
-
-  /** Strictly-increasing window keys: System.currentTimeMillis() has ms
-    * granularity, so a sample's end-marker put and the next sample's start
-    * put can land in the same millisecond — the start would overwrite the
-    * end marker and a job whose submit time equals that key could resolve
-    * to the wrong sample. max(now, last+1) keeps every window a
-    * well-formed half-open interval at a ≤1 ms skew per collision.
-    */
-  private val lastTagKey = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def tagPut(tag: String): Unit = {
-    val k = lastTagKey.updateAndGet(prev =>
-      math.max(System.currentTimeMillis(), prev + 1))
-    tagWindows.put(k, tag): Unit
-  }
 
   private def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
@@ -179,28 +151,30 @@ object Bench {
       fakeClockForTest: String => Option[Double] = _ => None): Run = {
     val timedFailed = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val warmupFailed = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    // Each sample's stage totals, keyed by its tag. Samples run strictly
+    // one at a time, so a window around the sample also holds the jobs a
+    // streaming gate runs on its stream thread (r11: q111's stage_wall read
+    // 0.49 s against a 3.2 s wall while those jobs went unattributed).
+    val stageTotals = new java.util.concurrent.ConcurrentHashMap[String, Recorder.Totals]()
+    val recorder = Recorder(spark)
     def runOnce(name: String, fn: QueryFn, dir: String, tag: String,
-        failSink: java.util.concurrent.ConcurrentHashMap[String, String]): Option[Double] = {
-      spark.sparkContext.setJobGroup(tag, name, interruptOnCancel = false)
-      tagPut(tag)
-      val t0 = System.nanoTime()
-      // noop sink forces full materialization of every output column
-      // (a bare .count() would let Catalyst prune the computed columns
-      // away and under-report the real work).
+        failSink: java.util.concurrent.ConcurrentHashMap[String, String]): Option[Double] =
       try {
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        Some(fakeClockForTest(tag).getOrElse((System.nanoTime() - t0) / 1e9))
+        val (sec, w) = recorder.measure {
+          val t0 = System.nanoTime()
+          // noop sink forces full materialization of every output column
+          // (a bare .count() would let Catalyst prune the computed columns
+          // away and under-report the real work).
+          fn(spark, dir).write.format("noop").mode("overwrite").save()
+          fakeClockForTest(tag).getOrElse((System.nanoTime() - t0) / 1e9)
+        }
+        stageTotals.put(tag, w.totals)
+        Some(sec)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED ($tag): ${e.getMessage}")
         failSink.put(name, Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
         None
       }
-      finally {
-        spark.sparkContext.clearJobGroup()
-        // "" = no sample running (CSLM forbids null values)
-        tagPut("")
-      }
-    }
 
     // Untimed warmup at the smallest SF only: compiles each query's
     // generated code so timed rounds measure data processing, not one-time
@@ -304,67 +278,43 @@ object Bench {
       contaminated = everResampled.filter(n => spreadOf(n) > spreadBound).toArray,
       resampleFailed = extraFailed.asScala.toMap,
       spreadWindow = nRounds,
-      spreadBound = spreadBound)
+      spreadBound = spreadBound,
+      stageTotals = stageTotals.asScala.toMap)
   }
+
+  /** Totals of the sample `run` took of `name` in round `r` (zeros when it
+    * has none). */
+  private def totalsAt(run: Run, name: String, r: Int): Recorder.Totals =
+    run.stageTotals.getOrElse(s"$name@r$r", Recorder.Totals(0, 0, 0, 0, 0))
+
+  /** Per-query stage wall (s) of the round that produced the reported min,
+    * for [[resultJson]]'s `stage_wall`. */
+  private[graft] def stageWallAtMin(run: Run): Map[String, Double] =
+    run.results.map { case (name, best) =>
+      // indices cover contamination-handling extra rounds past nRounds
+      val r = run.sampleRounds.indices
+        .find(i => run.sampleRounds(i).get(name).contains(best)).getOrElse(0)
+      name -> totalsAt(run, name, r).stageWallMs / 1e3
+    }.toMap
+
+  /** bench_stages.json: the stage totals of every successful timed sample
+    * of each of `names`. */
+  private[graft] def stagesJson(run: Run, names: Seq[String]): String =
+    names.map { name =>
+      val rounds = run.sampleRounds.indices.flatMap { r =>
+        run.sampleRounds(r).get(name).map { wall =>
+          val t = totalsAt(run, name, r)
+          s"""{"wall":${f3(wall)},"stage_wall":${f3(t.stageWallMs / 1e3)},""" +
+            s""""run_ms":${t.runMs},"cpu_ms":${t.cpuMs},"gc_ms":${t.gcMs},"n_stages":${t.nStages}}"""
+        }
+      }.mkString("[", ",", "]")
+      s""""$name":$rounds"""
+    }.mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.get("graft-bench", cpus)
-
-    // Per-query stage attribution via job groups: every stage is credited
-    // to the (query, round) job group that launched it, so each bench run
-    // ships a stage-level profile (bench_stages.json) that separates plan
-    // cost (stage-sum ≈ wall) from driver/planning overhead or host
-    // CPU-steal (stage-sum ≪ wall) without a rerun.
-    //
-    // Streaming gates need the fallback below: micro-batch jobs run on the
-    // stream-execution thread, which REPLACES the job group with the
-    // stream's own runId group, so without it every stateful gate's real
-    // task time vanished from stage_wall (q111 read 0.49 s against a 3.2 s
-    // wall whose steady state is ~2.1 s of genuine stage time — the r11
-    // "wall ≫ stage_wall" streaming signature was an attribution artifact,
-    // confirmed by StreamProf's all-stage accounting). Bench runs queries
-    // strictly sequentially, so a stage whose job group is not a bench tag
-    // belongs to whichever query is running when its job starts.
-    val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    // group -> [stageWallSec, runMs, cpuMs, gcMs, nStages]
-    val prof = new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val g0 = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        val g =
-          if (g0 != null && g0.contains("@")) g0
-          else {
-            // j.time is stamped at submission, so the floor window is the
-            // sample that submitted this job even if the bus delivers late
-            val e = tagWindows.floorEntry(j.time)
-            if (e == null || e.getValue.isEmpty) null else e.getValue
-          }
-        if (g != null) j.stageIds.foreach(sid => stageGroup.put(sid, g))
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val g = stageGroup.get(si.stageId)
-        if (g != null) {
-          val wall = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1e3
-          val m = si.taskMetrics
-          prof.compute(g, (_, old) => {
-            val a = if (old == null) new Array[Double](5) else old
-            a(0) += wall
-            a(1) += m.executorRunTime.toDouble
-            a(2) += m.executorCpuTime / 1e6
-            a(3) += m.jvmGCTime.toDouble
-            a(4) += 1
-            a
-          })
-          if (sys.env.contains("GRAFT_BENCH_STAGES") && wall > 2.0)
-            System.err.println(f"[stage] id=${si.stageId} group=$g wall=$wall%.1fs " +
-              f"runMs=${m.executorRunTime} cpuMs=${m.executorCpuTime / 1000000} " +
-              f"gcMs=${m.jvmGCTime}")
-        }
-      }
-    })
 
     // GRAFT_BENCH_ONLY: dev-only comma-list filter (scale-sanity runs
     // over the top-N heaviest queries at the 10× fixture — see
@@ -421,13 +371,7 @@ object Bench {
     val total = if (run.results.nonEmpty) run.results.map(_._2).sum else 0.0
     // Per-query stage_wall of the round that produced the reported min —
     // paired so "wall ≫ stage_wall" is readable from bench_out.json alone.
-    val stageWallAtMin: Map[String, Double] = run.results.map { case (name, best) =>
-      // indices cover contamination-handling extra rounds past nRounds
-      val r = run.sampleRounds.indices
-        .find(i => run.sampleRounds(i).get(name).contains(best)).getOrElse(0)
-      name -> prof.getOrDefault(s"$name@r$r", new Array[Double](5))(0)
-    }.toMap
-    val json = resultJson(run, sfDir, stageWallAtMin)
+    val json = resultJson(run, sfDir, stageWallAtMin(run))
 
     // Persist full artifacts next to the repo (the captured process tail
     // retains only ~2 KB, which truncates a 161-query map): bench_out.json
@@ -441,17 +385,8 @@ object Bench {
     val suffix = if (only.isDefined) "_partial" else ""
     try {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(s"bench_out$suffix.json"), json + "\n")
-      val stages = ordered.map { case (name, _) =>
-        val rounds = run.sampleRounds.indices.flatMap { r =>
-          run.sampleRounds(r).get(name).map { wall =>
-            val a = prof.getOrDefault(s"$name@r$r", new Array[Double](5))
-            s"""{"wall":${f3(wall)},"stage_wall":${f3(a(0))},""" +
-              s""""run_ms":${a(1).toLong},"cpu_ms":${a(2).toLong},"gc_ms":${a(3).toLong},"n_stages":${a(4).toInt}}"""
-          }
-        }.mkString("[", ",", "]")
-        s""""$name":$rounds"""
-      }.mkString("{", ",", "}")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"bench_stages$suffix.json"), stages + "\n")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"bench_stages$suffix.json"),
+        stagesJson(run, ordered.map(_._1)) + "\n")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
     }

@@ -73,4 +73,21 @@ object OracleSql {
     s"(CASE WHEN COUNT($x) <= 1 THEN 0.0 ELSE " +
       s"sqrt(greatest(($s2 - $s1 * $s1 / $n) / ($n - 1.0), 0.0)) END)"
   }
+
+  /** Per-user staleness stats (gap between consecutive events, ordered by
+    * time then event id): the oracle of q8 and of every query that must
+    * reproduce q8's full-series window bit for bit (q108, q133, q303,
+    * q304). */
+  val stalenessStats: String =
+    s"""WITH g AS (
+        SELECT user_id,
+          epoch_ms(ts) - lag(epoch_ms(ts)) OVER
+            (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) AS gap_ms
+        FROM events)
+      SELECT user_id, COUNT(*) AS stale_count,
+        ${lavg("gap_ms")} AS stale_mean_ms,
+        ${lstdSamp("gap_ms")} AS stale_std_ms,
+        MIN(gap_ms) AS stale_min_ms, MAX(gap_ms) AS stale_max_ms
+      FROM g WHERE gap_ms IS NOT NULL
+      GROUP BY user_id ORDER BY user_id"""
 }

@@ -708,17 +708,7 @@ object ExtendedQueries extends Registry {
           max("stale_ms").as("stale_max_ms"))
         .orderBy("user_id")
     },
-    Some(s"""WITH g AS (
-        SELECT user_id,
-          epoch_ms(ts) - lag(epoch_ms(ts)) OVER
-            (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) AS gap_ms
-        FROM events)
-      SELECT user_id, COUNT(*) AS stale_count,
-        ${O.lavg("gap_ms")} AS stale_mean_ms,
-        ${O.lstdSamp("gap_ms")} AS stale_std_ms,
-        MIN(gap_ms) AS stale_min_ms, MAX(gap_ms) AS stale_max_ms
-      FROM g WHERE gap_ms IS NOT NULL
-      GROUP BY user_id ORDER BY user_id"""))
+    Some(O.stalenessStats))
 
   /** Window-aggregate closure: percentile_disc and mode as WINDOW
     * aggregates (the two gaps a mature engine's window surface still had
@@ -1456,17 +1446,7 @@ object ExtendedQueries extends Registry {
           max("stale_ms").as("stale_max_ms"))
         .orderBy("user_id")
     },
-    Some(s"""WITH g AS (
-        SELECT user_id,
-          epoch_ms(ts) - lag(epoch_ms(ts)) OVER
-            (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) AS gap_ms
-        FROM events)
-      SELECT user_id, COUNT(*) AS stale_count,
-        ${O.lavg("gap_ms")} AS stale_mean_ms,
-        ${O.lstdSamp("gap_ms")} AS stale_std_ms,
-        MIN(gap_ms) AS stale_min_ms, MAX(gap_ms) AS stale_max_ms
-      FROM g WHERE gap_ms IS NOT NULL
-      GROUP BY user_id ORDER BY user_id"""))
+    Some(O.stalenessStats))
 
   private val q136Runs = new java.util.concurrent.atomic.AtomicLong()
 

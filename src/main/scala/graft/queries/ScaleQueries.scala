@@ -1428,17 +1428,7 @@ object ScaleQueries extends Registry {
     },
     // q8's oracle verbatim: the salted plan must reproduce the plain
     // full-series window bit-for-bit
-    Some(s"""WITH g AS (
-        SELECT user_id,
-          epoch_ms(ts) - lag(epoch_ms(ts)) OVER
-            (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) AS gap_ms
-        FROM events)
-      SELECT user_id, COUNT(*) AS stale_count,
-        ${O.lavg("gap_ms")} AS stale_mean_ms,
-        ${O.lstdSamp("gap_ms")} AS stale_std_ms,
-        MIN(gap_ms) AS stale_min_ms, MAX(gap_ms) AS stale_max_ms
-      FROM g WHERE gap_ms IS NOT NULL
-      GROUP BY user_id ORDER BY user_id"""))
+    Some(O.stalenessStats))
 
   /** q303's window-skew mitigation DEPLOYED on the streaming path — the
     * gated answer to the measured streaming hot-key straggler
@@ -1545,17 +1535,7 @@ object ScaleQueries extends Registry {
     },
     // q8's oracle verbatim (q108/q303's): the streaming chunked+repaired
     // pipeline must reproduce the plain full-series window bit-for-bit
-    Some(s"""WITH g AS (
-        SELECT user_id,
-          epoch_ms(ts) - lag(epoch_ms(ts)) OVER
-            (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) AS gap_ms
-        FROM events)
-      SELECT user_id, COUNT(*) AS stale_count,
-        ${O.lavg("gap_ms")} AS stale_mean_ms,
-        ${O.lstdSamp("gap_ms")} AS stale_std_ms,
-        MIN(gap_ms) AS stale_min_ms, MAX(gap_ms) AS stale_max_ms
-      FROM g WHERE gap_ms IS NOT NULL
-      GROUP BY user_id ORDER BY user_id"""))
+    Some(O.stalenessStats))
 
   /** q306's right-to-be-forgotten cascade DEPLOYED on the streaming path:
     * per-user event counters accumulate across micro-batches in a

@@ -112,7 +112,7 @@ object TrainingDataQueries extends Registry {
   /** LSH candidate pairs (doc_id_a < doc_id_b) from the shared signature
     * frame — the Spark mirror of [[duckLshPairsCtes]] (q38, q170).
     */
-  private[queries] def lshPairsFrame(s: org.apache.spark.sql.SparkSession,
+  private[graft] def lshPairsFrame(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     lshPairsFrameOf(Tables.fanOut(Tables.documents(s, d)))
 
@@ -788,7 +788,7 @@ object TrainingDataQueries extends Registry {
     * (boilerplate families are 10^4-10^6 docs); the bound is C(k,2) per
     * bucket at ANY k.
     */
-  private[queries] val CapK = 2
+  private[graft] val CapK = 2
 
   /** Cluster-size capping AT INGEST — the guard that keeps LSH dedup
     * linear at 100 TB (reference scope: the dedup family of
@@ -814,7 +814,7 @@ object TrainingDataQueries extends Registry {
     * shared with PairCensus so the scale table counts exactly the pair
     * population the gate processes.
     */
-  private[queries] def cappedLshPairsFrame(s: org.apache.spark.sql.SparkSession,
+  private[graft] def cappedLshPairsFrame(s: org.apache.spark.sql.SparkSession,
       d: String, k: Int): org.apache.spark.sql.DataFrame = {
     val docs = Tables.fanOut(Tables.documents(s, d))
     val quality = docs.select(col("doc_id") +:

@@ -1,10 +1,11 @@
-package graft.queries
+package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.GraftSession
+import graft.obs.Recorder
 import graft.operators.Dedup
+import graft.queries.TrainingDataQueries
 
 /** Dev A/B of the q313 family cap's DOWNSTREAM payoff (VERDICT r13 ask
   * #2): the r13 census showed the cap cuts the sf10 candidate population
@@ -18,32 +19,21 @@ import graft.operators.Dedup
   * winners with q41's single hash aggregation, materialize to the noop
   * sink. Timing uses ProfileBenchSeq.sampleThunk — the storm-protocol
   * sampler (min over samples, resample on spread > 1.5, contaminated
-  * annotation) — plus a max-task-duration listener, since the cap's
-  * claim is specifically about the HOTTEST task (the mega-family's
+  * annotation) — plus the longest successful task of each sample, since
+  * the cap's claim is specifically about the HOTTEST task (the mega-family's
   * bucket) and not just the wall.
   *
   * Provenance: prints the uncapped pair count first — an sf10 run is
   * only trustworthy if it reproduces the canonical census (lshPairs
   * 30,914,399; docs/SCALING.md r13).
   *
-  * {{{ sbt "runMain graft.queries.DedupDownstreamAB target/sf10" }}}
+  * {{{ sbt "runMain graft.tools.DedupDownstreamAB target/sf10" }}}
   */
 object DedupDownstreamAB {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/sf1")
     val spark = GraftSession.get("dedup-downstream-ab",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val d = te.taskInfo.duration
-          var cur = maxTaskMs.get()
-          while (d > cur && !maxTaskMs.compareAndSet(cur, d)) cur = maxTaskMs.get()
-        }
-      })
 
     // q41's resolution over an arbitrary pair set: cluster, attach
     // quality, one hash-agg keep-best (max of (quality, -doc_id))
@@ -77,11 +67,10 @@ object DedupDownstreamAB {
 
     variants.foreach { case (name, mk) =>
       val perSampleMaxTask = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val s = graft.tools.ProfileBenchSeq.sampleThunk(name, {
-        maxTaskMs.set(0L)
-        resolve(mk()).write.format("noop").mode("overwrite").save()
-        SessionBridge.drainListenerBus(spark)
-        perSampleMaxTask += maxTaskMs.get(): Unit
+      val s = ProfileBenchSeq.sampleThunk(name, {
+        val (_, w) = Recorder(spark).measure(
+          resolve(mk()).write.format("noop").mode("overwrite").save())
+        perSampleMaxTask += w.taskMs.lastOption.getOrElse(0L): Unit
       })
       val raw = s.samples.map(v => f"$v%.1f").mkString("/")
       println(f"[dedup-ab] $name%-10s min=${s.min}%.1f s spread=${s.spread}%.2f " +

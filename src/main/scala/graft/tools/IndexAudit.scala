@@ -1,9 +1,9 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.GraftSession
+import graft.obs.Recorder
 
 /** Dev A/B of the q307 per-file Bloom index (NOT part of the engine):
   * time the SAME point lookup (a) through the index — prune the file
@@ -54,30 +54,18 @@ object IndexAudit {
     // at fixture scale both paths fit one task wave and wall is
     // scheduler-bound, so ALSO account the scan work the cluster would
     // bill at real file sizes: input bytes + tasks launched per run
-    val bytes = new java.util.concurrent.atomic.AtomicLong()
-    val tasks = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          bytes.addAndGet(te.taskMetrics.inputMetrics.bytesRead): Unit
-          tasks.incrementAndGet(): Unit
-        }
-      })
-
     def time(body: => Long): (Double, Long, Long, Long) = {
       var rowsOut = body // warmup (codegen/JIT)
       // report the (wall, bytes, tasks) of the SAME round — the min-wall
       // one — rather than pairing min wall with the last round's I/O
       var best = (Double.MaxValue, 0L, 0L)
       (1 to rounds).foreach { _ =>
-        SessionBridge.drainListenerBus(spark) // drain between rounds
-        val b0 = bytes.get(); val t0n = tasks.get()
-        val t0 = System.nanoTime()
-        rowsOut = body
-        val wall = (System.nanoTime() - t0) / 1e9
-        SessionBridge.drainListenerBus(spark)
-        if (wall < best._1) best = (wall, bytes.get() - b0, tasks.get() - t0n)
+        val (wall, w) = Recorder(spark).measure {
+          val t0 = System.nanoTime()
+          rowsOut = body
+          (System.nanoTime() - t0) / 1e9
+        }
+        if (wall < best._1) best = (wall, w.inputBytes, w.tasks.size.toLong)
       }
       (best._1, rowsOut, best._2, best._3)
     }

@@ -236,12 +236,10 @@ object PlanAudit {
   }
 
   /** Executed micro-batches per captured query, in start order ("3",
-    * "2+3"): progress entries that ran `addBatch`. Idle-trigger entries are
-    * left out — the engine reports the first trigger that finds no data at
-    * once, and whether it fires before the gate's first round is a race. */
+    * "2+3"), as [[graft.obs.Recorder.executed]] defines them. */
   private def batchCounts(queries: Seq[org.apache.spark.sql.streaming.StreamingQuery]): String =
     if (queries.isEmpty) "-"
-    else queries.map(_.recentProgress.count(_.durationMs.containsKey("addBatch"))).mkString("+")
+    else queries.map(_.recentProgress.count(graft.obs.Recorder.executed)).mkString("+")
 
   /** Run one streaming gate under capture and derive its record. */
   def streamRecord(spark: SparkSession, name: String, sf: String): PlanRecord = {

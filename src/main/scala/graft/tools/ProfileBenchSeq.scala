@@ -1,12 +1,13 @@
 package graft.tools
 
 import graft.GraftSession
+import graft.obs.Recorder
 
 /** Dev-only: reproduce Bench's warm-at-sf0.001 / time-at-sf0.1 sequence
   * for a subset of queries, to isolate first-run-at-scale overhead and
-  * chase bench-variance outliers. Prints per-stage wall/cpu/gc for stages
-  * over 1 s (the attribution an outlier sample needs: WHICH stage
-  * inflated, and was it CPU or GC).
+  * chase bench-variance outliers. Prints, after each query, per-stage
+  * wall/cpu/gc for its stages over 1 s (the attribution an outlier sample
+  * needs: WHICH stage inflated, and was it CPU or GC).
   */
 object ProfileBenchSeq {
 
@@ -58,7 +59,7 @@ object ProfileBenchSeq {
   }
 
   /** The generic sampler behind [[runSampled]], for timed bodies that are
-    * NOT registry queries (e.g. tools/DedupDownstreamAB's cluster+resolve
+    * NOT registry queries (e.g. DedupDownstreamAB's cluster+resolve
     * pipelines): same resample-on-spread contract, caller provides the
     * work as a thunk and any warm-up it already paid.
     */
@@ -84,39 +85,34 @@ object ProfileBenchSeq {
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get("profile-bench-seq", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val wall = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1e3
-        if (wall > 1.0) {
-          val m = si.taskMetrics
-          System.err.println(f"[stage] id=${si.stageId} wall=$wall%.1fs tasks=${si.numTasks} " +
-            f"runMs=${m.executorRunTime} cpuMs=${m.executorCpuTime / 1000000} " +
-            f"gcMs=${m.jvmGCTime} spillMB=${m.diskBytesSpilled / 1048576} ${si.name.take(60)}")
-          // GRAFT_PROF_DETAILS=1: stage call sites are useless for stages
-          // spawned on subquery/broadcast threads (they all read
-          // "withThreadLocalCaptured at CompletableFuture") — dump the
-          // submitting stack so the owning operator is identifiable.
-          if (sys.env.contains("GRAFT_PROF_DETAILS"))
-            si.details.linesIterator.take(12)
-              .foreach(l => System.err.println(s"[stage-detail] $l"))
-        }
-      }
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (sys.env.contains("GRAFT_PROF_DETAILS"))
-          System.err.println(s"[job] id=${js.jobId} stages=${js.stageIds.mkString(",")} " +
-            s"desc=${Option(js.properties.getProperty("spark.job.description")).getOrElse("?").take(100)}")
-      }
-    })
     val names = if (args.nonEmpty) args.toSeq else Seq("q16_normalize_books5", "q17_normalize_trades")
     // GRAFT_PROF_WARM / GRAFT_PROF_SF: dev overrides so the same harness
     // drives the sf1/sf10 scale-sanity passes (docs/SCALING.md)
     val warmDir = sys.env.getOrElse("GRAFT_PROF_WARM", "/root/testdata/sf0.001")
     val sfDir = sys.env.getOrElse("GRAFT_PROF_SF", "/root/testdata/sf0.1")
+    // GRAFT_PROF_DETAILS=1: stage call sites are useless for stages
+    // spawned on subquery/broadcast threads (they all read
+    // "withThreadLocalCaptured at CompletableFuture") — dump each job's
+    // stages and each slow stage's submitting stack so the owning operator
+    // is identifiable.
+    val details = sys.env.contains("GRAFT_PROF_DETAILS")
     val sampled = names.map { name =>
-      val s = runSampled(spark, name, warmDir, sfDir)
+      val (s, w) = Recorder(spark).measure(runSampled(spark, name, warmDir, sfDir))
+      if (details) w.jobs.foreach { js =>
+        System.err.println(s"[job] id=${js.jobId} stages=${js.stageIds.mkString(",")} " +
+          s"desc=${Option(js.properties.getProperty("spark.job.description")).getOrElse("?").take(100)}")
+      }
+      w.stages.foreach { si =>
+        val wall = Recorder.wallMs(si) / 1e3
+        if (wall > 1.0) {
+          val m = si.taskMetrics
+          System.err.println(f"[stage] id=${si.stageId} wall=$wall%.1fs tasks=${si.numTasks} " +
+            f"runMs=${m.executorRunTime} cpuMs=${m.executorCpuTime / 1000000} " +
+            f"gcMs=${m.jvmGCTime} spillMB=${m.diskBytesSpilled / 1048576} ${si.name.take(60)}")
+          if (details) si.details.linesIterator.take(12)
+            .foreach(l => System.err.println(s"[stage-detail] $l"))
+        }
+      }
       val raw = s.samples.map(v => f"$v%.2f").mkString("/")
       println(f"[sampled] $name%-24s min=${s.min}%.2f spread=${s.spread}%.2f " +
         f"samples=$raw contaminated=${s.contaminated} warm=${s.warm}%.2f ($sfDir)")

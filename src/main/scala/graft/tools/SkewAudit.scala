@@ -3,9 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.GraftSession
+import graft.obs.Recorder
 
 /** Dev tool for the skewed-fixture scale runs (docs/SCALING.md): executes
   * selected registry queries against a fixture dir and reports, per
@@ -60,18 +60,6 @@ object SkewAudit {
     // that mapper count at fixture scale.
     spark.conf.set("spark.sql.files.maxPartitionBytes", "2MB")
 
-    // Task-level straggler evidence (VERDICT r11 ask #2): wall time alone
-    // cannot distinguish "8 parallel chunk sorts" from "one hot-partition
-    // sort that happens to overlap other work" — the straggler signature
-    // is MAX task duration vs the task population. One listener per run,
-    // reset per timed pass.
-    val taskMs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskInfo != null && t.taskInfo.successful)
-          taskMs.add(t.taskInfo.duration): Unit
-    })
-
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       // Execute the DataFrame's OWN QueryExecution (a .write would build a
@@ -86,20 +74,13 @@ object SkewAudit {
         (wall, finalPlan(df.queryExecution.executedPlan).toString)
       }
       runOnce()
-      // drain the warmup's async task-end events BEFORE clearing, or the
-      // slowest (JIT-cold) warmup tasks land after the clear and pollute
-      // the timed pass's straggler stats
-      SessionBridge.drainListenerBus(spark)
-      taskMs.clear()
-      val (wall, rendered) = runOnce()
-      // drain the async listener bus of the timed pass's task-end events
-      // (tasks are complete when runJob returns; events lag by ms)
-      SessionBridge.drainListenerBus(spark)
-      val tasks = {
-        import scala.jdk.CollectionConverters._
-        taskMs.iterator().asScala.toArray.sorted
-      }
-      val maxTask = if (tasks.nonEmpty) tasks.last / 1e3 else 0.0
+      // Task-level straggler evidence (VERDICT r11 ask #2): wall time alone
+      // cannot distinguish "8 parallel chunk sorts" from "one hot-partition
+      // sort that happens to overlap other work" — the straggler signature
+      // is MAX task duration vs the task population.
+      val ((wall, rendered), w) = Recorder(spark).measure(runOnce())
+      val tasks = w.taskMs
+      val maxTask = tasks.lastOption.getOrElse(0L) / 1e3
       val p50Task = if (tasks.nonEmpty) tasks(tasks.length / 2) / 1e3 else 0.0
       val skewJoins = "skew=true".r.findAllIn(rendered).length
       val skewReads = "AQEShuffleRead".r.findAllIn(rendered).length

@@ -1,11 +1,7 @@
 package graft.tools
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.sql.streaming.StreamingQueryListener
-import org.apache.spark.sql.graftbridge.SessionBridge
-
 import graft.GraftSession
+import graft.obs.Recorder
 
 /** Dev-only micro-batch profiler for the streaming replay gates.
   *
@@ -36,25 +32,6 @@ object StreamProf {
       }
     }
 
-    final case class Prog(query: String, batchId: Long, numRows: Long,
-        durations: Map[String, Long])
-    val progs = ArrayBuffer.empty[Prog]
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        import scala.jdk.CollectionConverters._
-        progs.synchronized {
-          // name is null for queries started without .queryName (q159's
-          // file-source restart legs) — the sort below needs a non-null key
-          progs += Prog(Option(e.progress.name).getOrElse(e.progress.id.toString),
-            e.progress.batchId, e.progress.numInputRows,
-            e.progress.durationMs.asScala.map { case (k, v) => k -> v.longValue() }.toMap): Unit
-        }
-      }
-    }
-    spark.streams.addListener(listener)
-
     // In-process sampler: every 10 ms, record the top interesting frame of
     // each stream-execution thread (GRAFT_PROF_STACKS=1 enables).
     val frameCounts = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
@@ -79,57 +56,38 @@ object StreamProf {
     }
     if (sys.env.contains("GRAFT_PROF_STACKS")) { sampler.setDaemon(true); sampler.start() }
 
-    // All-stage accounting (job-group-free): streaming jobs run on the
-    // stream thread and never inherit the bench's job group, so this is
-    // the only view of where micro-batch TASK time goes.
-    val stageAgg = new java.util.concurrent.atomic.AtomicLongArray(4) // wallMs, runMs, cpuMs, nStages
-    // Per-task durations for the skewed-replay evidence (VERDICT r11 ask
-    // #6): a hot key concentrating in one state-store partition shows as
-    // ONE long task per micro-batch against a flat task population —
-    // max/p50 task duration is the straggler signature wall can't show.
-    val taskMs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stageAgg.addAndGet(0, si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)): Unit
-        stageAgg.addAndGet(1, si.taskMetrics.executorRunTime): Unit
-        stageAgg.addAndGet(2, si.taskMetrics.executorCpuTime / 1000000): Unit
-        stageAgg.addAndGet(3, 1): Unit
-      }
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskInfo != null && t.taskInfo.successful)
-          taskMs.add(t.taskInfo.duration): Unit
-    })
-
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       // two passes: pass 0 pays JIT/codegen; pass 1 is the steady state
       (0 to 1).foreach { pass =>
-        progs.synchronized(progs.clear())
-        taskMs.clear()
-        val sa0 = (0 to 3).map(stageAgg.get)
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        SessionBridge.drainListenerBus(spark) // task-end and progress events
-        val sa = (0 to 3).map(i => stageAgg.get(i) - sa0(i))
-        val snap = progs.synchronized(progs.toList)
-        val tasks = {
-          import scala.jdk.CollectionConverters._
-          taskMs.iterator().asScala.toArray.sorted
+        val (wall, w) = Recorder(spark).measure {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
         }
-        val maxT = if (tasks.nonEmpty) tasks.last else 0L
+        val t = w.totals
+        // Per-task durations for the skewed-replay evidence (VERDICT r11
+        // ask #6): a hot key concentrating in one state-store partition
+        // shows as ONE long task per micro-batch against a flat task
+        // population — max/p50 task duration is the straggler signature
+        // wall can't show.
+        val tasks = w.taskMs
+        val maxT = tasks.lastOption.getOrElse(0L)
         val p50T = if (tasks.nonEmpty) tasks(tasks.length / 2) else 0L
-        println(f"== $name pass=$pass wall=$wall%.2fs batches=${snap.size} " +
-          f"stages=${sa(3)} stageWallMs=${sa(0)} taskRunMs=${sa(1)} taskCpuMs=${sa(2)} " +
+        println(f"== $name pass=$pass wall=$wall%.2fs batches=${w.batches} " +
+          f"stages=${t.nStages} stageWallMs=${t.stageWallMs} taskRunMs=${t.runMs} taskCpuMs=${t.cpuMs} " +
           f"nTasks=${tasks.length} maxTaskMs=$maxT p50TaskMs=$p50T")
         val keys = Seq("triggerExecution", "queryPlanning", "getBatch",
           "latestOffset", "addBatch", "walCommit", "commitOffsets")
-        snap.sortBy(p => (p.query, p.batchId)).foreach { p =>
-          val d = keys.map(k => f"$k=${p.durations.getOrElse(k, -1L)}%d").mkString(" ")
-          println(f"   [${p.query}#${p.batchId}] rows=${p.numRows} $d")
+        // name is null for queries started without .queryName (q159's
+        // file-source restart legs)
+        def query(p: org.apache.spark.sql.streaming.StreamingQueryProgress) =
+          Option(p.name).getOrElse(p.id.toString)
+        w.progress.sortBy(p => (query(p), p.batchId)).foreach { p =>
+          val d = keys.map(k => f"$k=${p.durationMs.getOrDefault(k, -1L)}%d").mkString(" ")
+          println(f"   [${query(p)}#${p.batchId}] rows=${p.numInputRows} $d")
         }
-        val totals = keys.map(k => k -> snap.map(_.durations.getOrElse(k, 0L)).sum)
+        val totals = keys.map(k => k -> w.progress.map(_.durationMs.getOrDefault(k, 0L).longValue).sum)
         println("   TOTALS " + totals.map { case (k, v) => s"$k=${v}ms" }.mkString(" "))
       }
     }
@@ -141,7 +99,6 @@ object StreamProf {
         println(f"${v.get}%6d  $k")
       }
     }
-    spark.streams.removeListener(listener)
     spark.stop()
   }
 }
