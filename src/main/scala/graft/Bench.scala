@@ -88,9 +88,10 @@ object Bench {
     * honest floor (single-sample queries report 1.0 by construction).
     * `resampled`/`contaminated` make the r12 failure mode legible: a
     * nonzero n_contaminated says the artifact's totals include storm
-    * floors, not engine regressions.
+    * floors, not engine regressions. `cpus` is the session's task-slot
+    * count, so a reader can tell which core count produced the line.
     */
-  def resultJson(run: Run, sfDir: String,
+  def resultJson(run: Run, sfDir: String, cpus: Int,
       stageWall: Map[String, Double] = Map.empty): String = {
     val qs = run.results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
@@ -114,13 +115,12 @@ object Bench {
       s""""resample_failed":${names(run.resampleFailed.keys.toArray.sorted)},""" +
       s""""n_resample_failed":${run.resampleFailed.size},""" +
       s""""failed":${names(run.failed)},"n_failed":${run.failed.length},""" +
-      s""""flaky":${names(run.flaky)},"warmup_failed":${names(run.warmupOnly)},"sf":"$sfDir"}"""
+      s""""flaky":${names(run.flaky)},"warmup_failed":${names(run.warmupOnly)},""" +
+      s""""cpus":$cpus,"sf":"$sfDir"}"""
   }
 
   /** Testable core (VerifyBenchContractSpec): untimed warmup at `warmDir`,
-    * then `nRounds` interleaved timed rounds at `sfDir`, min per query.
-    * `sparse` queries skip the warmup and the middle timed round (their wall
-    * is fixed micro-batch machinery, not plan work). */
+    * then `nRounds` interleaved timed rounds at `sfDir`, min per query. */
   /** @param memoBuild queries whose FIRST invocation per (JVM, sfDir) pays
     *   a one-time build (q301/q302's bucketed table write — the ingest
     *   cost a production layout pays once). They get one extra untimed
@@ -145,7 +145,7 @@ object Bench {
     *   not host timing. Production callers never pass it.
     */
   def sample(spark: SparkSession, ordered: Seq[(String, QueryFn)], sfDir: String,
-      warmDir: String, sparse: Set[String], nRounds: Int,
+      warmDir: String, nRounds: Int,
       memoBuild: Set[String] = Set.empty, spreadBound: Double = 1.5,
       maxExtraRounds: Int = 2,
       fakeClockForTest: String => Option[Double] = _ => None): Run = {
@@ -176,14 +176,11 @@ object Bench {
         None
       }
 
-    // Untimed warmup at the smallest SF only: compiles each query's
-    // generated code so timed rounds measure data processing, not one-time
-    // codegen. The streaming replay gates skip the warmup: their wall is
-    // fixed micro-batch/state-store machinery (bench_stages: stage_wall ≪
-    // wall), so JIT-cold codegen is noise against it and the warmup pass
-    // costs 2-4 s of real machinery per gate.
+    // Untimed warmup of every query, streaming gates included, at the
+    // smallest SF only: compiles each query's generated code so timed
+    // rounds measure data processing, not one-time codegen.
     ordered.foreach { case (name, fn) =>
-      if (!sparse(name)) runOnce(name, fn, warmDir, s"$name@w", warmupFailed)
+      runOnce(name, fn, warmDir, s"$name@w", warmupFailed)
     }
 
     // Untimed memo-priming pass at the TIMED dir for one-time-build
@@ -200,15 +197,9 @@ object Bench {
     // samples of one query land in the same storm, but samples a full
     // sweep apart don't, so min-per-query across separated rounds measures
     // the steady state a resident cluster session delivers.
-    //
-    // The streaming-state gates skip the middle round: their wall is
-    // dominated by fixed per-micro-batch state-store latency, not by any
-    // plan under perf scrutiny — a third sample buys no signal and costs
-    // ~25 s, while a single round-0 sample reports JIT-cold numbers.
     val baseRounds = (0 until nRounds).map { r =>
       ordered.flatMap { case (name, fn) =>
-        if (r == 1 && sparse(name)) None
-        else runOnce(name, fn, sfDir, s"$name@r$r", timedFailed).map(name -> _)
+        runOnce(name, fn, sfDir, s"$name@r$r", timedFailed).map(name -> _)
       }.toMap
     }
 
@@ -220,16 +211,6 @@ object Bench {
     // storm window — until the fastest-`nRounds` window tightens under the
     // bound. min stays min over ALL samples (extras can only improve it);
     // queries still wide after the budget are reported `contaminated`.
-    //
-    // `sparse` streaming gates stay ELIGIBLE here, deliberately: the
-    // round-1 skip above saves a third sample when conditions are calm
-    // (a calm gate's machinery wall is stable, a third sample buys no
-    // signal), but a storm-straddled gate with 2 wide samples has no
-    // other route back to a trustworthy floor — without an extra sample
-    // its inflated spread would sit unflagged in the artifact (only
-    // resampled queries can be classified contaminated). The extra
-    // gate samples cost seconds each and fire only under storms; the
-    // first full r13 run cured every one of its 124 resamples.
     var rounds: IndexedSeq[Map[String, Double]] = baseRounds
     def spreadOf(name: String): Double =
       windowSpread(rounds.flatMap(_.get(name)), nRounds)
@@ -324,17 +305,6 @@ object Bench {
       sys.env.get("GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val sparseSampled = Set("q108_streaming_staleness", "q111_streaming_sessions",
-      "q119_streaming_bars", "q120_streaming_dedup", "q121_streaming_metrics",
-      "q122_streaming_zero_rates", "q123_streaming_msg_counts",
-      "q127_streaming_ann", "q131_streaming_join", "q137_streaming_outer_join",
-      "q138_streaming_tws_sessions", "q139_streaming_file_source",
-      "q149_streaming_available_now", "q152_streaming_restart",
-      "q153_streaming_late_drop", "q154_foreach_batch_sink",
-      "q155_streaming_chained_aggs", "q159_stateful_restart",
-      "q204_streaming_tagging", "q208_streaming_upsert",
-      "q220_streaming_range_join", "q304_streaming_salted_staleness",
-      "q311_streaming_erasure", "q314_streaming_erasure_delta")
 
     val warmDir = {
       val sib = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
@@ -354,7 +324,7 @@ object Bench {
     }.getOrElse(3)
     val memoBuild = Set("q301_bucketed_fact_join", "q302_bucket_pruning",
       "q307_bloom_file_skip", "q315_bloom_index_append")
-    val run = sample(spark, ordered, sfDir, warmDir, sparseSampled, nRounds, memoBuild)
+    val run = sample(spark, ordered, sfDir, warmDir, nRounds, memoBuild)
 
     run.results.foreach { case (name, sec) =>
       val times = run.sampleRounds.flatMap(_.get(name))
@@ -371,7 +341,9 @@ object Bench {
     val total = if (run.results.nonEmpty) run.results.map(_._2).sum else 0.0
     // Per-query stage_wall of the round that produced the reported min —
     // paired so "wall ≫ stage_wall" is readable from bench_out.json alone.
-    val json = resultJson(run, sfDir, stageWallAtMin(run))
+    // the task slots the session really runs with (local[N] → N)
+    val slots = spark.sparkContext.defaultParallelism
+    val json = resultJson(run, sfDir, slots, stageWallAtMin(run))
 
     // Persist full artifacts next to the repo (the captured process tail
     // retains only ~2 KB, which truncates a 161-query map): bench_out.json
@@ -412,7 +384,7 @@ object Bench {
       s""""queries_truncated":true,"n_queries":${run.results.size},""" +
       s""""failed":$failedJson,"n_failed":${run.failed.length},""" +
       s""""flaky":${names(run.flaky)},"warmup_failed":${names(run.warmupOnly)},""" +
-      s""""queries_file":"bench_out.json","sf":"$sfDir"}\n""")
+      s""""queries_file":"bench_out.json","cpus":$slots,"sf":"$sfDir"}\n""")
     System.out.flush()
     // Nonzero rc on any timed failure (hard or flaky): breakage must surface
     // in the driver's BENCH artifact, never masquerade as a fast run.

@@ -6,6 +6,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
+import graft.functions.JsonLine
+import graft.model.Schemas
 import graft.operators.Derived
 
 /** The reference's three sinks (SURVEY.md §2.5), Spark-first.
@@ -21,52 +25,18 @@ object Sinks {
     * reference/src/sinks/jsonl.py:32-70 — book levels re-encoded as
     * [price, size, count] arrays with count as a bare integer, payload
     * shape keyed by event_type, compact separators. Spark's `to_json`
-    * cannot mix int/double inside one JSON array, so the line is built
-    * from codegen'd string concatenation (no UDF). Doubles render through
-    * [[graft.functions.PyDoubleRepr]] — CPython-repr layout (plain decimal
-    * in [1e-4, 1e16), `1e-05`-style scientific outside), so sub-millesimal
-    * sizes and >=1e7 values stay byte-identical to json.dumps, not just
-    * the JVM's narrower plain range; symbols/sides/ids are assumed
-    * JSON-safe (they are in the OKX feed).
+    * cannot mix int/double inside one JSON array, so the line comes from
+    * the native one-pass encoder [[graft.functions.JsonLine]] over the
+    * normalized event columns, its doubles rendered by the
+    * [[graft.functions.PyDoubleRepr]] kernel — CPython-repr layout (plain
+    * decimal in [1e-4, 1e16), `1e-05`-style scientific outside), so
+    * sub-millesimal sizes and >=1e7 values stay byte-identical to
+    * json.dumps. The Column-built formulation of the same line lives in
+    * the tests (`JsonLineOracle`) as the byte-identity oracle.
     */
-  def jsonLine: Column = {
-    def d(c: Column): Column = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.PyDoubleRepr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
-    def levels(c: Column): Column = concat(lit("["),
-      concat_ws(",", transform(c, l => concat(
-        lit("["), d(l.getField("price")), lit(","), d(l.getField("size")),
-        lit(","), l.getField("count").cast("string"), lit("]")))),
-      lit("]"))
-    val head = concat(
-      lit("{\"exchange\":\""), col("exchange"),
-      lit("\",\"symbol\":\""), col("symbol"),
-      lit("\",\"channel\":\""), col("channel"),
-      lit("\",\"event_type\":\""), col("event_type"),
-      lit("\",\"ts_exchange_ms\":"), col("ts_exchange_ms").cast("string"),
-      lit(",\"ts_recv_epoch_ms\":"), col("ts_recv_epoch_ms").cast("string"),
-      lit(",\"ts_recv_mono_ns\":"), col("ts_recv_mono_ns").cast("string"),
-      lit(",\"ts_decoded_mono_ns\":"), col("ts_decoded_mono_ns").cast("string"),
-      lit(",\"ts_proc_mono_ns\":"), col("ts_proc_mono_ns").cast("string"),
-      lit(",\"payload\":"))
-    val bookPayload = concat(
-      lit("{\"n\":"), col("book.n").cast("string"),
-      lit(",\"best_bid\":"), d(col("book.best_bid")),
-      lit(",\"best_ask\":"), d(col("book.best_ask")),
-      lit(",\"bids\":"), levels(col("book.bids")),
-      lit(",\"asks\":"), levels(col("book.asks")), lit("}"))
-    val tradePayload = concat(
-      lit("{\"price\":"), d(col("trade.price")),
-      lit(",\"size\":"), d(col("trade.size")),
-      lit(",\"side\":\""), col("trade.side"),
-      lit("\",\"trade_id\":"),
-      when(col("trade.trade_id").isNull, lit("null"))
-        .otherwise(concat(lit("\""), col("trade.trade_id"), lit("\""))),
-      lit("}"))
-    concat(head,
-      when(col("event_type") === "book_topn", bookPayload).otherwise(tradePayload),
-      lit("}")).as("value")
-  }
+  def jsonLine: Column = ColumnBridge.column(JsonLine(
+    Schemas.normalizedEventType.fieldNames.toSeq.map(n => ColumnBridge.expression(col(n)))))
+    .as("value")
 
   /** K3/K4: partitioned JSONL file sink —
     * `{root}/exchange=okx/channel=.../event_date=.../symbol=.../part-*.json`.

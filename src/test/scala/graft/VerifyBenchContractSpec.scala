@@ -83,7 +83,7 @@ class VerifyBenchContractSpec extends SparkSpec {
     val run = Bench.sample(spark,
       Seq("q_broken" -> alwaysBroken, "q_flaky" -> flaky, "q_good" -> good,
         "q_warm" -> warmupOnly),
-      sfDir = dir, warmDir = dir, sparse = Set.empty, nRounds = 2,
+      sfDir = dir, warmDir = dir, nRounds = 2,
       spreadBound = Double.MaxValue)
 
     assert(run.failed.sameElements(Array("q_broken")))
@@ -98,7 +98,7 @@ class VerifyBenchContractSpec extends SparkSpec {
     assert(Bench.exitCode(run) == 1)
 
     // A fully-green registry exits 0 with empty failure buckets.
-    val clean = Bench.sample(spark, Seq("q_good" -> good), dir, dir, Set.empty, 2,
+    val clean = Bench.sample(spark, Seq("q_good" -> good), dir, dir, 2,
       spreadBound = Double.MaxValue)
     assert(clean.failed.isEmpty && clean.flaky.isEmpty && clean.warmupOnly.isEmpty)
     assert(Bench.exitCode(clean) == 0)
@@ -107,7 +107,7 @@ class VerifyBenchContractSpec extends SparkSpec {
     // `spread` object carries max/min for EVERY reported query — the
     // drift-legibility column (BENCH_r10 contract). A flaky query's
     // single sample yields spread exactly 1.0.
-    val json = Bench.resultJson(run, dir, Map("q_good" -> 0.123))
+    val json = Bench.resultJson(run, dir, 4, Map("q_good" -> 0.123))
     assert(json.startsWith("""{"metric":"total","value":"""), json)
     assert(json.contains(""""spread":{"""), json)
     // stage_wall: drift-adjudication column (VERDICT r10 ask #6) — every
@@ -133,7 +133,9 @@ class VerifyBenchContractSpec extends SparkSpec {
     // tripped the — disabled — bound), so a consumer can key on them
     assert(json.contains(""""resampled":[],"n_resampled":0"""), json)
     assert(json.contains(""""contaminated":[],"n_contaminated":0"""), json)
-    assert(json.endsWith(s""""sf":"$dir"}"""), json)
+    // the session's task slots ride in the line, so a consumer can tell
+    // which core count produced it
+    assert(json.endsWith(s""""cpus":4,"sf":"$dir"}"""), json)
   }
 
   test("Bench resamples storm-straddled queries and flags unresolved ones contaminated") {
@@ -160,7 +162,7 @@ class VerifyBenchContractSpec extends SparkSpec {
     }
     val run = Bench.sample(spark,
       Seq("q_bimodal" -> good, "q_storm" -> good),
-      sfDir = dir, warmDir = dir, sparse = Set.empty, nRounds = 2,
+      sfDir = dir, warmDir = dir, nRounds = 2,
       spreadBound = 1.5, maxExtraRounds = 2, fakeClockForTest = fake)
 
     assert(run.resampled.sameElements(Array("q_bimodal", "q_storm")),
@@ -177,7 +179,7 @@ class VerifyBenchContractSpec extends SparkSpec {
     assert(stormMin < 1.5, s"storm sample leaked into the min: $stormMin")
     assert(run.results.toMap.apply("q_bimodal") < 1.5)
 
-    val json = Bench.resultJson(run, dir)
+    val json = Bench.resultJson(run, dir, 4)
     assert(json.contains(""""resampled":["q_bimodal","q_storm"],"n_resampled":2"""), json)
     assert(json.contains(""""contaminated":["q_bimodal"],"n_contaminated":1"""), json)
     def spreadOf(q: String): Double = {
@@ -209,7 +211,7 @@ class VerifyBenchContractSpec extends SparkSpec {
       case _ => None
     }
     val run = Bench.sample(spark, Seq("q_wide" -> wideThenBroken),
-      sfDir = dir, warmDir = dir, sparse = Set.empty, nRounds = 2,
+      sfDir = dir, warmDir = dir, nRounds = 2,
       spreadBound = 1.5, maxExtraRounds = 2, fakeClockForTest = fake)
 
     // the min over the pinned rounds is reported, the run stays green
@@ -222,14 +224,14 @@ class VerifyBenchContractSpec extends SparkSpec {
     assert(run.resampleFailed.keySet == Set("q_wide") &&
       run.resampleFailed("q_wide").contains("extra-round storm"))
 
-    val json = Bench.resultJson(run, dir)
+    val json = Bench.resultJson(run, dir, 4)
     assert(json.contains(""""resample_failed":["q_wide"],"n_resample_failed":1"""), json)
     assert(json.contains(""""flaky":[]"""), json)
 
     // and the column is always present (empty on a clean run)
-    val clean = Bench.sample(spark, Seq("q_good" -> good), dir, dir, Set.empty, 2,
+    val clean = Bench.sample(spark, Seq("q_good" -> good), dir, dir, 2,
       spreadBound = Double.MaxValue)
-    val cleanJson = Bench.resultJson(clean, dir)
+    val cleanJson = Bench.resultJson(clean, dir, 4)
     assert(cleanJson.contains(""""resample_failed":[],"n_resample_failed":0"""), cleanJson)
   }
 
@@ -248,7 +250,7 @@ class VerifyBenchContractSpec extends SparkSpec {
     // spreadBound = MaxValue: this test counts CALLS, so a jitter-triggered
     // contamination resample would break the arithmetic it pins
     val run = Bench.sample(spark, Seq("q_memo" -> memoized),
-      sfDir = sfDir, warmDir = warmDir, sparse = Set.empty, nRounds = 2,
+      sfDir = sfDir, warmDir = warmDir, nRounds = 2,
       memoBuild = Set("q_memo"), spreadBound = Double.MaxValue)
     // priming pass + 2 timed rounds at sfDir; only the rounds are timed.
     assert(callsAtSfDir.get() == 3)
@@ -264,7 +266,7 @@ class VerifyBenchContractSpec extends SparkSpec {
       good(s, d)
     }
     val run2 = Bench.sample(spark, Seq("q_memo2" -> buildFails),
-      sfDir = sfDir, warmDir = warmDir, sparse = Set.empty, nRounds = 2,
+      sfDir = sfDir, warmDir = warmDir, nRounds = 2,
       memoBuild = Set("q_memo2"), spreadBound = Double.MaxValue)
     assert(run2.warmupOnly.sameElements(Array("q_memo2")))
     assert(run2.results.map(_._1) == Seq("q_memo2") && Bench.exitCode(run2) == 0)

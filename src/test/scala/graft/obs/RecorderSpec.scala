@@ -54,7 +54,7 @@ class RecorderSpec extends SparkSpec {
     val gate = "q155_streaming_chained_aggs"
     val names = Seq("q155_streaming_chained_aggs", "q2_filter_project")
     val bench = Bench.sample(spark, names.map(n => n -> SparkEntry.queries(n)),
-      sfDir = sf, warmDir = sf, sparse = Set(gate), nRounds = 2,
+      sfDir = sf, warmDir = sf, nRounds = 2,
       spreadBound = Double.MaxValue)
     assert(bench.failed.isEmpty && bench.flaky.isEmpty, bench.timedFailed)
     for (r <- bench.sampleRounds.indices; name <- bench.sampleRounds(r).keys) {

@@ -24,6 +24,32 @@ import graft.SparkSpec
   */
 class NormalizerFuzzSpec extends SparkSpec {
   import spark.implicits._
+  import NormalizerFuzzSpec.genFrame
+
+  test("native and declarative paths agree on 3000 seeded fuzzed frames") {
+    val rnd = new Random(20260812L)
+    val frames = (0 until 3000).map(i => (genFrame(rnd), i.toLong))
+    val df = frames.toDF("raw", "i").select(
+      col("raw"),
+      (lit(1700000000000L) + col("i")).as("ts_recv_epoch_ms"),
+      (lit(5000000000L) + col("i")).as("ts_recv_mono_ns"),
+      (lit(5000010000L) + col("i")).as("ts_decoded_mono_ns"),
+      (lit(5000025000L) + col("i")).as("ts_proc_mono_ns"))
+    val sortCols = Seq("ts_recv_epoch_ms", "symbol", "channel",
+      "ts_exchange_ms", "event_type").map(col)
+    val native = Normalizer.normalize(df).sort(sortCols: _*).collect().toSeq
+    val declarative = Normalizer.normalizeDeclarative(df).sort(sortCols: _*).collect().toSeq
+    assert(native.size > 500, s"fuzz produced too few events: ${native.size}")
+    assert(native.size == declarative.size,
+      s"row counts differ: native=${native.size} declarative=${declarative.size}")
+    native.zip(declarative).zipWithIndex.foreach { case ((n, d), idx) =>
+      assert(n == d, s"row $idx differs:\n  native     $n\n  declarative $d")
+    }
+  }
+}
+
+/** The seeded fuzz-frame generator, shared with the JSONL encoder spec. */
+object NormalizerFuzzSpec {
 
   private def shuffled(rnd: Random, fields: Seq[String]): String =
     rnd.shuffle(fields).mkString("{", ",", "}")
@@ -66,7 +92,7 @@ class NormalizerFuzzSpec extends SparkSpec {
     shuffled(rnd, fields.toSeq)
   }
 
-  private[operators] def genFrame(rnd: Random): String = rnd.nextInt(20) match {
+  def genFrame(rnd: Random): String = rnd.nextInt(20) match {
     case 0 => "not json"
     case 1 => "[1,2,3]"
     case 2 => "{\"broken"
@@ -88,26 +114,4 @@ class NormalizerFuzzSpec extends SparkSpec {
         s""""arg":${shuffled(rnd, Seq(s""""channel":"books5"""", s""""instId":"B-${rnd.nextInt(4)}""""))}""",
         s""""data":[${genBookItem(rnd)}${if (rnd.nextInt(4) == 0) "," + genBookItem(rnd) else ""}]""") ++ extra)
   }
-
-  test("native and declarative paths agree on 3000 seeded fuzzed frames") {
-    val rnd = new Random(20260812L)
-    val frames = (0 until 3000).map(i => (genFrame(rnd), i.toLong))
-    val df = frames.toDF("raw", "i").select(
-      col("raw"),
-      (lit(1700000000000L) + col("i")).as("ts_recv_epoch_ms"),
-      (lit(5000000000L) + col("i")).as("ts_recv_mono_ns"),
-      (lit(5000010000L) + col("i")).as("ts_decoded_mono_ns"),
-      (lit(5000025000L) + col("i")).as("ts_proc_mono_ns"))
-    val sortCols = Seq("ts_recv_epoch_ms", "symbol", "channel",
-      "ts_exchange_ms", "event_type").map(col)
-    val native = Normalizer.normalize(df).sort(sortCols: _*).collect().toSeq
-    val declarative = Normalizer.normalizeDeclarative(df).sort(sortCols: _*).collect().toSeq
-    assert(native.size > 500, s"fuzz produced too few events: ${native.size}")
-    assert(native.size == declarative.size,
-      s"row counts differ: native=${native.size} declarative=${declarative.size}")
-    native.zip(declarative).zipWithIndex.foreach { case ((n, d), idx) =>
-      assert(n == d, s"row $idx differs:\n  native     $n\n  declarative $d")
-    }
-  }
 }
-
