@@ -56,10 +56,9 @@ object Schemas {
     StructField("side", StringType),
     StructField("trade_id", StringType)))
 
-  /** Flat engine schema for the normalized stream (payload union flattened
-    * into nullable `book` / `trade` structs, SURVEY.md §1.4).
-    */
-  val normalizedEventType: StructType = StructType(Seq(
+  /** The per-event header columns every normalized event carries: venue,
+    * key, discriminator, and the exchange/recv/decode/proc clocks. */
+  val eventHeaderFields: Seq[StructField] = Seq(
     StructField("exchange", StringType),
     StructField("symbol", StringType),
     StructField("channel", StringType),
@@ -68,7 +67,12 @@ object Schemas {
     StructField("ts_recv_epoch_ms", LongType),
     StructField("ts_recv_mono_ns", LongType),
     StructField("ts_decoded_mono_ns", LongType),
-    StructField("ts_proc_mono_ns", LongType),
+    StructField("ts_proc_mono_ns", LongType))
+
+  /** Flat engine schema for the normalized stream (payload union flattened
+    * into nullable `book` / `trade` structs, SURVEY.md §1.4).
+    */
+  val normalizedEventType: StructType = StructType(eventHeaderFields ++ Seq(
     StructField("book", bookPayloadType),
     StructField("trade", tradePayloadType)))
 }

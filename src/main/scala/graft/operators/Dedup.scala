@@ -67,19 +67,21 @@ object Dedup {
     }
   }
 
-  /** Candidate pairs via LSH: explode bands, self-join per (band index,
-    * band hash) bucket, emit distinct ordered pairs. The join input is
-    * |docs|×|bands| small rows; the quadratic blowup is confined to within
-    * buckets (the point of LSH).
-    */
-  def lshCandidatePairs(sigs: DataFrame, numBands: Int): DataFrame = {
-    val bandStructs = array((0 until numBands).map(b =>
+  /** (band_idx, band_hash) structs of the band0..band(numBands−1) columns. */
+  private def bandStructsOf(numBands: Int): Column =
+    array((0 until numBands).map(b =>
       struct(lit(b).as("band_idx"), col(s"band$b").as("band_hash"))): _*)
-    val exploded = sigs
-      .select(col("doc_id"), explode(bandStructs).as("b"))
+
+  /** One (doc_id, band_idx, band_hash) row per band of each signature. */
+  private def explodeBands(sigs: DataFrame, numBands: Int): DataFrame =
+    sigs.select(col("doc_id"), explode(bandStructsOf(numBands)).as("b"))
       .select(col("doc_id"), col("b.band_idx"), col("b.band_hash"))
-    val a = exploded.as("a")
-    val b = exploded.as("b")
+
+  /** Distinct (doc_id_a < doc_id_b) pairs sharing a (band_idx, band_hash)
+    * bucket of the exploded band rows. */
+  private def bucketPairs(bands: DataFrame): DataFrame = {
+    val a = bands.as("a")
+    val b = bands.as("b")
     a.join(b,
         col("a.band_idx") === col("b.band_idx") &&
         col("a.band_hash") === col("b.band_hash") &&
@@ -87,6 +89,14 @@ object Dedup {
       .select(col("a.doc_id").as("doc_id_a"), col("b.doc_id").as("doc_id_b"))
       .distinct()
   }
+
+  /** Candidate pairs via LSH: explode bands, self-join per (band index,
+    * band hash) bucket, emit distinct ordered pairs. The join input is
+    * |docs|×|bands| small rows; the quadratic blowup is confined to within
+    * buckets (the point of LSH).
+    */
+  def lshCandidatePairs(sigs: DataFrame, numBands: Int): DataFrame =
+    bucketPairs(explodeBands(sigs, numBands))
 
   /** [[lshCandidatePairs]] with FAMILY-SIZE CAPPING at ingest — the
     * standard 100 TB dedup guard: an LSH bucket of f members generates
@@ -110,10 +120,8 @@ object Dedup {
   def cappedLshCandidatePairs(sigs: DataFrame, numBands: Int, k: Int,
       qualityCol: String = "quality_score"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bandStructs = array((0 until numBands).map(b =>
-      struct(lit(b).as("band_idx"), col(s"band$b").as("band_hash"))): _*)
     val exploded = sigs
-      .select(col("doc_id"), col(qualityCol), explode(bandStructs).as("b"))
+      .select(col("doc_id"), col(qualityCol), explode(bandStructsOf(numBands)).as("b"))
       .select(col("doc_id"), col(qualityCol), col("b.band_idx"), col("b.band_hash"))
     val capped = exploded
       .withColumn("rn", row_number().over(
@@ -121,14 +129,7 @@ object Dedup {
           .orderBy(col(qualityCol).desc, col("doc_id"))))
       .filter(col("rn") <= k)
       .select("doc_id", "band_idx", "band_hash")
-    val a = capped.as("a")
-    val b = capped.as("b")
-    a.join(b,
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_hash") === col("b.band_hash") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_id_a"), col("b.doc_id").as("doc_id_b"))
-      .distinct()
+    bucketPairs(capped)
   }
 
   /** Incremental LSH screening — the ingestion-time shape of near-dup
@@ -142,14 +143,8 @@ object Dedup {
     * plus the bucket-matched index rows; the corpus is never rescanned.
     */
   def lshScreenAgainst(index: DataFrame, incoming: DataFrame, numBands: Int): DataFrame = {
-    def explodeBands(df: DataFrame): DataFrame = {
-      val bandStructs = array((0 until numBands).map(b =>
-        struct(lit(b).as("band_idx"), col(s"band$b").as("band_hash"))): _*)
-      df.select(col("doc_id"), explode(bandStructs).as("b"))
-        .select(col("doc_id"), col("b.band_idx"), col("b.band_hash"))
-    }
-    val hits = explodeBands(incoming).as("n")
-      .join(explodeBands(index).as("o"),
+    val hits = explodeBands(incoming, numBands).as("n")
+      .join(explodeBands(index, numBands).as("o"),
         col("n.band_idx") === col("o.band_idx") &&
         col("n.band_hash") === col("o.band_hash"))
       .groupBy(col("n.doc_id").as("doc_id"))
@@ -341,8 +336,6 @@ object Dedup {
       require(rounds <= 64, "large-star/small-star CC failed to converge in 64 rounds")
       val next = smallStar(largeStar(edges)).localCheckpoint()
       val nextSig = sig(next)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round=$rounds edges=${nextSig._1}")
       converged = nextSig == curSig
       edges = next
       curSig = nextSig

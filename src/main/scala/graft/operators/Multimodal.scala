@@ -25,13 +25,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Typed metadata carried alongside the opaque payload. */
-  val mediaMetaType: StructType = StructType(Seq(
-    StructField("media_type", StringType),
-    StructField("byte_len", LongType),
-    StructField("declared_width", IntegerType),
-    StructField("declared_height", IntegerType)))
-
   val featureType: StructType = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("byte_len", LongType),
@@ -39,6 +32,33 @@ object Multimodal {
     StructField("width", IntegerType),
     StructField("height", IntegerType),
     StructField("features", ArrayType(DoubleType, containsNull = false))))
+
+  /** Per-partition batch codec work: the mapPartitions boundary means one
+    * codec instance per partition and pipelined row streaming — the
+    * idiomatic Spark shape for expensive per-row native work (and the
+    * direct analog of `mapInPandas` batching). `f` maps each input row to
+    * one output row of `fields`.
+    */
+  private def perPartition(in: DataFrame, fields: StructField*)(f: Row => Row): DataFrame =
+    in.mapPartitions(_.map(f))(
+      org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(StructType(fields)))
+
+  private val docIdField = StructField("doc_id", LongType)
+
+  /** One (doc_id, media_bytes, media_type) payload per (doc_id, dims…)
+    * row, encoded by `encode`. */
+  private def encodeMedia(dims: DataFrame, mediaType: String)(
+      encode: Row => Array[Byte]): DataFrame =
+    perPartition(dims,
+      docIdField,
+      StructField("media_bytes", BinaryType),
+      StructField("media_type", StringType))(r => Row(r.getLong(0), encode(r), mediaType))
+
+  /** (doc_id, fields…) decoded from each payload's `media_bytes`. */
+  private def decodeMedia(media: DataFrame, fields: StructField*)(
+      decode: Array[Byte] => Seq[Any]): DataFrame =
+    perPartition(media.select(col("doc_id"), col("media_bytes")), docIdField +: fields: _*)(r =>
+      Row.fromSeq(r.getLong(0) +: decode(r.getAs[Array[Byte]]("media_bytes"))))
 
   /** Attach an opaque payload + metadata to a documents table (the harness
     * has no real image bytes; text bytes stand in — the engine treats them
@@ -217,42 +237,23 @@ object Multimodal {
     (pmod(col("doc_id"), lit(24)) + 8).cast("int").as("h"))
 
   /** Encode a real RGB PNG per document. */
-  def synthesizeRgbImages(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("media_bytes", BinaryType),
-      StructField("media_type", StringType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    docs.select(col("doc_id") +: rgbDimCols: _*)
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          Row(id, RgbCodec.synthesizePng(id, r.getInt(1), r.getInt(2)), "image/png")
-        }
-      }(enc)
-  }
+  def synthesizeRgbImages(docs: DataFrame): DataFrame =
+    encodeMedia(docs.select(col("doc_id") +: rgbDimCols: _*), "image/png")(r =>
+      RgbCodec.synthesizePng(r.getLong(0), r.getInt(1), r.getInt(2)))
 
   /** Decode RGB PNG bytes into per-channel features. */
-  def decodeRgbImages(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
+  def decodeRgbImages(media: DataFrame): DataFrame =
+    decodeMedia(media,
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("sum_r", LongType),
       StructField("sum_g", LongType),
       StructField("sum_b", LongType),
       StructField("pix_checksum", LongType),
-      StructField("mean_luma", DoubleType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    media.select(col("doc_id"), col("media_bytes"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val d = RgbCodec.decode(r.getAs[Array[Byte]]("media_bytes"))
-          Row(r.getLong(0), d.width, d.height, d.sumR, d.sumG, d.sumB,
-            d.pixChecksum, d.meanLuma)
-        }
-      }(enc)
-  }
+      StructField("mean_luma", DoubleType)) { bytes =>
+      val d = RgbCodec.decode(bytes)
+      Seq[Any](d.width, d.height, d.sumR, d.sumG, d.sumB, d.pixChecksum, d.meanLuma)
+    }
 
   /** Deterministic per-doc image dimensions (shared by synthesis and the
     * oracle): width = doc_id%64 + 16, height = doc_id%48 + 16.
@@ -262,59 +263,34 @@ object Multimodal {
     (pmod(col("doc_id"), lit(48)) + 16).cast("int").as("h"))
 
   /** Encode a real PNG per document (per-partition ImageIO batching). */
-  def synthesizeImages(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("media_bytes", BinaryType),
-      StructField("media_type", StringType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    docs.select(col("doc_id") +: dimCols: _*)
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          Row(id, ImageCodec.synthesizePng(id, r.getInt(1), r.getInt(2)), "image/png")
-        }
-      }(enc)
-  }
+  def synthesizeImages(docs: DataFrame): DataFrame =
+    encodeMedia(docs.select(col("doc_id") +: dimCols: _*), "image/png")(r =>
+      ImageCodec.synthesizePng(r.getLong(0), r.getInt(1), r.getInt(2)))
 
   /** Decode PNG bytes through ImageIO into pixel-level features. */
-  def decodeImages(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
+  def decodeImages(media: DataFrame): DataFrame =
+    decodeMedia(media,
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("pix_sum", LongType),
       StructField("pix_checksum", LongType),
-      StructField("mean_gray", DoubleType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    media.select(col("doc_id"), col("media_bytes"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val d = ImageCodec.decode(r.getAs[Array[Byte]]("media_bytes"))
-          Row(r.getLong(0), d.width, d.height, d.pixSum, d.pixChecksum, d.meanGray)
-        }
-      }(enc)
-  }
+      StructField("mean_gray", DoubleType)) { bytes =>
+      val d = ImageCodec.decode(bytes)
+      Seq[Any](d.width, d.height, d.pixSum, d.pixChecksum, d.meanGray)
+    }
 
   /** Perceptual hash per image through the real PNG decode path (decode →
     * raster → dHash; no closed-form shortcut on the engine side — the
     * oracle recomputes the grid from the pattern, so a codec or sampling
     * bug hash-mismatches).
     */
-  def imageDHashes(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
+  def imageDHashes(media: DataFrame): DataFrame =
+    decodeMedia(media,
       StructField("hash_lo", LongType),
-      StructField("hash_hi", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    media.select(col("doc_id"), col("media_bytes"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val d = ImageCodec.dHash(r.getAs[Array[Byte]]("media_bytes"))
-          Row(r.getLong(0), d.hashLo, d.hashHi)
-        }
-      }(enc)
-  }
+      StructField("hash_hi", LongType)) { bytes =>
+      val d = ImageCodec.dHash(bytes)
+      Seq[Any](d.hashLo, d.hashHi)
+    }
 
   /** Real JVM audio codec: WAV (RIFF/WAVE, PCM signed 16-bit LE mono) via
     * `javax.sound.sampled.AudioSystem` (JDK-builtin, no external deps and
@@ -527,27 +503,15 @@ object Multimodal {
     (pmod(col("doc_id"), lit(480)) + 240).cast("int").as("n")
 
   /** Encode a real WAV per document (per-partition codec batching). */
-  def synthesizeAudio(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("media_bytes", BinaryType),
-      StructField("media_type", StringType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    docs.select(col("doc_id"), audioDimCol)
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          Row(id, AudioCodec.synthesizeWav(id, r.getInt(1)), "audio/wav")
-        }
-      }(enc)
-  }
+  def synthesizeAudio(docs: DataFrame): DataFrame =
+    encodeMedia(docs.select(col("doc_id"), audioDimCol), "audio/wav")(r =>
+      AudioCodec.synthesizeWav(r.getLong(0), r.getInt(1)))
 
   /** Decode WAV bytes through the javax.sound codec into sample-level
     * features (header fields + PCM sums/checksum).
     */
-  def decodeAudio(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
+  def decodeAudio(media: DataFrame): DataFrame =
+    decodeMedia(media,
       StructField("sample_rate", IntegerType),
       StructField("channels", IntegerType),
       StructField("bits", IntegerType),
@@ -555,56 +519,31 @@ object Multimodal {
       StructField("sample_sum", LongType),
       StructField("abs_sum", LongType),
       StructField("sample_checksum", LongType),
-      StructField("mean_abs", DoubleType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    media.select(col("doc_id"), col("media_bytes"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val d = AudioCodec.decode(r.getAs[Array[Byte]]("media_bytes"))
-          Row(r.getLong(0), d.sampleRate, d.channels, d.bits, d.nSamples,
-            d.sampleSum, d.absSum, d.sampleChecksum, d.meanAbs)
-        }
-      }(enc)
-  }
+      StructField("mean_abs", DoubleType)) { bytes =>
+      val d = AudioCodec.decode(bytes)
+      Seq[Any](d.sampleRate, d.channels, d.bits, d.nSamples, d.sampleSum, d.absSum,
+        d.sampleChecksum, d.meanAbs)
+    }
 
   /** Encode the gained (saturating) waveform per document — the loudness
     * census fixture (same WAV plumbing as [[synthesizeAudio]]).
     */
-  def synthesizeGainedAudio(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("media_bytes", BinaryType),
-      StructField("media_type", StringType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    docs.select(col("doc_id"), audioDimCol)
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          Row(id, AudioCodec.synthesizeGainedWav(id, r.getInt(1)), "audio/wav")
-        }
-      }(enc)
-  }
+  def synthesizeGainedAudio(docs: DataFrame): DataFrame =
+    encodeMedia(docs.select(col("doc_id"), audioDimCol), "audio/wav")(r =>
+      AudioCodec.synthesizeGainedWav(r.getLong(0), r.getInt(1)))
 
   /** Windowed loudness census through the real WAV decode path. */
-  def decodeAudioLoudness(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
+  def decodeAudioLoudness(media: DataFrame): DataFrame =
+    decodeMedia(media,
       StructField("n_samples", LongType),
       StructField("n_windows", LongType),
       StructField("n_clipped", LongType),
       StructField("n_quiet", LongType),
       StructField("energy", LongType),
-      StructField("peak_abs", IntegerType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    media.select(col("doc_id"), col("media_bytes"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val d = AudioCodec.decodeLoudness(r.getAs[Array[Byte]]("media_bytes"))
-          Row(r.getLong(0), d.nSamples, d.nWindows, d.nClipped, d.nQuiet,
-            d.energy, d.peakAbs)
-        }
-      }(enc)
-  }
+      StructField("peak_abs", IntegerType)) { bytes =>
+      val d = AudioCodec.decodeLoudness(bytes)
+      Seq[Any](d.nSamples, d.nWindows, d.nClipped, d.nQuiet, d.energy, d.peakAbs)
+    }
 
   /** Codec-free byte-level feature extraction for opaque payloads with no
     * JVM decoder (deterministic: rolling checksum + byte-histogram
@@ -648,26 +587,18 @@ object Multimodal {
       slice(sequence(lit(0), greatest(col(declaredFramesCol) - 1, lit(0)),
         lit(stride)), 1, maxFrames))
 
-  /** Per-partition batch decode: the mapPartitions boundary means one
-    * decoder instance per partition and pipelined row streaming — the
-    * idiomatic Spark shape for expensive per-row native work (and the
-    * direct analog of `mapInPandas` batching).
+  /** Codec-free [[ByteStats]] features of every payload, decoded per
+    * partition ([[perPartition]]).
     */
   def extractFeatures(spark: SparkSession, media: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(featureType)
-    media
-      .select(col("doc_id"), col("media_bytes"),
-        col("media_meta.declared_width").as("w"),
-        col("media_meta.declared_height").as("h"))
-      .mapPartitions { rows =>
-        // decoder init happens here, once per partition
-        rows.map { r =>
-          ByteStats.decode(r.getAs[Long]("doc_id"),
-            r.getAs[Array[Byte]]("media_bytes"),
-            r.getAs[Int]("w"), r.getAs[Int]("h"))
-        }
-      }(enc)
+    val in = media.select(col("doc_id"), col("media_bytes"),
+      col("media_meta.declared_width").as("w"),
+      col("media_meta.declared_height").as("h"))
+    perPartition(in, featureType.fields.toIndexedSeq: _*) { r =>
+      ByteStats.decode(r.getAs[Long]("doc_id"),
+        r.getAs[Array[Byte]]("media_bytes"),
+        r.getAs[Int]("w"), r.getAs[Int]("h"))
+    }
   }
 
   /** Minimal raw-video container ("GVID"): a real binary format the
@@ -742,44 +673,32 @@ object Multimodal {
   /** Encode a GVID container per document, with declared frame count as
     * typed metadata for plan-level frame sampling.
     */
-  def synthesizeVideos(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
+  def synthesizeVideos(docs: DataFrame): DataFrame =
+    perPartition(docs.select(col("doc_id") +: videoDimCols: _*),
+      docIdField,
       StructField("media_bytes", BinaryType),
-      StructField("declared_frames", IntegerType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    docs.select(col("doc_id") +: videoDimCols: _*)
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val nf = r.getInt(3)
-          Row(id, VideoCodec.synthesize(id, r.getInt(1), r.getInt(2), nf), nf)
-        }
-      }(enc)
-  }
+      StructField("declared_frames", IntegerType)) { r =>
+      val id = r.getLong(0)
+      val nf = r.getInt(3)
+      Row(id, VideoCodec.synthesize(id, r.getInt(1), r.getInt(2), nf), nf)
+    }
 
   /** Demux + decode ONLY the frames named by `frame_sample_plan`
     * (per-partition batch decode, same seam as images/audio).
     */
-  def decodeVideoFrames(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
+  def decodeVideoFrames(media: DataFrame): DataFrame =
+    perPartition(media.select(col("doc_id"), col("media_bytes"), col("frame_sample_plan")),
+      docIdField,
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("n_frames", IntegerType),
       StructField("n_sampled", IntegerType),
       StructField("byte_len", LongType),
-      StructField("sampled_pix_sum", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    media.select(col("doc_id"), col("media_bytes"), col("frame_sample_plan"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val bytes = r.getAs[Array[Byte]]("media_bytes")
-          val plan = r.getSeq[Int](r.fieldIndex("frame_sample_plan"))
-          val st = VideoCodec.decodeFrames(bytes, plan)
-          Row(r.getLong(0), st.width, st.height, st.nFrames, st.nSampled,
-            bytes.length.toLong, st.sampledPixSum)
-        }
-      }(enc)
-  }
+      StructField("sampled_pix_sum", LongType)) { r =>
+      val bytes = r.getAs[Array[Byte]]("media_bytes")
+      val plan = r.getSeq[Int](r.fieldIndex("frame_sample_plan"))
+      val st = VideoCodec.decodeFrames(bytes, plan)
+      Row(r.getLong(0), st.width, st.height, st.nFrames, st.nSampled,
+        bytes.length.toLong, st.sampledPixSum)
+    }
 }

@@ -165,10 +165,4 @@ object Normalizer {
       captureCols ++ Seq(
         col("evt.book").as("book"),
         col("evt.trade").as("trade")): _*)
-
-  /** books5-only / trades-only views (N3 dispatch as post-filters). */
-  def normalizeBooks(raw: DataFrame, passthrough: Seq[String] = Nil): DataFrame =
-    normalize(raw, passthrough).filter(col("channel") === "books5")
-  def normalizeTrades(raw: DataFrame, passthrough: Seq[String] = Nil): DataFrame =
-    normalize(raw, passthrough).filter(col("channel") === "trades")
 }

@@ -50,21 +50,41 @@ object Similarity {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
-  /** Exact top-k neighbors for each query vector.
-    * @param corpus  (id, vec) rows
-    * @param queries (qid, qvec) rows — small; broadcast
-    */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val joined = corpus.crossJoin(broadcast(queries))
-      .filter(col("id") =!= col("qid"))
+  /** Candidate (qid, qvec, id, vec) pairs minus self-pairs, with their
+    * exact `cos_sim`. */
+  private def scored(pairs: DataFrame): DataFrame =
+    pairs.filter(col("id") =!= col("qid"))
       .withColumn("cos_sim", cosine(asDouble(col("qvec")), asDouble(col("vec"))))
+
+  /** Each query's `k` best (qid, id, cos_sim) rows by (cos_sim DESC, id):
+    * (qid, rank, neighbor_id, cos_sim). */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(desc("cos_sim"), asc("id"))
-    joined
+    scored
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("cos_sim"))
   }
+
+  /** The corpus vectors at ids 0, step, 2·step, … (step = ⌊corpus/n⌋), the
+    * first `n` of them in id order, collected: the deterministic sampled
+    * quantizer / codebook source of the IVF and PQ indexes. */
+  private def sampledVectors(corpus: DataFrame, n: Int): Seq[Seq[Double]] = {
+    val step = math.max(1L, corpus.count() / n) // index-build-time action
+    corpus
+      .filter(col("id") % step === 0 && (col("id") / step) < n)
+      .orderBy((col("id") / step).cast("int"))
+      .select(asDouble(col("vec")))
+      .collect().map(_.getSeq[Double](0).toSeq).toSeq
+  }
+
+  /** Exact top-k neighbors for each query vector.
+    * @param corpus  (id, vec) rows
+    * @param queries (qid, qvec) rows — small; broadcast
+    */
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topK(scored(corpus.crossJoin(broadcast(queries))), k)
 
   /** Deterministic pseudo-random hyperplane component for (plane p, dim i):
     * a value in [-0.5, 0.5) derived from md5 via pure nibble arithmetic —
@@ -149,7 +169,6 @@ object Similarity {
     */
   def ivfSampledTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 16, nProbe: Int = 4): DataFrame = {
-    val step = math.max(1L, corpus.count() / nlist) // index-build-time action
     // Index build: the sampled coarse quantizer is nlist×dim doubles (KB)
     // of pure data — collect it once and ship it to every task as array
     // LITERALS, exactly like a real IVF broadcasts its quantizer. Cell
@@ -159,11 +178,7 @@ object Similarity {
     // each id's candidates). Values are unchanged: same sqDist folds, and
     // array_position's first-match rule reproduces the (dist asc, cell
     // asc) tie-break.
-    val cents: Seq[Seq[Double]] = corpus
-      .filter(col("id") % step === 0 && (col("id") / step) < nlist)
-      .orderBy((col("id") / step).cast("int"))
-      .select(asDouble(col("vec")))
-      .collect().map(_.getSeq[Double](0).toSeq).toSeq
+    val cents = sampledVectors(corpus, nlist)
     def centLit(c: Int): Column = typedLit(cents(c).toArray)
     def cellDists(v: Column): Column =
       array((0 until cents.size).map(c => sqDist(v, centLit(c))): _*)
@@ -186,15 +201,7 @@ object Similarity {
         (d, c) => struct(d.as("dist"), c.as("cell")))), 1, nProbe))
       .select(col("qid"), col("qvec"), explode(col("probe.cell")).as("cell"))
 
-    val joined = assigned.join(broadcast(qCells), Seq("cell"))
-      .filter(col("id") =!= col("qid"))
-      .withColumn("cos_sim", cosine(asDouble(col("qvec")), asDouble(col("vec"))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("cos_sim"), asc("id"))
-    joined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("cos_sim"))
+    topK(scored(assigned.join(broadcast(qCells), Seq("cell"))), k)
   }
 
   /** Cell assignment under the sampled literal quantizer — the same index
@@ -205,12 +212,7 @@ object Similarity {
     * distortion) a k-means/IVF training step emits each Lloyd iteration.
     */
   def ivfAssignCells(corpus: DataFrame, nlist: Int = 16): DataFrame = {
-    val step = math.max(1L, corpus.count() / nlist)
-    val cents: Seq[Seq[Double]] = corpus
-      .filter(col("id") % step === 0 && (col("id") / step) < nlist)
-      .orderBy((col("id") / step).cast("int"))
-      .select(asDouble(col("vec")))
-      .collect().map(_.getSeq[Double](0).toSeq).toSeq
+    val cents = sampledVectors(corpus, nlist)
     def centLit(c: Int): Column = typedLit(cents(c).toArray)
     val ds = array((0 until cents.size).map(c =>
       sqDist(asDouble(col("vec")), centLit(c))): _*)
@@ -279,15 +281,7 @@ object Similarity {
       .filter(col("crank") <= nProbe)
       .select(col("qid"), col("qvec"), col("cell"))
 
-    val joined = assigned.join(broadcast(qCells), Seq("cell"))
-      .filter(col("id") =!= col("qid"))
-      .withColumn("cos_sim", cosine(asDouble(col("qvec")), asDouble(col("vec"))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("cos_sim"), asc("id"))
-    joined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("cos_sim"))
+    topK(scored(assigned.join(broadcast(qCells), Seq("cell"))), k)
   }
 
   /** Multi-probe LSH ANN: each query probes its own bucket AND every
@@ -310,12 +304,7 @@ object Similarity {
       .select(col("qid"),  col("id"),
         cosine(asDouble(col("qvec")), asDouble(col("vec"))).as("cos_sim"))
       .distinct() // a candidate can surface via several probes
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("cos_sim"), asc("id"))
-    cand
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("cos_sim"))
+    topK(cand, k)
   }
 
   /** Product-quantization ANN (the memory-side scale path, complementing
@@ -335,13 +324,8 @@ object Similarity {
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       m: Int = 4, sub: Int = 16, codebookK: Int = 16): DataFrame = {
-    val step = math.max(1L, corpus.count() / codebookK)
     // codebookK × dim sampled codeword source vectors, collected once
-    val sampled: Array[Array[Double]] = corpus
-      .filter(col("id") % step === 0 && (col("id") / step) < codebookK)
-      .orderBy((col("id") / step).cast("int"))
-      .select(asDouble(col("vec")))
-      .collect().map(_.getSeq[Double](0).toArray)
+    val sampled = sampledVectors(corpus, codebookK).map(_.toArray)
     def cwLit(mm: Int, kk: Int): Column =
       typedLit(sampled(kk).slice(mm * sub, (mm + 1) * sub))
     def subV(v: Column, mm: Int): Column = slice(v, mm * sub + 1, sub)
@@ -395,8 +379,7 @@ object Similarity {
     queryStream
       .withColumn("bucket", lshBucket(asDouble(col("qvec")), numPlanes, dim))
       .join(index, Seq("bucket"))
-      .filter(col("id") =!= col("qid"))
-      .withColumn("cos_sim", cosine(asDouble(col("qvec")), asDouble(col("vec"))))
+      .transform(scored)
       .select(col("qid"), col("id"), col("cos_sim"))
 
   /** ANN: exact ranking within LSH buckets. Corpus is bucketed once
@@ -407,14 +390,6 @@ object Similarity {
       numPlanes: Int = 8, dim: Int = 64): DataFrame = {
     val cb = corpus.withColumn("bucket", lshBucket(asDouble(col("vec")), numPlanes, dim))
     val qb = queries.withColumn("bucket", lshBucket(asDouble(col("qvec")), numPlanes, dim))
-    val joined = cb.join(broadcast(qb), Seq("bucket"))
-      .filter(col("id") =!= col("qid"))
-      .withColumn("cos_sim", cosine(asDouble(col("qvec")), asDouble(col("vec"))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("cos_sim"), asc("id"))
-    joined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("cos_sim"))
+    topK(scored(cb.join(broadcast(qb), Seq("bucket"))), k)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{ExactPercentile, StableAgg}
+import graft.functions.StableAgg
 
 /** The metrics engine: rolling-window aggregates (SURVEY.md §2.4, A1-A9).
   *
@@ -16,25 +16,6 @@ import graft.functions.{ExactPercentile, StableAgg}
   * possible.
   */
 object WindowStats {
-
-  /** A2+A3: exact floor-index percentiles of `valueCol` per group + window,
-    * gated on a minimum sample count (rolling.py:99-111,125).
-    */
-  def percentileReport(
-      events: DataFrame,
-      valueCol: String,
-      groupCols: Seq[String],
-      minSamples: Int = 20,
-      ps: Seq[Double] = Seq(0.5, 0.95, 0.99)): DataFrame = {
-    val pcts = ExactPercentile(col(valueCol), ps).as("pcts")
-    val base = events.groupBy(groupCols.map(col): _*)
-      .agg(pcts, count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minSamples)              // A3 min-sample gate
-    val named = ps.zipWithIndex.map { case (p, i) =>
-      element_at(col("pcts"), i + 1).as(s"p${(p * 100).round}")
-    }
-    base.select(groupCols.map(col) ++ named :+ col("cnt"): _*)
-  }
 
   /** A5/A9: per-key count/mean/sample-std/min/max of a Long-typed series
     * (rolling.py:172-184), with the reference's empty/singleton defaults.
@@ -62,17 +43,6 @@ object WindowStats {
       .withColumn("stale_ms", col(tsCol) - lag(col(tsCol), 1).over(w))
       .filter(col("stale_ms").isNotNull)
   }
-
-  /** A4: cumulative zero-latency counters and zero-rate %
-    * (rolling.py:56-60,136-142): rate = zeros / max(1, total) * 100.
-    */
-  def zeroRate(events: DataFrame, latCol: String, groupCols: Seq[String]): DataFrame =
-    events.groupBy(groupCols.map(col): _*)
-      .agg(
-        count(lit(1)).as("total"),
-        sum(when(col(latCol) === 0, 1L).otherwise(0L)).as("zeros"))
-      .withColumn("zero_rate_pct",
-        col("zeros").cast("double") / greatest(col("total"), lit(1L)) * 100.0d)
 
   /** A7/A8: per-symbol cumulative message counts, sorted (rolling.py:97,126). */
   def msgCounts(events: DataFrame, keyCol: String = "symbol"): DataFrame =

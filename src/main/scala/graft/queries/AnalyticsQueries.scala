@@ -115,13 +115,7 @@ object AnalyticsQueries extends Registry {
     * side) — shared by the OHLC and VWAP oracles.
     */
   private[queries] val duckTrades: String =
-    """base AS (
-        SELECT (l_orderkey * 10 + l_linenumber) AS src_id,
-          'T-' || CAST(l_suppkey % 5 AS VARCHAR) AS symbol,
-          epoch_ms(l_shipdate) AS ship_ms,
-          l_extendedprice AS px, l_quantity AS qty,
-          l_linenumber, l_partkey, l_suppkey
-        FROM lineitem WHERE l_orderkey % 17 <> 0 AND l_orderkey % 11 <> 0),
+    s"""${NormalizerQueries.duckTapeBase},
       tr AS (
         SELECT src_id, symbol, ship_ms AS ts, px AS price, qty AS sz,
           CASE WHEN l_linenumber % 2 = 0 THEN 'buy' ELSE 'sell' END AS side
@@ -132,6 +126,19 @@ object AnalyticsQueries extends Registry {
         FROM base WHERE l_suppkey % 4 <> 0)"""
 
   private[queries] val duckSeqKey = "printf('%09d|%012d|%018.6f', ts % 86400000, src_id, price)"
+
+  /** Daily OHLC candles computed directly from the trade tape: the
+    * oracle of q66 and of its hourly-rollup twin q221. */
+  private lazy val dailyBarsOracle: String =
+    s"""WITH $duckTrades
+      SELECT symbol, ts // 86400000 AS day_bucket,
+        arg_min(price, $duckSeqKey) AS open,
+        MAX(price) AS high, MIN(price) AS low,
+        arg_max(price, $duckSeqKey) AS close,
+        ${OracleSql.dsum("sz")} AS volume,
+        CAST(COUNT(*) AS BIGINT) AS n_trades
+      FROM tr GROUP BY symbol, day_bucket
+      ORDER BY symbol, day_bucket"""
 
   /** OHLC bars (A-series extension): per (symbol, day) candle from the
     * normalized trade stream. open/close are min/max over the [[seqKey]]
@@ -153,15 +160,7 @@ object AnalyticsQueries extends Registry {
           count(lit(1)).as("n_trades"))
         .orderBy("symbol", "day_bucket")
     },
-    Some(s"""WITH $duckTrades
-      SELECT symbol, ts // 86400000 AS day_bucket,
-        arg_min(price, $duckSeqKey) AS open,
-        MAX(price) AS high, MIN(price) AS low,
-        arg_max(price, $duckSeqKey) AS close,
-        ${OracleSql.dsum("sz")} AS volume,
-        CAST(COUNT(*) AS BIGINT) AS n_trades
-      FROM tr GROUP BY symbol, day_bucket
-      ORDER BY symbol, day_bucket"""))
+    Some(dailyBarsOracle))
 
   /** VWAP + side-split volume per symbol. The volume-weighted average
     * price is the ratio of two exact decimal sums (notional / volume), so
@@ -666,15 +665,7 @@ object AnalyticsQueries extends Registry {
           sum(col("n_trades")).as("n_trades"))
         .orderBy("symbol", "day_bucket")
     },
-    Some(s"""WITH $duckTrades
-      SELECT symbol, ts // 86400000 AS day_bucket,
-        arg_min(price, $duckSeqKey) AS open,
-        MAX(price) AS high, MIN(price) AS low,
-        arg_max(price, $duckSeqKey) AS close,
-        ${OracleSql.dsum("sz")} AS volume,
-        CAST(COUNT(*) AS BIGINT) AS n_trades
-      FROM tr GROUP BY symbol, day_bucket
-      ORDER BY symbol, day_bucket"""))
+    Some(dailyBarsOracle))
 
   /** Lee-Ready trade-sign classification (Lee & Ready 1991, the
     * microstructure standard): each trade compares to the prevailing

@@ -2,6 +2,7 @@ package graft.queries
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -170,6 +171,18 @@ object CoreQueries extends Registry {
       FROM orders JOIN customer ON o_custkey = c_custkey
       GROUP BY c_mktsegment ORDER BY c_mktsegment"""))
 
+  /** Per-user stats of the gap column `gap` on the exact integer path:
+    * the Spark side of `OracleSql.stalenessStats` (q8, q108, q133, q303,
+    * q304). `user` yields the `user_id` key. */
+  private[queries] def staleStats(user: Column, gap: String)(gaps: DataFrame): DataFrame =
+    gaps.groupBy(user)
+      .agg(count(lit(1)).as("stale_count"),
+        SA.lavg(col(gap)).as("stale_mean_ms"),
+        SA.lstdSamp(col(gap)).as("stale_std_ms"),
+        min(gap).as("stale_min_ms"),
+        max(gap).as("stale_max_ms"))
+      .orderBy("user_id")
+
   /** A6 staleness: per-key consecutive-timestamp gaps (lag window fn) then
     * A5/A9 per-key stats on the exact integer path.
     */
@@ -179,14 +192,7 @@ object CoreQueries extends Registry {
       val w = Window.partitionBy("user_id").orderBy("ts_ms", "event_id")
       ev.withColumn("gap_ms", col("ts_ms") - lag(col("ts_ms"), 1).over(w))
         .filter(col("gap_ms").isNotNull)
-        .groupBy("user_id")
-        .agg(
-          count(lit(1)).as("stale_count"),
-          SA.lavg(col("gap_ms")).as("stale_mean_ms"),
-          SA.lstdSamp(col("gap_ms")).as("stale_std_ms"),
-          min("gap_ms").as("stale_min_ms"),
-          max("gap_ms").as("stale_max_ms"))
-        .orderBy("user_id")
+        .transform(staleStats(col("user_id"), "gap_ms"))
     },
     Some(O.stalenessStats))
 
@@ -238,11 +244,16 @@ object CoreQueries extends Registry {
         / greatest(COUNT(*), 1) * 100.0 AS low_rate_pct
       FROM events GROUP BY event_type ORDER BY event_type"""))
 
+  /** Per-user event counts: the oracle of q11 and its streaming twins
+    * q123 (MemoryStream) and q139 (file source). */
+  private[queries] lazy val userCountsOracle: String =
+    """SELECT user_id, COUNT(*) AS msg_count FROM events
+      GROUP BY user_id ORDER BY user_id"""
+
   /** A7/A8: per-key cumulative counts, sorted emission. */
   private val q11 = Q("q11_user_counts",
     (s, d) => WindowStats.msgCounts(Tables.events(s, d), "user_id"),
-    Some("""SELECT user_id, COUNT(*) AS msg_count FROM events
-      GROUP BY user_id ORDER BY user_id"""))
+    Some(userCountsOracle))
 
   /** A1/A5/T1: tumbling event-time windows (1 h) with stable stats + the
     * min-sample gate. At scale this is the canonical windowed agg: partial
@@ -470,24 +481,21 @@ object CoreQueries extends Registry {
              value - asof_quote AS value_minus_quote
       FROM c WHERE is_right = 0 ORDER BY event_id"""))
 
-  /** Session windows (absent in the reference and in classic SQL — native
-    * in Spark): 30-minute-gap sessions per user. Oracle reproduces the
-    * semantics via gaps-and-islands. Both engines see the identical
-    * ms-truncated clock so boundary behavior matches exactly.
-    */
-  private val q36 = Q("q36_session_windows",
-    (s, d) => {
-      Tables.fanOut(Tables.events(s, d))
-        .groupBy(session_window(timestamp_millis(col("ts_ms")), "30 minutes").as("sw"),
-          col("user_id"))
-        .agg(count(lit(1)).as("cnt"), SA.dsum(col("value")).as("total_value"))
-        .select(col("user_id"),
-          unix_millis(col("sw.start")).as("session_start_ms"),
-          unix_millis(col("sw.end")).as("session_end_ms"),
-          col("cnt"), col("total_value"))
-        .orderBy("user_id", "session_start_ms")
-    },
-    Some(s"""WITH e AS (SELECT user_id, epoch_ms(ts) AS ms, value FROM events),
+  /** 30-minute-gap sessions per user over the time column `ts`, with
+    * their event count and exact value total (q36 batch, q111 streaming). */
+  private[queries] def sessionWindows(events: DataFrame, ts: Column): DataFrame =
+    events
+      .groupBy(session_window(ts, "30 minutes").as("sw"), col("user_id"))
+      .agg(count(lit(1)).as("cnt"), SA.dsum(col("value")).as("total_value"))
+      .select(col("user_id"),
+        unix_millis(col("sw.start")).as("session_start_ms"),
+        unix_millis(col("sw.end")).as("session_end_ms"),
+        col("cnt"), col("total_value"))
+
+  /** Gaps-and-islands sessionization: the one oracle of q36, q111 and
+    * q138. */
+  private[queries] lazy val sessionsOracle: String =
+    s"""WITH e AS (SELECT user_id, epoch_ms(ts) AS ms, value FROM events),
       m AS (SELECT *, CASE WHEN lag(ms) OVER (PARTITION BY user_id ORDER BY ms) IS NULL
               OR ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms) >= 1800000
               THEN 1 ELSE 0 END AS new_s FROM e),
@@ -496,7 +504,19 @@ object CoreQueries extends Registry {
       SELECT user_id, MIN(ms) AS session_start_ms,
         MAX(ms) + 1800000 AS session_end_ms,
         COUNT(*) AS cnt, ${O.dsum("value")} AS total_value
-      FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_ms"""))
+      FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_ms"""
+
+  /** Session windows (absent in the reference and in classic SQL — native
+    * in Spark): 30-minute-gap sessions per user. Oracle reproduces the
+    * semantics via gaps-and-islands. Both engines see the identical
+    * ms-truncated clock so boundary behavior matches exactly.
+    */
+  private val q36 = Q("q36_session_windows",
+    (s, d) => {
+      sessionWindows(Tables.fanOut(Tables.events(s, d)), timestamp_millis(col("ts_ms")))
+        .orderBy("user_id", "session_start_ms")
+    },
+    Some(sessionsOracle))
 
   /** Approximate sketches — the documented scale path for unbounded
     * groups: HLL distinct counts + interpolated approx percentiles. The

@@ -253,6 +253,12 @@ object CurationQueries extends Registry {
     * human-curated), so this is scan + broadcast-hash-join + one
     * map-combined aggregation — no shuffle grows with the dictionary.
     */
+  /** (doc_id, term, tag) for every dictionary term of every doc (q182
+    * batch, q204 inside the stream). */
+  private def tagHits(docs: DataFrame, dict: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("term"))
+      .join(broadcast(dict), "term")
+
   /** Post-hit aggregation shared by q182 (batch) and q204 (streaming
     * sink table): per-doc totals + winning tag, unmatched docs kept. */
   private def tagAggregate(hits: DataFrame, docs: DataFrame): DataFrame = {
@@ -278,9 +284,7 @@ object CurationQueries extends Registry {
       import s.implicits._
       val dict = tagDict.toDF("term", "tag")
       val docs = Tables.fanOut(Tables.documents(s, d))
-      val hits = docs
-        .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("term"))
-        .join(broadcast(dict), "term")
+      val hits = tagHits(docs, dict)
       tagAggregate(hits, docs)
     },
     Some(tagOracleSql))
@@ -1311,17 +1315,10 @@ object CurationQueries extends Registry {
       import s.implicits._
       val dict = tagDict.toDF("term", "tag")
       val docs = Tables.documents(s, d)
-      val docRows: Seq[(Long, String)] =
-        StreamFixtures.replayRows("q204", d) {
-          docs.select("doc_id", "text")
-            .orderBy("doc_id").collect().iterator
-            .map(r => (r.getLong(0), r.getString(1))).toSeq
-        }
+      val docRows = StreamFixtures.docRows(s, d, "q204")
       val mem = StreamGate.memory[(Long, String)](s)
       val src = mem.toDF().toDF("doc_id", "text")
-      val hits = src
-        .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("term"))
-        .join(broadcast(dict), "term")
+      val hits = tagHits(src, dict)
       // real per-row tag compute: interpreted eval costs more than the recompiles
       val tagged = StreamGate.toMemory(s, hits, "append",
         StreamGate.feed(mem, docRows.grouped(math.max(1, docRows.size / 3))),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -676,6 +676,20 @@ object ExtendedQueries extends Registry {
         COUNT(*) AS cnt
       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""))
 
+  /** The gate of q108 and q133: the arrival-ordered staleness replay in
+    * 2 chunks through the stateful `gaps` operator, aggregated to q8's
+    * per-user stats. */
+  private def stalenessGate(s: SparkSession, d: String, conf: StreamGate.GateConf)(
+      gaps: DataFrame => DataFrame): DataFrame = {
+    import s.implicits._
+    val rows: Seq[(String, String, Long, Long)] = stalenessSymRows(s, d)
+    val mem = StreamGate.memory[(String, String, Long, Long)](s)
+    val events = mem.toDF()
+      .toDF("symbol", "channel", "ts_exchange_ms", "ts_recv_mono_ns")
+    StreamGate.toMemory(s, gaps(events), "append", feed(mem, inChunks(rows, 2)), conf)
+      .transform(CoreQueries.staleStats(col("symbol").cast("bigint").as("user_id"), "stale_ms"))
+  }
+
   /** Streaming-state gate: the reference's per-key staleness tracker
     * (reference/src/metrics/rolling.py:34-35,85-94) executed through the
     * REAL Structured Streaming path — MemoryStream → flatMapGroupsWithState
@@ -692,22 +706,8 @@ object ExtendedQueries extends Registry {
     * flatMapGroupsWithState pipeline, whose state is one Long per key.
     */
   private val q108 = Q("q108_streaming_staleness",
-    (s, d) => {
-      import s.implicits._
-      val rows: Seq[(String, String, Long, Long)] = stalenessSymRows(s, d)
-      val mem = StreamGate.memory[(String, String, Long, Long)](s)
-      val events = mem.toDF()
-        .toDF("symbol", "channel", "ts_exchange_ms", "ts_recv_mono_ns")
-      val gaps = graft.streaming.StalenessStream.gaps(events)
-      StreamGate.toMemory(s, gaps.toDF(), "append", feed(mem, inChunks(rows, 2)))
-        .groupBy(col("symbol").cast("bigint").as("user_id"))
-        .agg(count(lit(1)).as("stale_count"),
-          StableAgg.lavg(col("stale_ms")).as("stale_mean_ms"),
-          StableAgg.lstdSamp(col("stale_ms")).as("stale_std_ms"),
-          min("stale_ms").as("stale_min_ms"),
-          max("stale_ms").as("stale_max_ms"))
-        .orderBy("user_id")
-    },
+    (s, d) => stalenessGate(s, d, StreamGate.GateConf())(
+      graft.streaming.StalenessStream.gaps(_).toDF()),
     Some(O.stalenessStats))
 
   /** Window-aggregate closure: percentile_disc and mode as WINDOW
@@ -823,13 +823,7 @@ object ExtendedQueries extends Registry {
       val src = mem.toDF().toDF("user_id", "ts_ms", "value")
         .withColumn("ts", timestamp_millis(col("ts_ms")))
         .withWatermark("ts", "0 seconds")
-      val sess = src
-        .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
-        .agg(count(lit(1)).as("cnt"), StableAgg.dsum(col("value")).as("total_value"))
-        .select(col("user_id"),
-          unix_millis(col("sw.start")).as("session_start_ms"),
-          unix_millis(col("sw.end")).as("session_end_ms"),
-          col("cnt"), col("total_value"))
+      val sess = CoreQueries.sessionWindows(src, col("ts"))
       // two watermark pushes: sentinel k's event time is the watermark
       // during sentinel k+1's batch, so the second push flushes
       // everything that closed before the first sentinel
@@ -838,16 +832,7 @@ object ExtendedQueries extends Registry {
         .filter(col("user_id") >= 0)
         .orderBy("user_id", "session_start_ms")
     },
-    Some(s"""WITH e AS (SELECT user_id, epoch_ms(ts) AS ms, value FROM events),
-      m AS (SELECT *, CASE WHEN lag(ms) OVER (PARTITION BY user_id ORDER BY ms) IS NULL
-              OR ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms) >= 1800000
-              THEN 1 ELSE 0 END AS new_s FROM e),
-      g AS (SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ms
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM m)
-      SELECT user_id, MIN(ms) AS session_start_ms,
-        MAX(ms) + 1800000 AS session_end_ms,
-        COUNT(*) AS cnt, ${O.dsum("value")} AS total_value
-      FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_ms"""))
+    Some(CoreQueries.sessionsOracle))
 
   /** Sliding-frame discrete percentiles (q109's partition-wide
     * percentile_disc taken to bounded moving frames): trailing-20-row
@@ -895,30 +880,9 @@ object ExtendedQueries extends Registry {
     * gate with a full hash oracle, no FP accumulation-order caveats.
     * The readable score is one exact division at the end.
     */
-  /** q116's symmetrized edge build, factored so Round15CertificatesSpec
-    * can pin its PRE-checkpoint plan shape: the audited q116 plan is
-    * post-localCheckpoint (an RDD scan), so without this pin the r14
-    * removal of the no-op |E| dedup (guide §2.4) had no plan golden and a
-    * future edit could silently reintroduce the shuffle.
-    */
-  private[queries] def pagerankEdges(s: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-    val raw = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    // r14: plain UNION ALL — raw is distinct and its (even src, odd dst)
-    // namespace is disjoint from the flipped copy's (odd src, even dst),
-    // so the old `.distinct()` after the union removed nothing and cost a
-    // full |E| shuffle+dedup (guide §2.4; the tradeGraph in
-    // FrontierQueries already symmetrizes this way). Oracle unchanged:
-    // its UNION dedup is likewise a no-op on disjoint inputs.
-    raw.unionByName(raw.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
   private val q116 = Q("q116_pagerank_fixed",
     (s, d) => {
-      val edges = pagerankEdges(s, d)
+      val edges = FrontierQueries.tradeGraph(s, d)
       GraphOps.pageRankFixed(edges, 5)
         .select(col("node"), col("rank"),
           (col("rank").cast("double") / lit(1000000000000.0)).as("score"))
@@ -946,6 +910,49 @@ object ExtendedQueries extends Registry {
       FROM r5 ORDER BY node"""
     })
 
+  /** The min-support supplier co-supply graph of q117 and q158:
+    * canonical a<b edges co-supplied by ≥ 8 distinct orders. */
+  private[queries] def coSupplyEdges(s: SparkSession, d: String): DataFrame = {
+    val l = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
+    l.as("x").join(l.as("y"),
+        col("x.l_orderkey") === col("y.l_orderkey") &&
+        col("x.l_suppkey") < col("y.l_suppkey"))
+      .select(col("x.l_orderkey").as("ok"),
+        col("x.l_suppkey").as("a"), col("y.l_suppkey").as("b"))
+      .distinct()
+      .groupBy("a", "b").agg(count(lit(1)).as("support"))
+      .filter(col("support") >= 8)
+      .select("a", "b")
+  }
+
+  /** Per-node triangle counts from (w, u, v) triangles (q117, q158). */
+  private[queries] def triangleCounts(tris: DataFrame): DataFrame =
+    tris.select(explode(array(col("w"), col("u"), col("v"))).as("suppkey"))
+      .groupBy("suppkey").agg(count(lit(1)).as("n_triangles"))
+      .orderBy("suppkey")
+
+  /** Per-node triangle counts of the co-supply graph as a 3-way SQL
+    * self-join — one oracle for q117's id-ordered and q158's
+    * degree-ordered orientation (per-node counts are
+    * orientation-invariant). */
+  private[queries] lazy val triangleOracle: String =
+    """WITH pi AS (
+      SELECT DISTINCT x.l_orderkey AS ok, x.l_suppkey AS a, y.l_suppkey AS b
+      FROM lineitem x JOIN lineitem y
+        ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey),
+    e AS (
+      SELECT a, b FROM pi GROUP BY a, b HAVING COUNT(*) >= 8),
+    tri AS (
+      SELECT e1.a AS w, e1.b AS u, e2.b AS v
+      FROM e e1
+      JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
+      JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
+    n AS (SELECT w AS suppkey FROM tri
+      UNION ALL SELECT u FROM tri
+      UNION ALL SELECT v FROM tri)
+    SELECT suppkey, COUNT(*) AS n_triangles
+    FROM n GROUP BY suppkey ORDER BY suppkey"""
+
   /** Triangle counting over the MIN-SUPPORT supplier co-supply graph
     * (an edge = the pair co-supplied ≥ 8 distinct orders — the standard
     * support threshold of association/similarity graph construction;
@@ -963,42 +970,16 @@ object ExtendedQueries extends Registry {
     */
   private val q117 = Q("q117_triangle_count",
     (s, d) => {
-      val l = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-      val e = l.as("x").join(l.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_suppkey") < col("y.l_suppkey"))
-        .select(col("x.l_orderkey").as("ok"),
-          col("x.l_suppkey").as("a"), col("y.l_suppkey").as("b"))
-        .distinct()
-        .groupBy("a", "b").agg(count(lit(1)).as("support"))
-        .filter(col("support") >= 8)
-        .select("a", "b")
+      val e = coSupplyEdges(s, d)
       val wedges = e.as("e1").join(e.as("e2"),
           col("e1.a") === col("e2.a") && col("e1.b") < col("e2.b"))
         .select(col("e1.a").as("w"), col("e1.b").as("u"), col("e2.b").as("v"))
       val tris = wedges.join(e.as("e3"),
           col("u") === col("e3.a") && col("v") === col("e3.b"))
         .select(col("w"), col("u"), col("v"))
-      tris.select(explode(array(col("w"), col("u"), col("v"))).as("suppkey"))
-        .groupBy("suppkey").agg(count(lit(1)).as("n_triangles"))
-        .orderBy("suppkey")
+      triangleCounts(tris)
     },
-    Some("""WITH pi AS (
-        SELECT DISTINCT x.l_orderkey AS ok, x.l_suppkey AS a, y.l_suppkey AS b
-        FROM lineitem x JOIN lineitem y
-          ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey),
-      e AS (
-        SELECT a, b FROM pi GROUP BY a, b HAVING COUNT(*) >= 8),
-      tri AS (
-        SELECT e1.a AS w, e1.b AS u, e2.b AS v
-        FROM e e1
-        JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
-        JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
-      n AS (SELECT w AS suppkey FROM tri
-        UNION ALL SELECT u FROM tri
-        UNION ALL SELECT v FROM tri)
-      SELECT suppkey, COUNT(*) AS n_triangles
-      FROM n GROUP BY suppkey ORDER BY suppkey"""))
+    Some(triangleOracle))
 
   /** LATERAL correlated subquery through the SQL parser (per-customer
     * top-2 orders by price): the ANSI lateral-join surface, planned as
@@ -1196,6 +1177,24 @@ object ExtendedQueries extends Registry {
       FROM r GROUP BY window_start_ms HAVING COUNT(*) >= 20
       ORDER BY window_start_ms"""))
 
+  /** The running-aggregate gate of q122 and q123: one Long column `name`
+    * (`value` over events in event_id order) replayed in 2 chunks through
+    * the complete-mode aggregate `agg`. */
+  private def runningLongGate(s: SparkSession, d: String, key: String, value: Column,
+      name: String)(agg: DataFrame => DataFrame): DataFrame = {
+    import s.implicits._
+    val rows: Seq[Long] =
+      StreamFixtures.replayRows(key, d) {
+        Tables.events(s, d)
+          .select(value.as(name), col("event_id"))
+          .orderBy("event_id")
+          .collect().iterator.map(_.getLong(0)).toSeq
+      }
+    val mem = StreamGate.memory[Long](s)
+    StreamGate.toMemory(s, agg(mem.toDF().toDF(name)), "complete",
+      feed(mem, inChunks(rows, 2)))
+  }
+
   /** Streaming cumulative zero-rate gate (A4, the reference's since-start
     * zero-latency counters, reference/src/metrics/rolling.py:68-79,156-163):
     * MetricsStream.zeroRates — an UNGROUPED running aggregate — over a
@@ -1209,21 +1208,10 @@ object ExtendedQueries extends Registry {
     * with a meaningful zero mass, mirrored verbatim in the oracle).
     */
   private val q122 = Q("q122_streaming_zero_rates",
-    (s, d) => {
-      import s.implicits._
-      val rows: Seq[Long] =
-        StreamFixtures.replayRows("q122", d) {
-          Tables.events(s, d)
-            .select(expr("CAST(floor(value) AS BIGINT) div 20").as("lat"), col("event_id"))
-            .orderBy("event_id")
-            .collect().iterator.map(_.getLong(0)).toSeq
-        }
-      val mem = StreamGate.memory[Long](s)
-      val src = mem.toDF().toDF("lat")
-      val rates = graft.streaming.MetricsStream.zeroRates(src, "lat")
-      StreamGate.toMemory(s, rates, "complete", feed(mem, inChunks(rows, 2)))
-        .select("total", "zeros", "zero_rate_pct")
-    },
+    (s, d) =>
+      runningLongGate(s, d, "q122", expr("CAST(floor(value) AS BIGINT) div 20"), "lat")(
+        graft.streaming.MetricsStream.zeroRates(_, "lat"))
+        .select("total", "zeros", "zero_rate_pct"),
     Some("""SELECT CAST(COUNT(*) AS BIGINT) AS total,
       CAST(SUM(CASE WHEN CAST(floor(value) AS BIGINT) // 20 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS zeros,
       CAST(SUM(CASE WHEN CAST(floor(value) AS BIGINT) // 20 = 0 THEN 1 ELSE 0 END) AS DOUBLE)
@@ -1239,24 +1227,12 @@ object ExtendedQueries extends Registry {
     * state merges across batches. Batch oracle = q11's per-user counts.
     */
   private val q123 = Q("q123_streaming_msg_counts",
-    (s, d) => {
-      import s.implicits._
-      val rows: Seq[Long] =
-        StreamFixtures.replayRows("q123", d) {
-          Tables.events(s, d)
-            .select(col("user_id"), col("event_id"))
-            .orderBy("event_id")
-            .collect().iterator.map(_.getLong(0)).toSeq
-        }
-      val mem = StreamGate.memory[Long](s)
-      val src = mem.toDF().toDF("symbol")
-      val counts = graft.streaming.MetricsStream.msgCounts(src)
-      StreamGate.toMemory(s, counts, "complete", feed(mem, inChunks(rows, 2)))
+    (s, d) =>
+      runningLongGate(s, d, "q123", col("user_id"), "symbol")(
+        graft.streaming.MetricsStream.msgCounts)
         .select(col("symbol").as("user_id"), col("msg_count"))
-        .orderBy("user_id")
-    },
-    Some("""SELECT user_id, COUNT(*) AS msg_count FROM events
-      GROUP BY user_id ORDER BY user_id"""))
+        .orderBy("user_id"),
+    Some(CoreQueries.userCountsOracle))
 
   /** Recursive CTE (Spark 4.1's `WITH RECURSIVE`, planned as UnionLoop):
     * hierarchy walk from every customer up a synthetic reporting chain
@@ -1429,23 +1405,8 @@ object ExtendedQueries extends Registry {
     * so other queries on the shared session are unaffected).
     */
   private val q133 = Q("q133_streaming_tws_staleness",
-    (s, d) => {
-      import s.implicits._
-      val rows: Seq[(String, String, Long, Long)] = stalenessSymRows(s, d)
-      val mem = StreamGate.memory[(String, String, Long, Long)](s)
-      val events = mem.toDF()
-        .toDF("symbol", "channel", "ts_exchange_ms", "ts_recv_mono_ns")
-      val gaps = graft.streaming.StalenessStream.gapsTws(events)
-      StreamGate.toMemory(s, gaps.toDF(), "append", feed(mem, inChunks(rows, 2)),
-        StreamGate.GateConf(rocksDb = true))
-        .groupBy(col("symbol").cast("bigint").as("user_id"))
-        .agg(count(lit(1)).as("stale_count"),
-          StableAgg.lavg(col("stale_ms")).as("stale_mean_ms"),
-          StableAgg.lstdSamp(col("stale_ms")).as("stale_std_ms"),
-          min("stale_ms").as("stale_min_ms"),
-          max("stale_ms").as("stale_max_ms"))
-        .orderBy("user_id")
-    },
+    (s, d) => stalenessGate(s, d, StreamGate.GateConf(rocksDb = true))(
+      graft.streaming.StalenessStream.gapsTws(_).toDF()),
     Some(O.stalenessStats))
 
   private val q136Runs = new java.util.concurrent.atomic.AtomicLong()
@@ -1571,16 +1532,7 @@ object ExtendedQueries extends Registry {
           col("cnt"), col("total_value"))
         .orderBy("user_id", "session_start_ms")
     },
-    Some(s"""WITH e AS (SELECT user_id, epoch_ms(ts) AS ms, value FROM events),
-      m AS (SELECT *, CASE WHEN lag(ms) OVER (PARTITION BY user_id ORDER BY ms) IS NULL
-              OR ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms) >= 1800000
-              THEN 1 ELSE 0 END AS new_s FROM e),
-      g AS (SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ms
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM m)
-      SELECT user_id, MIN(ms) AS session_start_ms,
-        MAX(ms) + 1800000 AS session_end_ms,
-        CAST(COUNT(*) AS BIGINT) AS cnt, ${O.dsum("value")} AS total_value
-      FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_ms"""))
+    Some(CoreQueries.sessionsOracle))
 
   /** FILE streaming source gate — every other replay gate drives
     * MemoryStream; this one drives the production file source: the
@@ -1612,8 +1564,7 @@ object ExtendedQueries extends Registry {
         .select(col("symbol").as("user_id"), col("msg_count"))
         .orderBy("user_id")
     },
-    Some("""SELECT user_id, COUNT(*) AS msg_count FROM events
-      GROUP BY user_id ORDER BY user_id"""))
+    Some(CoreQueries.userCountsOracle))
 
   private val q148Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -1665,6 +1616,17 @@ object ExtendedQueries extends Registry {
       ORDER BY format"""
     })
 
+  /** Per-event_type event count and exact value total (q149, q152, q154). */
+  private def eventTypeTotals(events: DataFrame): DataFrame =
+    events.groupBy("event_type")
+      .agg(count(lit(1)).as("n_events"), StableAgg.dsum(col("value")).as("total_value"))
+
+  /** [[eventTypeTotals]] over all events: the oracle of q149, q152, q154. */
+  private lazy val eventTypeTotalsOracle: String =
+    s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
+        ${O.dsum("value")} AS total_value
+      FROM events GROUP BY event_type ORDER BY event_type"""
+
   /** Trigger.AvailableNow gate — the batch-backfill trigger the other
     * streaming gates don't touch: the query plans its OWN micro-batches
     * from the files available at start (maxFilesPerTrigger still caps
@@ -1682,14 +1644,8 @@ object ExtendedQueries extends Registry {
       val fix = StreamFixtures.mod4(s, d)
       val spool = new java.io.File(StreamGate.scratch("q149"), "spool")
       StreamFixtures.copyTo(fix.files, spool)
-      val src = s.readStream
-        .schema(fix.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(spool.getPath)
-        .select(col("event_type"), col("value"), col("event_id"))
-      val totals = src.groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"),
-          StableAgg.dsum(col("value")).as("total_value"))
+      val totals = eventTypeTotals(StreamFixtures.stream(s, fix, spool)
+        .select(col("event_type"), col("value"), col("event_id")))
       val (sink, sinkName) = StreamGate.memorySink("complete")
       val query = StreamGate.start(s, totals)(
         sink(_).trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
@@ -1703,9 +1659,7 @@ object ExtendedQueries extends Registry {
         .select(col("event_type"), col("n_events"), col("total_value"))
         .orderBy("event_type")
     },
-    Some(s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-        ${O.dsum("value")} AS total_value
-      FROM events GROUP BY event_type ORDER BY event_type"""))
+    Some(eventTypeTotalsOracle))
 
   /** Checkpoint-recovery gate — the durability semantics no other gate
     * reaches: a streaming aggregation runs over the first half of a file
@@ -1729,13 +1683,7 @@ object ExtendedQueries extends Registry {
       def addFiles(ids: Range): Unit =
         StreamFixtures.copyTo(ids.map(fix.files), spool)
       def runHalf(): DataFrame = {
-        val src = s.readStream
-          .schema(fix.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(spool.getPath)
-        val totals = src.groupBy("event_type")
-          .agg(count(lit(1)).as("n_events"),
-            StableAgg.dsum(col("value")).as("total_value"))
+        val totals = eventTypeTotals(StreamFixtures.stream(s, fix, spool))
         val (sink, name) = StreamGate.memorySink("complete")
         StreamGate.replay(s, totals, StreamGate.drainOnly)(
           sink(_).option("checkpointLocation", cp))
@@ -1749,9 +1697,7 @@ object ExtendedQueries extends Registry {
         .select(col("event_type"), col("n_events"), col("total_value"))
         .orderBy("event_type")
     },
-    Some(s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-        ${O.dsum("value")} AS total_value
-      FROM events GROUP BY event_type ORDER BY event_type"""))
+    Some(eventTypeTotalsOracle))
 
   /** Late-data drop gate — the watermark semantics the other event-time
     * gates sidestep by feeding in order: batch 1 carries every ON-TIME
@@ -1891,15 +1837,9 @@ object ExtendedQueries extends Registry {
       if (firstRows.nonEmpty)
         firstRows.toSeq.toDF("event_id", "event_type", "value")
           .write.mode("overwrite").parquet(s"$outRoot/batch=0")
-      s.read.parquet(outRoot)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"),
-          StableAgg.dsum(col("value")).as("total_value"))
-        .orderBy("event_type")
+      eventTypeTotals(s.read.parquet(outRoot)).orderBy("event_type")
     },
-    Some(s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-        ${O.dsum("value")} AS total_value
-      FROM events GROUP BY event_type ORDER BY event_type"""))
+    Some(eventTypeTotalsOracle))
 
   /** Chained stateful aggregations in ONE streaming query (Spark 3.4+
     * capability gate): a 15-minute event-time window count per event_type

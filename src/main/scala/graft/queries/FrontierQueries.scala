@@ -37,6 +37,17 @@ object FrontierQueries extends Registry {
         FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
       e AS (SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw)"""
 
+  /** `k` rounds of synchronous min-label propagation over the `e` CTE of
+    * [[tradeGraphSql]], from every node labelled by itself: labels of
+    * round i in `l<i>(node, lbl)` (q165, q203). */
+  private def duckLabelRounds(k: Int): String =
+    ("""n AS (SELECT DISTINCT src AS node FROM e),
+      l0 AS (SELECT node, node AS lbl FROM n)""" +: (1 to k).map { i =>
+      s"""l$i AS (SELECT node, MIN(lbl) AS lbl FROM (
+            SELECT e.dst AS node, p.lbl FROM e JOIN l${i - 1} p ON p.node = e.src
+            UNION ALL SELECT node, lbl FROM l${i - 1}) GROUP BY node)"""
+    }).mkString(",\n      ")
+
   /** Synchronous min-label propagation, 3 rounds
     * ([[GraphOps.labelPropagationMin]]): after round k each node carries
     * the smallest node id within distance ≤ k — the deterministic core of
@@ -54,18 +65,9 @@ object FrontierQueries extends Registry {
       GraphOps.labelPropagationMin(tradeGraph(s, d), 3)
         .orderBy("node")
     },
-    Some {
-      val rounds = (1 to 3).map { i =>
-        s"""l$i AS (SELECT node, MIN(lbl) AS lbl FROM (
-            SELECT e.dst AS node, p.lbl FROM e JOIN l${i - 1} p ON p.node = e.src
-            UNION ALL SELECT node, lbl FROM l${i - 1}) GROUP BY node)"""
-      }.mkString(",\n      ")
-      s"""WITH $tradeGraphSql,
-      n AS (SELECT DISTINCT src AS node FROM e),
-      l0 AS (SELECT node, node AS lbl FROM n),
-      $rounds
-      SELECT node, lbl FROM l3 ORDER BY node"""
-    })
+    Some(s"""WITH $tradeGraphSql,
+      ${duckLabelRounds(3)}
+      SELECT node, lbl FROM l3 ORDER BY node"""))
 
   /** k-core peeling, k = 30, 3 fixed rounds ([[GraphOps.kCorePeel]]):
     * each round drops nodes of degree < 30 and restricts edges to
@@ -324,14 +326,7 @@ object FrontierQueries extends Registry {
         .crossJoin(leak) // 1-row leak scalar
         .orderBy("split")
     },
-    Some(s"""WITH RECURSIVE ${TrainingDataQueries.duckLshPairsCtes},
-      edges AS (
-        SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
-        UNION ALL SELECT doc_id_b, doc_id_a FROM pairs),
-      reach(doc_id, lbl) AS (
-        SELECT DISTINCT src, src FROM edges
-        UNION
-        SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.doc_id = e.dst),
+    Some(s"""WITH RECURSIVE ${TrainingDataQueries.duckLshReachCtes},
       cl AS (SELECT doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY doc_id),
       sp AS (SELECT d.doc_id, COALESCE(cl.cluster_id, d.doc_id) AS cluster_id,
           CASE WHEN ${TrainingDataQueries.duckHash32("md5('split:' || CAST(COALESCE(cl.cluster_id, d.doc_id) AS VARCHAR))")} < 3435973836
@@ -436,17 +431,8 @@ object FrontierQueries extends Registry {
           expr("sfp div n").as("centroid_fp"))
         .orderBy("cell", "dim")
     },
-    Some(s"""WITH n AS (SELECT greatest(COUNT(*) // 16, 1) AS step FROM embeddings),
-      cents AS (
-        SELECT CAST(vec_id // step AS INTEGER) AS cell, embedding AS centroid
-        FROM embeddings, n WHERE vec_id % step = 0 AND vec_id // step < 16),
-      asg AS (
-        SELECT id, vec, cell FROM (
-          SELECT c.vec_id AS id, c.embedding AS vec, ct.cell,
-            row_number() OVER (PARTITION BY c.vec_id
-              ORDER BY ${TrainingDataQueries.duckSqDist("c.embedding", "ct.centroid")}, ct.cell) AS arank
-          FROM embeddings c CROSS JOIN cents ct)
-        WHERE arank = 1),
+    Some(s"""WITH ${TrainingDataQueries.duckCentroidCtes},
+      ${TrainingDataQueries.duckCellAssignCte},
       x AS (SELECT cell, CAST(u.i AS INTEGER) AS dim,
           CAST(floor((CAST(vec[CAST(u.i+1 AS INTEGER)] AS DOUBLE) + 1.0) * 1048576) AS BIGINT) AS q
         FROM asg, range(0, 256) u(i) WHERE u.i < len(vec))
@@ -829,16 +815,8 @@ object FrontierQueries extends Registry {
         .select("community", "n_nodes", "e_in", "deg_sum", "q_contrib")
         .orderBy("community")
     },
-    Some {
-      val rounds = (1 to 1).map { i =>
-        s"""l$i AS (SELECT node, MIN(lbl) AS lbl FROM (
-            SELECT e.dst AS node, p.lbl FROM e JOIN l${i - 1} p ON p.node = e.src
-            UNION ALL SELECT node, lbl FROM l${i - 1}) GROUP BY node)"""
-      }.mkString(",\n      ")
-      s"""WITH $tradeGraphSql,
-      n AS (SELECT DISTINCT src AS node FROM e),
-      l0 AS (SELECT node, node AS lbl FROM n),
-      $rounds,
+    Some(s"""WITH $tradeGraphSql,
+      ${duckLabelRounds(1)},
       tm AS (SELECT COUNT(*) AS tm FROM e),
       ein AS (SELECT a.lbl AS community, COUNT(*) AS e_in
         FROM e JOIN l1 a ON e.src = a.node JOIN l1 b ON e.dst = b.node
@@ -853,8 +831,7 @@ object FrontierQueries extends Registry {
           - (CAST(deg_sum AS DOUBLE) / tm) * (CAST(deg_sum AS DOUBLE) / tm)
           AS q_contrib
       FROM dm LEFT JOIN ein ON dm.community = ein.community
-      CROSS JOIN tm ORDER BY dm.community"""
-    })
+      CROSS JOIN tm ORDER BY dm.community"""))
 
   override val all: Seq[Q] = Seq(q165, q166, q167, q168, q169, q170, q171,
     q172, q173, q174, q175, q176, q187, q203)

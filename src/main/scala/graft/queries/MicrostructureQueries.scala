@@ -259,10 +259,7 @@ object MicrostructureQueries extends Registry {
     },
     Some(s"""WITH $duckTrades,
       $duckDailyFlow,
-      r AS (SELECT symbol, day_bucket,
-          close / lag(close) OVER (PARTITION BY symbol ORDER BY day_bucket)
-            - 1.0::DOUBLE AS r
-        FROM bars),
+      $duckReturns,
       r2 AS (SELECT symbol, r,
           lag(r) OVER (PARTITION BY symbol ORDER BY day_bucket) AS r_prev
         FROM r),
@@ -276,6 +273,56 @@ object MicrostructureQueries extends Registry {
           greatest(1.0::DOUBLE - (1.5707963267948966::DOUBLE * bp_sum) / rv,
             0.0::DOUBLE) END AS jump_frac
       FROM m ORDER BY symbol"""))
+
+  /** Close-to-close daily returns (symbol, day_bucket, r) of the bar
+    * tape (q231, q243); [[duckReturns]] is the oracle side. */
+  private def dailyReturns(s: SparkSession, d: String): DataFrame = {
+    val w = Window.partitionBy("symbol").orderBy("day_bucket")
+    dailyFlow(s, d)
+      .withColumn("r",
+        col("close") / lag(col("close"), 1).over(w) - lit(1.0d))
+      .filter(col("r").isNotNull)
+      .select("symbol", "day_bucket", "r")
+  }
+
+  /** `r(symbol, day_bucket, r)` over the `bars` CTE: every daily return,
+    * the first day's NULL included. */
+  private lazy val duckReturns: String =
+    """r AS (SELECT symbol, day_bucket,
+          close / lag(close) OVER (PARTITION BY symbol ORDER BY day_bucket)
+            - 1.0::DOUBLE AS r
+        FROM bars)"""
+
+  /** Pearson correlation `name` of (x, y) per group, closed-form from the
+    * five decimal-route moments (q231, q243). */
+  private def pearson(g: org.apache.spark.sql.RelationalGroupedDataset,
+      name: String): DataFrame =
+    g.agg(count(lit(1)).as("n"),
+        StableAgg.dsum(col("x"), 18).as("sx"),
+        StableAgg.dsum(col("y"), 18).as("sy"),
+        StableAgg.dsum(col("x") * col("x"), 18).as("sxx"),
+        StableAgg.dsum(col("y") * col("y"), 18).as("syy"),
+        StableAgg.dsum(col("x") * col("y"), 18).as("sxy"))
+      .withColumn("vx", col("n") * col("sxx") - col("sx") * col("sx"))
+      .withColumn("vy", col("n") * col("syy") - col("sy") * col("sy"))
+      .withColumn(name,
+        when(col("vx") > 0.0d && col("vy") > 0.0d,
+          (col("n") * col("sxy") - col("sx") * col("sy"))
+            / (sqrt(col("vx")) * sqrt(col("vy")))))
+
+  /** The oracle side of [[pearson]]: the moment columns of an aggregate
+    * over (x, y), and the correlation over them. */
+  private lazy val duckMoments: String =
+    s"""CAST(COUNT(*) AS BIGINT) AS n,
+          ${O.dsum("x", 18)} AS sx, ${O.dsum("y", 18)} AS sy,
+          ${O.dsum("x * x", 18)} AS sxx, ${O.dsum("y * y", 18)} AS syy,
+          ${O.dsum("x * y", 18)} AS sxy"""
+  private lazy val duckPearson: String =
+    """CASE WHEN n * sxx - sx * sx > 0.0::DOUBLE
+            AND n * syy - sy * sy > 0.0::DOUBLE
+          THEN (n * sxy - sx * sy)
+            / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))
+        END"""
 
   /** Lead-lag cross-correlation (Hayashi-Yoshida's motivating
     * diagnostic in its synchronized-grid form): Pearson correlation of
@@ -291,12 +338,7 @@ object MicrostructureQueries extends Registry {
     */
   private val q231 = Q("q231_leadlag_xcorr",
     (s, d) => {
-      val w = Window.partitionBy("symbol").orderBy("day_bucket")
-      val rets = dailyFlow(s, d)
-        .withColumn("r",
-          col("close") / lag(col("close"), 1).over(w) - lit(1.0d))
-        .filter(col("r").isNotNull)
-        .select("symbol", "day_bucket", "r")
+      val rets = dailyReturns(s, d)
       val ra = rets.filter(col("symbol") === "T-0")
         .select(col("day_bucket").as("day_a"), col("r").as("x"))
       val rb = rets.filter(col("symbol") === "T-1")
@@ -306,29 +348,13 @@ object MicrostructureQueries extends Registry {
       val lags = ra
         .withColumn("lag", explode(sequence(lit(-2L), lit(2L))))
         .withColumn("day_b", col("day_a") + col("lag"))
-      lags.join(rb, "day_b")
-        .groupBy("lag")
-        .agg(count(lit(1)).as("n"),
-          StableAgg.dsum(col("x"), 18).as("sx"),
-          StableAgg.dsum(col("y"), 18).as("sy"),
-          StableAgg.dsum(col("x") * col("x"), 18).as("sxx"),
-          StableAgg.dsum(col("y") * col("y"), 18).as("syy"),
-          StableAgg.dsum(col("x") * col("y"), 18).as("sxy"))
-        .withColumn("vx", col("n") * col("sxx") - col("sx") * col("sx"))
-        .withColumn("vy", col("n") * col("syy") - col("sy") * col("sy"))
-        .withColumn("xcorr",
-          when(col("vx") > 0.0d && col("vy") > 0.0d,
-            (col("n") * col("sxy") - col("sx") * col("sy"))
-              / (sqrt(col("vx")) * sqrt(col("vy")))))
+      pearson(lags.join(rb, "day_b").groupBy("lag"), "xcorr")
         .select("lag", "n", "xcorr")
         .orderBy("lag")
     },
     Some(s"""WITH $duckTrades,
       $duckDailyFlow,
-      r AS (SELECT symbol, day_bucket,
-          close / lag(close) OVER (PARTITION BY symbol ORDER BY day_bucket)
-            - 1.0::DOUBLE AS r
-        FROM bars),
+      $duckReturns,
       ra AS (SELECT day_bucket AS day_a, r AS x FROM r
         WHERE symbol = 'T-0' AND r IS NOT NULL),
       rb AS (SELECT day_bucket AS day_b, r AS y FROM r
@@ -336,17 +362,10 @@ object MicrostructureQueries extends Registry {
       j AS (SELECT l.i AS lag, ra.x, rb.y
         FROM ra CROSS JOIN (SELECT unnest(range(-2, 3)) AS i) l
         JOIN rb ON rb.day_b = ra.day_a + l.i),
-      m AS (SELECT lag, CAST(COUNT(*) AS BIGINT) AS n,
-          ${O.dsum("x", 18)} AS sx, ${O.dsum("y", 18)} AS sy,
-          ${O.dsum("x * x", 18)} AS sxx, ${O.dsum("y * y", 18)} AS syy,
-          ${O.dsum("x * y", 18)} AS sxy
+      m AS (SELECT lag, $duckMoments
         FROM j GROUP BY lag)
       SELECT CAST(lag AS BIGINT) AS lag, n,
-        CASE WHEN n * sxx - sx * sx > 0.0::DOUBLE
-            AND n * syy - sy * sy > 0.0::DOUBLE
-          THEN (n * sxy - sx * sy)
-            / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))
-        END AS xcorr
+        $duckPearson AS xcorr
       FROM m ORDER BY lag"""))
 
   /** Realized correlation matrix (the RiskMetrics daily-return
@@ -365,55 +384,27 @@ object MicrostructureQueries extends Registry {
     */
   private val q243 = Q("q243_realized_corr",
     (s, d) => {
-      val w = Window.partitionBy("symbol").orderBy("day_bucket")
-      val rets = dailyFlow(s, d)
-        .withColumn("r",
-          col("close") / lag(col("close"), 1).over(w) - lit(1.0d))
-        .filter(col("r").isNotNull)
-        .select(col("symbol"), col("day_bucket"), col("r"))
+      val rets = dailyReturns(s, d)
       val a = rets.select(col("symbol").as("sym_a"), col("day_bucket"),
         col("r").as("x"))
       val b = rets.select(col("symbol").as("sym_b"), col("day_bucket"),
         col("r").as("y"))
-      a.join(b, "day_bucket")
-        .filter(col("sym_a") < col("sym_b"))
-        .groupBy("sym_a", "sym_b")
-        .agg(count(lit(1)).as("n"),
-          StableAgg.dsum(col("x"), 18).as("sx"),
-          StableAgg.dsum(col("y"), 18).as("sy"),
-          StableAgg.dsum(col("x") * col("x"), 18).as("sxx"),
-          StableAgg.dsum(col("y") * col("y"), 18).as("syy"),
-          StableAgg.dsum(col("x") * col("y"), 18).as("sxy"))
-        .withColumn("vx", col("n") * col("sxx") - col("sx") * col("sx"))
-        .withColumn("vy", col("n") * col("syy") - col("sy") * col("sy"))
-        .withColumn("rcorr",
-          when(col("vx") > 0.0d && col("vy") > 0.0d,
-            (col("n") * col("sxy") - col("sx") * col("sy"))
-              / (sqrt(col("vx")) * sqrt(col("vy")))))
+      pearson(a.join(b, "day_bucket").filter(col("sym_a") < col("sym_b"))
+          .groupBy("sym_a", "sym_b"), "rcorr")
         .select("sym_a", "sym_b", "n", "rcorr")
         .orderBy("sym_a", "sym_b")
     },
     Some(s"""WITH $duckTrades,
       $duckDailyFlow,
-      r AS (SELECT symbol, day_bucket,
-          close / lag(close) OVER (PARTITION BY symbol ORDER BY day_bucket)
-            - 1.0::DOUBLE AS r
-        FROM bars),
+      $duckReturns,
       rr AS (SELECT symbol, day_bucket, r FROM r WHERE r IS NOT NULL),
       j AS (SELECT a.symbol AS sym_a, b.symbol AS sym_b, a.r AS x, b.r AS y
         FROM rr a JOIN rr b ON a.day_bucket = b.day_bucket
         WHERE a.symbol < b.symbol),
-      m AS (SELECT sym_a, sym_b, CAST(COUNT(*) AS BIGINT) AS n,
-          ${O.dsum("x", 18)} AS sx, ${O.dsum("y", 18)} AS sy,
-          ${O.dsum("x * x", 18)} AS sxx, ${O.dsum("y * y", 18)} AS syy,
-          ${O.dsum("x * y", 18)} AS sxy
+      m AS (SELECT sym_a, sym_b, $duckMoments
         FROM j GROUP BY 1, 2)
       SELECT sym_a, sym_b, n,
-        CASE WHEN n * sxx - sx * sx > 0.0::DOUBLE
-            AND n * syy - sy * sy > 0.0::DOUBLE
-          THEN (n * sxy - sx * sy)
-            / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))
-        END AS rcorr
+        $duckPearson AS rcorr
       FROM m ORDER BY sym_a, sym_b"""))
 
   /** Theil–Sen robust trend (Theil 1950 / Sen 1968): per event family,

@@ -100,6 +100,19 @@ object NormalizerQueries extends Registry {
       WHERE l_orderkey % 17 <> 0 AND l_orderkey % 11 <> 0 AND l_orderkey % 13 <> 0
       ORDER BY src_id"""))
 
+  /** The lineitem rows [[framedTrades]] frames as valid trades, keyed by
+    * src_id, as a DuckDB `base` CTE (q17, q59, AnalyticsQueries'
+    * trade tape).
+    */
+  private[queries] lazy val duckTapeBase: String =
+    """base AS (
+        SELECT (l_orderkey * 10 + l_linenumber) AS src_id,
+          'T-' || CAST(l_suppkey % 5 AS VARCHAR) AS symbol,
+          epoch_ms(l_shipdate) AS ship_ms,
+          l_extendedprice AS px, l_quantity AS qty,
+          l_linenumber, l_partkey, l_suppkey
+        FROM lineitem WHERE l_orderkey % 17 <> 0 AND l_orderkey % 11 <> 0)"""
+
   /** Trades-frame synthesis shared by q17 and the console-line queries. */
   private[queries] def framedTrades(s: SparkSession, d: String): DataFrame = {
     val base = Tables.fanOut(Tables.lineitem(s, d)).select(
@@ -153,13 +166,7 @@ object NormalizerQueries extends Registry {
           col("trade.trade_id").as("trade_id"))
         .orderBy("src_id", "ts_exchange_ms")
     },
-    Some("""WITH base AS (
-        SELECT (l_orderkey * 10 + l_linenumber) AS src_id,
-          'T-' || CAST(l_suppkey % 5 AS VARCHAR) AS symbol,
-          epoch_ms(l_shipdate) AS ship_ms,
-          l_extendedprice AS px, l_quantity AS qty,
-          l_linenumber, l_partkey, l_suppkey
-        FROM lineitem WHERE l_orderkey % 17 <> 0 AND l_orderkey % 11 <> 0)
+    Some(s"""WITH $duckTapeBase
       SELECT src_id, symbol, 'trade' AS event_type, ship_ms AS ts_exchange_ms,
         px AS price, qty AS trade_size,
         CASE WHEN l_linenumber % 2 = 0 THEN 'buy' ELSE 'sell' END AS side,

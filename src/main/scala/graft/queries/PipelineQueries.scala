@@ -61,13 +61,7 @@ object PipelineQueries extends Registry {
     },
     Some {
       val tail1 = duckLatTail("5", "1", "2 - 1")
-      s"""WITH base AS (
-        SELECT (l_orderkey * 10 + l_linenumber) AS src_id,
-          'T-' || CAST(l_suppkey % 5 AS VARCHAR) AS symbol,
-          epoch_ms(l_shipdate) AS ship_ms,
-          l_extendedprice AS px, l_quantity AS qty,
-          l_linenumber, l_partkey, l_suppkey
-        FROM lineitem WHERE l_orderkey % 17 <> 0 AND l_orderkey % 11 <> 0)
+      s"""WITH ${NormalizerQueries.duckTapeBase}
       SELECT src_id, ship_ms AS ts_exchange_ms,
         symbol || ' | trade '
           || (CASE WHEN l_linenumber % 2 = 0 THEN 'buy' ELSE 'sell' END)
@@ -263,10 +257,7 @@ object PipelineQueries extends Registry {
           StableAgg.dsum(col("dist")).as("distortion"))
         .orderBy("cell")
     },
-    Some(s"""WITH n AS (SELECT greatest(COUNT(*) // 16, 1) AS step FROM embeddings),
-      cents AS (
-        SELECT CAST(vec_id // step AS INTEGER) AS cell, embedding AS centroid
-        FROM embeddings, n WHERE vec_id % step = 0 AND vec_id // step < 16),
+    Some(s"""WITH ${TrainingDataQueries.duckCentroidCtes},
       d AS (
         SELECT c.vec_id AS id, ct.cell,
           ${TrainingDataQueries.duckSqDist("c.embedding", "ct.centroid")} AS dist,

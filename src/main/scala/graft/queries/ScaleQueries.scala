@@ -39,6 +39,20 @@ private[queries] object StreamFixtures {
     Tables.events(s, d)
       .select(col("event_id"), col("event_type"), col("value"), col("ts_ms"))
 
+  /** The (doc_id, text) replay of the documents table in doc_id order,
+    * memoized under `key` (q204, q318). */
+  def docRows(s: SparkSession, d: String, key: String): Seq[(Long, String)] =
+    replayRows(key, d) {
+      Tables.documents(s, d).select("doc_id", "text")
+        .orderBy("doc_id").collect().iterator
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
+    }
+
+  /** A spool dir of `fix`'s files as a parquet file stream, one file per
+    * trigger (q149, q152, q159, q275). */
+  def stream(s: SparkSession, fix: Spool, dir: File): DataFrame =
+    s.readStream.schema(fix.schema).option("maxFilesPerTrigger", "1").parquet(dir.getPath)
+
   /** 4 slices by `event_id % 4` — arrival order irrelevant (complete-mode
     * gates q149/q152).
     */
@@ -243,16 +257,7 @@ object ScaleQueries extends Registry {
     */
   private val q158 = Q("q158_triangle_degree_ordered",
     (s, d) => {
-      val l = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-      val e = l.as("x").join(l.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_suppkey") < col("y.l_suppkey"))
-        .select(col("x.l_orderkey").as("ok"),
-          col("x.l_suppkey").as("a"), col("y.l_suppkey").as("b"))
-        .distinct()
-        .groupBy("a", "b").agg(count(lit(1)).as("support"))
-        .filter(col("support") >= 8)
-        .select("a", "b")
+      val e = ExtendedQueries.coSupplyEdges(s, d)
       val deg = e.select(col("a").as("v"))
         .union(e.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -280,26 +285,9 @@ object ScaleQueries extends Registry {
       val tris = wedges.join(oriented.as("e3"),
           col("u") === col("e3.src") && col("v") === col("e3.dst"))
         .select(col("w"), col("u"), col("v"))
-      tris.select(explode(array(col("w"), col("u"), col("v"))).as("suppkey"))
-        .groupBy("suppkey").agg(count(lit(1)).as("n_triangles"))
-        .orderBy("suppkey")
+      ExtendedQueries.triangleCounts(tris)
     },
-    Some("""WITH pi AS (
-        SELECT DISTINCT x.l_orderkey AS ok, x.l_suppkey AS a, y.l_suppkey AS b
-        FROM lineitem x JOIN lineitem y
-          ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey),
-      e AS (
-        SELECT a, b FROM pi GROUP BY a, b HAVING COUNT(*) >= 8),
-      tri AS (
-        SELECT e1.a AS w, e1.b AS u, e2.b AS v
-        FROM e e1
-        JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
-        JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
-      n AS (SELECT w AS suppkey FROM tri
-        UNION ALL SELECT u FROM tri
-        UNION ALL SELECT v FROM tri)
-      SELECT suppkey, COUNT(*) AS n_triangles
-      FROM n GROUP BY suppkey ORDER BY suppkey"""))
+    Some(ExtendedQueries.triangleOracle))
 
   /** Checkpoint recovery across a STATEFUL operator (VERDICT r5 item
     * 8): an event-time tumbling-window aggregation in APPEND mode runs
@@ -330,9 +318,7 @@ object ScaleQueries extends Registry {
       // run 1's committed batches across the restart, or the batch
       // read below would see duplicates/partials.
       def runHalf(): Unit = {
-        val src = s.readStream.schema(fix.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(spool.getPath)
+        val src = StreamFixtures.stream(s, fix, spool)
         val agg = src
           .withColumn("event_time", timestamp_millis(col("ts_ms")))
           .withWatermark("event_time", "0 seconds")
@@ -472,17 +458,8 @@ object ScaleQueries extends Registry {
         .select(col("id").as("vec_id"), col("cell"), col("dup_of"), col("is_semdup"))
         .orderBy("vec_id")
     },
-    Some(s"""WITH n AS (SELECT greatest(COUNT(*) // 16, 1) AS step FROM embeddings),
-      cents AS (
-        SELECT CAST(vec_id // step AS INTEGER) AS cell, embedding AS centroid
-        FROM embeddings, n WHERE vec_id % step = 0 AND vec_id // step < 16),
-      asg AS (
-        SELECT id, vec, cell FROM (
-          SELECT c.vec_id AS id, c.embedding AS vec, ct.cell,
-            row_number() OVER (PARTITION BY c.vec_id
-              ORDER BY ${TrainingDataQueries.duckSqDist("c.embedding", "ct.centroid")}, ct.cell) AS arank
-          FROM embeddings c CROSS JOIN cents ct)
-        WHERE arank = 1),
+    Some(s"""WITH ${TrainingDataQueries.duckCentroidCtes},
+      ${TrainingDataQueries.duckCellAssignCte},
       p AS (
         SELECT b.id AS id, MIN(a.id) AS dup_of
         FROM asg a JOIN asg b ON a.cell = b.cell AND a.id < b.id
@@ -594,6 +571,29 @@ object ScaleQueries extends Registry {
       FROM orders WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
       GROUP BY o_orderpriority ORDER BY o_orderpriority"""))
 
+  /** q219/q220's static side: 100 overlapping [5i, 5i + 7.5] intervals. */
+  private def rangeIntervals(s: SparkSession) =
+    s.range(0L, 100L).select(col("id").as("interval_id"),
+      (col("id").cast("double") * 5.0d).as("lo"),
+      (col("id").cast("double") * 5.0d + 7.5d).as("hi"))
+
+  /** q219/q220's result: per-interval point count and exact value sum. */
+  private def intervalStats(joined: DataFrame) =
+    joined.groupBy("interval_id")
+      .agg(count(lit(1)).as("n_points"),
+        StableAgg.dsum(col("value")).as("sum_value"))
+      .orderBy("interval_id")
+
+  /** The plain range-predicate oracle of q219 and its streaming twin q220. */
+  private lazy val rangeJoinOracle: String =
+    s"""WITH iv AS (SELECT r.i AS interval_id,
+          r.i * 5.0::DOUBLE AS lo, r.i * 5.0::DOUBLE + 7.5::DOUBLE AS hi
+        FROM range(0, 100) r(i))
+      SELECT interval_id, CAST(COUNT(*) AS BIGINT) AS n_points,
+        ${O.dsum("value")} AS sum_value
+      FROM events e JOIN iv ON e.value >= iv.lo AND e.value <= iv.hi
+      GROUP BY interval_id ORDER BY interval_id"""
+
   /** The engine's own Catalyst extension at work: a point-in-interval
     * join (events.value ∈ [lo, hi] over 100 overlapping intervals) runs
     * through `RangeJoin.binned`, and the injected
@@ -614,27 +614,16 @@ object ScaleQueries extends Registry {
     (s, d) => {
       import graft.operators.RangeJoin
       val pts = Tables.events(s, d).select(col("event_id"), col("value"))
-      val iv = s.range(0L, 100L).select(col("id").as("interval_id"),
-        (col("id").cast("double") * 5.0d).as("lo"),
-        (col("id").cast("double") * 5.0d + 7.5d).as("hi"))
+      val iv = rangeIntervals(s)
       val joined = RangeJoin.binned(pts, col("value"), iv,
         col("lo"), col("hi"), width = 5.0)
       val plan = joined.queryExecution.executedPlan.toString
       if (plan.contains("BroadcastNestedLoopJoin") || plan.contains("CartesianProduct"))
         throw new IllegalStateException(
           s"range-join rewrite did not fire — nested-loop plan:\n$plan")
-      joined.groupBy("interval_id")
-        .agg(count(lit(1)).as("n_points"),
-          StableAgg.dsum(col("value")).as("sum_value"))
-        .orderBy("interval_id")
+      intervalStats(joined)
     },
-    Some(s"""WITH iv AS (SELECT r.i AS interval_id,
-          r.i * 5.0::DOUBLE AS lo, r.i * 5.0::DOUBLE + 7.5::DOUBLE AS hi
-        FROM range(0, 100) r(i))
-      SELECT interval_id, CAST(COUNT(*) AS BIGINT) AS n_points,
-        ${O.dsum("value")} AS sum_value
-      FROM events e JOIN iv ON e.value >= iv.lo AND e.value <= iv.hi
-      GROUP BY interval_id ORDER BY interval_id"""))
+    Some(rangeJoinOracle))
 
   /** Streaming twin of q219: the SAME custom rewrite rule must fire
     * inside the micro-batch plan of a stream-static join — streaming
@@ -660,9 +649,7 @@ object ScaleQueries extends Registry {
             .select(col("event_id"), col("value")).orderBy("event_id")
             .collect().iterator.map(r => (r.getLong(0), r.getDouble(1))).toSeq
         }
-      val iv = s.range(0L, 100L).select(col("id").as("interval_id"),
-        (col("id").cast("double") * 5.0d).as("lo"),
-        (col("id").cast("double") * 5.0d + 7.5d).as("hi"))
+      val iv = rangeIntervals(s)
       val mem = StreamGate.memory[(Long, Double)](s)
       val pts = mem.toDF().toDF("event_id", "value")
       val joined = RangeJoin.binned(pts, col("value"), iv,
@@ -685,20 +672,10 @@ object ScaleQueries extends Registry {
             s"range-join rewrite did not fire in the micro-batch plan:\n$plan")
       }
       // binned-join expansion is real per-row compute: keep it fused
-      StreamGate.toMemory(s, joined, "append", feed(mem, inChunks(rows, 3)),
-        StreamGate.GateConf(keepCodegen = true), afterRound = checkPlan)
-        .groupBy("interval_id")
-        .agg(count(lit(1)).as("n_points"),
-          StableAgg.dsum(col("value")).as("sum_value"))
-        .orderBy("interval_id")
+      intervalStats(StreamGate.toMemory(s, joined, "append", feed(mem, inChunks(rows, 3)),
+        StreamGate.GateConf(keepCodegen = true), afterRound = checkPlan))
     },
-    Some(s"""WITH iv AS (SELECT r.i AS interval_id,
-          r.i * 5.0::DOUBLE AS lo, r.i * 5.0::DOUBLE + 7.5::DOUBLE AS hi
-        FROM range(0, 100) r(i))
-      SELECT interval_id, CAST(COUNT(*) AS BIGINT) AS n_points,
-        ${O.dsum("value")} AS sum_value
-      FROM events e JOIN iv ON e.value >= iv.lo AND e.value <= iv.hi
-      GROUP BY interval_id ORDER BY interval_id"""))
+    Some(rangeJoinOracle))
 
   /** Decimal twin of q219 — the price-band range join as real market-data
     * lakes store it: DECIMAL price points against DECIMAL band bounds.
@@ -1332,9 +1309,7 @@ object ScaleQueries extends Registry {
       val cp = new java.io.File(dir, "checkpoint").getPath
       val out = new java.io.File(dir, "out")
       def runHalf(): Unit = {
-        val src = s.readStream.schema(fix.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(spool.getPath)
+        val src = StreamFixtures.stream(s, fix, spool)
           .select("event_id", "event_type", "value")
         StreamGate.replay(s, src, StreamGate.drainOnly) {
           _.foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -1418,13 +1393,7 @@ object ScaleQueries extends Registry {
         .filter(col("prev_last_ts").isNotNull)
         .select(col("user_id"), (col("first.ts_ms") - col("prev_last_ts")).as("gap_ms"))
       inChunk.union(boundary)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("stale_count"),
-          StableAgg.lavg(col("gap_ms")).as("stale_mean_ms"),
-          StableAgg.lstdSamp(col("gap_ms")).as("stale_std_ms"),
-          min("gap_ms").as("stale_min_ms"),
-          max("gap_ms").as("stale_max_ms"))
-        .orderBy("user_id")
+        .transform(CoreQueries.staleStats(col("user_id"), "gap_ms"))
     },
     // q8's oracle verbatim: the salted plan must reproduce the plain
     // full-series window bit-for-bit
@@ -1525,17 +1494,44 @@ object ScaleQueries extends Registry {
           }
       }
       s.read.parquet(gapsRoot)
-        .groupBy(col("symbol").cast("bigint").as("user_id"))
-        .agg(count(lit(1)).as("stale_count"),
-          StableAgg.lavg(col("gap_ms")).as("stale_mean_ms"),
-          StableAgg.lstdSamp(col("gap_ms")).as("stale_std_ms"),
-          min("gap_ms").as("stale_min_ms"),
-          max("gap_ms").as("stale_max_ms"))
-        .orderBy("user_id")
+        .transform(CoreQueries.staleStats(col("symbol").cast("bigint").as("user_id"), "gap_ms"))
     },
     // q8's oracle verbatim (q108/q303's): the streaming chunked+repaired
     // pipeline must reproduce the plain full-series window bit-for-bit
     Some(O.stalenessStats))
+
+  /** The (user_id, event_type) replay of q311 and q314, in arrival order. */
+  private def erasureRows(s: SparkSession, d: String): Seq[(Long, String)] =
+    StreamFixtures.replayRows("q311", d) {
+      Tables.events(s, d)
+        .select(col("user_id"), col("event_type"), col("ts_ms"), col("event_id"))
+        .orderBy("ts_ms", "event_id")
+        .collect().iterator.map(r => (r.getLong(0), r.getString(1))).toSeq
+    }
+
+  /** Empty (user_id, event_type, n) counter state: what batch 0 merges. */
+  private def emptyCounters(ss: SparkSession): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    ss.createDataFrame(ss.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("user_id", LongType),
+        StructField("event_type", StringType), StructField("n", LongType))))
+  }
+
+  /** Per-event_type totals of a final counter state (q311, q314). */
+  private def erasureCounts(state: DataFrame): DataFrame =
+    state.groupBy("event_type")
+      .agg(sum("n").as("n_after"), countDistinct(col("user_id")).as("n_users_after"))
+      .orderBy("event_type")
+
+  /** "All events of non-requested users": the batch oracle both erasure
+    * gates must reproduce. */
+  private lazy val erasureOracle: String =
+    s"""WITH del AS (${ErasureFixture.oracleDelCte})
+        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_after,
+          CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users_after
+        FROM events e
+        WHERE NOT EXISTS (SELECT 1 FROM del WHERE del.user_id = e.user_id)
+        GROUP BY event_type ORDER BY event_type"""
 
   /** q306's right-to-be-forgotten cascade DEPLOYED on the streaming path:
     * per-user event counters accumulate across micro-batches in a
@@ -1560,12 +1556,7 @@ object ScaleQueries extends Registry {
   private val q311 = Q("q311_streaming_erasure",
     (s, d) => {
       import s.implicits._
-      val rows: Seq[(Long, String)] = StreamFixtures.replayRows("q311", d) {
-        Tables.events(s, d)
-          .select(col("user_id"), col("event_type"), col("ts_ms"), col("event_id"))
-          .orderBy("ts_ms", "event_id")
-          .collect().iterator.map(r => (r.getLong(0), r.getString(1))).toSeq
-      }
+      val rows = erasureRows(s, d)
       // the deletion-request list: ErasureFixture's draw (the SINGLE
       // owner q306 shares), collected once per (JVM, sfDir) — KB-scale,
       // the external-DSR-table stand-in
@@ -1588,19 +1579,9 @@ object ScaleQueries extends Registry {
         _.outputMode("append")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
             val ss = batch.sparkSession
-            val del = ss.createDataFrame(requested.map(Tuple1(_)))
-              .toDF("user_id")
+            val del = ss.createDataFrame(requested.map(Tuple1(_))).toDF("user_id")
             val prev =
-              if (id == 0)
-                ss.createDataFrame(
-                  ss.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("user_id",
-                      org.apache.spark.sql.types.LongType),
-                    org.apache.spark.sql.types.StructField("event_type",
-                      org.apache.spark.sql.types.StringType),
-                    org.apache.spark.sql.types.StructField("n",
-                      org.apache.spark.sql.types.LongType))))
+              if (id == 0) emptyCounters(ss)
               else ss.read.parquet(s"$stateRoot/batch=${id - 1}")
             val cur = batch.groupBy("user_id", "event_type")
               .agg(count(lit(1)).as("n"))
@@ -1616,20 +1597,9 @@ object ScaleQueries extends Registry {
       val last = new java.io.File(stateRoot).listFiles()
         .map(_.getName).filter(_.startsWith("batch="))
         .map(_.stripPrefix("batch=").toLong).max
-      s.read.parquet(s"$stateRoot/batch=$last")
-        .groupBy("event_type")
-        .agg(sum("n").as("n_after"),
-          countDistinct(col("user_id")).as("n_users_after"))
-        .orderBy("event_type")
+      erasureCounts(s.read.parquet(s"$stateRoot/batch=$last"))
     },
-    Some {
-      s"""WITH del AS (${ErasureFixture.oracleDelCte})
-        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_after,
-          CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users_after
-        FROM events e
-        WHERE NOT EXISTS (SELECT 1 FROM del WHERE del.user_id = e.user_id)
-        GROUP BY event_type ORDER BY event_type"""
-    })
+    Some(erasureOracle))
 
   private val DeltaBuckets = 8
 
@@ -1678,12 +1648,7 @@ object ScaleQueries extends Registry {
   private val q314 = Q("q314_streaming_erasure_delta",
     (s, d) => {
       import s.implicits._
-      val rows: Seq[(Long, String)] = StreamFixtures.replayRows("q311", d) {
-        Tables.events(s, d)
-          .select(col("user_id"), col("event_type"), col("ts_ms"), col("event_id"))
-          .orderBy("ts_ms", "event_id")
-          .collect().iterator.map(r => (r.getLong(0), r.getString(1))).toSeq
-      }
+      val rows = erasureRows(s, d)
       // memoized inside ErasureFixture (per JVM, sfDir) — a second
       // replayRows layer here would be a cache that could desynchronize
       val requested: Seq[Long] = ErasureFixture.requestedUsers(s, d)
@@ -1720,8 +1685,7 @@ object ScaleQueries extends Registry {
         _.outputMode("append")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
             val ss = batch.sparkSession
-            val del = ss.createDataFrame(requested.map(Tuple1(_)))
-              .toDF("user_id")
+            val del = ss.createDataFrame(requested.map(Tuple1(_))).toDF("user_id")
             // request list live from batch 1: drop incoming requested rows
             val live =
               if (id >= 1) batch.join(del, Seq("user_id"), "left_anti")
@@ -1754,16 +1718,7 @@ object ScaleQueries extends Registry {
                 }
               }
               val prev =
-                if (prevPaths.isEmpty)
-                  ss.createDataFrame(
-                    ss.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                    org.apache.spark.sql.types.StructType(Seq(
-                      org.apache.spark.sql.types.StructField("user_id",
-                        org.apache.spark.sql.types.LongType),
-                      org.apache.spark.sql.types.StructField("event_type",
-                        org.apache.spark.sql.types.StringType),
-                      org.apache.spark.sql.types.StructField("n",
-                        org.apache.spark.sql.types.LongType))))
+                if (prevPaths.isEmpty) emptyCounters(ss)
                 else ss.read.parquet(prevPaths: _*)
               // ONE job rewrites every touched bucket: merge + purge +
               // partitionBy(bkt) into this batch's version dir (whole-dir
@@ -1804,20 +1759,9 @@ object ScaleQueries extends Registry {
         val bdir = new java.io.File(hs.last._2, s"bkt=$j")
         if (bdir.isDirectory) Some(bdir.getPath) else None
       }
-      s.read.parquet(latest.toIndexedSeq: _*)
-        .groupBy("event_type")
-        .agg(sum("n").as("n_after"),
-          countDistinct(col("user_id")).as("n_users_after"))
-        .orderBy("event_type")
+      erasureCounts(s.read.parquet(latest.toIndexedSeq: _*))
     },
-    Some {
-      s"""WITH del AS (${ErasureFixture.oracleDelCte})
-        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_after,
-          CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users_after
-        FROM events e
-        WHERE NOT EXISTS (SELECT 1 FROM del WHERE del.user_id = e.user_id)
-        GROUP BY event_type ORDER BY event_type"""
-    })
+    Some(erasureOracle))
 
   override val all: Seq[Q] =
     Seq(q156, q157, q158, q159, q160, q161, q162, q216, q217, q219, q220,

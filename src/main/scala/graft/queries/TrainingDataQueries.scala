@@ -56,16 +56,12 @@ object TrainingDataQueries extends Registry {
           + least((CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is','to','in','that'))) AS DOUBLE)
               / len(w)) * 3.0::DOUBLE, 1.0::DOUBLE) * 0.3::DOUBLE"""
 
-  /** Shared CTE chain ending in the LSH candidate `pairs` table
-    * (doc_id_a < doc_id_b), mirroring minhashSigFrame + Dedup banding
-    * exactly; callers prepend `WITH [RECURSIVE]` (q38, q170).
+  /** Shared CTE chain ending in the LSH `bands` table (doc_id, band_idx,
+    * band_hash) over a doc relation carrying (doc_id, text), mirroring
+    * [[bandSigsOf]] exactly; callers prepend `WITH [RECURSIVE]` (q22,
+    * q164, q313).
     */
-  private[queries] lazy val duckLshPairsCtes: String = duckLshPairsCtesFrom("documents")
-
-  /** [[duckLshPairsCtes]] over an arbitrary (possibly filtered) doc
-    * relation carrying (doc_id, text) — q188 evaluates on a hash sample.
-    */
-  private[queries] def duckLshPairsCtesFrom(rel: String): String =
+  private[queries] def duckBandsCtesFrom(rel: String): String =
     s"""t AS (SELECT doc_id, $duckToks AS w FROM $rel),
       s AS (SELECT doc_id, ${duckShingles("w")} AS sh FROM t),
       mh AS (SELECT doc_id,
@@ -78,12 +74,39 @@ object TrainingDataQueries extends Registry {
         FROM mh),
       bands AS (${(0 until NumBands).map(b =>
           s"SELECT doc_id, $b AS band_idx, band$b AS band_hash FROM sig")
-          .mkString("\n        UNION ALL ")}),
+          .mkString("\n        UNION ALL ")})"""
+
+  /** Shared CTE chain ending in the LSH candidate `pairs` table
+    * (doc_id_a < doc_id_b), mirroring [[lshPairsFrame]] exactly; callers
+    * prepend `WITH [RECURSIVE]` ([[duckLshReachCtes]], q190).
+    */
+  private[queries] lazy val duckLshPairsCtes: String = duckLshPairsCtesFrom("documents")
+
+  /** [[duckLshPairsCtes]] over an arbitrary (possibly filtered) doc
+    * relation carrying (doc_id, text) — q188 evaluates on a hash sample.
+    */
+  private[queries] def duckLshPairsCtesFrom(rel: String): String =
+    s"""${duckBandsCtesFrom(rel)},
       pairs AS (
         SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
         FROM bands a JOIN bands b
           ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
           AND a.doc_id < b.doc_id)"""
+
+  /** [[duckLshPairsCtes]] extended by the recursive reachability of the
+    * pair graph, `reach(doc_id, lbl)`: MIN(lbl) per doc_id is its
+    * connected-component label (q38, q41, q170); callers prepend
+    * `WITH RECURSIVE`.
+    */
+  private[queries] lazy val duckLshReachCtes: String =
+    s"""$duckLshPairsCtes,
+      edges AS (
+        SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
+        UNION ALL SELECT doc_id_b, doc_id_a FROM pairs),
+      reach(doc_id, lbl) AS (
+        SELECT DISTINCT src, src FROM edges
+        UNION
+        SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.doc_id = e.dst)"""
 
   /** Exact dedup by content hash (hash-groupBy; one tiny shuffle). */
   private val q20 = Q("q20_dedup_exact",
@@ -120,13 +143,19 @@ object TrainingDataQueries extends Registry {
     * evaluates on a hash sample) — the Spark mirror of
     * [[duckLshPairsCtesFrom]].
     */
-  private[queries] def lshPairsFrameOf(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val sigs = minhashSigFrameOf(docs)
+  private[queries] def lshPairsFrameOf(docs: DataFrame): DataFrame =
+    Dedup.lshCandidatePairs(bandSigsOf(docs), NumBands)
+
+  /** Per-doc LSH band hashes (doc_id, band0..) over a (doc_id, text)
+    * frame — the Spark mirror of [[duckBandsCtesFrom]]. */
+  private def bandSigsOf(docs: DataFrame) =
+    minhashSigFrameOf(docs)
       .select(col("doc_id") +: Dedup.minhashColsFromArray(col("mhs"), NumHashes): _*)
       .select(col("doc_id") +: Dedup.bandCols(NumHashes, RowsPerBand): _*)
-    Dedup.lshCandidatePairs(sigs, NumBands)
-  }
+
+  /** [[bandSigsOf]] over the fanned-out corpus (q164, q313). */
+  private def bandSigs(s: SparkSession, d: String) =
+    bandSigsOf(Tables.fanOut(Tables.documents(s, d)))
 
   /** MinHash signatures: per-row native one-pass computation, shuffle-free. */
   private val q21 = Q("q21_minhash_signatures",
@@ -145,30 +174,26 @@ object TrainingDataQueries extends Registry {
     * quadratic work is confined to within buckets.
     */
   private val q22 = Q("q22_lsh_candidate_pairs",
-    (s, d) => {
-      val sigs = minhashSigFrame(s, d)
-        .select(col("doc_id") +: Dedup.minhashColsFromArray(col("mhs"), NumHashes): _*)
-        .select(col("doc_id") +: Dedup.bandCols(NumHashes, RowsPerBand): _*)
-      Dedup.lshCandidatePairs(sigs, NumBands).orderBy("doc_id_a", "doc_id_b")
-    },
-    Some(s"""WITH t AS (SELECT doc_id, $duckToks AS w FROM documents),
-      s AS (SELECT doc_id, ${duckShingles("w")} AS sh FROM t),
-      mh AS (SELECT doc_id,
-        ${(0 until NumHashes).map(i => s"${duckMh(i)} AS mh$i").mkString(", ")}
-        FROM s WHERE len(sh) > 0),
-      sig AS (SELECT doc_id,
-        ${(0 until NumBands).map(b =>
-          s"md5(mh${b * RowsPerBand} || '|' || mh${b * RowsPerBand + 1}) AS band$b")
-          .mkString(", ")}
-        FROM mh),
-      bands AS (${(0 until NumBands).map(b =>
-          s"SELECT doc_id, $b AS band_idx, band$b AS band_hash FROM sig")
-          .mkString("\n        UNION ALL ")})
+    (s, d) => lshPairsFrame(s, d).orderBy("doc_id_a", "doc_id_b"),
+    Some(s"""WITH ${duckBandsCtesFrom("documents")}
       SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
       FROM bands a JOIN bands b
         ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
         AND a.doc_id < b.doc_id
       ORDER BY doc_id_a, doc_id_b"""))
+
+  /** `t(doc_id, th)`: the 32-bit md5 token hashes of every document. */
+  private lazy val duckTokHashCte: String =
+    s"""t AS (SELECT doc_id,
+        list_transform(list_transform($duckToks, t -> md5(t)), h -> ${duckHash32("h")}) AS th
+        FROM documents)"""
+
+  /** The 32-bit SimHash of [[duckTokHashCte]]'s `th`: bit b set when the
+    * token hashes vote it in by majority (q23, q50). */
+  private lazy val duckSimhash: String = (0 until 32).map { b =>
+    s"(CASE WHEN list_sum(list_transform(th, h -> ((h >> $b) & 1) * 2 - 1)) > 0 " +
+      s"THEN CAST(${1L << b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
+  }.mkString("\n        + ")
 
   /** 32-bit SimHash — one md5+nibble decode per token, then arithmetic-only
     * per-bit votes.
@@ -183,18 +208,9 @@ object TrainingDataQueries extends Registry {
         .select(col("doc_id"), Dedup.simhash32(col("tok_hash")).as("simhash"))
         .orderBy("doc_id")
     },
-    Some {
-      val hash32 = duckHash32("h")
-      val bitTerms = (0 until 32).map { b =>
-        s"(CASE WHEN list_sum(list_transform(th, h -> ((h >> $b) & 1) * 2 - 1)) > 0 " +
-          s"THEN CAST(${1L << b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-      }
-      s"""WITH t AS (SELECT doc_id,
-        list_transform(list_transform($duckToks, t -> md5(t)), h -> $hash32) AS th
-        FROM documents)
-      SELECT doc_id, ${bitTerms.mkString("\n        + ")} AS simhash
-      FROM t ORDER BY doc_id"""
-    })
+    Some(s"""WITH $duckTokHashCte
+      SELECT doc_id, $duckSimhash AS simhash
+      FROM t ORDER BY doc_id"""))
 
   /** n-gram Jaccard between consecutive docs. A naive self-join on
     * doc_id+1 scans and shingles the corpus TWICE and shuffles both
@@ -267,27 +283,29 @@ object TrainingDataQueries extends Registry {
       FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
       ORDER BY vec_id_a"""))
 
+  /** The top-10 neighbors of embeddings 0..4 over the whole corpus by
+    * `search(corpus(id, vec), queries(qid, qvec))`, rank as INT: the
+    * lookup every ANN index query answers (q26, q27, q34, q57, q79). */
+  private def annTop10(s: SparkSession, d: String)(
+      search: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val e = Tables.fanOut(Tables.embeddings(s, d))
+    val corpus = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val queries = e.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    search(corpus, queries)
+      .withColumn("rank", col("rank").cast("int"))
+      .orderBy("qid", "rank")
+  }
+
   /** Brute-force cosine top-k: broadcast query set over one corpus scan. */
   private val q26 = Q("q26_ann_bruteforce_topk",
-    (s, d) => {
-      val e = Tables.fanOut(Tables.embeddings(s, d))
-      val corpus = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Similarity.bruteForceTopK(corpus, queries, 10)
-        .withColumn("rank", col("rank").cast("int"))
-        .orderBy("qid", "rank")
-    },
+    (s, d) => annTop10(s, d)(Similarity.bruteForceTopK(_, _, 10)),
     Some(s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec
         FROM embeddings WHERE vec_id < 5),
       c AS (SELECT vec_id AS id, embedding AS vec FROM embeddings),
       sim AS (SELECT qid, id, ${duckCos("qvec", "vec")} AS cos_sim
         FROM q CROSS JOIN c WHERE id <> qid),
-      r AS (SELECT qid, id, cos_sim,
-        CAST(row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, id)
-          AS INTEGER) AS rank FROM sim)
-      SELECT qid, rank, id AS neighbor_id, cos_sim
-      FROM r WHERE rank <= 10 ORDER BY qid, rank"""))
+      $duckTopKTail"""))
 
   /** LSH-bucketed ANN (the scale path): random-hyperplane sign buckets,
     * exact ranking within buckets. Fully oracled — the planes derive from
@@ -295,47 +313,55 @@ object TrainingDataQueries extends Registry {
     * are ordered folds.
     */
   private val q27 = Q("q27_ann_lsh_bucketed",
-    (s, d) => {
-      val e = Tables.fanOut(Tables.embeddings(s, d))
-      val corpus = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Similarity.lshBucketedTopK(corpus, queries, 10, numPlanes = 8)
-        .withColumn("rank", col("rank").cast("int"))
-        .orderBy("qid", "rank")
-    },
+    (s, d) => annTop10(s, d)(Similarity.lshBucketedTopK(_, _, 10, numPlanes = 8)),
     Some(lshTopKOracle))
 
-  /** Shared oracle for the LSH-bucketed top-10 lookup (q27 batch, q127
-    * streaming): plane literals from md5 nibble arithmetic, sign-bit
-    * buckets, exact cosine ranking within buckets.
-    */
-  private lazy val lshTopKOracle: String = {
-      val mdExpr = "md5('plane' || CAST(p AS VARCHAR) || ':' || CAST(i AS VARCHAR))"
-      s"""WITH pc AS (
+  /** The 8 random hyperplanes of `Similarity.lshIndex(numPlanes = 8)` over
+    * 64-dim vectors: `pl(p, comps)`, components from md5 nibble
+    * arithmetic (q27, q57, q258). */
+  private lazy val duckPlaneCtes: String = {
+    val mdExpr = "md5('plane' || CAST(p AS VARCHAR) || ':' || CAST(i AS VARCHAR))"
+    s"""pc AS (
         SELECT p, i,
           (CAST(${duckHash32(mdExpr)} AS DOUBLE) / 4294967296.0 - 0.5::DOUBLE) AS comp
         FROM range(0, 8) t1(p), range(0, 64) t2(i)),
-      pl AS (SELECT p, list(comp ORDER BY i) AS comps FROM pc GROUP BY p),
-      c AS (SELECT vec_id AS id, embedding AS vec FROM embeddings),
-      cd AS (SELECT id, p,
+      pl AS (SELECT p, list(comp ORDER BY i) AS comps FROM pc GROUP BY p)"""
+  }
+
+  /** Sign-bit buckets of a corpus `c(id, vec)` against [[duckPlaneCtes]]:
+    * `corp(id, vec, bucket)`. */
+  private lazy val duckBucketCtes: String =
+    """cd AS (SELECT id, p,
           list_reduce(list_transform(range(1, len(vec)+1),
             i -> CAST(vec[i] AS DOUBLE) * comps[i]), (a, b) -> a + b) AS dot
         FROM c CROSS JOIN pl),
       cb AS (SELECT id,
           SUM(CASE WHEN dot >= 0 THEN (CAST(1 AS BIGINT) << p) ELSE 0 END) AS bucket
         FROM cd GROUP BY id),
-      corp AS (SELECT cb.id, c.vec, bucket FROM cb JOIN c USING (id)),
+      corp AS (SELECT cb.id, c.vec, bucket FROM cb JOIN c USING (id))"""
+
+  /** The exact top-10 tail of every kNN oracle: rank `sim(qid, id,
+    * cos_sim)` by (cos_sim DESC, id) per query (q26, q27, q34, q57). */
+  private lazy val duckTopKTail: String =
+    """r AS (SELECT qid, id, cos_sim,
+        CAST(row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, id)
+          AS INTEGER) AS rank FROM sim)
+      SELECT qid, rank, id AS neighbor_id, cos_sim
+      FROM r WHERE rank <= 10 ORDER BY qid, rank"""
+
+  /** Shared oracle for the LSH-bucketed top-10 lookup (q27 batch, q127
+    * streaming): plane literals from md5 nibble arithmetic, sign-bit
+    * buckets, exact cosine ranking within buckets.
+    */
+  private lazy val lshTopKOracle: String =
+    s"""WITH $duckPlaneCtes,
+      c AS (SELECT vec_id AS id, embedding AS vec FROM embeddings),
+      $duckBucketCtes,
       qb AS (SELECT id AS qid, vec AS qvec, bucket FROM corp WHERE id < 5),
       j AS (SELECT qid, qvec, id, vec
             FROM qb JOIN corp USING (bucket) WHERE id <> qid),
       sim AS (SELECT qid, id, ${duckCos("qvec", "vec")} AS cos_sim FROM j),
-      r AS (SELECT qid, id, cos_sim,
-            CAST(row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, id)
-              AS INTEGER) AS rank FROM sim)
-      SELECT qid, rank, id AS neighbor_id, cos_sim
-      FROM r WHERE rank <= 10 ORDER BY qid, rank"""
-  }
+      $duckTopKTail"""
 
   /** Multi-probe LSH ANN: same index as q27, but each query also probes
     * the 8 hamming-distance-1 buckets — the standard recall knob that
@@ -343,42 +369,16 @@ object TrainingDataQueries extends Registry {
     * q27: plane literals + xor-mask probe expansion reproduce in SQL.
     */
   private val q57 = Q("q57_ann_multiprobe",
-    (s, d) => {
-      val e = Tables.fanOut(Tables.embeddings(s, d))
-      val corpus = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Similarity.lshMultiProbeTopK(corpus, queries, 10, numPlanes = 8)
-        .withColumn("rank", col("rank").cast("int"))
-        .orderBy("qid", "rank")
-    },
-    Some {
-      val mdExpr = "md5('plane' || CAST(p AS VARCHAR) || ':' || CAST(i AS VARCHAR))"
-      s"""WITH pc AS (
-        SELECT p, i,
-          (CAST(${duckHash32(mdExpr)} AS DOUBLE) / 4294967296.0 - 0.5::DOUBLE) AS comp
-        FROM range(0, 8) t1(p), range(0, 64) t2(i)),
-      pl AS (SELECT p, list(comp ORDER BY i) AS comps FROM pc GROUP BY p),
+    (s, d) => annTop10(s, d)(Similarity.lshMultiProbeTopK(_, _, 10, numPlanes = 8)),
+    Some(s"""WITH $duckPlaneCtes,
       c AS (SELECT vec_id AS id, embedding AS vec FROM embeddings),
-      cd AS (SELECT id, p,
-          list_reduce(list_transform(range(1, len(vec)+1),
-            i -> CAST(vec[i] AS DOUBLE) * comps[i]), (a, b) -> a + b) AS dot
-        FROM c CROSS JOIN pl),
-      cb AS (SELECT id,
-          SUM(CASE WHEN dot >= 0 THEN (CAST(1 AS BIGINT) << p) ELSE 0 END) AS bucket
-        FROM cd GROUP BY id),
-      corp AS (SELECT cb.id, c.vec, bucket FROM cb JOIN c USING (id)),
+      $duckBucketCtes,
       qb0 AS (SELECT id AS qid, vec AS qvec, bucket AS b0 FROM corp WHERE id < 5),
       qb AS (SELECT qid, qvec, xor(b0, m) AS bucket
              FROM qb0, (SELECT unnest([0,1,2,4,8,16,32,64,128]) AS m) masks),
       sim AS (SELECT DISTINCT qid, id, ${duckCos("qvec", "vec")} AS cos_sim
               FROM qb JOIN corp USING (bucket) WHERE id <> qid),
-      r AS (SELECT qid, id, cos_sim,
-            CAST(row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, id)
-              AS INTEGER) AS rank FROM sim)
-      SELECT qid, rank, id AS neighbor_id, cos_sim
-      FROM r WHERE rank <= 10 ORDER BY qid, rank"""
-    })
+      $duckTopKTail"""))
 
   /** Language-ID heuristic: marker-lexicon hit counts + argmax. */
   private val q28 = Q("q28_lang_id",
@@ -482,14 +482,7 @@ object TrainingDataQueries extends Registry {
     */
   private val q38 = Q("q38_dup_clusters",
     (s, d) => Dedup.duplicateClusters(lshPairsFrame(s, d)).orderBy("doc_id"),
-    Some(s"""WITH RECURSIVE $duckLshPairsCtes,
-      edges AS (
-        SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
-        UNION ALL SELECT doc_id_b, doc_id_a FROM pairs),
-      reach(doc_id, lbl) AS (
-        SELECT DISTINCT src, src FROM edges
-        UNION
-        SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.doc_id = e.dst)
+    Some(s"""WITH RECURSIVE $duckLshReachCtes
       SELECT doc_id, MIN(lbl) AS cluster_id FROM reach
       GROUP BY doc_id ORDER BY doc_id"""))
 
@@ -498,6 +491,25 @@ object TrainingDataQueries extends Registry {
     s"list_reduce(list_transform(range(1, len($a)+1), " +
       s"i -> (CAST(($a)[i] AS DOUBLE) - CAST(($b)[i] AS DOUBLE)) " +
       s"* (CAST(($a)[i] AS DOUBLE) - CAST(($b)[i] AS DOUBLE))), (acc, v) -> acc + v)"
+
+  /** The sampled coarse quantizer of `Similarity.ivfAssignCells(nlist =
+    * 16)`: `cents(cell, centroid)`, the embeddings at ids 0, step, … */
+  private[queries] lazy val duckCentroidCtes: String =
+    """n AS (SELECT greatest(COUNT(*) // 16, 1) AS step FROM embeddings),
+      cents AS (
+        SELECT CAST(vec_id // step AS INTEGER) AS cell, embedding AS centroid
+        FROM embeddings, n WHERE vec_id % step = 0 AND vec_id // step < 16)"""
+
+  /** Every embedding's nearest [[duckCentroidCtes]] cell by (squared
+    * distance, cell): `asg(id, vec, cell)`. */
+  private[queries] lazy val duckCellAssignCte: String =
+    s"""asg AS (
+        SELECT id, vec, cell FROM (
+          SELECT c.vec_id AS id, c.embedding AS vec, ct.cell,
+            row_number() OVER (PARTITION BY c.vec_id
+              ORDER BY ${duckSqDist("c.embedding", "ct.centroid")}, ct.cell) AS arank
+          FROM embeddings c CROSS JOIN cents ct)
+        WHERE arank = 1)"""
 
   /** IVF ANN over the deterministic sampled coarse quantizer
     * (Similarity.ivfSampledTopK): centroids are a systematic id-sample of
@@ -508,26 +520,9 @@ object TrainingDataQueries extends Registry {
     * equivalence.
     */
   private val q34 = Q("q34_ann_ivf",
-    (s, d) => {
-      val e = Tables.fanOut(Tables.embeddings(s, d))
-      val corpus = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Similarity.ivfSampledTopK(corpus, queries, 10, nlist = 16, nProbe = 4)
-        .withColumn("rank", col("rank").cast("int"))
-        .orderBy("qid", "rank")
-    },
-    Some(s"""WITH n AS (SELECT greatest(COUNT(*) // 16, 1) AS step FROM embeddings),
-      cents AS (
-        SELECT CAST(vec_id // step AS INTEGER) AS cell, embedding AS centroid
-        FROM embeddings, n WHERE vec_id % step = 0 AND vec_id // step < 16),
-      asg AS (
-        SELECT id, vec, cell FROM (
-          SELECT c.vec_id AS id, c.embedding AS vec, ct.cell,
-            row_number() OVER (PARTITION BY c.vec_id
-              ORDER BY ${duckSqDist("c.embedding", "ct.centroid")}, ct.cell) AS arank
-          FROM embeddings c CROSS JOIN cents ct)
-        WHERE arank = 1),
+    (s, d) => annTop10(s, d)(Similarity.ivfSampledTopK(_, _, 10, nlist = 16, nProbe = 4)),
+    Some(s"""WITH $duckCentroidCtes,
+      $duckCellAssignCte,
       qc AS (
         SELECT qid, qvec, cell FROM (
           SELECT q.vec_id AS qid, q.embedding AS qvec, ct.cell,
@@ -538,11 +533,7 @@ object TrainingDataQueries extends Registry {
         WHERE crank <= 4),
       j AS (SELECT qid, qvec, id, vec FROM asg JOIN qc USING (cell) WHERE id <> qid),
       sim AS (SELECT qid, id, ${duckCos("qvec", "vec")} AS cos_sim FROM j),
-      r AS (SELECT qid, id, cos_sim,
-        CAST(row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, id)
-          AS INTEGER) AS rank FROM sim)
-      SELECT qid, rank, id AS neighbor_id, cos_sim
-      FROM r WHERE rank <= 10 ORDER BY qid, rank"""))
+      $duckTopKTail"""))
 
   /** Multimodal feature-extraction via per-partition batches, codec-free
     * arm (Multimodal.ByteStats): deterministic byte-level features for
@@ -714,15 +705,8 @@ object TrainingDataQueries extends Registry {
     */
   private val q41 = Q("q41_dedup_keep_best",
     (s, d) => {
-      val docs = Tables.fanOut(Tables.documents(s, d))
-      val quality = docs.select(col("doc_id") +:
-        TextAnalysis.qualityColumns(col("text"), TextAnalysis.tokens(col("text"))): _*)
-        .select(col("doc_id"), col("quality_score"))
-      val sigs = minhashSigFrame(s, d)
-        .select(col("doc_id") +: Dedup.minhashColsFromArray(col("mhs"), NumHashes): _*)
-        .select(col("doc_id") +: Dedup.bandCols(NumHashes, RowsPerBand): _*)
-      val clusters = Dedup.duplicateClusters(Dedup.lshCandidatePairs(sigs, NumBands))
-      val withCluster = quality
+      val clusters = Dedup.duplicateClusters(lshPairsFrame(s, d))
+      val withCluster = qualityScores(s, d)
         .join(clusters, Seq("doc_id"), "left")
         .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
       // winner via ONE hash aggregation instead of two window passes
@@ -739,31 +723,7 @@ object TrainingDataQueries extends Registry {
           col("best.quality_score").as("best_quality"))
         .orderBy("cluster_id")
     },
-    Some(s"""WITH RECURSIVE t AS (SELECT doc_id, $duckToks AS w FROM documents),
-      s AS (SELECT doc_id, ${duckShingles("w")} AS sh FROM t),
-      mh AS (SELECT doc_id,
-        ${(0 until NumHashes).map(i => s"${duckMh(i)} AS mh$i").mkString(", ")}
-        FROM s WHERE len(sh) > 0),
-      sig AS (SELECT doc_id,
-        ${(0 until NumBands).map(b =>
-          s"md5(mh${b * RowsPerBand} || '|' || mh${b * RowsPerBand + 1}) AS band$b")
-          .mkString(", ")}
-        FROM mh),
-      bands AS (${(0 until NumBands).map(b =>
-          s"SELECT doc_id, $b AS band_idx, band$b AS band_hash FROM sig")
-          .mkString("\n        UNION ALL ")}),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
-        FROM bands a JOIN bands b
-          ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-          AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
-        UNION ALL SELECT doc_id_b, doc_id_a FROM pairs),
-      reach(doc_id, lbl) AS (
-        SELECT DISTINCT src, src FROM edges
-        UNION
-        SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.doc_id = e.dst),
+    Some(s"""WITH RECURSIVE $duckLshReachCtes,
       cc AS (SELECT doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY doc_id),
       q AS (SELECT doc_id,
         ${duckQuality} AS quality_score
@@ -815,17 +775,16 @@ object TrainingDataQueries extends Registry {
     * population the gate processes.
     */
   private[graft] def cappedLshPairsFrame(s: org.apache.spark.sql.SparkSession,
-      d: String, k: Int): org.apache.spark.sql.DataFrame = {
-    val docs = Tables.fanOut(Tables.documents(s, d))
-    val quality = docs.select(col("doc_id") +:
+      d: String, k: Int): org.apache.spark.sql.DataFrame =
+    Dedup.cappedLshCandidatePairs(
+      bandSigs(s, d).join(qualityScores(s, d), "doc_id"), NumBands, k)
+
+  /** (doc_id, quality_score) over the fanned-out corpus — the Spark side
+    * of [[duckQuality]] (q41, q313). */
+  private def qualityScores(s: SparkSession, d: String) =
+    Tables.fanOut(Tables.documents(s, d)).select(col("doc_id") +:
       TextAnalysis.qualityColumns(col("text"), TextAnalysis.tokens(col("text"))): _*)
       .select(col("doc_id"), col("quality_score"))
-    val sigs = minhashSigFrame(s, d)
-      .select(col("doc_id") +: Dedup.minhashColsFromArray(col("mhs"), NumHashes): _*)
-      .select(col("doc_id") +: Dedup.bandCols(NumHashes, RowsPerBand): _*)
-      .join(quality, "doc_id")
-    Dedup.cappedLshCandidatePairs(sigs, NumBands, k)
-  }
 
   private val q313 = Q("q313_lsh_family_cap",
     (s, d) => {
@@ -836,19 +795,7 @@ object TrainingDataQueries extends Registry {
         .groupBy("doc_id").agg(count(lit(1)).as("n_partners"))
         .orderBy("doc_id")
     },
-    Some(s"""WITH t AS (SELECT doc_id, $duckToks AS w FROM documents),
-      s AS (SELECT doc_id, ${duckShingles("w")} AS sh FROM t),
-      mh AS (SELECT doc_id,
-        ${(0 until NumHashes).map(i => s"${duckMh(i)} AS mh$i").mkString(", ")}
-        FROM s WHERE len(sh) > 0),
-      sig AS (SELECT doc_id,
-        ${(0 until NumBands).map(b =>
-          s"md5(mh${b * RowsPerBand} || '|' || mh${b * RowsPerBand + 1}) AS band$b")
-          .mkString(", ")}
-        FROM mh),
-      bands AS (${(0 until NumBands).map(b =>
-          s"SELECT doc_id, $b AS band_idx, band$b AS band_hash FROM sig")
-          .mkString("\n        UNION ALL ")}),
+    Some(s"""WITH ${duckBandsCtesFrom("documents")},
       q AS (SELECT doc_id,
         ${duckQuality} AS quality_score
         FROM (SELECT doc_id, text, $duckToks AS w FROM documents)),
@@ -1102,16 +1049,8 @@ object TrainingDataQueries extends Registry {
         .distinct()
         .orderBy("doc_id_a", "doc_id_b")
     },
-    Some {
-      val hash32 = duckHash32("h")
-      val bitTerms = (0 until 32).map { b =>
-        s"(CASE WHEN list_sum(list_transform(th, h -> ((h >> $b) & 1) * 2 - 1)) > 0 " +
-          s"THEN CAST(${1L << b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-      }
-      s"""WITH t AS (SELECT doc_id,
-          list_transform(list_transform($duckToks, t -> md5(t)), h -> $hash32) AS th
-          FROM documents),
-        sh AS (SELECT doc_id, ${bitTerms.mkString("\n          + ")} AS simhash
+    Some(s"""WITH $duckTokHashCte,
+        sh AS (SELECT doc_id, $duckSimhash AS simhash
           FROM t),
         bands AS (SELECT doc_id, simhash, b AS band_idx,
             (simhash >> CAST(b * 8 AS INTEGER)) & 255 AS band_val
@@ -1122,8 +1061,7 @@ object TrainingDataQueries extends Registry {
             ON a.band_idx = b.band_idx AND a.band_val = b.band_val
             AND a.doc_id < b.doc_id)
         SELECT doc_id_a, doc_id_b, hamming FROM pairs
-        WHERE hamming <= 6 ORDER BY doc_id_a, doc_id_b"""
-    })
+        WHERE hamming <= 6 ORDER BY doc_id_a, doc_id_b"""))
 
   /** Intra-document repetition (a Gopher-style quality signal): fraction
     * of a doc's word 2-grams that are repeats. Pure per-row array
@@ -1345,15 +1283,7 @@ object TrainingDataQueries extends Registry {
     * left-to-right 4-term chain in both engines.
     */
   private val q79 = Q("q79_ann_pq",
-    (s, d) => {
-      val e = Tables.fanOut(Tables.embeddings(s, d))
-      val corpus = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Similarity.pqTopK(corpus, queries, 10)
-        .withColumn("rank", col("rank").cast("int"))
-        .orderBy("qid", "rank")
-    },
+    (s, d) => annTop10(s, d)(Similarity.pqTopK(_, _, 10)),
     Some {
       def sl(v: String, m: String) = s"($v)[(($m)*16+1):(($m)*16+16)]"
       val encDist = duckSqDist(sl("e.embedding", "m.m"), sl("cb.embedding", "m.m"))
@@ -1642,9 +1572,7 @@ object TrainingDataQueries extends Registry {
     */
   private val q164 = Q("q164_incremental_lsh_dedup",
     (s, d) => {
-      val sigs = minhashSigFrame(s, d)
-        .select(col("doc_id") +: Dedup.minhashColsFromArray(col("mhs"), NumHashes): _*)
-        .select(col("doc_id") +: Dedup.bandCols(NumHashes, RowsPerBand): _*)
+      val sigs = bandSigs(s, d)
       val index = sigs.filter(col("doc_id") % 2 === 0)
       val incoming = sigs.filter(col("doc_id") % 2 === 1)
       val screened = Dedup.lshScreenAgainst(index, incoming, NumBands)
@@ -1653,19 +1581,7 @@ object TrainingDataQueries extends Registry {
         .withColumn("keep", col("dup_of").isNull)
         .orderBy("doc_id")
     },
-    Some(s"""WITH t AS (SELECT doc_id, $duckToks AS w FROM documents),
-      s AS (SELECT doc_id, ${duckShingles("w")} AS sh FROM t),
-      mh AS (SELECT doc_id,
-        ${(0 until NumHashes).map(i => s"${duckMh(i)} AS mh$i").mkString(", ")}
-        FROM s WHERE len(sh) > 0),
-      sig AS (SELECT doc_id,
-        ${(0 until NumBands).map(b =>
-          s"md5(mh${b * RowsPerBand} || '|' || mh${b * RowsPerBand + 1}) AS band$b")
-          .mkString(", ")}
-        FROM mh),
-      bands AS (${(0 until NumBands).map(b =>
-          s"SELECT doc_id, $b AS band_idx, band$b AS band_hash FROM sig")
-          .mkString("\n        UNION ALL ")}),
+    Some(s"""WITH ${duckBandsCtesFrom("documents")},
       p AS (SELECT n.doc_id AS doc_id, MIN(o.doc_id) AS dup_of
         FROM bands n JOIN bands o
           ON n.band_idx = o.band_idx AND n.band_hash = o.band_hash
@@ -2503,7 +2419,6 @@ object TrainingDataQueries extends Registry {
         .orderBy("qid")
     },
     Some {
-      val mdExpr = "md5('plane' || CAST(p AS VARCHAR) || ':' || CAST(i AS VARCHAR))"
       s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec
           FROM embeddings WHERE vec_id % 29 = 0),
         c AS (SELECT vec_id AS id, embedding AS vec FROM embeddings),
@@ -2513,20 +2428,8 @@ object TrainingDataQueries extends Registry {
           row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, id)
             AS rank FROM bsim),
         truth AS (SELECT qid, id FROM br WHERE rank <= 10),
-        pc AS (SELECT p, i,
-            (CAST(${duckHash32(mdExpr)} AS DOUBLE) / 4294967296.0 - 0.5::DOUBLE)
-              AS comp
-          FROM range(0, 8) t1(p), range(0, 64) t2(i)),
-        pl AS (SELECT p, list(comp ORDER BY i) AS comps FROM pc GROUP BY p),
-        cd AS (SELECT id, p,
-            list_reduce(list_transform(range(1, len(vec)+1),
-              i -> CAST(vec[i] AS DOUBLE) * comps[i]), (a, b) -> a + b) AS dot
-          FROM c CROSS JOIN pl),
-        cb AS (SELECT id,
-            SUM(CASE WHEN dot >= 0 THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)
-              AS bucket
-          FROM cd GROUP BY id),
-        corp AS (SELECT cb.id, c.vec, bucket FROM cb JOIN c USING (id)),
+        $duckPlaneCtes,
+        $duckBucketCtes,
         qb AS (SELECT id AS qid, vec AS qvec, bucket FROM corp
           WHERE id % 29 = 0),
         j AS (SELECT qid, qvec, id, vec
@@ -2713,12 +2616,7 @@ object TrainingDataQueries extends Registry {
         .select(explode(col("sh")).as("bsh")).distinct()
         .localCheckpoint()
       val bloomHit = Dedup.bloomProbe4096(benchSh, col("sg"))
-      val rows: Seq[(Long, String)] =
-        StreamFixtures.replayRows("q318", d) {
-          Tables.documents(s, d).select("doc_id", "text")
-            .orderBy("doc_id").collect().iterator
-            .map(r => (r.getLong(0), r.getString(1))).toSeq
-        }
+      val rows = StreamFixtures.docRows(s, d, "q318")
       val dir = StreamGate.scratch("q318")
       val outRoot = new java.io.File(dir, "out").getPath
       // 16 input partitions + 8 shuffle partitions, NOT the stateful-gate

@@ -22,14 +22,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * (SURVEY.md §2.1 S1-S6).
   *
   * Register: `spark.readStream.format("okx")` with options
-  *   url       wss endpoint (default OKX public, okx_ws.py:13)
-  *   symbols   comma list (S2 cross-product subscription)
-  *   channels  comma list
   *   provider  "websocket" (default) | "synthetic" | FQCN of a
   *             [[FrameProvider]] — the seam that makes the source testable
   *             without a network
-  *   maxBuffer        frame buffer bound (S3/T6, reference max_queue=1024)
-  *   maxFramesPerTrigger  per-micro-batch admission cap (T6)
+  *   maxBuffer frame buffer bound (S3/T6, reference max_queue=1024)
+  *   url, symbols, channels, pingSeconds
+  *             websocket provider: wss endpoint (default OKX public,
+  *             okx_ws.py:13), comma lists (S2 cross-product
+  *             subscription), liveness ping period
+  *   symbols, frames, frameIntervalMs, burst
+  *             synthetic provider: comma list, frame cap, pacing
+  * The per-micro-batch admission cap and the read-partition size are the
+  * fixed [[OkxMicroBatchStream.MaxFramesPerTrigger]] and
+  * [[OkxMicroBatchStream.FramesPerPartition]].
   *
   * Emits (raw STRING, ts_recv_epoch_ms, ts_recv_mono_ns,
   * ts_decoded_mono_ns, ts_proc_mono_ns) — the Normalizer's input contract.
@@ -92,16 +97,9 @@ case class FrameOffset(n: Long) extends Offset {
 class OkxMicroBatchStream(options: CaseInsensitiveStringMap)
     extends MicroBatchStream with SupportsAdmissionControl {
 
+  import OkxMicroBatchStream._
+
   private val maxBuffer = options.getInt("maxBuffer", 1024)  // okx_ws.py:55
-  // T6 admission control: bound frames per micro-batch so a backlog can't
-  // produce one monster batch (keeps triggers responsive; backlog drains
-  // over successive batches). Enforced via SupportsAdmissionControl —
-  // clamping in planInputPartitions would silently LOSE the overflow,
-  // because the engine commits whatever end offset latestOffset returned.
-  private val maxPerTrigger = options.getLong("maxFramesPerTrigger", 100000L)
-  // parallelize reads of large batches: split the slice into chunks so a
-  // backlog drains on all cores, not one
-  private val framesPerPartition = options.getInt("framesPerPartition", 5000)
 
   // frames[i] holds global offset (base + i)
   private val frames = new ArrayBuffer[OkxSource.Frame]()
@@ -123,7 +121,7 @@ class OkxMicroBatchStream(options: CaseInsensitiveStringMap)
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(maxPerTrigger)
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(MaxFramesPerTrigger)
 
   // Largest offset this incarnation has returned from latestOffset or seen
   // as a planInputPartitions end. A start offset BEYOND this can only come
@@ -180,7 +178,7 @@ class OkxMicroBatchStream(options: CaseInsensitiveStringMap)
       frames.slice(from, until).toArray
     }
     if (slice.isEmpty) Array(FramesPartition(slice))
-    else slice.grouped(framesPerPartition).map(FramesPartition).toArray
+    else slice.grouped(FramesPerPartition).map(FramesPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -210,6 +208,19 @@ class FramesReader(frames: Array[OkxSource.Frame]) extends PartitionReader[Inter
       f.recvEpochMs, f.recvMonoNs, f.recvMonoNs, f.recvMonoNs)
   }
   override def close(): Unit = ()
+}
+
+object OkxMicroBatchStream {
+  /** T6 admission control: bound frames per micro-batch so a backlog can't
+    * produce one monster batch (keeps triggers responsive; backlog drains
+    * over successive batches). Enforced via SupportsAdmissionControl —
+    * clamping in planInputPartitions would silently LOSE the overflow,
+    * because the engine commits whatever end offset latestOffset returned.
+    */
+  val MaxFramesPerTrigger = 100000L
+  /** Parallelize reads of large batches: split the slice into chunks so a
+    * backlog drains on all cores, not one. */
+  val FramesPerPartition = 5000
 }
 
 /** Pluggable frame feed. */

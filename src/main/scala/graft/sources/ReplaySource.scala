@@ -21,16 +21,7 @@ object ReplaySource {
   /** Wire schema: payload is the superset of both shapes (absent fields
     * null — the discriminator is event_type).
     */
-  val wireSchema: StructType = StructType(Seq(
-    StructField("exchange", StringType),
-    StructField("symbol", StringType),
-    StructField("channel", StringType),
-    StructField("event_type", StringType),
-    StructField("ts_exchange_ms", LongType),
-    StructField("ts_recv_epoch_ms", LongType),
-    StructField("ts_recv_mono_ns", LongType),
-    StructField("ts_decoded_mono_ns", LongType),
-    StructField("ts_proc_mono_ns", LongType),
+  val wireSchema: StructType = StructType(Schemas.eventHeaderFields :+
     StructField("payload", StructType(Seq(
       StructField("n", IntegerType),
       StructField("best_bid", DoubleType),
@@ -40,7 +31,7 @@ object ReplaySource {
       StructField("price", DoubleType),
       StructField("size", DoubleType),
       StructField("side", StringType),
-      StructField("trade_id", StringType))))))
+      StructField("trade_id", StringType)))))
 
   private def levels(c: org.apache.spark.sql.Column) =
     transform(c, a => struct(

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ExactPercentile
-import graft.operators.WindowStats
 
 /** The streaming metrics report (SURVEY.md §2.4 A1-A4, §2.6 T1/T3):
   * 5-second sliding windows (1 s slide = the reference's 1 s report
@@ -49,25 +48,6 @@ object MetricsStream {
       sum(when(col(latCol) === 0, 1L).otherwise(0L)).as("zeros"))
       .withColumn("zero_rate_pct",
         col("zeros").cast("double") / greatest(col("total"), lit(1L)) * 100.0d)
-
-  /** A5: per-(symbol, channel) windowed count/mean/std/min/max of a Long
-    * series (the CSV-snapshot aggregate, streaming form).
-    */
-  def keyedSeriesStats(
-      events: DataFrame,
-      seriesCol: String,
-      timeCol: Column,
-      prefix: String,
-      windowLen: String = "5 seconds",
-      slide: String = "1 second"): DataFrame = {
-    val stats = WindowStats.longSeriesStats(prefix, col(seriesCol))
-    events
-      .groupBy(window(timeCol, windowLen, slide).as("w"),
-        col("symbol"), col("channel"))
-      .agg(stats.head, stats.tail: _*)
-      .withColumn("window_start", col("w.start"))
-      .drop("w")
-  }
 
   /** A7: per-symbol cumulative message counts (update/complete mode). */
   def msgCounts(events: DataFrame): DataFrame =

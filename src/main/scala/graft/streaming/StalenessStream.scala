@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -22,23 +22,36 @@ object StalenessStream {
       ts_recv_mono_ns: Long)
   case class LastTs(lastTsExchangeMs: Long)
 
-  def gaps(events: DataFrame): Dataset[StaleGap] = {
+  /** One key's micro-batch rows folded in arrival order from the key's
+    * last exchange timestamp: the gaps, and the new last timestamp. */
+  private def foldGaps(rows: Iterator[StaleIn], last: Option[Long]): (Seq[StaleGap], Option[Long]) = {
+    var lastTs = last
+    val out = rows.toSeq.sortBy(e => (e.ts_recv_mono_ns, e.ts_exchange_ms)).flatMap { e =>
+      val gap = lastTs.map(l => StaleGap(e.symbol, e.channel,
+        e.ts_exchange_ms - l, e.ts_recv_mono_ns))
+      lastTs = Some(e.ts_exchange_ms)
+      gap
+    }
+    (out, lastTs)
+  }
+
+  private def byKey(events: DataFrame): KeyValueGroupedDataset[(String, String), StaleIn] = {
     val spark = events.sparkSession
     import spark.implicits._
     events
       .select(col("symbol"), col("channel"), col("ts_exchange_ms"), col("ts_recv_mono_ns"))
       .as[StaleIn]
       .groupByKey(e => (e.symbol, e.channel))
+  }
+
+  def gaps(events: DataFrame): Dataset[StaleGap] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    byKey(events)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: (String, String), rows: Iterator[StaleIn], state: GroupState[LastTs]) => {
-          val sorted = rows.toSeq.sortBy(e => (e.ts_recv_mono_ns, e.ts_exchange_ms))
-          var last = if (state.exists) Some(state.get.lastTsExchangeMs) else None
-          val out = sorted.flatMap { e =>
-            val gap = last.map(l => StaleGap(e.symbol, e.channel,
-              e.ts_exchange_ms - l, e.ts_recv_mono_ns))
-            last = Some(e.ts_exchange_ms)
-            gap
-          }
+          val (out, last) =
+            foldGaps(rows, if (state.exists) Some(state.get.lastTsExchangeMs) else None)
           last.foreach(l => state.update(LastTs(l)))
           out.iterator
         })
@@ -60,14 +73,7 @@ object StalenessStream {
 
     override def handleInputRows(key: (String, String), rows: Iterator[StaleIn],
         timerValues: TimerValues): Iterator[StaleGap] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts_recv_mono_ns, e.ts_exchange_ms))
-      var lastTs = if (last.exists()) Some(last.get()) else None
-      val out = sorted.flatMap { e =>
-        val gap = lastTs.map(l => StaleGap(e.symbol, e.channel,
-          e.ts_exchange_ms - l, e.ts_recv_mono_ns))
-        lastTs = Some(e.ts_exchange_ms)
-        gap
-      }
+      val (out, lastTs) = foldGaps(rows, if (last.exists()) Some(last.get()) else None)
       lastTs.foreach(last.update)
       out.iterator
     }
@@ -76,10 +82,7 @@ object StalenessStream {
   def gapsTws(events: DataFrame): Dataset[StaleGap] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .select(col("symbol"), col("channel"), col("ts_exchange_ms"), col("ts_recv_mono_ns"))
-      .as[StaleIn]
-      .groupByKey(e => (e.symbol, e.channel))
+    byKey(events)
       .transformWithState(new GapsProcessor, TimeMode.None(), OutputMode.Append())
   }
 }

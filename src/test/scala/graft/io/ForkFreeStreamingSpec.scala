@@ -2,6 +2,7 @@ package graft.io
 
 import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -41,6 +42,32 @@ class ForkFreeStreamingSpec extends SparkSpec {
     } finally { rec.close(); Files.deleteIfExists(dump) }
   }
 
+  /** Runs `body` while the cleaner thread of Spark's `ArtifactManager` is
+    * parked inside a sentinel cleanup action. That cleaner deletes the
+    * artifact directory of every SparkSession the GC collects through
+    * `rm -rf`, on its one thread; a session an earlier suite left behind
+    * could otherwise be collected, and its directory deleted, inside the
+    * recording. Held, the thread runs those cleanups after `body`. */
+  private def withArtifactCleanerHeld[A](body: => A): A = {
+    val module = Class.forName("org.apache.spark.sql.artifact.ArtifactManager$")
+      .getField("MODULE$").get(null)
+    val cleaner = module.getClass
+      .getMethod("org$apache$spark$sql$artifact$ArtifactManager$$cleaner")
+      .invoke(module).asInstanceOf[java.lang.ref.Cleaner]
+    val held = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    cleaner.register(new Object, () => { held.countDown(); release.await() })
+    try {
+      var gcs = 0
+      while (!held.await(100, TimeUnit.MILLISECONDS)) {
+        gcs += 1
+        assert(gcs <= 100, "the artifact cleaner never ran the sentinel")
+        System.gc()
+      }
+      body
+    } finally release.countDown()
+  }
+
   private def describe(e: RecordedEvent): String =
     e.getString("command") + Option(e.getStackTrace).toSeq
       .flatMap(_.getFrames.asScala.take(12))
@@ -76,9 +103,11 @@ class ForkFreeStreamingSpec extends SparkSpec {
     // run by the driver heartbeater at its first beat), and the `rm -rf`
     // of a RocksDB store's local dir when the background maintenance
     // thread unloads a store an earlier stream in this JVM left loaded.
+    // A collected session's artifact-directory `rm -rf` is held off by
+    // withArtifactCleanerHeld.
     Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
     StateStore.stop()
-    val (q, starts) = processStarts {
+    val (q, starts) = withArtifactCleanerHeld(processStarts {
       val queries = Seq(
         Sinks.jsonl(events, new File(dir, "jsonl").getPath, new File(dir, "ckpt/jsonl").getPath).start(),
         MetricsStream.latencyPercentiles(Derived.withLatencies(events),
@@ -93,7 +122,7 @@ class ForkFreeStreamingSpec extends SparkSpec {
         }
       } finally queries.foreach(_.stop())
       queries.head
-    }
+    })
 
     assert(q.exception.isEmpty)
     assert(q.lastProgress.batchId == 2, "expected exactly 3 JSONL micro-batches")
