@@ -54,12 +54,6 @@ object Multimodal {
       StructField("media_bytes", BinaryType),
       StructField("media_type", StringType))(r => Row(r.getLong(0), encode(r), mediaType))
 
-  /** (doc_id, fields…) decoded from each payload's `media_bytes`. */
-  private def decodeMedia(media: DataFrame, fields: StructField*)(
-      decode: Array[Byte] => Seq[Any]): DataFrame =
-    perPartition(media.select(col("doc_id"), col("media_bytes")), docIdField +: fields: _*)(r =>
-      Row.fromSeq(r.getLong(0) +: decode(r.getAs[Array[Byte]]("media_bytes"))))
-
   /** Attach an opaque payload + metadata to a documents table (the harness
     * has no real image bytes; text bytes stand in — the engine treats them
     * as opaque either way).
@@ -243,16 +237,17 @@ object Multimodal {
 
   /** Decode RGB PNG bytes into per-channel features. */
   def decodeRgbImages(media: DataFrame): DataFrame =
-    decodeMedia(media,
+    perPartition(media.select(col("doc_id"), col("media_bytes")),
+      docIdField,
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("sum_r", LongType),
       StructField("sum_g", LongType),
       StructField("sum_b", LongType),
       StructField("pix_checksum", LongType),
-      StructField("mean_luma", DoubleType)) { bytes =>
-      val d = RgbCodec.decode(bytes)
-      Seq[Any](d.width, d.height, d.sumR, d.sumG, d.sumB, d.pixChecksum, d.meanLuma)
+      StructField("mean_luma", DoubleType)) { r =>
+      val d = RgbCodec.decode(r.getAs[Array[Byte]](1))
+      Row(r.getLong(0), d.width, d.height, d.sumR, d.sumG, d.sumB, d.pixChecksum, d.meanLuma)
     }
 
   /** Deterministic per-doc image dimensions (shared by synthesis and the
@@ -269,14 +264,15 @@ object Multimodal {
 
   /** Decode PNG bytes through ImageIO into pixel-level features. */
   def decodeImages(media: DataFrame): DataFrame =
-    decodeMedia(media,
+    perPartition(media.select(col("doc_id"), col("media_bytes")),
+      docIdField,
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("pix_sum", LongType),
       StructField("pix_checksum", LongType),
-      StructField("mean_gray", DoubleType)) { bytes =>
-      val d = ImageCodec.decode(bytes)
-      Seq[Any](d.width, d.height, d.pixSum, d.pixChecksum, d.meanGray)
+      StructField("mean_gray", DoubleType)) { r =>
+      val d = ImageCodec.decode(r.getAs[Array[Byte]](1))
+      Row(r.getLong(0), d.width, d.height, d.pixSum, d.pixChecksum, d.meanGray)
     }
 
   /** Perceptual hash per image through the real PNG decode path (decode →
@@ -285,11 +281,12 @@ object Multimodal {
     * bug hash-mismatches).
     */
   def imageDHashes(media: DataFrame): DataFrame =
-    decodeMedia(media,
+    perPartition(media.select(col("doc_id"), col("media_bytes")),
+      docIdField,
       StructField("hash_lo", LongType),
-      StructField("hash_hi", LongType)) { bytes =>
-      val d = ImageCodec.dHash(bytes)
-      Seq[Any](d.hashLo, d.hashHi)
+      StructField("hash_hi", LongType)) { r =>
+      val d = ImageCodec.dHash(r.getAs[Array[Byte]](1))
+      Row(r.getLong(0), d.hashLo, d.hashHi)
     }
 
   /** Real JVM audio codec: WAV (RIFF/WAVE, PCM signed 16-bit LE mono) via
@@ -511,7 +508,8 @@ object Multimodal {
     * features (header fields + PCM sums/checksum).
     */
   def decodeAudio(media: DataFrame): DataFrame =
-    decodeMedia(media,
+    perPartition(media.select(col("doc_id"), col("media_bytes")),
+      docIdField,
       StructField("sample_rate", IntegerType),
       StructField("channels", IntegerType),
       StructField("bits", IntegerType),
@@ -519,9 +517,9 @@ object Multimodal {
       StructField("sample_sum", LongType),
       StructField("abs_sum", LongType),
       StructField("sample_checksum", LongType),
-      StructField("mean_abs", DoubleType)) { bytes =>
-      val d = AudioCodec.decode(bytes)
-      Seq[Any](d.sampleRate, d.channels, d.bits, d.nSamples, d.sampleSum, d.absSum,
+      StructField("mean_abs", DoubleType)) { r =>
+      val d = AudioCodec.decode(r.getAs[Array[Byte]](1))
+      Row(r.getLong(0), d.sampleRate, d.channels, d.bits, d.nSamples, d.sampleSum, d.absSum,
         d.sampleChecksum, d.meanAbs)
     }
 
@@ -534,15 +532,16 @@ object Multimodal {
 
   /** Windowed loudness census through the real WAV decode path. */
   def decodeAudioLoudness(media: DataFrame): DataFrame =
-    decodeMedia(media,
+    perPartition(media.select(col("doc_id"), col("media_bytes")),
+      docIdField,
       StructField("n_samples", LongType),
       StructField("n_windows", LongType),
       StructField("n_clipped", LongType),
       StructField("n_quiet", LongType),
       StructField("energy", LongType),
-      StructField("peak_abs", IntegerType)) { bytes =>
-      val d = AudioCodec.decodeLoudness(bytes)
-      Seq[Any](d.nSamples, d.nWindows, d.nClipped, d.nQuiet, d.energy, d.peakAbs)
+      StructField("peak_abs", IntegerType)) { r =>
+      val d = AudioCodec.decodeLoudness(r.getAs[Array[Byte]](1))
+      Row(r.getLong(0), d.nSamples, d.nWindows, d.nClipped, d.nQuiet, d.energy, d.peakAbs)
     }
 
   /** Codec-free byte-level feature extraction for opaque payloads with no

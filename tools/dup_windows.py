@@ -1,18 +1,18 @@
 #!/usr/bin/env python3
 """Count code lines and repeated-window lines in Scala sources.
 
-Usage:
-    python3 tools/dup_windows.py [ROOT] [--window N] [--top K]
+Usage (from the repo root):
+    python3 tools/dup_windows.py
 
-ROOT defaults to src/main/scala. For every *.scala file under ROOT, in
-sorted path order, the tool:
+For every *.scala file under src/main/scala, in sorted path order, the
+tool:
 
 1. strips comments (`//` to end of line, `/* ... */` blocks, nested as in
    Scala) while leaving string literals (`"..."`, `\"\"\"...\"\"\"`) and
    character literals intact, so `file://` inside a string is code;
 2. drops blank lines and normalizes each remaining line by trimming it
    and collapsing every run of whitespace to one space;
-3. slides a window of N (default 6) consecutive normalized lines over
+3. slides a window of 6 consecutive normalized lines over
    the file. A window whose text already occurred at an earlier position
    (same file or an earlier file) is a repeat; every line inside a repeat
    window is counted once as "repeated".
@@ -21,10 +21,8 @@ It prints one tab-separated row per file (`code` = non-comment,
 non-blank lines; `repeated` = lines covered by repeat windows), then a
 `TOTAL` row. The output depends only on the files' contents.
 """
-import argparse
 import hashlib
 import os
-import sys
 
 
 def strip_comments(src):
@@ -86,42 +84,37 @@ def code_lines(path):
     return [" ".join(line.split()) for line in text.split("\n") if line.strip()]
 
 
-def scan(root, window):
+ROOT = "src/main/scala"
+WINDOW = 6
+
+
+def scan():
     paths = sorted(
         os.path.join(d, f)
-        for d, _, files in os.walk(root) for f in files if f.endswith(".scala"))
+        for d, _, files in os.walk(ROOT) for f in files if f.endswith(".scala"))
     seen = set()
     rows = []
     for path in paths:
         lines = code_lines(path)
         covered = [False] * len(lines)
-        for k in range(len(lines) - window + 1):
-            key = hashlib.sha1("\n".join(lines[k:k + window]).encode()).digest()
+        for k in range(len(lines) - WINDOW + 1):
+            key = hashlib.sha1("\n".join(lines[k:k + WINDOW]).encode()).digest()
             if key in seen:
-                for j in range(k, k + window):
+                for j in range(k, k + WINDOW):
                     covered[j] = True
             else:
                 seen.add(key)
-        rows.append((os.path.relpath(path, root), len(lines), sum(covered)))
+        rows.append((os.path.relpath(path, ROOT), len(lines), sum(covered)))
     return rows
 
 
-def main(argv):
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("root", nargs="?", default="src/main/scala")
-    ap.add_argument("--window", type=int, default=6)
-    ap.add_argument("--top", type=int, default=0,
-                    help="print only the K files with the most repeated lines")
-    args = ap.parse_args(argv)
-    rows = scan(args.root, args.window)
-    shown = rows
-    if args.top:
-        shown = sorted(rows, key=lambda r: (-r[2], r[0]))[:args.top]
+def main():
+    rows = scan()
     print("file\tcode\trepeated")
-    for path, code, rep in shown:
+    for path, code, rep in rows:
         print(f"{path}\t{code}\t{rep}")
     print(f"TOTAL\t{sum(r[1] for r in rows)}\t{sum(r[2] for r in rows)}")
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:])
+    main()
