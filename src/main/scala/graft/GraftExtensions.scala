@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{MinHashSigs, ParseBookLevels, ParseOkxFrame, PyDoubleRepr, PyFormatFixed, SortedIntersectCount, TokenHash32, VecCosine, VecDot, VecSqDist}
+import graft.functions.{ExactPercentileAgg, MinHashSigs, ParseOkxFrame, PyDoubleRepr, PyFormatFixed, SortedIntersectCount, TokenHash32, VecCosine, VecDot, VecSqDist}
 
 /** Session-extension injection point for the engine's native expressions —
   * the supported way to ship a Catalyst expression library so plain SQL
@@ -20,14 +20,19 @@ import graft.functions.{MinHashSigs, ParseBookLevels, ParseOkxFrame, PyDoubleRep
   * `GraftSession` wires this automatically. Registered functions:
   *
   *  - `parse_okx_frame(raw)` — whole OKX frame → normalized event array
-  *  - `parse_book_levels(levels)` — [px,sz,_,cnt] string arrays → structs
+  *  - `exact_percentile(x, array(p...))` — floor-index nearest-rank
+  *    percentiles (aggregate; the percentages must be an array literal)
   *  - `minhash_sigs(shingles, n)` — n minhash minima in one pass
   *  - `py_double_repr(x)` — CPython repr/json.dumps double rendering
+  *  - `py_format_fixed(x, prec)` — CPython `f'{x:.Nf}'` fixed rendering
+  *    (ties-to-even)
   *  - `token_hash32(tokens)` — 32-bit md5-derived token hashes
   *  - `vec_dot(a, b)` / `vec_sqdist(a, b)` / `vec_cosine(a, b)` — dense-
   *    vector kernels with exact left-to-right fold order
   *  - `sorted_intersect_count(a, b)` — zero-allocation |a ∩ b| merge walk
   *    over sorted duplicate-free array<string>
+  *  - `range_binned(point, lo, hi, width)` — a join predicate for the
+  *    range-join rewrite below
   *
   * Also injects the [[graft.plans.RangeJoinRewrite]] optimizer rule
   * (point-in-interval joins → bin-bucketed equi-joins, opt-in via
@@ -47,9 +52,24 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("parse_okx_frame"),
       info("parse_okx_frame", "raw OKX WebSocket frame -> array of normalized event structs"),
       (exprs: Seq[Expression]) => ParseOkxFrame(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("parse_book_levels"),
-      info("parse_book_levels", "OKX [px,sz,liq,cnt] string levels -> array<struct<price,size,count>>"),
-      (exprs: Seq[Expression]) => ParseBookLevels(exprs.head)))
+    ext.injectFunction((FunctionIdentifier("exact_percentile"),
+      info("exact_percentile", "exact_percentile(value, array(percentages...)): floor-index nearest-rank percentiles, one per percentage"),
+      (exprs: Seq[Expression]) => {
+        require(exprs.length == 2,
+          "exact_percentile(value, array(percentages...))")
+        val ps = exprs(1) match {
+          case a: org.apache.spark.sql.catalyst.expressions.CreateArray =>
+            a.children.map(_.eval(null) match {
+              case d: java.lang.Double => d.doubleValue()
+              case d: java.math.BigDecimal => d.doubleValue()
+              case d: org.apache.spark.sql.types.Decimal => d.toDouble
+              case other => other.toString.toDouble
+            })
+          case other => throw new IllegalArgumentException(
+            s"percentages must be an array literal, got $other")
+        }
+        ExactPercentileAgg(exprs.head, ps)
+      }))
     ext.injectFunction((FunctionIdentifier("minhash_sigs"),
       info("minhash_sigs", "minhash_sigs(shingles, n): n salted-md5 minhash minima in one pass"),
       (exprs: Seq[Expression]) => MinHashSigs(exprs.head,

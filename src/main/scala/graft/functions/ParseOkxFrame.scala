@@ -15,9 +15,10 @@ import graft.model.Schemas
   * `array<struct<symbol, channel, event_type, ts_exchange_ms, book, trade>>`
   * in a single streaming-Jackson pass (no intermediate envelope tree).
   *
-  * Replaces `from_json(rawEnvelopeType)` + the declarative event-builder
-  * (see [[graft.operators.Normalizer.normalizeDeclarative]]): identical
-  * semantics, ~10x less CPU per frame — `from_json` materializes the full
+  * Replaces `from_json` into the raw envelope + a declarative event
+  * builder (kept in test scope as `graft.operators.NormalizerOracle`, the
+  * reference the normalizer specs compare against): identical semantics,
+  * ~10x less CPU per frame — `from_json` materializes the full
   * nested envelope (array<array<string>> levels and all unused fields)
   * before any of it is inspected, while this parser emits final event
   * structs directly and skips dead subtrees.
@@ -40,7 +41,9 @@ import graft.model.Schemas
   *
   * Numeric casts mirror the engine's `try_cast` domain: trimmed
   * `Long.parseLong` / `Double.parseDouble`, null on failure — identical to
-  * Python `int()`/`float()` on the wire's plain decimal strings. JSON
+  * Python `int()`/`float()` on the wire's plain decimal strings — plus
+  * Python `float()`'s nan/inf/infinity literals in any case and with an
+  * optional sign (`try_cast` takes them too, except a signed nan). JSON
   * numbers (unquoted) are accepted via their literal text, as `from_json`
   * into a StringType field does.
   *
@@ -99,8 +102,22 @@ object ParseOkxFrame {
 
   private def parseDouble(s: String): java.lang.Double = {
     if (s == null) return null
-    try java.lang.Double.valueOf(s.trim)
-    catch { case _: NumberFormatException => null }
+    val t = s.trim
+    try java.lang.Double.valueOf(t)
+    catch { case _: NumberFormatException => pySpecialFloat(t) }
+  }
+
+  /** The special literals Python `float()` takes and `Double.valueOf`
+    * rejects: nan, inf, infinity in any case, with an optional sign. */
+  private def pySpecialFloat(t: String): java.lang.Double = {
+    val neg = t.startsWith("-")
+    val body = (if (neg || t.startsWith("+")) t.substring(1) else t).toLowerCase(java.util.Locale.ROOT)
+    body match {
+      case "nan" => java.lang.Double.NaN
+      case "inf" | "infinity" =>
+        if (neg) java.lang.Double.NEGATIVE_INFINITY else java.lang.Double.POSITIVE_INFINITY
+      case _ => null
+    }
   }
 
   private def parseInt(s: String): java.lang.Integer = {

@@ -4,39 +4,11 @@ import org.apache.spark.sql.types._
 
 /** Engine schemas mirroring the reference's data model (SURVEY.md §1).
   *
-  * The raw envelope matches what the OKX WebSocket delivers
-  * (reference/src/normalizer.py:64-78); numerics arrive as strings and are
-  * cast with skip-on-malformed semantics (normalizer.py:87-91,100-121,
-  * 164-174). `NormalizedEvent` mirrors reference/src/normalizer.py:37-48
+  * `NormalizedEvent` mirrors reference/src/normalizer.py:37-48
   * with the payload union (BookPayload | TradePayload) represented as two
   * nullable struct columns discriminated by `event_type` (SURVEY.md §1.4).
   */
 object Schemas {
-
-  /** One merged item schema for both channels; `from_json` (PERMISSIVE)
-    * leaves the fields of the "other" channel null, which the channel
-    * dispatch (N3) then ignores.
-    */
-  val rawItemType: StructType = StructType(Seq(
-    StructField("ts", StringType),
-    // books5 (normalizer.py:87-95): level = [px, sz, liquidated, count] strings
-    StructField("bids", ArrayType(ArrayType(StringType))),
-    StructField("asks", ArrayType(ArrayType(StringType))),
-    // trades (normalizer.py:164-174)
-    StructField("px", StringType),
-    StructField("sz", StringType),
-    StructField("side", StringType),
-    StructField("tradeId", StringType)
-  ))
-
-  /** Raw OKX envelope: {event?, arg:{channel, instId}, data:[...]} */
-  val rawEnvelopeType: StructType = StructType(Seq(
-    StructField("event", StringType),
-    StructField("arg", StructType(Seq(
-      StructField("channel", StringType),
-      StructField("instId", StringType)))),
-    StructField("data", ArrayType(rawItemType))
-  ))
 
   val bookLevelType: StructType = StructType(Seq(
     StructField("price", DoubleType, nullable = false),

@@ -754,19 +754,25 @@ object ScaleQueries extends Registry {
     (s, d) => {
       // tuned AQE thresholds on a session CLONE (ConfScope) — collect and
       // plan assert both execute under the clone's confs.
+      // The skew test compares the hot partition with the MEDIAN partition
+      // size, so both split counts are fixed rather than the session's
+      // core count: with 2 reduce partitions the median is the mean of the
+      // two, and the hot partition can never reach 2x of it.
+      val splits = 8
       val out = ConfScope.withConfs(s,
+        "spark.sql.shuffle.partitions" -> splits.toString,
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.skewJoin.enabled" -> "true",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
         "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true") { c =>
-        // fanOut matters beyond parallelism here: AQE splits a skewed
-        // reduce partition at MAP-OUTPUT granularity, so a single-mapper
-        // scan (one small parquet file) leaves nothing to split and the
-        // rule silently never fires — exactly the single-file trap a
-        // 100 TB table never has
-        val fact = Tables.fanOut(Tables.lineitem(c, d)).select(
+        // the map-side split matters beyond parallelism here: AQE splits a
+        // skewed reduce partition at MAP-OUTPUT granularity, so a
+        // single-mapper scan (one small parquet file) leaves nothing to
+        // split and the rule silently never fires — exactly the
+        // single-file trap a 100 TB table never has
+        val fact = Tables.lineitem(c, d).repartition(splits).select(
           when(col("l_orderkey") % 10 < 7, 0L)
             .otherwise(col("l_orderkey") % 97).as("k"),
           col("l_extendedprice"), col("l_quantity"))

@@ -13,12 +13,3 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
-/** Registers engine functions into the session's (private[sql]) function
-  * registry so they resolve from SQL text.
-  */
-object FunctionRegistryBridge {
-  def register(spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "scala_udf")
-}

@@ -46,11 +46,23 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(e.getMessage.contains("array<double>") || e.getMessage.toLowerCase.contains("type"))
   }
 
-  test("parse_book_levels resolves from SQL text") {
+  test("py_format_fixed resolves from SQL text and rounds ties to even") {
     val r = spark.sql(
-      "SELECT parse_book_levels(array(array('1.5','2.0','0','3'), array('bad','x','0','1'))) AS lv")
-      .collect().head
-    val lv = r.getSeq[org.apache.spark.sql.Row](0)
-    assert(lv.length == 1 && lv.head.getDouble(0) == 1.5 && lv.head.getInt(2) == 3)
+      "SELECT py_format_fixed(0.125D, 2) AS t, py_format_fixed(2.5D, 0) AS u").collect().head
+    // CPython f'{0.125:.2f}' == '0.12'; Java's HALF_UP would give 0.13
+    assert(r.getString(0) == "0.12")
+    assert(r.getString(1) == "2")
+  }
+
+  test("exact_percentile resolves from SQL text") {
+    import spark.implicits._
+    Seq(("a", 1.0), ("a", 2.0), ("a", 3.0), ("b", 10.0))
+      .toDF("g", "x").createOrReplaceTempView("fx")
+    val out = spark.sql(
+      "SELECT g, exact_percentile(x, array(0.5D, 1.0D)) AS p FROM fx GROUP BY g ORDER BY g")
+      .collect().map(r => r.getString(0) ->
+        r.getAs[scala.collection.Seq[Double]]("p").toSeq).toMap
+    assert(out("a") == Seq(2.0, 3.0))
+    assert(out("b") == Seq(10.0, 10.0))
   }
 }

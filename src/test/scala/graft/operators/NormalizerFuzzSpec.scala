@@ -6,13 +6,16 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Seeded fuzz: the native ParseOkxFrame path and the declarative
-  * from_json path must normalize identically over randomized frames —
+/** Seeded fuzz: the native ParseOkxFrame path and the built-ins-only
+  * [[NormalizerOracle]] (`from_json` + higher-order functions + `try_cast`)
+  * must normalize identically over randomized frames —
   * shuffled field order, unquoted JSON numbers, junk/duplicate fields,
   * short/malformed levels, bad numerics, empty/missing envelope parts.
   *
   * (This fuzz caught the declarative path missing the empty-string
-  * channel/instId drops in r02.)
+  * channel/instId drops in r02.) The oracle parses book levels with
+  * `try_cast` too, so the native level parser is checked against Spark's
+  * own casts, not against a second hand-written parser.
   *
   * Known intentional divergences are NOT generated: trailing garbage
   * after the root (native is msgspec-strict, from_json lenient),
@@ -38,7 +41,7 @@ class NormalizerFuzzSpec extends SparkSpec {
     val sortCols = Seq("ts_recv_epoch_ms", "symbol", "channel",
       "ts_exchange_ms", "event_type").map(col)
     val native = Normalizer.normalize(df).sort(sortCols: _*).collect().toSeq
-    val declarative = Normalizer.normalizeDeclarative(df).sort(sortCols: _*).collect().toSeq
+    val declarative = NormalizerOracle.normalize(df).sort(sortCols: _*).collect().toSeq
     assert(native.size > 500, s"fuzz produced too few events: ${native.size}")
     assert(native.size == declarative.size,
       s"row counts differ: native=${native.size} declarative=${declarative.size}")

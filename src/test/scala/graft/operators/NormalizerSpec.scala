@@ -97,9 +97,9 @@ class NormalizerSpec extends SparkSpec {
 
   test("non-array book level is skipped individually, siblings kept (native path)") {
     // reference normalizer.py:101-102: `if not isinstance(level, list): continue`.
-    // The declarative from_json path can't express this (PERMISSIVE nulls
-    // the whole side on a conversion failure) — documented divergence of
-    // the cross-check path; the production native path is reference-true.
+    // The built-ins-only NormalizerOracle can't express this (PERMISSIVE
+    // from_json nulls the whole side on a conversion failure) — documented
+    // divergence of the oracle; the native normalizer is reference-true.
     val out = Normalizer.normalize(framesOf(
       """{"arg":{"channel":"books5","instId":"X"},"data":[{"ts":"5",
         |"bids":[7,["375.2","1.0","0","3"]],"asks":[]}]}""".stripMargin.replace("\n", "")))
@@ -128,7 +128,7 @@ class NormalizerSpec extends SparkSpec {
 
   /** Every fixture in this spec, plus ordering/duplication edge frames, must
     * normalize identically through the native ParseOkxFrame path and the
-    * declarative from_json path.
+    * built-ins-only [[NormalizerOracle]].
     */
   test("native and declarative normalizers agree on the full fixture battery") {
     val battery = framesOf(
@@ -154,10 +154,33 @@ class NormalizerSpec extends SparkSpec {
         |{"ts":"12","px":"no","sz":"2.5","side":"buy","tradeId":"c"}]}""".stripMargin.replace("\n", ""))
     val native = Normalizer.normalize(battery)
       .orderBy("symbol", "ts_exchange_ms", "channel").collect().toSeq
-    val declarative = Normalizer.normalizeDeclarative(battery)
+    val declarative = NormalizerOracle.normalize(battery)
       .orderBy("symbol", "ts_exchange_ms", "channel").collect().toSeq
     assert(native.nonEmpty)
     assert(native == declarative)
+  }
+
+  test("nan/inf literals parse as Python float() does, on both normalizers") {
+    // float() takes nan/inf/infinity in any case with an optional sign;
+    // Double.valueOf takes only "NaN"/"Infinity", try_cast no signed nan
+    val specials = Seq("nan" -> Double.NaN, "-nan" -> Double.NaN, "NaN" -> Double.NaN,
+      "inf" -> Double.PositiveInfinity, "+Infinity" -> Double.PositiveInfinity,
+      "-INF" -> Double.NegativeInfinity)
+    val frames = specials.map { case (v, _) =>
+      s"""{"arg":{"channel":"trades","instId":"X"},"data":[{"ts":"1","px":"$v","sz":"1"}]}""" } ++
+      specials.map { case (v, _) =>
+        s"""{"arg":{"channel":"books5","instId":"Y"},"data":[{"ts":"1","bids":[["$v","1","0","1"]],"asks":[]}]}""" }
+    for (norm <- Seq[DataFrame => DataFrame](Normalizer.normalize(_), NormalizerOracle.normalize(_))) {
+      val rows = norm(framesOf(frames: _*)).orderBy("ts_recv_epoch_ms").collect().toSeq
+      val prices = rows.map(r =>
+        if (r.getAs[String]("channel") == "trades")
+          r.getAs[org.apache.spark.sql.Row]("trade").getAs[Double]("price")
+        else r.getAs[org.apache.spark.sql.Row]("book").getAs[Double]("best_bid"))
+      assert(prices.size == 2 * specials.size)
+      (prices zip (specials ++ specials)).foreach { case (got, (v, want)) =>
+        assert(java.lang.Double.compare(got, want) == 0, s"$v -> $got")
+      }
+    }
   }
 
   test("capture timestamps pass through unchanged (S5) and latencies derive (D1-D3)") {

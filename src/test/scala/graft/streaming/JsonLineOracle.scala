@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** The K5 line built from Column expressions (codegen'd string
   * concatenation over [[graft.functions.PyDoubleRepr]]): the byte-identity
   * oracle for the native [[graft.functions.JsonLine]] encoder behind
-  * [[Sinks.jsonLine]], as `Normalizer.normalizeDeclarative` is for
-  * `ParseOkxFrame`. A NULL `side` renders `null`, as `trade_id` does.
+  * [[Sinks.jsonLine]], as `graft.operators.NormalizerOracle` is
+  * for `ParseOkxFrame`. A NULL `side` renders `null`, as `trade_id` does.
   */
 object JsonLineOracle {
 
