@@ -1,12 +1,14 @@
 package graft.sources
 
+import java.io.IOException
 import java.net.URI
 import java.net.http.{HttpClient, WebSocket}
 import java.util
 import java.util.concurrent.CompletionStage
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -242,7 +244,8 @@ object FrameProvider {
 /** Live feed over JDK java.net.http.WebSocket: S2 subscription
   * cross-product, S3 liveness pings, S4 exponential backoff with jitter
   * (min(30, 0.25·2^attempt)·(0.8+0.4·frac) — okx_ws.py:96-103, reset on
-  * successful connect).
+  * successful connect). Every reconnect logs its cause chain, attempt
+  * number and backoff at WARN; a fatal error ends the provider thread.
   */
 class WebSocketFrameProvider(options: CaseInsensitiveStringMap) extends FrameProvider {
   private val url = options.getOrDefault("url", "wss://ws.okx.com:8443/ws/v5/public")
@@ -268,10 +271,14 @@ class WebSocketFrameProvider(options: CaseInsensitiveStringMap) extends FramePro
           attempt = 0 // reset on clean session (okx_ws.py:60)
         } catch {
           case _: InterruptedException => interrupted = true
-          case _: Throwable =>
+          case NonFatal(e) => // a fatal error is not caught: it ends this thread
             attempt += 1
-            try Thread.sleep(WebSocketFrameProvider.backoffMillis(attempt,
-              (System.nanoTime() % 1000) / 1000.0))
+            val backoff = WebSocketFrameProvider.backoffMillis(attempt,
+              (System.nanoTime() % 1000) / 1000.0)
+            WebSocketFrameProvider.log.warn(s"okx socket $url ended: " +
+              Iterator.iterate(e)(_.getCause).takeWhile(_ != null).mkString(" <- ") +
+              s"; reconnect attempt $attempt in $backoff ms")
+            try Thread.sleep(backoff)
             catch { case _: InterruptedException => interrupted = true }
         }
       }
@@ -282,6 +289,7 @@ class WebSocketFrameProvider(options: CaseInsensitiveStringMap) extends FramePro
 
   private def runOnce(emit: String => Unit): Unit = {
     val closed = new java.util.concurrent.CountDownLatch(1)
+    val cause = new AtomicReference[Throwable]()
     val buf = new StringBuilder
     val listener = new WebSocket.Listener {
       override def onText(ws: WebSocket, data: CharSequence,
@@ -292,10 +300,13 @@ class WebSocketFrameProvider(options: CaseInsensitiveStringMap) extends FramePro
         null
       }
       override def onClose(ws: WebSocket, code: Int, reason: String): CompletionStage[_] = {
+        cause.compareAndSet(null, new IOException(s"closed by the server: $code $reason"))
         closed.countDown(); null
       }
-      override def onError(ws: WebSocket, error: Throwable): Unit =
+      override def onError(ws: WebSocket, error: Throwable): Unit = {
+        cause.compareAndSet(null, error)
         closed.countDown()
+      }
     }
     val ws = HttpClient.newHttpClient().newWebSocketBuilder()
       .connectTimeout(java.time.Duration.ofSeconds(10))  // open-timeout, okx_ws.py:50-57
@@ -308,7 +319,7 @@ class WebSocketFrameProvider(options: CaseInsensitiveStringMap) extends FramePro
       }
     }
     ws.abort()
-    if (!stopped.get()) throw new RuntimeException("socket closed; reconnect")
+    if (!stopped.get()) throw new IOException("socket closed", cause.get)
   }
 
   override def close(): Unit = {
@@ -318,6 +329,8 @@ class WebSocketFrameProvider(options: CaseInsensitiveStringMap) extends FramePro
 }
 
 object WebSocketFrameProvider {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[WebSocketFrameProvider])
+
   /** S2: symbols × channels cross-product subscription (okx_ws.py:43-45;
     * channel-major order as the reference iterates channels outermost).
     */

@@ -38,13 +38,29 @@ object Sinks {
     Schemas.normalizedEventType.fieldNames.toSeq.map(n => ColumnBridge.expression(col(n)))))
     .as("value")
 
-  /** K3/K4: partitioned JSONL file sink —
-    * `{root}/exchange=okx/channel=.../event_date=.../symbol=.../part-*.json`.
-    * Layout is Spark's `partitionBy` convention (`symbol=X/` directories vs
-    * the reference's `X.jsonl` files — a cosmetic deviation; the partition
-    * keys and line format are identical). The time bound of the
-    * reference's flush policy maps to the trigger interval; the 100-event
-    * count bound has no micro-batch analog (documented deviation, K4).
+  /** K3/K4: partitioned JSONL sink —
+    * `{root}/exchange=okx/channel=.../event_date=.../symbol=.../part-<epoch>-<partition>-<query id>.jsonl`,
+    * written by graft's own streaming sink ([[JsonlSinkProvider]]): each
+    * task appends [[jsonLine]] bytes to one buffered file per partition
+    * key, staged under a `.`-prefixed name that `spark.read` skips; the
+    * driver's epoch commit renames the staged files into place.
+    *
+    * Replay contract (per epoch, as Structured Streaming asks of a sink):
+    * the commit first records the epoch's files under
+    * `{root}/_graft_jsonl/<query id>/<epoch>`; a replayed epoch deletes
+    * what that record names before it renames its own files, so a commit
+    * cut off partway leaves no stale or duplicate lines, even when the
+    * replay has fewer partitions. There is no `_spark_metadata` log and
+    * no `.crc` sidecar; a reader listing the root while an epoch commits
+    * may see part of that epoch. Local paths only (plain or `file:`):
+    * any other URI scheme fails at `start()`.
+    *
+    * Layout is Spark's `partitionBy` convention (`symbol=X/` directories
+    * vs the reference's `X.jsonl` files — a cosmetic deviation; the
+    * partition keys and line format are identical). The time bound of
+    * the reference's flush policy maps to the trigger interval; the
+    * 100-event count bound has no micro-batch analog (documented
+    * deviation, K4).
     */
   def jsonl(events: DataFrame, root: String, checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("1 second")): DataStreamWriter[org.apache.spark.sql.Row] = {
@@ -53,8 +69,7 @@ object Sinks {
       .select(col("exchange"), col("channel"), col("event_date"), col("symbol"),
         jsonLine)
       .writeStream
-      .format("text")
-      .partitionBy("exchange", "channel", "event_date", "symbol")
+      .format(classOf[JsonlSinkProvider].getName)
       .option("path", root)
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

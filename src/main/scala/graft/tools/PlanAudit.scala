@@ -74,6 +74,9 @@ object PlanAudit {
     * @param batches    micro-batches each StreamingQuery the query started
     *                   executed, joined with "+" for the restart gates; "-"
     *                   when it started none
+    * @param expands    Expand nodes (grouping sets, multi-distinct
+    *                   aggregates, sliding time windows)
+    * @param windows    Window nodes (WindowGroupLimit is its own operator)
     */
   final case class PlanRecord(
       name: String,
@@ -91,17 +94,19 @@ object PlanAudit {
       readSchemas: Seq[String],
       stateOps: Int = 0,
       mode: String = "batch",
-      batches: String = "-") {
+      batches: String = "-",
+      expands: Int = 0,
+      windows: Int = 0) {
     def tsvLine: String =
       s"$name\t$exchanges\t$reusedExchanges\t$broadcastExchanges\t$bhj\t$smj" +
         s"\t$shj\t$bnlj\t$cartesian\t$generates\t$scans\t$scansWithPushdown" +
-        s"\t${readSchemas.mkString(";")}\t$stateOps\t$mode\t$batches"
+        s"\t${readSchemas.mkString(";")}\t$stateOps\t$mode\t$batches\t$expands\t$windows"
   }
 
   val tsvHeader: String =
     "name\texchanges\treused_exchanges\tbroadcast_exchanges\tbhj\tsmj\tshj" +
       "\tbnlj\tcartesian\tgenerates\tscans\tscans_with_pushdown\tread_schemas" +
-      "\tstate_ops\tmode\tbatches"
+      "\tstate_ops\tmode\tbatches\texpands\twindows"
 
   def parseTsv(text: String): Map[String, PlanRecord] =
     text.linesIterator.drop(1).filter(_.nonEmpty).map { l =>
@@ -112,7 +117,9 @@ object PlanAudit {
         f(10).toInt, f(11).toInt, schemas,
         if (f.length > 13) f(13).toInt else 0,
         if (f.length > 14) f(14) else "batch",
-        if (f.length > 15) f(15) else "-")
+        if (f.length > 15) f(15) else "-",
+        if (f.length > 16) f(16).toInt else 0,
+        if (f.length > 17) f(17).toInt else 0)
     }.toMap
 
   /** Formatted explain text for a registry query (initial physical plan;
@@ -164,7 +171,9 @@ object PlanAudit {
       generates = counts("Generate"),
       scans = counts("Scan parquet"),
       scansWithPushdown = pushed.count(identity),
-      readSchemas = readSchemas)
+      readSchemas = readSchemas,
+      expands = counts("Expand"),
+      windows = counts("Window"))
   }
 
   def record(spark: SparkSession, name: String, sf: String): PlanRecord =
@@ -232,7 +241,9 @@ object PlanAudit {
       readSchemas = Nil,
       stateOps = t.count(stateOpTokens),
       mode = lastExec(queries.last).outputMode.toString,
-      batches = batchCounts(queries))
+      batches = batchCounts(queries),
+      expands = c("Expand"),
+      windows = c("Window"))
   }
 
   /** Executed micro-batches per captured query, in start order ("3",
@@ -513,6 +524,14 @@ object PlanAudit {
     "q236_streaming_full_outer" ->
       "Stream-stream FULL OUTER attribution join (r09): matched pairs plus watermark-flushed unconverted impressions AND orphan clicks, each emitted once (the q137 two-sentinel advance protocol); hash-matched against the batch FULL JOIN. Completes the stream-join output-type matrix (inner/leftOuter/fullOuter); state bound identical to q137.")
 
+  /** Plan text with its run-specific names made stable: scratch paths
+    * and tables carry the JVM's pid and a per-process run counter
+    * (`graft_q136_<pid>_<n>`), writer part files a fresh UUID. Without
+    * this, every regeneration rewrites PLANS.md with no plan change. */
+  def stableNames(text: String, pid: Long = ProcessHandle.current().pid()): String =
+    text.replaceAll(s"(?<=\\w)_${pid}_\\d+", "_<pid>_<n>")
+      .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")
+
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get("plan-audit", "8")
     val sf = args.headOption.getOrElse(invariantSf)
@@ -569,7 +588,7 @@ object PlanAudit {
       }
     }
     Files.createDirectories(Paths.get(outDir))
-    Files.writeString(Paths.get(s"$outDir/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get(s"$outDir/PLANS.md"), stableNames(sb.toString))
     Files.writeString(Paths.get(s"$outDir/plan_invariants.tsv"),
       (tsvHeader +: records.map(_.tsvLine)).mkString("", "\n", "\n"))
     println(s"wrote $outDir/PLANS.md (${allNames.size} entries) and " +

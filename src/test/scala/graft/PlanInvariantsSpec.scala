@@ -60,6 +60,23 @@ class PlanInvariantsSpec extends SparkSpec {
         "and review the diff:\n" + diffs.mkString("\n"))
   }
 
+  test("the expands and windows columns pin q134/q293 without Expand and q229 with one Window") {
+    assert(golden("q134_column_profile").expands == 0)
+    assert(golden("q293_profile_census").expands == 0)
+    assert(golden("q229_roll_spread").windows == 1)
+  }
+
+  test("PLANS.md names no pid, run counter or writer UUID") {
+    val line = "Location: InMemoryFileIndex [file:/dev/shm/graft_q307_4242_3/data/" +
+      "part-00004-66e32814-f6d7-4e97-9efa-cd0f955288fe-c000.snappy.parquet, ... 2 entries]"
+    assert(PlanAudit.stableNames(line, 4242) == "Location: InMemoryFileIndex " +
+      "[file:/dev/shm/graft_q307_<pid>_<n>/data/part-00004-<uuid>-c000.snappy.parquet, ... 2 entries]")
+    assert(PlanAudit.stableNames("graft_q301_lineitem_4242_12 (1)", 4242) == "graft_q301_lineitem_<pid>_<n> (1)")
+    val plans = java.nio.file.Files.readString(java.nio.file.Paths.get("docs/PLANS.md"))
+    val runSpecific = """graft_\w*?_\d+_\d+\b|[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}""".r
+    assert(runSpecific.findFirstIn(plans).isEmpty, "a run-specific name in docs/PLANS.md")
+  }
+
   test("no CartesianProduct anywhere; BNLJ only on documented tiny sides") {
     val all = current.values ++ currentStream.values
     val cart = all.filter(_.cartesian > 0).map(_.name).toSeq.sorted
