@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.GraftSession
 import graft.operators.{Derived, Normalizer}
-import graft.streaming.{MetricsStream, Sinks, StalenessStream, TempDirs}
+import graft.streaming.{MetricsStream, Sinks, TempDirs}
 
 /** Live pipeline entry point — the analog of the reference's CLI
   * (reference/src/app.py:150-233), Spark-first: one source definition, N
@@ -77,15 +77,10 @@ object Main {
       .trigger(Trigger.ProcessingTime("1 second"))
       .start()
 
-    // K6: CSV snapshot of per-key staleness stats
-    if (opts("csv-export").nonEmpty) {
-      val gaps = StalenessStream.gaps(events).toDF()
-      val snapshot = gaps.groupBy("symbol", "channel")
-        .agg(graft.operators.WindowStats.longSeriesStats("stale", col("stale_ms")).head,
-          graft.operators.WindowStats.longSeriesStats("stale", col("stale_ms")).tail: _*)
-      queries :+= Sinks.csvSnapshot(snapshot, opts("csv-export"),
+    // K6: CSV snapshot of per-key latency and staleness stats
+    if (opts("csv-export").nonEmpty)
+      queries :+= Sinks.csvSnapshot(MetricsStream.snapshot(events), opts("csv-export"),
         s"$checkpointRoot/csv", opts("csv-export-interval").toInt).start()
-    }
 
     val durationSecs = opts("duration").toLong
     if (durationSecs > 0) {

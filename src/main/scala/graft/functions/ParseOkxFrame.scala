@@ -39,13 +39,13 @@ import graft.model.Schemas
   *    we drop, matching our tolerant-cast contract); side/tradeId nullable
   *    passthrough (:173-174)
   *
-  * Numeric casts mirror the engine's `try_cast` domain: trimmed
-  * `Long.parseLong` / `Double.parseDouble`, null on failure — identical to
-  * Python `int()`/`float()` on the wire's plain decimal strings — plus
-  * Python `float()`'s nan/inf/infinity literals in any case and with an
-  * optional sign (`try_cast` takes them too, except a signed nan). JSON
-  * numbers (unquoted) are accepted via their literal text, as `from_json`
-  * into a StringType field does.
+  * Numeric casts are the reference's Python `int()`/`float()`, null on
+  * failure: Unicode whitespace stripped at both ends, Unicode decimal
+  * digits, `_` between digits, nan/inf/infinity in any case with an
+  * optional sign, and none of Java's extras (hex floats, `d`/`f`
+  * suffixes, control chars trimmed as space). Values past the INT/BIGINT
+  * columns are dropped. JSON numbers (unquoted) are accepted via their
+  * literal text, as `from_json` into a StringType field does.
   *
   * Field order in the frame is free: the hot path processes `data` inline
   * once `arg` is known; the rare arg-after-data frame falls back to a
@@ -95,16 +95,28 @@ object ParseOkxFrame {
   private final val CH_OTHER = 3
 
   private def parseLong(s: String): java.lang.Long = {
-    if (s == null) return null
-    try java.lang.Long.valueOf(s.trim)
+    val t = pyNumberText(s)
+    if (t == null) return null
+    // ASCII in, so only [+-]?[0-9]+ parses: Python's decimal int grammar
+    try java.lang.Long.valueOf(t)
     catch { case _: NumberFormatException => null }
   }
 
+  private def parseInt(s: String): java.lang.Integer = {
+    val v = parseLong(s)
+    if (v == null || v.longValue != v.intValue) null else java.lang.Integer.valueOf(v.intValue)
+  }
+
   private def parseDouble(s: String): java.lang.Double = {
-    if (s == null) return null
-    val t = s.trim
-    try java.lang.Double.valueOf(t)
-    catch { case _: NumberFormatException => pySpecialFloat(t) }
+    val t = pyNumberText(s)
+    if (t == null) return null
+    var i = 0
+    while (i < t.length && isDecimalChar(t.charAt(i))) i += 1
+    // over these chars alone, Double.valueOf's grammar is float()'s decimal
+    // one (no hex, no d/f suffix, and nothing left for its trim to strip)
+    if (i < t.length) pySpecialFloat(t)
+    else try java.lang.Double.valueOf(t)
+    catch { case _: NumberFormatException => null }
   }
 
   /** The special literals Python `float()` takes and `Double.valueOf`
@@ -120,10 +132,56 @@ object ParseOkxFrame {
     }
   }
 
-  private def parseInt(s: String): java.lang.Integer = {
+  /** The whitespace `int()`/`float()` strip: ASCII space and \t-\r, and
+    * every non-ASCII char `str.isspace()` takes (Java's whitespace and
+    * space separators, plus NEL). ASCII \x1c-\x1f are `isspace()` too,
+    * but CPython passes ASCII through before stripping, so they stay. */
+  private def isPySpace(c: Int): Boolean =
+    if (c < 0x80) c == ' ' || (c >= '\t' && c <= '\r')
+    else Character.isWhitespace(c) || Character.isSpaceChar(c) || c == 0x85
+
+  private def isAsciiDigit(c: Int): Boolean = c >= '0' && c <= '9'
+
+  private def isDecimalChar(c: Char): Boolean =
+    isAsciiDigit(c) || c == '.' || c == 'e' || c == 'E' || c == '+' || c == '-'
+
+  /** What CPython's `int()`/`float()` parse after their first step
+    * (`_PyUnicode_TransformDecimalAndSpaceToASCII`, then strip, then
+    * PEP 515): `s` without the whitespace at either end, Unicode decimal
+    * digits as ASCII digits and each `_` between two digits dropped. Null
+    * where that step already fails: any other non-ASCII char, or a `_`
+    * not between two digits. The wire's plain ASCII strings come back as
+    * they are.
+    */
+  private def pyNumberText(s: String): String = {
     if (s == null) return null
-    try java.lang.Integer.valueOf(s.trim)
-    catch { case _: NumberFormatException => null }
+    var start = 0
+    var end = s.length
+    while (start < end && isPySpace(s.charAt(start))) start += 1
+    while (end > start && isPySpace(s.charAt(end - 1))) end -= 1
+    var i = start
+    while (i < end && s.charAt(i) < 0x80 && s.charAt(i) != '_') i += 1
+    if (i == end) return s.substring(start, end)
+    val b = new java.lang.StringBuilder(end - start)
+    var prev = 0
+    i = start
+    while (i < end) {
+      val cp = s.codePointAt(i)
+      val c =
+        if (cp < 0x80) cp
+        else if (isPySpace(cp)) ' '.toInt
+        else {
+          val d = Character.digit(cp, 10)
+          if (d < 0) return null
+          '0' + d
+        }
+      if (c == '_') { if (!isAsciiDigit(prev)) return null }
+      else if (prev == '_' && !isAsciiDigit(c)) return null
+      else b.append(c.toChar)
+      prev = c
+      i += Character.charCount(cp)
+    }
+    if (prev == '_') null else b.toString
   }
 
   /** Text of a scalar token (string or number); null for JSON null /

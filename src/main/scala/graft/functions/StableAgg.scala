@@ -98,11 +98,16 @@ object StableAgg {
 
   def lavg(c: Column): Column = sum(c).cast("double") / count(c)
 
-  /** Sample std of an integer column, exact-sum formula, 0.0 when n <= 1. */
+  /** Sample std of an integer column, exact-sum formula, 0.0 when n <= 1.
+    * The squares are summed in decimal(38,0): a Long square overflows
+    * from |x| ≈ 3.04e9 (epoch-ms-scale latencies), and the exact sum
+    * cast to double equals DuckDB's int128 sum of the same squares.
+    */
   def lstdSamp(c: Column): Column = {
     val n  = count(c).cast("double")
     val s1 = sum(c).cast("double")
-    val s2 = sum(c * c).cast("double")
+    val x  = c.cast("decimal(38,0)")
+    val s2 = sum(x * x).cast("double")
     when(count(c) <= 1, lit(0.0))
       .otherwise(sqrt(greatest((s2 - s1 * s1 / n) / (n - lit(1.0)), lit(0.0))))
   }

@@ -48,33 +48,10 @@ object WindowStats {
   def msgCounts(events: DataFrame, keyCol: String = "symbol"): DataFrame =
     events.groupBy(keyCol).agg(count(lit(1)).as("msg_count")).orderBy(keyCol)
 
-  /** A5+A6+A8+A9: the CSV snapshot table (rolling.py:147-212) — per-key
-    * latency stats FULL OUTER JOIN per-key staleness stats over the union
-    * of key sets (rolling.py:152), zero defaults, sorted keys.
-    */
-  def csvSnapshot(
-      latencies: DataFrame,   // rows with keyCols + lat col
-      staleness: DataFrame,   // rows with keyCols + stale_ms (stalenessGaps)
-      keyCols: Seq[String],
-      latCol: String): DataFrame = {
-    val lat = latencies.groupBy(keyCols.map(col): _*)
-      .agg(longSeriesStats("lat", col(latCol)).head,
-           longSeriesStats("lat", col(latCol)).tail: _*)
-    val stale = staleness.groupBy(keyCols.map(col): _*)
-      .agg(longSeriesStats("stale", col("stale_ms")).head,
-           longSeriesStats("stale", col("stale_ms")).tail: _*)
-    lat.join(stale, keyCols, "full_outer")
-      .na.fill(0L, Seq("lat_count", "stale_count"))
-      .na.fill(0.0,
-        Seq("lat_mean_ms", "lat_std_ms", "stale_mean_ms", "stale_std_ms"))
-      .na.fill(0L,
-        Seq("lat_min_ms", "lat_max_ms", "stale_min_ms", "stale_max_ms"))
-      .orderBy(keyCols.map(col): _*)
-  }
-
   /** K6/D7/D8: the reference's exact 13-column CSV shape
-    * (rolling.py:156-170) — generated_at_utc stamp first, floats
-    * %.3f-formatted, keys sorted.
+    * (rolling.py:156-170) of a per-(symbol, channel) `lat_*`/`stale_*`
+    * stats table ([[graft.streaming.MetricsStream.snapshot]]) —
+    * generated_at_utc stamp first, floats %.3f-formatted, keys sorted.
     */
   def csvSnapshotFormatted(snapshot: DataFrame): DataFrame = {
     def f3(c: String) = graft.operators.Derived.csvNum(col(c).cast("double")).as(c)
@@ -85,5 +62,6 @@ object WindowStats {
       f3("lat_min_ms"), f3("lat_max_ms"),
       col("stale_count"), f3("stale_mean_ms"), f3("stale_std_ms"),
       f3("stale_min_ms"), f3("stale_max_ms"))
+      .orderBy("symbol", "channel")
   }
 }

@@ -1120,14 +1120,6 @@ object LakehouseQueries extends Registry {
     * entries but lives and is scanned distributed, and per-file sizing
     * means ingesting new files never rebuilds or resizes old filters.
     */
-  /** Dev accessor for tools/IndexAudit's pruned-vs-full A/B: the memoized
-    * scratch file list and probe keys behind q307 (read-only view).
-    */
-  private[graft] def bloomIndexView(s: SparkSession, d: String): (Seq[String], Seq[Long]) = {
-    val idx = bloomIndex(s, d)
-    (idx.files, idx.probes)
-  }
-
   private val q307 = Q("q307_bloom_file_skip",
     (s, d) => {
       val idx = bloomIndex(s, d)
@@ -1236,43 +1228,6 @@ object LakehouseQueries extends Registry {
       bloomAppendMemo.put(d, idx): Unit
       idx
     }
-  }
-
-  /** Dev hook for tools/IndexAudit's incremental-maintenance A/B: in a
-    * FRESH scratch (never the memoized q315 index), lay out the q315
-    * corpus split, build the base manifest untimed (the pre-existing
-    * index), then time (a) the incremental append of just the late file
-    * and (b) a from-scratch rebuild over the whole corpus into a second
-    * manifest. Returns (baseFiles, incrementalSec, fullRebuildSec) — the
-    * per-file maintenance cost vs the O(corpus) cost q307 component-timed
-    * at 72 s/sf10.
-    */
-  private[graft] def bloomAppendCost(s: SparkSession, d: String)
-      : (Int, Double, Double) = {
-    val dir = graft.streaming.TempDirs.scratch(
-      s"graft_idxcost_${ProcessHandle.current().pid()}_${bloomBuilds.incrementAndGet()}")
-    val basePath = new java.io.File(dir, "base").getPath
-    val newPath = new java.io.File(dir, "new").getPath
-    val ev = Tables.events(s, d)
-      .select("event_id", "user_id", "event_type", "value")
-    ev.filter(col("event_id") % 16 =!= 15)
-      .repartition(15, col("user_id"))
-      .write.mode("overwrite").parquet(basePath)
-    ev.filter(col("event_id") % 16 === 15)
-      .repartition(1)
-      .write.mode("overwrite").parquet(newPath)
-    val m1 = new java.io.File(dir, "meta_inc").getPath
-    val w1 = new java.io.File(dir, "words_inc").getPath
-    writeBloomManifest(s, Seq(basePath), m1, w1, "overwrite")
-    val t0 = System.nanoTime()
-    writeBloomManifest(s, Seq(newPath), m1, w1, "append")
-    val incSec = (System.nanoTime() - t0) / 1e9
-    val m2 = new java.io.File(dir, "meta_full").getPath
-    val w2 = new java.io.File(dir, "words_full").getPath
-    val t1 = System.nanoTime()
-    writeBloomManifest(s, Seq(basePath, newPath), m2, w2, "overwrite")
-    val fullSec = (System.nanoTime() - t1) / 1e9
-    (s.read.parquet(basePath).inputFiles.length, incSec, fullSec)
   }
 
   /** Dev accessor for q315 certificates: (base-manifest snapshot taken

@@ -770,15 +770,6 @@ object TrainingDataQueries extends Registry {
     * capped ⊆ uncapped, the per-bucket C(k,2) bound, and the keep-best
     * property; the sf10 A/B row lives in docs/SCALING.md.
     */
-  /** Capped LSH candidate pairs at family cap `k` — q313's pair driver,
-    * shared with PairCensus so the scale table counts exactly the pair
-    * population the gate processes.
-    */
-  private[graft] def cappedLshPairsFrame(s: org.apache.spark.sql.SparkSession,
-      d: String, k: Int): org.apache.spark.sql.DataFrame =
-    Dedup.cappedLshCandidatePairs(
-      bandSigs(s, d).join(qualityScores(s, d), "doc_id"), NumBands, k)
-
   /** (doc_id, quality_score) over the fanned-out corpus — the Spark side
     * of [[duckQuality]] (q41, q313). */
   private def qualityScores(s: SparkSession, d: String) =
@@ -790,7 +781,8 @@ object TrainingDataQueries extends Registry {
     (s, d) => {
       // one explode, one aggregate: a union of two projections would
       // execute the pair join twice (the branches differ, so no reuse)
-      cappedLshPairsFrame(s, d, CapK)
+      Dedup.cappedLshCandidatePairs(
+          bandSigs(s, d).join(qualityScores(s, d), "doc_id"), NumBands, CapK)
         .select(explode(array(col("doc_id_a"), col("doc_id_b"))).as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_partners"))
         .orderBy("doc_id")
@@ -1754,55 +1746,40 @@ object TrainingDataQueries extends Registry {
     * -XX:-DontCompileHugeMethods keeps the generated stages compilable
     * at all.
     */
-  /** q135's shingle-set and candidate-pair relations, extracted so the
-    * scale census (tools via [[PairCensus]]) can count the TRUE work unit
-    * of the exact-Jaccard join — candidate pairs — without duplicating
-    * the prefix-filter logic (docs/SCALING.md "work-unit-normalized"
-    * table: the skew fixture grows dup families linearly with copies, so
-    * pair populations grow quadratically while wall stays sub-linear PER
-    * PAIR).
-    */
-  private[queries] def q135Candidates(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val tau = 0.6
-    // leave string space immediately: one xxhash64 per distinct shingle
-    // localCheckpoint: the shingle→hash→sort relation feeds THREE
-    // consumers (tf via the explode, the prefix table, and both sides
-    // of the verify join) with different downstream partitionings, so
-    // without it the tokenizer+xxhash64+sort pipeline re-executes per
-    // consumer — the r10 postmortem attributed q135's residual sample
-    // variance (spread 2.2, gc_ms up to 5.5 s) to exactly this
-    // repeated array churn. Materializing |docs| sorted long[] once
-    // (MBs at sf0.1; at 100 TB this is the standard cache/checkpoint
-    // of a reused candidate relation) cuts the work 3× and the
-    // allocation pressure with it (the q116 edge-relation device).
-    val t = Tables.fanOut(Tables.documents(s, d))
-      .select(col("doc_id"),
-        array_sort(array_distinct(transform(
-          array_distinct(TextAnalysis.shingles(TextAnalysis.tokens(col("text")), 3)),
-          tk => xxhash64(tk)))).as("hs"))
-      .localCheckpoint()
-    val ex = t.select(col("doc_id"), size(col("hs")).as("n"), explode(col("hs")).as("tok"))
-    val tf = ex.groupBy("tok").agg(count(lit(1)).as("freq"))
-    val w = Window.partitionBy("doc_id").orderBy(col("freq").asc, col("tok").asc)
-    val pfx = ex.join(tf, "tok")
-      .withColumn("r", row_number().over(w))
-      .filter(col("r") <= col("n") - ceil(col("n") * lit(tau)) + 1)
-      .select(col("tok"), col("doc_id"))
-    val cand = pfx.as("a").join(pfx.as("b"), "tok")
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
-    (t, cand)
-  }
-
   private val q135 = Q("q135_prefix_filter_join",
     (s, d) => {
       val tau = 0.6
-      val (t, cand) = q135Candidates(s, d)
-      val th = t
+      // leave string space immediately: one xxhash64 per distinct shingle
+      // localCheckpoint: the shingle→hash→sort relation feeds THREE
+      // consumers (tf via the explode, the prefix table, and both sides
+      // of the verify join) with different downstream partitionings, so
+      // without it the tokenizer+xxhash64+sort pipeline re-executes per
+      // consumer — the r10 postmortem attributed q135's residual sample
+      // variance (spread 2.2, gc_ms up to 5.5 s) to exactly this
+      // repeated array churn. Materializing |docs| sorted long[] once
+      // (MBs at sf0.1; at 100 TB this is the standard cache/checkpoint
+      // of a reused candidate relation) cuts the work 3× and the
+      // allocation pressure with it (the q116 edge-relation device).
+      val t = Tables.fanOut(Tables.documents(s, d))
+        .select(col("doc_id"),
+          array_sort(array_distinct(transform(
+            array_distinct(TextAnalysis.shingles(TextAnalysis.tokens(col("text")), 3)),
+            tk => xxhash64(tk)))).as("hs"))
+        .localCheckpoint()
+      val ex = t.select(col("doc_id"), size(col("hs")).as("n"), explode(col("hs")).as("tok"))
+      val tf = ex.groupBy("tok").agg(count(lit(1)).as("freq"))
+      val w = Window.partitionBy("doc_id").orderBy(col("freq").asc, col("tok").asc)
+      val pfx = ex.join(tf, "tok")
+        .withColumn("r", row_number().over(w))
+        .filter(col("r") <= col("n") - ceil(col("n") * lit(tau)) + 1)
+        .select(col("tok"), col("doc_id"))
+      val cand = pfx.as("a").join(pfx.as("b"), "tok")
+        .filter(col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
+        .distinct()
       cand
-        .join(th.as("ta").hint("shuffle_hash"), col("da") === col("ta.doc_id"))
-        .join(th.as("tb").hint("shuffle_hash"), col("db") === col("tb.doc_id"))
+        .join(t.as("ta").hint("shuffle_hash"), col("da") === col("ta.doc_id"))
+        .join(t.as("tb").hint("shuffle_hash"), col("db") === col("tb.doc_id"))
         .withColumn("inter", org.apache.spark.sql.graftbridge.ColumnBridge.column(
           graft.functions.SortedIntersectCount(
             org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("ta.hs")),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ExactPercentile
+import graft.operators.{Derived, WindowStats}
 
 /** The streaming metrics report (SURVEY.md §2.4 A1-A4, §2.6 T1/T3):
   * 5-second sliding windows (1 s slide = the reference's 1 s report
@@ -52,6 +53,25 @@ object MetricsStream {
   /** A7: per-symbol cumulative message counts (update/complete mode). */
   def msgCounts(events: DataFrame): DataFrame =
     events.groupBy("symbol").agg(count(lit(1)).as("msg_count"))
+
+  /** K6: the CSV snapshot table (rolling.py:147-212) over every event
+    * since stream start: per (symbol, channel), A5/A9 stats of the
+    * exchange→receive latency (`lat_*`) and of the A6 staleness gaps
+    * (`stale_*`, [[StalenessStream.gaps]]), with zero defaults for a key
+    * that has only one of the two series. Both series are tagged and
+    * unioned into one aggregate, so a complete-mode query emits the whole
+    * table every trigger. [[Sinks.csvSnapshot]] formats and writes it.
+    */
+  def snapshot(events: DataFrame): DataFrame = {
+    val keys = Seq(col("symbol"), col("channel"))
+    def series(name: String, rows: DataFrame, v: Column) =
+      rows.select(keys :+ lit(name).as("series") :+ v.as("v"): _*)
+    val stats = Seq("lat", "stale").flatMap(p =>
+      WindowStats.longSeriesStats(p, when(col("series") === p, col("v"))))
+    series("lat", events, Derived.latExToRecvMs)
+      .unionByName(series("stale", StalenessStream.gaps(events).toDF(), col("stale_ms")))
+      .groupBy(keys: _*).agg(stats.head, stats.tail: _*)
+  }
 
   /** The reference's one-line metrics report (rolling.py:113-145;
     * README.md:176-185): three latency series with floor-index

@@ -10,7 +10,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.functions.JsonLine
 import graft.model.Schemas
-import graft.operators.Derived
+import graft.operators.{Derived, WindowStats}
 
 /** The reference's three sinks (SURVEY.md §2.5), Spark-first.
   *
@@ -86,9 +86,12 @@ object Sinks {
       .trigger(trigger)
 
   /** K6: CSV metrics snapshot — full-overwrite single file via
-    * foreachBatch: write to a temp dir, then atomically move the single
-    * part file over `metrics_summary.csv` (reference/src/metrics/
-    * rolling.py:147-212 overwrite semantics).
+    * foreachBatch: format each complete-mode table of
+    * [[MetricsStream.snapshot]] into the reference's 13 columns
+    * ([[graft.operators.WindowStats.csvSnapshotFormatted]]), write it to a
+    * temp dir, then atomically move the single part file over
+    * `metrics_summary.csv` (reference/src/metrics/rolling.py:147-212
+    * overwrite semantics).
     */
   def csvSnapshot(snapshot: DataFrame, outFile: String, checkpoint: String,
       intervalSecs: Int = 30): DataStreamWriter[org.apache.spark.sql.Row] = {
@@ -97,7 +100,7 @@ object Sinks {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(s"$intervalSecs seconds"))
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        writeSnapshotCsv(df, outFile)
+        writeSnapshotCsv(WindowStats.csvSnapshotFormatted(df), outFile)
       }
   }
 

@@ -16,6 +16,9 @@ import graft.obs.Recorder
   * they claim to cut rather than on noisy end-to-end wall alone.
   *
   * {{{ sbt "runMain graft.tools.StreamProf <sfDir> <q1,q2,...>" }}}
+  *
+  * Stack samples of the stream threads come from JFR, e.g.
+  * `GRAFT_EXTRA_JVM="-XX:StartFlightRecording=filename=prof.jfr"`.
   */
 object StreamProf {
   def main(args: Array[String]): Unit = {
@@ -31,30 +34,6 @@ object StreamProf {
         spark.conf.set(k, v)
       }
     }
-
-    // In-process sampler: every 10 ms, record the top interesting frame of
-    // each stream-execution thread (GRAFT_PROF_STACKS=1 enables).
-    val frameCounts = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    @volatile var sampling = true
-    val sampler = new Thread("graft-sampler") {
-      override def run(): Unit = while (sampling) {
-        try {
-          Thread.getAllStackTraces.forEach { (t, stack) =>
-            if (t.getName.startsWith("stream execution thread") && stack.nonEmpty) {
-              val key = stack.take(40).map(e => s"${e.getClassName}.${e.getMethodName}")
-                .filterNot(f => f.startsWith("java.") || f.startsWith("jdk.") ||
-                  f.startsWith("scala.") || f.startsWith("sun."))
-                .take(5).mkString(" <- ")
-              if (key.nonEmpty)
-                frameCounts.computeIfAbsent(key, _ => new java.util.concurrent.atomic.AtomicLong())
-                  .incrementAndGet(): Unit
-            }
-          }
-          Thread.sleep(10)
-        } catch { case _: Throwable => }
-      }
-    }
-    if (sys.env.contains("GRAFT_PROF_STACKS")) { sampler.setDaemon(true); sampler.start() }
 
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
@@ -89,14 +68,6 @@ object StreamProf {
         }
         val totals = keys.map(k => k -> w.progress.map(_.durationMs.getOrDefault(k, 0L).longValue).sum)
         println("   TOTALS " + totals.map { case (k, v) => s"$k=${v}ms" }.mkString(" "))
-      }
-    }
-    sampling = false
-    if (sys.env.contains("GRAFT_PROF_STACKS")) {
-      import scala.jdk.CollectionConverters._
-      println("== top stream-thread frames (10ms samples) ==")
-      frameCounts.asScala.toSeq.sortBy(-_._2.get).take(25).foreach { case (k, v) =>
-        println(f"${v.get}%6d  $k")
       }
     }
     spark.stop()

@@ -5,9 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every measurement in `src/main` goes through `graft.obs.Recorder`, the
   * one listener graft attaches to Spark. A private listener keeps its own
   * counters, drain and reset logic and attributes work its own way; six of
-  * them once coexisted (Bench, ProfileBenchSeq, StreamProf, SkewAudit,
-  * IndexAudit, DedupDownstreamAB). This grep keeps a seventh from coming
-  * back unnoticed.
+  * them once coexisted, in Bench, StreamProf and four dev tools since
+  * deleted. This grep keeps one from coming back unnoticed.
   */
 class ListenerHygieneSpec extends AnyFunSuite {
 

@@ -64,4 +64,20 @@ class StableAggSpec extends SparkSpec {
     val expect = math.sqrt(longs.map(v => (v - mean) * (v - mean)).sum / (longs.size - 1))
     assert(math.abs(got - expect) < 1e-12)
   }
+
+  test("lstdSamp sums squares past the Long range (|x| >= 3.1e9)") {
+    // 3.1e9² > Long.MaxValue: a Long sum of squares raises under ANSI
+    val longs = Seq(3100000000L, 3100000007L, 3150000000L, 92500000000L, 92500001234L)
+    val got = longs.toDF("x").repartition(3)
+      .agg(StableAgg.lstdSamp(col("x"))).collect().head.getDouble(0)
+    // the same formula over exact BigInt sums, each cast to double once
+    val n = longs.size.toDouble
+    val s1 = longs.map(BigInt(_)).sum.toDouble
+    val s2 = longs.map(v => BigInt(v) * v).sum.toDouble
+    assert(got == math.sqrt(math.max((s2 - s1 * s1 / n) / (n - 1.0), 0.0)))
+    val mean = longs.map(BigDecimal(_)).sum / longs.size
+    val twoPass = math.sqrt((longs.map(v => (BigDecimal(v) - mean).pow(2)).sum /
+      (longs.size - 1)).toDouble)
+    assert(math.abs(got - twoPass) / twoPass < 1e-9)
+  }
 }

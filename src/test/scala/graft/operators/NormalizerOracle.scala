@@ -18,9 +18,11 @@ import graft.model.Schemas
   * this one deviates: trailing content after the JSON root is accepted
   * (`from_json` is lenient; msgspec drops), an explicit JSON-null `ts` reads
   * as absent (`coalesce` cannot tell them apart; the reference's
-  * `int(None)` drops), and a non-array element inside bids/asks nulls the
+  * `int(None)` drops), a non-array element inside bids/asks nulls the
   * WHOLE side under PERMISSIVE parsing (the reference skips just that
-  * level).
+  * level), and a number spelled with non-ASCII decimal digits (Python's
+  * `int()`/`float()` read `'٣'` as 3) drops, since no built-in maps
+  * Unicode digits to ASCII.
   */
 object NormalizerOracle {
 
@@ -52,11 +54,32 @@ object NormalizerOracle {
   private val bookDdl = Schemas.bookPayloadType.sql
   private val tradeDdl = Schemas.tradePayloadType.sql
 
-  /** `try_cast(e AS DOUBLE)`, which also takes a signed nan as Python
-    * `float()` does (`try_cast` takes nan/inf/infinity in any case, and a
-    * sign only on the infinities). */
-  private def dbl(e: String): String =
-    s"try_cast(regexp_replace($e, '^\\\\s*[+-]((?i)nan\\\\s*)$$', '$$1') AS DOUBLE)"
+  /** The whitespace Python `int()`/`float()` strip, as a Java regex
+    * class: ASCII space and \t-\r, and every non-ASCII char
+    * `str.isspace()` takes (Java's whitespace and space separators, plus
+    * NEL). */
+  private val pySpace =
+    raw"[ \\x{9}-\\x{d}\\x{85}[\\p{javaWhitespace}\\p{javaSpaceChar}&&[^\\x{0}-\\x{7f}]]]"
+
+  /** The text Python `int()`/`float()` parse when it matches `grammar`,
+    * else '' (which `try_cast` makes null): `e` with `str.isspace()` chars
+    * stripped at both ends and each `_` between two digits dropped
+    * (PEP 515). */
+  private def pyNumber(e: String, grammar: String): String =
+    raw"regexp_extract(regexp_replace(regexp_replace($e, '^$pySpace+|$pySpace+$$', ''), " +
+      raw"'(?<=[0-9])_(?=[0-9])', ''), '^($grammar)$$', 0)"
+
+  /** Python `int(e)` as `ty` (null where it raises or overflows `ty`). */
+  private def pyInt(e: String, ty: String): String =
+    s"try_cast(${pyNumber(e, "[+-]?[0-9]+")} AS $ty)"
+
+  /** Python `float(e)`: its decimal grammar and nan/inf/infinity in any
+    * case with an optional sign; the sign comes off a nan, which
+    * `try_cast` takes only unsigned. */
+  private def pyFloat(e: String): String = {
+    val grammar = "[+-]?(([0-9]+[.]?[0-9]*|[.][0-9]+)([eE][+-]?[0-9]+)?|(?i:inf|infinity|nan))"
+    raw"try_cast(regexp_replace(${pyNumber(e, grammar)}, '^[+-]((?i)nan)$$', '$$1') AS DOUBLE)"
+  }
 
   /** N5: one side's levels — [px, sz, liq, cnt] string arrays → (price,
     * size, count) structs, skipping short or non-numeric levels
@@ -64,13 +87,13 @@ object NormalizerOracle {
   private def levelsSql(side: String): String =
     s"""filter(transform(coalesce(try_element_at(msg.data, 1).$side, array()), l ->
        |  CASE WHEN size(l) >= 4
-       |        AND ${dbl("try_element_at(l, 1)")} IS NOT NULL
-       |        AND ${dbl("try_element_at(l, 2)")} IS NOT NULL
-       |        AND try_cast(try_element_at(l, 4) AS INT) IS NOT NULL THEN
+       |        AND ${pyFloat("try_element_at(l, 1)")} IS NOT NULL
+       |        AND ${pyFloat("try_element_at(l, 2)")} IS NOT NULL
+       |        AND ${pyInt("try_element_at(l, 4)", "INT")} IS NOT NULL THEN
        |    named_struct(
-       |      'price', ${dbl("try_element_at(l, 1)")},
-       |      'size', ${dbl("try_element_at(l, 2)")},
-       |      'count', try_cast(try_element_at(l, 4) AS INT))
+       |      'price', ${pyFloat("try_element_at(l, 1)")},
+       |      'size', ${pyFloat("try_element_at(l, 2)")},
+       |      'count', ${pyInt("try_element_at(l, 4)", "INT")})
        |  END), x -> x IS NOT NULL)""".stripMargin
 
   /** The per-frame event builder: returns an array of normalized event
@@ -82,7 +105,7 @@ object NormalizerOracle {
     s"""CASE
        |  WHEN msg.arg.channel = 'books5' THEN
        |    element_at(transform(array(named_struct(
-       |        'ts', try_cast(coalesce(try_element_at(msg.data, 1).ts, '0') AS BIGINT),
+       |        'ts', ${pyInt("coalesce(try_element_at(msg.data, 1).ts, '0')", "BIGINT")},
        |        'bids', ${levelsSql("bids")},
        |        'asks', ${levelsSql("asks")})),
        |      t -> CASE WHEN t.ts IS NOT NULL THEN array(named_struct(
@@ -100,18 +123,18 @@ object NormalizerOracle {
        |        ELSE array() END), 1)
        |  WHEN msg.arg.channel = 'trades' THEN
        |    filter(transform(msg.data, item ->
-       |      CASE WHEN try_cast(coalesce(item.ts, '0') AS BIGINT) IS NOT NULL
-       |            AND ${dbl("item.px")} IS NOT NULL
-       |            AND ${dbl("item.sz")} IS NOT NULL THEN
+       |      CASE WHEN ${pyInt("coalesce(item.ts, '0')", "BIGINT")} IS NOT NULL
+       |            AND ${pyFloat("item.px")} IS NOT NULL
+       |            AND ${pyFloat("item.sz")} IS NOT NULL THEN
        |        named_struct(
        |          'symbol', msg.arg.instId,
        |          'channel', 'trades',
        |          'event_type', 'trade',
-       |          'ts_exchange_ms', try_cast(coalesce(item.ts, '0') AS BIGINT),
+       |          'ts_exchange_ms', ${pyInt("coalesce(item.ts, '0')", "BIGINT")},
        |          'book', CAST(NULL AS $bookDdl),
        |          'trade', named_struct(
-       |            'price', ${dbl("item.px")},
-       |            'size', ${dbl("item.sz")},
+       |            'price', ${pyFloat("item.px")},
+       |            'size', ${pyFloat("item.sz")},
        |            'side', item.side,
        |            'trade_id', item.tradeId))
        |      END), x -> x IS NOT NULL)

@@ -183,6 +183,57 @@ class NormalizerSpec extends SparkSpec {
     }
   }
 
+  /** CPython's int()/float() outcome per input string, written by
+    * tools/gen_pycast_golden.py. */
+  private case class PyCast(json: String, text: String, int: Option[BigInt], float: Option[Double])
+
+  private lazy val pyCasts: Seq[PyCast] = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val in = getClass.getResourceAsStream("/pycast_golden.tsv")
+    assert(in != null, "missing pycast_golden.tsv")
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filterNot(_.startsWith("#")).map { line =>
+        val f = line.split("\t", -1)
+        PyCast(f(0), mapper.readValue(f(0), classOf[String]),
+          Option.when(f(1) != "error")(BigInt(f(1))),
+          Option.when(f(2) != "error")(java.lang.Double.longBitsToDouble(f(2).toLong)))
+      }.toVector
+    finally in.close()
+  }
+
+  test("both normalizers cast ts, price and level count as CPython int()/float() do") {
+    // each input as a trade price, a trade ts and a book level count, one
+    // instId per (field, input); a value past BIGINT/INT drops (schema)
+    val frames = pyCasts.zipWithIndex.flatMap { case (c, i) => Seq(
+      s"""{"arg":{"channel":"trades","instId":"px$i"},"data":[{"ts":"1","px":${c.json},"sz":"1"}]}""",
+      s"""{"arg":{"channel":"trades","instId":"ts$i"},"data":[{"ts":${c.json},"px":"1","sz":"1"}]}""",
+      s"""{"arg":{"channel":"books5","instId":"cnt$i"},"data":[{"ts":"1","bids":[["1","1","0",${c.json}]],"asks":[]}]}""")
+    }
+    def sameDouble(a: Double, b: Double) = a.isNaN && b.isNaN || a == b && (1 / a) == (1 / b)
+    for ((label, norm) <- Seq[(String, DataFrame => DataFrame)](
+        "native" -> (Normalizer.normalize(_)), "oracle" -> (NormalizerOracle.normalize(_)))) {
+      val byId = norm(framesOf(frames: _*)).collect().map(r => r.getAs[String]("symbol") -> r).toMap
+      val wrong = pyCasts.zipWithIndex.flatMap { case (c, i) =>
+        val px = byId.get(s"px$i").map(_.getAs[org.apache.spark.sql.Row]("trade").getAs[Double]("price"))
+        val ts = byId.get(s"ts$i").map(_.getAs[Long]("ts_exchange_ms"))
+        val cnt = byId(s"cnt$i").getAs[org.apache.spark.sql.Row]("book")
+          .getSeq[org.apache.spark.sql.Row](3).headOption.map(_.getAs[Int]("count"))
+        val pxOk = (px, c.float) match {
+          case (Some(a), Some(b)) => sameDouble(a, b)
+          case (a, b) => a.isEmpty && b.isEmpty
+        }
+        val tsOk = ts == c.int.filter(_.isValidLong).map(_.toLong)
+        val cntOk = cnt == c.int.filter(_.isValidInt).map(_.toInt)
+        Option.when(!(pxOk && tsOk && cntOk))(c.json -> s"float=$px int=$ts count=$cnt")
+      }
+      // the oracle's one documented corner: no built-in reads Unicode digits
+      val expected =
+        if (label == "native") Nil
+        else pyCasts.filter(_.text.codePoints().anyMatch(cp => cp > 0x7f && Character.isDigit(cp)))
+      assert(wrong.map(_._1) == expected.map(_.json), s"$label: ${wrong.mkString("; ")}")
+    }
+  }
+
   test("capture timestamps pass through unchanged (S5) and latencies derive (D1-D3)") {
     val out = Derived.withLatencies(Normalizer.normalize(framesOf(goodBook)))
     val r = out.collect().head

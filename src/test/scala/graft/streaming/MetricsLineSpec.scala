@@ -34,20 +34,33 @@ class MetricsLineSpec extends SparkSpec {
   }
 
   test("formatted 13-column CSV snapshot shape (D7/D8)") {
-    val lat = Seq(("A", "books5", 10L), ("A", "books5", 20L), ("B", "trades", 5L))
-      .toDF("symbol", "channel", "lat_ms")
-    val stale = Seq(("A", "books5", 100L), ("A", "books5", 300L))
-      .toDF("symbol", "channel", "stale_ms")
-    val snap = WindowStats.csvSnapshot(lat, stale, Seq("symbol", "channel"), "lat_ms")
-    val out = WindowStats.csvSnapshotFormatted(snap)
+    // (symbol, channel, ts_exchange_ms, ts_recv_mono_ns, latency ms):
+    // A/books5 latencies 10/20/30 and exchange gaps 100/300; B/trades one
+    // event (no gap: A9 zero defaults); C/trades latencies past 3.04e9,
+    // whose Long squares overflow
+    val events = Seq(
+      ("A", "books5", 1000L, 1L, 10L), ("A", "books5", 1100L, 2L, 20L),
+      ("A", "books5", 1400L, 3L, 30L), ("B", "trades", 5000L, 4L, 5L),
+      ("C", "trades", 1000L, 5L, 92500000000L), ("C", "trades", 1001L, 6L, 92500000002L))
+      .toDF("symbol", "channel", "ts_exchange_ms", "ts_recv_mono_ns", "lat")
+      .withColumn("ts_recv_epoch_ms", col("ts_exchange_ms") + col("lat"))
+    val out = WindowStats.csvSnapshotFormatted(MetricsStream.snapshot(events))
     assert(out.columns.toSeq == Seq("generated_at_utc", "symbol", "channel",
       "lat_count", "lat_mean_ms", "lat_std_ms", "lat_min_ms", "lat_max_ms",
       "stale_count", "stale_mean_ms", "stale_std_ms", "stale_min_ms", "stale_max_ms"))
     val rows = out.collect()
-    val a = rows.find(_.getString(1) == "A").get
-    assert(a.getString(4) == "15.000")   // lat mean %.3f
-    assert(a.getString(9) == "200.000")  // stale mean
-    val b = rows.find(_.getString(1) == "B").get
-    assert(b.getLong(8) == 0L && b.getString(9) == "0.000") // A9 defaults
+    assert(rows.map(_.getString(1)).toSeq == Seq("A", "B", "C"))
+    val a = rows(0)
+    assert(a.getLong(3) == 3L && a.getString(4) == "20.000")   // lat mean %.3f
+    assert(a.getString(5) == "10.000")                         // sample std
+    assert(a.getString(6) == "10.000" && a.getString(7) == "30.000")
+    assert(a.getLong(8) == 2L && a.getString(9) == "200.000")  // stale mean
+    assert(a.getString(11) == "100.000" && a.getString(12) == "300.000")
+    val b = rows(1)
+    assert(b.getLong(3) == 1L && b.getString(5) == "0.000")
+    assert(b.getLong(8) == 0L && b.getString(9) == "0.000" && b.getString(12) == "0.000")
+    val c = rows(2)
+    assert(c.getLong(3) == 2L && c.getString(4) == "92500000001.000")
+    assert(c.getString(11) == "1.000")
   }
 }

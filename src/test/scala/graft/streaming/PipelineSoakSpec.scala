@@ -37,12 +37,8 @@ class PipelineSoakSpec extends SparkSpec {
     val jsonlQ = Sinks.jsonl(events, s"$root/jsonl", s"$root/ckpt-jsonl",
       trigger = Trigger.ProcessingTime("1 second")).start()
 
-    val gaps = StalenessStream.gaps(events).toDF()
-    val snapshot = gaps.groupBy("symbol", "channel")
-      .agg(graft.operators.WindowStats.longSeriesStats("stale", col("stale_ms")).head,
-        graft.operators.WindowStats.longSeriesStats("stale", col("stale_ms")).tail: _*)
-    val csvQ = Sinks.csvSnapshot(snapshot, s"$root/metrics.csv", s"$root/ckpt-csv",
-      intervalSecs = 2).start()
+    val csvQ = Sinks.csvSnapshot(MetricsStream.snapshot(events), s"$root/metrics.csv",
+      s"$root/ckpt-csv", intervalSecs = 2).start()
 
     val metricsQ = MetricsStream.latencyPercentiles(
         Derived.withLatencies(events),
@@ -77,12 +73,19 @@ class PipelineSoakSpec extends SparkSpec {
       val sample = spark.read.textFile(s"$root/jsonl").head()
       assert(sample.startsWith("{\"exchange\":\"okx\",\"symbol\":\""))
 
-      // CSV snapshot: single file, header + one row per (symbol, channel)
+      // CSV snapshot: single file, the reference's 13-column header, one
+      // row per (symbol, channel) in key order, every event counted
       val csv = Paths.get(s"$root/metrics.csv")
       assert(Files.exists(csv), "csv snapshot file missing")
       val csvLines = Files.readAllLines(csv).asScala
-      assert(csvLines.head.startsWith("symbol,channel"))
+      assert(csvLines.head == "generated_at_utc,symbol,channel," +
+        "lat_count,lat_mean_ms,lat_std_ms,lat_min_ms,lat_max_ms," +
+        "stale_count,stale_mean_ms,stale_std_ms,stale_min_ms,stale_max_ms")
       assert(csvLines.size == 5, s"expected 4 key rows + header, got ${csvLines.size}")
+      val rows = csvLines.tail.map(_.split(",", -1).toSeq)
+      assert(rows.map(r => (r(1), r(2))) == rows.map(r => (r(1), r(2))).sorted)
+      assert(rows.map(_(3).toLong).sum == 3000L)
+      assert(rows.forall(r => r(8).toLong == r(3).toLong - 1))
 
       // metrics stream produced gated window rows
       assert(spark.table("soak_metrics").count() > 0)
